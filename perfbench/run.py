@@ -6,11 +6,12 @@ Run from the repository root:
     python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
 
 Builds the library and the benchmark program from source with sbt (once;
-later runs reuse the build while the sources are unchanged), runs one
-measuring JVM, then starts SETUP_PROBES more JVMs that only set up, and
-prints one JSON result as the last line of stdout. Scratch data goes to
-.bench_work/ and is removed afterwards; the full record of each run (input
-properties, regime label, samples, spans, Spark jobs) goes to
+later runs reuse the build while the sources are unchanged), runs the
+benchmark in one JVM and prints one JSON result as the last line of
+stdout. The workloads and the metrics reported, with their units, are the
+ones BENCHMARK.json declares. Scratch data goes to .bench_work/ and is
+removed afterwards; the full record of each run (input properties, regime
+label, samples, spans, Spark jobs) goes to
 .bench_out/<workload>-seed<n>-trace<t>.json.
 """
 import argparse
@@ -25,7 +26,6 @@ import sys
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
-WORKLOADS = ("anonymize_lake", "anonymize_jdbc", "dedup_corpus", "link_names")
 JVM_TIMEOUT_S = 150
 BUILD_TIMEOUT_S = 840
 # what the build reads: the library's sources and build, and ours
@@ -109,10 +109,7 @@ def java(classpath, work, args):
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
     cmd = ["java", "-Xmx3g", "-XX:+UseParallelGC", "-XX:-UsePerfData",
-           f"-Djava.io.tmpdir={tmp}",
-           f"-Dderby.system.home={work}",
-           f"-Dderby.stream.error.file={os.path.join(work, 'derby.log')}",
-           "-cp", classpath]
+           f"-Djava.io.tmpdir={tmp}", "-cp", classpath]
     for p in ADD_OPENS:
         cmd += ["--add-opens", f"{p}=ALL-UNNAMED"]
     cmd += ["perfbench.Main", "--work", work] + args
@@ -131,11 +128,24 @@ def java(classpath, work, args):
     return json.loads(lines[-1])
 
 
+def declared():
+    """The workload names and the metric units BENCHMARK.json declares."""
+    path = os.path.join(ROOT, "BENCHMARK.json")
+    if not os.path.exists(path):
+        fail("missing BENCHMARK.json: run from the repository root")
+    with open(path) as fh:
+        spec = json.load(fh)
+    units = {key: {m["name"]: m["unit"] for m in spec[key]}
+             for key in ("end_to_end", "per_layer")}
+    return [w["name"] for w in spec["workloads"]], units
+
+
 def main():
     # SIGTERM unwinds like an exception, so the finally blocks run
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    workloads, declared_units = declared()
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--workload", required=True, choices=workloads)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), required=True)
@@ -153,7 +163,7 @@ def main():
         metrics = res["metrics"]
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    units = LAYER if a.trace else END_TO_END
+    units = declared_units["per_layer" if a.trace else "end_to_end"]
     missing = sorted(set(units) - set(metrics))
     if missing:
         fail(f"metrics missing from the run: {missing}")
@@ -163,28 +173,6 @@ def main():
         "failed": res["failed"],
         "metrics": {k: {"value": metrics[k], "unit": u}
                     for k, u in units.items()}}))
-
-
-END_TO_END = {"job_s": "s", "rows_per_s": "1/s", "first_job_s": "s",
-              "setup_s": "s"}
-LAYER = {
-    "spark.jobs": "count", "spark.stages": "count", "spark.tasks": "count",
-    "spark.single_task_jobs": "count", "spark.driver_s": "s",
-    "spark.driver_share": "ratio", "spark.shuffle_read_mb": "MB",
-    "spark.shuffle_write_mb": "MB", "spark.spill_mb": "MB",
-    "spark.skew": "ratio", "spark.max_task_s": "s",
-    "spark.task_retries": "count", "spark.pinned_mb_after_job": "MB",
-    "blueprint.plan_s": "s", "blueprint.plan_jobs": "count",
-    "io.read_calls": "count", "io.read_s": "s", "io.stage_s": "s",
-    "io.stage_jobs": "count", "io.rows_written": "count",
-    "io.mb_written": "MB", "io.commit_s": "s",
-    "dedup.near_pairs_s": "s", "dedup.cc_s": "s", "dedup.cc_jobs": "count",
-    "dedup.semdedup_s": "s", "dedup.semdedup_jobs": "count",
-    "dedup.pairs_out": "count",
-    "linkage.self_pairs_s": "s", "linkage.candidate_pairs": "count",
-    "linkage.verify_yield": "ratio", "linkage.pairs_out": "count",
-    "trace.overhead_ratio": "ratio",
-}
 
 
 if __name__ == "__main__":

@@ -4,10 +4,9 @@ import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects, JdbcType}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 
-import graft.{Anonymizer, JdbcIO, JdbcPartitioning, ParquetIO, TableIO}
+import graft.{Anonymizer, ParquetIO, TableIO}
 
 /** Times the [[TableIO]] calls an [[Anonymizer]] makes. `run()` is
   * `plan()` followed by one `stage` per table and one `commit` per table,
@@ -29,28 +28,23 @@ final class TimingIO(inner: TableIO, tr: Tracer) extends TableIO {
     tr.span("io.commit")(inner.commit(table))
 }
 
-/** One IO per table: JDBC range partitioning has per-table bounds. */
-final class ByTable(ios: Map[String, TableIO]) extends TableIO {
-  def read(table: String): DataFrame = ios(table).read(table)
-  def write(table: String, df: DataFrame): Unit = ios(table).write(table, df)
-  override def stage(table: String, df: DataFrame): Unit =
-    ios(table).stage(table, df)
-  override def commit(table: String): Unit = ios(table).commit(table)
-}
-
 /** The reference's example Blueprint (a `users` table with five e-mail
-  * columns and a `class` table pointing at it) at scale: every rule kind,
-  * a globalWhere, and the id rewritten to a uuid with the FK cascade.
-  * Two runs share it: over parquet files and over JDBC.
+  * columns and a `class` table pointing at it) at scale, through
+  * [[ParquetIO]]: every rule kind, a globalWhere, and the id rewritten to
+  * a uuid with the FK cascade. The work is in the mask compiler, `#row#`
+  * numbering, the cascade join and the file stage/rename commit.
   */
-abstract class AnonymizeWorkload(spark: SparkSession, seed: Long,
-    val users: Long, val classes: Long) extends Workload {
+final class AnonymizeLake(spark: SparkSession, seed: Long, work: Path)
+    extends Workload {
+  def name: String = "anonymize_lake"
+  def nominalJobS: Double = 2.0
+  def warmups: Int = 1
+  val users = 20000L
+  val classes = 60000L
   val GlobalWhere = "email4 != email5"
   def inputRows: Long = users + classes
-
-  protected def io(): TableIO
-  protected def output(table: String): DataFrame
-  protected def pristineUsers: DataFrame
+  private val pristine = work.resolve("pristine")
+  private val lake = work.resolve("lake")
 
   /** user_id = 1 has probability ln 2 / ln users under [[classFrame]]. */
   private val fanOutTop = classes * math.log(2) / math.log(users.toDouble)
@@ -66,7 +60,7 @@ abstract class AnonymizeWorkload(spark: SparkSession, seed: Long,
     * per-column where) and 5% have email4 == email5 (kept by the
     * globalWhere, so they must come out unchanged).
     */
-  protected def usersFrame: DataFrame = {
+  private def usersFrame: DataFrame = {
     val id = col("id").cast("string")
     spark.range(1, users + 1, 1, Main.cpus).select(col("id"),
       when(pmod(h("vip"), lit(10)) === 0, concat(lit("vip_"), id,
@@ -84,7 +78,7 @@ abstract class AnonymizeWorkload(spark: SparkSession, seed: Long,
   /** `class`: user_id = floor(users^u) for a uniform u, a Zipf(1)
     * fan-out: user 1 owns about ln 2 / ln users of all classes.
     */
-  protected def classFrame: DataFrame = {
+  private def classFrame: DataFrame = {
     val u = pmod(h("fk"), lit(1000003L)).cast("double") / 1000003.0
     spark.range(1, classes + 1, 1, Main.cpus).select(
       col("id").as("class_id"),
@@ -107,7 +101,7 @@ abstract class AnonymizeWorkload(spark: SparkSession, seed: Long,
   }
 
   def job(tr: Tracer): Map[String, Double] = {
-    val base = io()
+    val base = new ParquetIO(spark, lake.toString)
     val timed = if (tr.enabled) Some(new TimingIO(base, tr)) else None
     val anon = new Anonymizer(spark, timed.getOrElse(base))
     blueprint(anon)
@@ -160,19 +154,6 @@ abstract class AnonymizeWorkload(spark: SparkSession, seed: Long,
       fk.exists(!ids.contains(_)) -> "a class.user_id names no user")
       .collectFirst { case (true, msg) => msg }
   }
-}
-
-/** The Blueprint through [[ParquetIO]]: FK cascade join, `#row#`
-  * numbering and the file stage/rename commit.
-  */
-final class AnonymizeLake(spark: SparkSession, seed: Long, work: Path)
-    extends AnonymizeWorkload(spark, seed, users = 20000L,
-      classes = 60000L) {
-  def name: String = "anonymize_lake"
-  def nominalJobS: Double = 2.0
-  def warmups: Int = 1
-  private val pristine = work.resolve("pristine")
-  private val lake = work.resolve("lake")
 
   def generate(): Unit = {
     usersFrame.write.parquet(pristine.resolve("users.parquet").toString)
@@ -184,86 +165,8 @@ final class AnonymizeLake(spark: SparkSession, seed: Long, work: Path)
     Main.copyTree(pristine, lake)
   }
 
-  protected def io(): TableIO = new ParquetIO(spark, lake.toString)
-  protected def output(table: String): DataFrame =
+  private def output(table: String): DataFrame =
     spark.read.parquet(lake.resolve(s"$table.parquet").toString)
-  protected def pristineUsers: DataFrame =
+  private def pristineUsers: DataFrame =
     spark.read.parquet(pristine.resolve("users.parquet").toString)
-}
-
-/** Spark's Derby dialect creates string columns as CLOB, which Derby will
-  * not copy back into the VARCHAR columns of the live tables; MySQL, the
-  * reference's target, converts implicitly. Staging tables get VARCHAR.
-  */
-object DerbyVarchar extends JdbcDialect {
-  def canHandle(url: String): Boolean = url.startsWith("jdbc:derby")
-  override def getJDBCType(dt: DataType): Option[JdbcType] = dt match {
-    case StringType => Some(JdbcType("VARCHAR(255)", java.sql.Types.VARCHAR))
-    case _ => None
-  }
-}
-
-/** The Blueprint through [[JdbcIO]] against embedded in-memory Derby: a
-  * range-partitioned read, a staging-table insert and a TRUNCATE+INSERT
-  * commit per table. Columns are quoted lower case so the Blueprint is
-  * the same as on parquet; `users` carries a numeric `seq` to partition
-  * on, since its key becomes a uuid.
-  */
-final class AnonymizeJdbc(spark: SparkSession, seed: Long, work: Path)
-    extends AnonymizeWorkload(spark, seed, users = 5000L, classes = 15000L) {
-  def name: String = "anonymize_jdbc"
-  def nominalJobS: Double = 2.0
-  def warmups: Int = 1
-  private val url = s"jdbc:derby:memory:perfbench$seed;create=true"
-  private val ddl = Map(
-    "users" -> ("(\"id\" VARCHAR(64) NOT NULL PRIMARY KEY, \"seq\" BIGINT, " +
-      (1 to 5).map(i => s"\"email$i\" VARCHAR(96)").mkString(", ") + ")"),
-    "class" -> ("(\"class_id\" BIGINT NOT NULL PRIMARY KEY, " +
-      "\"user_id\" VARCHAR(64), \"title\" VARCHAR(64))"))
-
-  private def sql(statements: String*): Unit = {
-    val c = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = c.createStatement()
-      try statements.foreach(st.execute) finally st.close()
-    } finally c.close()
-  }
-
-  private def dropIfExists(table: String): Unit =
-    try sql(s"DROP TABLE $table")
-    catch { case _: java.sql.SQLException => () }
-
-  def generate(): Unit = {
-    JdbcDialects.registerDialect(DerbyVarchar)
-    ddl.foreach { case (t, cols) =>
-      sql(s"CREATE TABLE $t $cols", s"CREATE TABLE ${t}_pristine $cols")
-    }
-    val props = new java.util.Properties()
-    usersFrame.select(col("id").cast("string").as("id"), col("id").as("seq"),
-        col("email1"), col("email2"), col("email3"), col("email4"),
-        col("email5"))
-      .write.mode("append").jdbc(url, "users_pristine", props)
-    classFrame.select(col("class_id"), col("user_id").cast("string")
-        .as("user_id"), col("title"))
-      .write.mode("append").jdbc(url, "class_pristine", props)
-  }
-
-  def restore(): Unit = {
-    ddl.keys.foreach(t => dropIfExists(s"${t}__graft_staging"))
-    sql(ddl.keys.toSeq.flatMap(t => Seq(s"TRUNCATE TABLE $t",
-      s"INSERT INTO $t SELECT * FROM ${t}_pristine")): _*)
-  }
-
-  protected def io(): TableIO = new ByTable(Map(
-    "users" -> new JdbcIO(spark, url,
-      partition = Some(JdbcPartitioning("seq", 1, users + 1, Main.cpus)),
-      sessionInit = Some("SET SCHEMA APP")),
-    "class" -> new JdbcIO(spark, url,
-      partition = Some(JdbcPartitioning("class_id", 1, classes + 1,
-        Main.cpus)),
-      sessionInit = Some("SET SCHEMA APP"))))
-  protected def output(table: String): DataFrame =
-    spark.read.jdbc(url, table, new java.util.Properties())
-  protected def pristineUsers: DataFrame =
-    spark.read.jdbc(url, "users_pristine", new java.util.Properties())
 }

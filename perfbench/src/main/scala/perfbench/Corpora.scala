@@ -28,7 +28,7 @@ final class DedupCorpus(spark: SparkSession, seed: Long, work: Path)
     extends Workload {
   def name: String = "dedup_corpus"
   def nominalJobS: Double = 6.0
-  def warmups: Int = 0
+  def warmups: Int = 1
   private val Words = 60
   private val BackgroundDocs = 800
   private val Chains = 25

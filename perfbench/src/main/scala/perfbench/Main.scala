@@ -47,9 +47,9 @@ trait Workload {
   * after it and is reported apart. The first workload job is timed alone
   * (`first_job_s`); after `warmups` untimed jobs, `seconds / nominalJobS`
   * warm jobs (at least one) give the median `job_s`. With tracing,
-  * traced and untraced jobs alternate: per-layer figures are medians over
-  * the traced ones, and their time over the untraced ones is the tracing
-  * overhead.
+  * traced and untraced jobs run in ABBA order, so neither side is always
+  * the colder one: per-layer figures are medians over the traced jobs,
+  * and their time over the untraced ones is the tracing overhead.
   */
 object Main {
   val cpus: Int = Runtime.getRuntime.availableProcessors
@@ -66,7 +66,6 @@ object Main {
     val seed = args("--seed").toLong
     val wl = args("--workload") match {
       case "anonymize_lake" => new AnonymizeLake(spark, seed, work)
-      case "anonymize_jdbc" => new AnonymizeJdbc(spark, seed, work)
       case "dedup_corpus" => new DedupCorpus(spark, seed, work)
       case "link_names" => new LinkNames(spark, seed, work)
     }
@@ -160,8 +159,9 @@ object Main {
     // a fixed count: warm jobs still get faster as the JIT compiles, so a
     // median over a count that followed the host's speed would move with it
     val warm = math.max(1, (seconds / wl.nominalJobS).toInt)
-    (0 until (if (trace) 2 * math.max(1, warm / 2) else warm)).foreach { i =>
-      val traceIt = trace && i % 2 == 0
+    // traced runs: traced, untraced, untraced, traced, ... (ABBA)
+    (0 until (if (trace) 4 * math.max(1, warm / 4) else warm)).foreach { i =>
+      val traceIt = trace && (i % 4 == 0 || i % 4 == 3)
       val s = runJob(traceIt)
       (if (traceIt) traced else plain) += s
     }
@@ -175,21 +175,28 @@ object Main {
         val keys = layers.head.keys.filterNot(_ == "unattributed_jobs")
         val med = keys.map(k => k -> median(layers.map(_.getOrElse(k, 0.0))
           .toSeq)).toMap
-        val cands = med("linkage.candidate_pairs")
+        val emitted = med("linkage.emitted_pairs")
         med ++ Map(
           "dedup.pairs_out" -> med.getOrElse("dedup.pairs_out", 0.0),
           "linkage.pairs_out" -> med.getOrElse("linkage.pairs_out", 0.0),
-          "linkage.verify_yield" -> (if (cands > 0)
-            med.getOrElse("linkage.pairs_out", 0.0) / cands else 0.0),
+          "linkage.distinct_share" -> (if (emitted > 0)
+            med.getOrElse("linkage.pairs_out", 0.0) / emitted else 0.0),
           "trace.overhead_ratio" -> median(traced.toSeq) / jobS)
       }
     val unattributed = layers.map(_.getOrElse("unattributed_jobs", 0.0)).sum
+    // execution-bound: one task runs for much of the job; driver-bound:
+    // most Spark jobs are a single task, so per-job driver work sets the
+    // pace. Each threshold sits between the shares measured on a 4-core
+    // host: longest task / job 0.39-0.47 on link_names, 0.10-0.13 on the
+    // others; one-task jobs / jobs 0.85 on dedup_corpus, 0.36-0.56 on the
+    // others.
     val regime =
       if (!trace) "untraced"
-      // measured shares: dedup_corpus ~0.45, anonymize_lake 0.3-0.46,
-      // link_names 0.2-0.3
-      else if (summary("spark.driver_share") >= 0.4) "driver-bound"
-      else "execution-bound"
+      else if (summary("spark.max_task_s") / median(traced.toSeq) >= 0.25)
+        "execution-bound"
+      else if (summary("spark.single_task_jobs") / summary("spark.jobs")
+          >= 0.7) "driver-bound"
+      else "mixed"
     val info = Map[String, Any](
       "workload" -> wl.name, "seconds" -> seconds, "trace" -> trace,
       "loop" -> "closed", "clients" -> 1, "cores" -> cpus,

@@ -77,11 +77,13 @@ final class JobListener extends SparkListener {
 }
 
 /** Reads SQL metrics off each executed plan. `Linkage.selfPairs` emits
-  * its verified in-bucket pairs through one generator whose output column
-  * is `p`; that node's row count is the candidate-pair count.
+  * the pairs that pass its in-bucket distance check through one generator
+  * whose output column is `p`, once per bucket the pair shares; that
+  * node's row count is the emitted-pair count. The comparisons made
+  * inside the fold are not exposed by the library.
   */
 final class PlanListener extends QueryExecutionListener {
-  @volatile var candidatePairs = 0L
+  @volatile var emittedPairs = 0L
 
   private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
@@ -93,7 +95,7 @@ final class PlanListener extends QueryExecutionListener {
       durationNs: Long): Unit =
     nodes(qe.executedPlan).foreach {
       case g: GenerateExec if g.generatorOutput.map(_.name) == Seq("p") =>
-        candidatePairs += g.metrics("numOutputRows").value
+        emittedPairs += g.metrics("numOutputRows").value
       case _ =>
     }
 
@@ -125,7 +127,7 @@ final class Tracer(spark: SparkSession) {
   def start(jobIndex: Int): Unit = {
     job = jobIndex
     jobs.clear()
-    plans.candidatePairs = 0L
+    plans.emittedPairs = 0L
     sc.addSparkListener(jobs)
     spark.listenerManager.register(plans)
     on = true
@@ -138,7 +140,7 @@ final class Tracer(spark: SparkSession) {
     sc.removeSparkListener(jobs)
     spark.listenerManager.unregister(plans)
     sparkJobs ++= jobs.jobs.values
-    Layers.of(spans.filter(_.job == job).toSeq, jobs, plans.candidatePairs,
+    Layers.of(spans.filter(_.job == job).toSeq, jobs, plans.emittedPairs,
       pinnedMb)
   }
 
@@ -182,7 +184,21 @@ object Tracer {
   * metrics. Layers a workload does not run report 0.
   */
 object Layers {
-  def of(spans: Seq[Span], l: JobListener, candidatePairs: Long,
+  /** Milliseconds of [from, to] covered by the union of `intervals`. */
+  def covered(intervals: Iterable[(Long, Long)], from: Double,
+      to: Double): Double = {
+    var sum = 0.0
+    var reach = from
+    intervals.map(i => (math.max(i._1.toDouble, from),
+      math.min(i._2.toDouble, to))).toSeq.sortBy(_._1).foreach {
+      case (a, b) =>
+        if (b > math.max(a, reach)) sum += b - math.max(a, reach)
+        reach = math.max(reach, b)
+    }
+    sum
+  }
+
+  def of(spans: Seq[Span], l: JobListener, emittedPairs: Long,
       pinnedMb: Double): Map[String, Double] = l.synchronized {
     val root = spans.find(_.parent == -1).getOrElse(
       throw new IllegalStateException("traced job has no root span"))
@@ -202,18 +218,8 @@ object Layers {
     val st = stages(jobs)
     val tasks = st.flatMap(_.taskMs)
     val wall = root.seconds
-    // union of job intervals, clipped to the job span
-    val intervals = jobs.map(j => (math.max(j.start.toDouble, root.start),
-      math.min(j.end.toDouble, root.end))).filter(i => i._2 > i._1)
-      .sortBy(_._1)
-    var covered = 0.0
-    var reach = Double.NegativeInfinity
-    intervals.foreach { case (a, b) =>
-      val from = math.max(a, reach)
-      if (b > from) covered += b - from
-      reach = math.max(reach, b)
-    }
-    val driverS = math.max(0.0, wall - covered / 1e3)
+    val driverS = math.max(0.0, wall -
+      covered(jobs.map(j => (j.start, j.end)), root.start, root.end) / 1e3)
     val skew = st.filter(_.taskMs.size >= 2).map { s =>
       val sorted = s.taskMs.sorted
       val med = sorted(sorted.size / 2).toDouble
@@ -250,7 +256,7 @@ object Layers {
       "dedup.semdedup_s" -> secs("dedup.semdedup"),
       "dedup.semdedup_jobs" -> jobsUnder("dedup.semdedup").size.toDouble,
       "linkage.self_pairs_s" -> secs("linkage.self_pairs"),
-      "linkage.candidate_pairs" -> candidatePairs.toDouble,
+      "linkage.emitted_pairs" -> emittedPairs.toDouble,
       "unattributed_jobs" -> l.jobs.values.count(_.span < 0).toDouble,
     )
   }
