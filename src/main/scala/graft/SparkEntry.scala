@@ -1264,9 +1264,9 @@ object SparkEntry {
       .orderBy("id_a", "id_b")
 
   /** Near-dup clusters: the verified pair graph collapsed to connected
-    * components ([[graft.pipeline.Dedup.connectedComponents]] — the
-    * distributed label propagation whose semantic spec is "cluster id =
-    * min reachable doc id"). The dedup decision table a curation run
+    * components ([[graft.pipeline.Dedup.connectedComponents]], whose
+    * semantic spec is "cluster id = min reachable doc id"). The dedup
+    * decision table a curation run
     * actually applies: keep `doc_id == cluster_id`, drop the rest.
     */
   private def qDedupClusters(s: SparkSession, dir: String): DataFrame =

@@ -1,8 +1,15 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, ByteType, DataType,
+  IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for training-data pipelines: exact (content-hash
   * groupBy), MinHash+LSH near-dup (banded bucket join — never an all-pairs
@@ -691,8 +698,10 @@ object Dedup {
     * column through the index. Components never span cells (pairs are
     * within-cell), so the survivor rule needs no cross-cell tie story.
     * Cost over the pair scan: [[connectedComponents]] on the (thin)
-    * pair set + two aggregates over component members — corpus-scale
-    * work stays the one cell equi-join.
+    * pair set, which a pair graph within its driver-finish bound
+    * settles in one checkpoint job and one bounded collect, + two
+    * aggregates over component members — corpus-scale work stays the
+    * one cell equi-join.
     */
   def semDeDup(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nCells: Int = 16, kmeansIters: Int = 0,
@@ -851,37 +860,177 @@ object Dedup {
     * under-deduplicates: A≈B and B≈C put A,B,C in one cluster even when
     * (A,C) never surfaced as a pair.
     *
-    * Algorithm: iterative min-label propagation on the label-contracted
-    * graph with per-round path compression (pointer jumping) — each round
-    * (1) every label adopts the minimum of its adjacent labels, (2) labels
-    * are compressed one hop (`lbl := lbl(lbl)`), (3) edges are rewritten
-    * into the new label space and self-loops dropped. The compression
-    * step makes chain-shaped components contract geometrically, so rounds
-    * scale with log(diameter), not diameter (the star-contraction family
-    * of MapReduce CC algorithms). Each round is a bounded number of hash
-    * joins + one aggregate; every frame is hash-partitioned on its key and
-    * the only driver-side action is an `isEmpty` convergence probe — no
-    * data ever collects to the driver, so the shape holds at 100 TB.
+    * Returns (id, cluster_id) for every non-null id appearing in
+    * `pairs`, where cluster_id is the component's minimum id under
+    * Spark's ordering for the id type. Ids with no pair are trivially
+    * their own singleton cluster and are not emitted; a null endpoint
+    * links nothing.
     *
-    * Deterministic: labels only ever decrease toward the component's
-    * minimum id. Returns (id, cluster_id) for every id appearing in
-    * `pairs`; ids with no pair are trivially their own singleton cluster
-    * and are not emitted.
+    * The symmetric edge frame is materialised once, then finished one
+    * of two ways:
+    *  - Driver finish: one collect in a single task reads edge rows
+    *    until the frame ends or passes [[DriverFinishRows]] rows or
+    *    [[DriverFinishBytes]] id bytes. If the frame fits both, union-find
+    *    runs on the driver and the result is a local relation: no further
+    *    Spark job, and nothing downstream reads the checkpoint blocks.
+    *    Past either budget the collected rows are dropped and the loop
+    *    runs. Taken only for integral ids and UTF8_BINARY
+    *    strings, whose driver-side order (`Long` compare, `UTF8String`
+    *    byte compare) provably equals Spark's. Java's
+    *    `String.compareTo` would not: it puts a supplementary-plane
+    *    character (a surrogate pair) below U+FFFD, Spark's UTF-8 byte
+    *    order above.
+    *  - Distributed loop, for larger frames and every other id type:
+    *    iterative min-label propagation on the label-contracted graph
+    *    with per-round path compression (pointer jumping). Each round
+    *    (1) every label adopts the minimum of its adjacent labels, (2)
+    *    labels are compressed two hops, (3) edges are re-derived in the
+    *    new label space and self-loops dropped. Chains contract
+    *    geometrically, so rounds scale with log(diameter), not diameter
+    *    (the star-contraction family of MapReduce CC algorithms). Each
+    *    round is a bounded number of hash joins + one aggregate, and the
+    *    only driver-side action is an `isEmpty` convergence probe, so
+    *    the shape holds at 100 TB. `maxIter` bounds its rounds (it
+    *    throws past them); the driver finish has no rounds and ignores
+    *    it.
+    *
+    * Both finishes are deterministic and return the same relation:
+    * labels only ever decrease toward the component's minimum id.
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxIter: Int = 25): DataFrame = {
+      idB: String = "id_b", maxIter: Int = 25): DataFrame =
+    connectedComponents(pairs, idA, idB, maxIter, DriverFinishRows,
+      DriverFinishBytes)
+
+  /** Largest symmetric edge frame (two rows per pair) that
+    * [[connectedComponents]] finishes on the driver. Set by driver heap,
+    * not time: on a 4-core host, chain graphs of 130,000 rows peaked at
+    * 37 MB (Long ids) and 51 MB (36-byte string ids) of live driver heap
+    * and finished about 3x faster than the loop, which the driver finish
+    * still beat at 524,000 rows (146 MB live). Past the bound the
+    * discarded collect adds about 0.1 s (Long) to 0.3 s (36-byte
+    * strings) to a 2.5 to 3.6 s loop.
+    */
+  private val DriverFinishRows = 1 << 17
+
+  /** Largest total id size, in bytes, that [[connectedComponents]]
+    * finishes on the driver (see [[wireBytes]]). Long string ids reach
+    * it before [[DriverFinishRows]] does, so the collect stays far below
+    * `spark.driver.maxResultSize` whatever the ids' length: at the
+    * budget, 256-byte ids (64,000 rows) peaked at 53 MB of live driver
+    * heap, about what the row budget allows.
+    */
+  private val DriverFinishBytes = 32L << 20
+
+  /** Size of one edge row of the driver finish's collect: 8 bytes per
+    * integral id, the UTF-8 length per string id, nothing for a null.
+    */
+  private def wireBytes(r: Row): Long = {
+    def one(v: Any): Long = v match {
+      case b: Array[Byte] => b.length
+      case null => 0
+      case _ => 8
+    }
+    one(r.get(0)) + one(r.get(1))
+  }
+
+  /** [[connectedComponents]] with explicit driver-finish budgets in edge
+    * rows and id bytes; a row budget of 0 forces the distributed loop.
+    */
+  private[graft] def connectedComponents(pairs: DataFrame, idA: String,
+      idB: String, maxIter: Int, driverRows: Int,
+      driverBytes: Long): DataFrame = {
+    // eager localCheckpoint FIRST: when `pairs` is itself an expensive
+    // pipeline (MinHash LSH), the bounded collect and, past the bound,
+    // the loop's node and edge inits read the materialised blocks
+    // instead of re-running that pipeline per action.
+    val sym = pairs.select(col(idA).as("la"), col(idB).as("lb"))
+      .union(pairs.select(col(idB).as("la"), col(idA).as("lb")))
+      .localCheckpoint()
+    val onDriver = sym.schema("la").dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        componentsOnDriver[Long](sym, driverRows, driverBytes, LongType,
+          _.asInstanceOf[Long], identity)
+      // UTF8_BINARY only (collated strings take the loop), collected as
+      // the raw UTF-8 bytes: a Java String round trip would merge
+      // distinct invalid byte sequences into U+FFFD
+      case StringType =>
+        componentsOnDriver[UTF8String](sym, driverRows, driverBytes,
+          BinaryType,
+          b => UTF8String.fromBytes(b.asInstanceOf[Array[Byte]]),
+          _.getBytes)(Ordering.fromLessThan(_.binaryCompare(_) < 0))
+      case _ => None
+    }
+    onDriver.getOrElse(componentsLoop(sym, maxIter))
+  }
+
+  /** The driver finish of [[connectedComponents]] over the checkpointed
+    * symmetric frame `sym`: ids collect as `wire` values, `decode` maps
+    * them to keys whose `order` is Spark's order on the id type, and the
+    * result casts back from `wire`. None when `sym` has more than
+    * `maxRows` rows or more than `maxBytes` id bytes.
+    */
+  private def componentsOnDriver[K](sym: DataFrame, maxRows: Int,
+      maxBytes: Long, wire: DataType, decode: Any => K, encode: K => Any)(
+      implicit order: Ordering[K]): Option[DataFrame] = {
+    val wireRows = sym.select(col("la").cast(wire), col("lb").cast(wire))
+    def fits(n: Int, bytes: Long) = n <= maxRows && bytes <= maxBytes
+    // coalesce(1): one job, one task, which stops reading after the
+    // first row past either budget however large the frame is, so the
+    // collect stays far below spark.driver.maxResultSize
+    val rows = wireRows.coalesce(1).mapPartitions { it =>
+      var n = 0
+      var bytes = 0L
+      it.takeWhile(_ => fits(n, bytes)).map { r =>
+        n += 1
+        bytes += wireBytes(r)
+        r
+      }
+    }(Encoders.row(wireRows.schema)).collect()
+    if (!fits(rows.length, rows.iterator.map(wireBytes).sum)) None
+    else {
+      def id(r: Row, i: Int): Option[K] =
+        if (r.isNullAt(i)) None else Some(decode(r.get(i)))
+      val edges = rows.toSeq.map(r => (id(r, 0), id(r, 1)))
+      // union-find over ranks in Spark's order, the smaller root always
+      // winning, so every component is rooted at its minimum id
+      val keys = edges.flatMap(e => e._1 ++ e._2).distinct.sorted
+      val rank = keys.zipWithIndex.toMap
+      val parent = Array.range(0, keys.length)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) {
+          parent(r) = parent(parent(r))
+          r = parent(r)
+        }
+        r
+      }
+      for ((Some(a), Some(b)) <- edges) {
+        val (ra, rb) = (find(rank(a)), find(rank(b)))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val out = keys.indices.map(i =>
+        Row(encode(keys(i)), encode(keys(find(i)))))
+      val la = sym.schema("la")
+      val schema = StructType(Seq("id", "cluster_id")
+        .map(StructField(_, wire, la.nullable)))
+      Some(sym.sparkSession.createDataFrame(out.asJava, schema).select(
+        col("id").cast(la.dataType).as("id"),
+        col("cluster_id").cast(la.dataType).as("cluster_id")))
+    }
+  }
+
+  /** The distributed finish of [[connectedComponents]] over the
+    * checkpointed symmetric frame `sym`.
+    */
+  private def componentsLoop(sym: DataFrame, maxIter: Int): DataFrame = {
     // eager localCheckpoint: an iterative DataFrame algorithm MUST
     // truncate lineage, or round r's logical plan embeds rounds 0..r-1
     // and planning itself blows up exponentially (persist alone keeps the
     // full plan). On a real cluster with unreliable executors, swap for
-    // reliable `checkpoint` on a DFS checkpoint dir. Checkpointing the
-    // symmetric frame FIRST matters when `pairs` is itself an expensive
-    // pipeline (MinHash LSH): the node and edge inits below then read the
-    // materialised blocks instead of re-running that pipeline per action.
-    val sym = pairs.select(col(idA).as("la"), col(idB).as("lb"))
-      .union(pairs.select(col(idB).as("la"), col(idA).as("lb")))
-      .localCheckpoint()
-    var lab = sym.select(col("la").as("id")).distinct()
+    // reliable `checkpoint` on a DFS checkpoint dir.
+    var lab = sym.select(col("la").as("id")).filter(col("id").isNotNull)
+      .distinct()
       .select(col("id"), col("id").as("lbl"))
       .localCheckpoint()
     val edges = sym.filter(col("la") =!= col("lb")).distinct()

@@ -83,14 +83,14 @@ object Linkage {
     */
   private val capObsSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Sessions that already carry the cap-observability listener (the
-    * listener is registered once per session, matched by metric-name
-    * prefix so every [[blocked]] observation reports through it).
+  /** `sessionUUID`s of the sessions that already carry the
+    * cap-observability listener (the listener is registered once per
+    * session, matched by metric-name prefix so every [[blocked]]
+    * observation reports through it). Keyed on the UUID string, so the
+    * static set never pins a session object.
     */
   private val capListenerSessions =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[
-        org.apache.spark.sql.SparkSession, java.lang.Boolean]())
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Make the depth-aware length cap OBSERVABLE: rows the `maxLen`
     * filter silently drops from blocking would otherwise vanish from
@@ -102,7 +102,8 @@ object Linkage {
     */
   private def ensureCapListener(
       spark: org.apache.spark.sql.SparkSession): Unit =
-    if (capListenerSessions.add(spark)) {
+    if (capListenerSessions.add(
+        org.apache.spark.sql.GraftSessionKey.of(spark))) {
       spark.listenerManager.register(
         new org.apache.spark.sql.util.QueryExecutionListener {
           override def onSuccess(funcName: String,
@@ -317,6 +318,9 @@ object Linkage {
       .join(strs.select(col("h").as("hb"), col("s").as("__sb")), "hb")
       .select(least(col("__sa"), col("__sb")).as("name_a"),
         greatest(col("__sa"), col("__sb")).as("name_b"))
+      // an xxhash64 collision re-attaches one hash to two strings, which
+      // can pair a string with itself (dist 0 passes any maxDist)
+      .filter(col("name_a") =!= col("name_b"))
       .withColumn("dist", levenshtein(col("name_a"), col("name_b")))
       .filter(col("dist") <= maxDist)
       .distinct()

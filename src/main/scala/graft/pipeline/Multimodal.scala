@@ -621,9 +621,12 @@ object Multimodal {
     * the hash ranks visual similarity — paired at corpus scale by the
     * SAME pigeonhole banding as text SimHash
     * ([[Dedup.simHashNearPairs]]). Integer-only, so any engine
-    * re-derives it from the grid bit-for-bit.
+    * re-derives it from the grid bit-for-bit. Fails fast unless the
+    * grid has 1 to 64 cells: a longer one would wrap `1L << i`.
     */
   def averageHashOf(grid: Array[Long]): Long = {
+    require(grid.length >= 1 && grid.length <= 64,
+      s"grid must have 1 to 64 cells for a 64-bit hash (got ${grid.length})")
     var sum = 0L
     var i = 0
     while (i < grid.length) { sum += grid(i); i += 1 }

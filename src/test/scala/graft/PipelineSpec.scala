@@ -2201,6 +2201,9 @@ class PipelineSpec extends SparkSpec {
         col("ahash")), "id", "ahash", k = 8).collect()
     assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet ==
       Set((1L, 2L)))
+    // a 65-cell grid would wrap `1L << i` onto bit 0: fail fast
+    intercept[IllegalArgumentException](
+      Multimodal.averageHashOf(Array.fill(65)(1L)))
   }
 
   test("canonicalizeUrl: RFC 3986 normalization rules, edge cases, " +
@@ -3747,6 +3750,28 @@ class PipelineSpec extends SparkSpec {
     assert(Seq(100L, 101L, 102L).forall(got(_) == 100L))
     assert(got(200L) == 200L && got(201L) == 200L)
     assert(got.size == 35)
+  }
+
+  test("connected components: a graph over the row or the byte budget " +
+      "takes the distributed loop, with the same result") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val s = spark
+    import s.implicits._
+    // 4 symmetric edge rows of 2 x 40 id bytes: 320 bytes
+    val pairs = Seq(("b" * 40, "a" * 40), ("b" * 40, "c" * 40))
+      .toDF("id_a", "id_b")
+    val expect = Seq("a", "b", "c").map(c => c * 40 -> "a" * 40).toMap
+    def finish(rows: Int, bytes: Long) = {
+      val cc = Dedup.connectedComponents(pairs, "id_a", "id_b", 25, rows,
+        bytes)
+      // the driver finish returns a local relation, the loop never does
+      (cc.queryExecution.logical.collectFirst { case l: LocalRelation =>
+        l }.nonEmpty, cc.collect().map(r => r.getString(0) ->
+        r.getString(1)).toMap)
+    }
+    assert(finish(4, 320) == ((true, expect)), "fits both budgets")
+    assert(finish(3, 320) == ((false, expect)), "one row over")
+    assert(finish(4, 319) == ((false, expect)), "one byte over")
   }
 
   test("video codec parses ISO-BMFF container metadata from raw bytes") {

@@ -75,29 +75,78 @@ class PropertySpec extends SparkSpec {
     } yield edges
     check(Prop.forAll(edgeGen) { edges =>
       edges.isEmpty || {
-        // reference: classic union-find over the same edge list
-        val parent = scala.collection.mutable.Map[Long, Long]()
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        edges.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        // min-id per component (find() may not return the min directly)
-        val members = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        val minOf = members.groupBy(find).map { case (r, ms) =>
-          r -> ms.min
-        }
-        val expect = members.map(x => x -> minOf(find(x))).toMap
         val s = spark
         import s.implicits._
-        val got = Dedup.connectedComponents(edges.toDF("id_a", "id_b"))
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        got == expect
+        bothFinishes(edges.toDF("id_a", "id_b"))
+          .forall(longComponents(_) == unionFindMins(edges))
       }
     })
+    val s = spark
+    import s.implicits._
+    // a null endpoint links nothing, but its other endpoint still
+    // appears (as its own cluster unless linked elsewhere)
+    bothFinishes(Seq((Some(1L), None), (Some(1L), Some(2L)),
+        (None, Some(3L)), (None, None)).toDF("id_a", "id_b"))
+      .foreach(rows => assert(longComponents(rows) ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 3L)))
+    // ... also when no real edge is left: the loop converges in zero
+    // rounds, so no join drops a null label row for it
+    bothFinishes(Seq((Some(1L), Option.empty[Long])).toDF("id_a", "id_b"))
+      .foreach(rows => assert(longComponents(rows) == Map(1L -> 1L)))
+    // a real pair graph: the documents fixture's near-duplicate pairs
+    val near = Dedup.nearDuplicatePairs(
+        spark.read.parquet(s"$fixtures/documents.parquet"), "doc_id",
+        "text", 0.8).select("id_a", "id_b").localCheckpoint()
+    val nearEdges = near.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(nearEdges.nonEmpty, "fixture should contain near-dup pairs")
+    bothFinishes(near).foreach(rows => assert(
+      longComponents(rows) == unionFindMins(nearEdges.toSeq)))
+    // string ids whose minimum differs between Java's String.compareTo
+    // (U+1F600 is a surrogate pair, below U+FFFD) and Spark's UTF-8
+    // byte order (F0 9F 98 80 above EF BF BD): both finishes must
+    // return Spark's min
+    val (smiley, fffd) = ("\uD83D\uDE00", "\uFFFD")
+    assert(smiley.compareTo(fffd) < 0)
+    assert(Seq(smiley, fffd).toDF("x")
+      .agg(org.apache.spark.sql.functions.min("x")).head().getString(0)
+      == fffd)
+    val expect = Map(smiley -> fffd, fffd -> fffd, "a" -> "a", "b" -> "a")
+    bothFinishes(Seq((smiley, fffd), ("b", "a")).toDF("id_a", "id_b"))
+      .foreach(rows => assert(
+        rows.map(r => r.getString(0) -> r.getString(1)).toMap == expect))
+  }
+
+  /** Reference components: classic union-find over `edges`, each id
+    * mapped to its component's minimum id.
+    */
+  private def unionFindMins(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    // min-id per component (find() may not return the min directly)
+    val members = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    val minOf = members.groupBy(find).map { case (r, ms) => r -> ms.min }
+    members.map(x => x -> minOf(find(x))).toMap
+  }
+
+  private def longComponents(rows: Array[Row]): Map[Long, Long] =
+    rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Connected components of `pairs` through the default finish (on
+    * the driver for graphs this small) and the distributed loop that
+    * a driver-finish bound of 0 forces.
+    */
+  private def bothFinishes(pairs: org.apache.spark.sql.DataFrame) = {
+    import graft.pipeline.Dedup
+    Seq(Dedup.connectedComponents(pairs),
+      Dedup.connectedComponents(pairs, "id_a", "id_b", 25, 0, 0L))
+      .map(_.collect())
   }
 
   test("property: native winnow selection == staged fold on arbitrary text") {
