@@ -230,27 +230,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Exact n-gram Jaccard for a set of candidate pairs: joins each side of
-    * the pair against the shingle table, counts the intersection, and
-    * derives |A ∪ B| = |A| + |B| − |A ∩ B|. Cost ∝ candidates, not n².
-    */
-  def jaccardVerify(pairs: DataFrame, sh: DataFrame,
-      idCol: String): DataFrame = {
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    val shA = sh.select(col(idCol).as("id_a"), col("shingle"))
-    val shB = sh.select(col(idCol).as("id_b"), col("shingle"))
-    val inter = pairs
-      .join(shA, "id_a")
-      .join(shB, Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), "id_b")
-      .withColumn("jaccard", col("n_inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("n_inter")))
-  }
-
   /** Per-doc shingle SET + MinHash signature in ONE aggregate — the
     * shared frame behind [[nearDuplicatePairs]]/[[nearDuplicatePairs64]].
     * The former pipeline consumed the exploded (id, shingle) table FOUR

@@ -26,8 +26,14 @@ import org.apache.spark.sql.functions._
   * itself — plus rare 64-bit hash collisions that the verify step removes.
   * Both sides are reduced to DISTINCT strings before blocking, so a
   * duplicate-heavy corpus (the adversarial case for any bucket self-join)
-  * costs one pair per distinct pair, not per row pair. Verification is
-  * codegen'd `levenshtein` on the thin candidate set. A long-string corpus
+  * costs one pair per distinct pair, not per row pair. [[selfPairs]]
+  * verifies inside its bucket fold with a bit-parallel kernel
+  * ([[Verifier]]: one 64-bit word per key of at most 64 code points, a
+  * banded DP above that); the two-source joins verify with codegen'd
+  * `levenshtein` on the thin candidate set. Every length and distance —
+  * `maxLen`, the deletion neighborhood, the verify, the reported `dist`
+  * — counts code points, so a supplementary character (an emoji) is one
+  * edit, as in Spark's `length` and `levenshtein`. A long-string corpus
   * caps the explode via `maxLen` (QI keys are short by nature; a 10 kB
   * "key" is not a linkage key) — and the cap is DEPTH-AWARE by default
   * ([[defaultMaxLen]]: 256 at d=1, 64 at d>=2), because the d>=2
@@ -57,18 +63,26 @@ object Linkage {
     cap
   }
 
-  /** All strings reachable from `s` by deleting at most `maxDist`
-    * characters (including `s` itself), deduplicated.
+  /** All strings reachable from `s` by deleting at most `maxDist` code
+    * points (including `s` itself), deduplicated. A surrogate pair is one
+    * code point and is deleted whole, so the neighborhood agrees with the
+    * code-point distances `length` and `levenshtein` report.
     */
   private[graft] def deletionVariants(s: String, maxDist: Int): Seq[String] = {
     var frontier = Set(s)
     var all = Set(s)
     var step = 0
     while (step < maxDist && frontier.nonEmpty) {
-      frontier = for {
-        t <- frontier if t.length > 0
-        i <- (0 until t.length).toSet[Int]
-      } yield t.substring(0, i) + t.substring(i + 1)
+      frontier = frontier.flatMap { t =>
+        val out = List.newBuilder[String]
+        var i = 0
+        while (i < t.length) {
+          val k = Character.charCount(t.codePointAt(i))
+          out += t.substring(0, i) + t.substring(i + k)
+          i += k
+        }
+        out.result()
+      }
       all ++= frontier
       step += 1
     }
@@ -179,17 +193,32 @@ object Linkage {
     math.max(spark.sessionState.conf.numShufflePartitions,
       spark.sparkContext.defaultParallelism)
 
-  /** Banded Levenshtein (Ukkonen 1985): the exact distance if it is
-    * <= `maxDist`, else -1 — O(maxDist·len) instead of the full
-    * O(len²) DP, since cells farther than `maxDist` off the diagonal
-    * can never contribute to a distance within the bound.
+  /** Banded Levenshtein (Ukkonen 1985) over code points: the exact
+    * distance if it is <= `maxDist`, else -1 — O(maxDist·len) instead of
+    * the full O(len²) DP, since cells farther than `maxDist` off the
+    * diagonal can never contribute to a distance within the bound.
     */
   private[graft] def boundedLev(a: String, b: String, maxDist: Int): Int =
-    boundedLevInto(a, b, maxDist, new Scratch)
+    boundedLevInto(codePointsOf(a), codePointsOf(b), maxDist, new Scratch)
 
-  /** Per-thread DP scratch: a hot caller (the in-bucket pair fold runs
-    * tens of millions of verifies per task at corpus scale) reuses the
-    * two band rows instead of allocating them per call — the per-call
+  /** `s` as code points (a surrogate pair is one), without the stream
+    * machinery of `String.codePoints`: the fold converts every member of
+    * every bucket.
+    */
+  private def codePointsOf(s: String): Array[Int] = {
+    val out = new Array[Int](s.codePointCount(0, s.length))
+    var (i, k) = (0, 0)
+    while (i < s.length) {
+      out(k) = s.codePointAt(i)
+      i += Character.charCount(out(k))
+      k += 1
+    }
+    out
+  }
+
+  /** Per-thread DP scratch: a hot caller (the fold's banded fallback can
+    * run tens of millions of verifies per task at corpus scale) reuses
+    * the two band rows instead of allocating them per call — the per-call
     * arrays were the dominant garbage source and made the operator's
     * wall time GC-topology-sensitive rather than compute-bound.
     */
@@ -202,8 +231,8 @@ object Linkage {
     }
   }
 
-  private[graft] def boundedLevInto(a: String, b: String, maxDist: Int,
-      scratch: Scratch): Int = {
+  private[graft] def boundedLevInto(a: Array[Int], b: Array[Int],
+      maxDist: Int, scratch: Scratch): Int = {
     val (n, m) = (a.length, b.length)
     if (math.abs(n - m) > maxDist) return -1
     if (n == 0) return m // <= maxDist by the length check
@@ -224,7 +253,7 @@ object Linkage {
       var best = cur(0) // column 0 is part of the row minimum
       j = lo
       while (j <= hi) {
-        val sub = prev(j - 1) + (if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else 1)
+        val sub = prev(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1)
         val del = prev(j) + 1
         val ins = cur(j - 1) + 1
         val v = math.min(sub, math.min(del, ins))
@@ -239,15 +268,103 @@ object Linkage {
     if (prev(m) <= maxDist) prev(m) else -1
   }
 
+  /** The in-bucket fold's Levenshtein verifier, over code points: set a
+    * pattern with [[pattern]], then [[apply]] gives each text's exact
+    * distance to it if that is <= `maxDist`, else -1.
+    *
+    * A pattern of at most 64 code points runs Myers' bit-vector
+    * recurrence (JACM 1999) in Hyyrö's global edit-distance form (2003):
+    * one 64-bit word step per text code point, against match masks built
+    * once per pattern. Every key under the d>=2 default cap fits one
+    * word; a longer pattern (only an explicit `maxLen` or d=1's 256
+    * default admits one) runs [[boundedLevInto]]. The tables are reused
+    * across patterns, so a verify allocates nothing. Not thread-safe.
+    */
+  private[graft] final class Verifier {
+    // bit k of the mask for code point c is set iff pattern(k) == c; the
+    // flat table covers c < 256, the (cp, mask) list the rest (<= 64
+    // distinct code points per one-word pattern)
+    private val lowEq = new Array[Long](256)
+    private val hiCp = new Array[Int](64)
+    private val hiEq = new Array[Long](64)
+    private var nHi = 0
+    private var pat = Array.emptyIntArray
+    private val scratch = new Scratch
+
+    def pattern(p: Array[Int]): Unit = {
+      if (pat.length <= 64) pat.foreach(c => if (c < 256) lowEq(c) = 0L)
+      nHi = 0
+      pat = p
+      if (p.length <= 64) for (k <- p.indices) {
+        val c = p(k)
+        if (c < 256) lowEq(c) |= 1L << k
+        else {
+          val h = slot(c)
+          if (h == nHi) { hiCp(h) = c; hiEq(h) = 0L; nHi += 1 }
+          hiEq(h) |= 1L << k
+        }
+      }
+    }
+
+    /** Index of `c` in the small lookup, or `nHi` if it is absent. */
+    private def slot(c: Int): Int = {
+      var h = 0
+      while (h < nHi && hiCp(h) != c) h += 1
+      h
+    }
+
+    private def eq(c: Int): Long =
+      if (c < 256) lowEq(c)
+      else { val h = slot(c); if (h < nHi) hiEq(h) else 0L }
+
+    def apply(t: Array[Int], maxDist: Int): Int = {
+      val (m, n) = (pat.length, t.length)
+      if (math.abs(m - n) > maxDist) return -1
+      if (m > 64) return boundedLevInto(pat, t, maxDist, scratch)
+      if (m == 0) return n // <= maxDist by the length check
+      val top = 1L << (m - 1)
+      // vertical deltas of the current DP column: +1 (vp) / -1 (vn)
+      var vp = -1L
+      var vn = 0L
+      var score = m // D[m][0]
+      var j = 0
+      while (j < n) {
+        val x = eq(t(j))
+        val d0 = (((x & vp) + vp) ^ vp) | x | vn
+        val hp = vn | ~(d0 | vp)
+        val hn = vp & d0
+        if ((hp & top) != 0L) score += 1
+        else if ((hn & top) != 0L) score -= 1
+        j += 1
+        // each remaining text code point lowers the score by at most 1
+        if (score - (n - j) > maxDist) return -1
+        val hp1 = (hp << 1) | 1L // row 0 is D[0][j] = j: a +1 step
+        vp = (hn << 1) | ~(d0 | hp1)
+        vn = hp1 & d0
+      }
+      score
+    }
+  }
+
+  /** One [[Verifier]] per executor thread, so a bucket's fold allocates
+    * no mask tables.
+    */
+  private val verifiers = ThreadLocal.withInitial(() => new Verifier)
+
   /** Self-linkage: all unordered pairs of distinct `strCol` values within
     * Levenshtein distance `maxDist`. Output columns `(name_a, name_b,
     * dist)` with `name_a < name_b`.
     *
     * Executed as ONE groupBy on the variant hash with an in-bucket
-    * pair fold (sorted members, banded-Levenshtein verify inline) —
-    * the blocked frame is computed once and never self-joined, and the
-    * verify is O(maxDist·len) per candidate instead of the full DP.
-    * Per-bucket state is the bucket's member list: bounded by the
+    * pair fold — the blocked frame is computed once and never
+    * self-joined. The fold sorts a bucket's members, turns each into
+    * code points once, and verifies every pair inline with
+    * [[Verifier]]: a member of at most 64 code points (every key under
+    * the d>=2 default cap) is the pattern of Myers' bit-vector
+    * recurrence, one 64-bit word step per code point of the other
+    * member; a longer one (an explicit `maxLen`, or d=1's 256 default)
+    * falls back to the O(maxDist·len) banded DP. Distances count code
+    * points. Per-bucket state is the bucket's member list: bounded by the
     * near-dup clique size (the output itself) because both inputs are
     * distinct-first — the same contract the former self-join had for
     * its bucket-collision fan-out.
@@ -270,13 +387,15 @@ object Linkage {
     // verify discards them — so the result stays exact.
     val pairsUdf = udf((hs: Seq[Long], ss: Seq[String]) => {
       val arr = hs.zip(ss).distinct.sortBy(_._2).toArray
+      val cps = arr.map(p => codePointsOf(p._2))
       val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-      val scratch = new Scratch
+      val lev = verifiers.get()
       var i = 0
       while (i < arr.length - 1) {
+        lev.pattern(cps(i))
         var j = i + 1
         while (j < arr.length) {
-          if (boundedLevInto(arr(i)._2, arr(j)._2, d, scratch) >= 0) {
+          if (lev(cps(j), d) >= 0) {
             val (ha, hb) = (arr(i)._1, arr(j)._1)
             out += (if (ha <= hb) (ha, hb) else (hb, ha))
           }

@@ -56,6 +56,9 @@ class PrivacyLinkageSpec extends SparkSpec {
     val d2 = Linkage.deletionVariants("abc", 2).toSet
     assert(d2 == Set("abc", "bc", "ac", "ab", "a", "b", "c"))
     assert(Linkage.deletionVariants("", 1).toSet == Set(""))
+    // a surrogate pair is deleted whole, never split into a lone half
+    assert(Linkage.deletionVariants("a\uD83D\uDE00", 1).toSet ==
+      Set("a\uD83D\uDE00", "\uD83D\uDE00", "a"))
   }
 
   test("selfPairs matches brute-force Levenshtein pairs (completeness)") {
@@ -193,6 +196,39 @@ class PrivacyLinkageSpec extends SparkSpec {
     // over-maxLen queries match nothing instead of exploding
     assert(Linkage.linkQueries(qs, "q_id", "q", ref, "name", 1,
       maxLen = 3).count() == 0)
+  }
+
+  test("supplementary characters are one edit: selfPairs, fuzzyJoin " +
+      "and linkQueries match a brute-force levenshtein cross join") {
+    val s = spark
+    import s.implicits._
+    // U+1F600 / U+1F601: one code point each, two UTF-16 units
+    val names = Seq("\uD83D\uDE00a", "xa", "ab\uD83D\uDE00", "abx",
+      "\uD83D\uDE00\uD83D\uDE01z", "qqz")
+    val df = names.toDF("n")
+    val ids = names.zipWithIndex.map { case (n, i) => n -> i.toLong }.toMap
+    for (d <- 1 to 2) {
+      val brute = df.as("l").crossJoin(df.as("r"))
+        .select(col("l.n").as("a"), col("r.n").as("b"),
+          levenshtein(col("l.n"), col("r.n")).as("dist"))
+        .filter(col("dist") <= d)
+      def rows(f: org.apache.spark.sql.DataFrame) = f.collect()
+        .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
+      val unordered = rows(brute)
+      val ordered = rows(brute.filter(col("a") < col("b")))
+      // two pairs at distance d, each with a supplementary character
+      assert(ordered.count(_._3 == d) == 2, s"d=$d: $ordered")
+      assert(rows(Linkage.selfPairs(df, "n", d)) == ordered, s"d=$d")
+      assert(rows(Linkage.fuzzyJoin(df, "n", df, "n", d)) == unordered,
+        s"d=$d")
+      val qs = names.map(n => (ids(n), n)).toDF("q_id", "q")
+      val linked = Linkage.linkQueries(qs, "q_id", "q", df, "n", d)
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2),
+          r.getInt(3))).toSet
+      assert(linked == unordered.map { case (a, b, dd) =>
+        (ids(a), a, b, dd) }, s"d=$d")
+    }
   }
 
   test("linkServeStream: batch-equal matches, exactly-once, multi-batch") {
@@ -631,9 +667,10 @@ class PrivacyLinkageSpec extends SparkSpec {
     }
   }
 
+  // checks the fold's Verifier beside boundedLev, over code points
   test("property: boundedLev == full Levenshtein DP capped at maxDist") {
     import org.scalacheck.{Gen => SGen, Prop, Test => SCTest}
-    def lev(a: String, b: String): Int = {
+    def lev(a: Array[Int], b: Array[Int]): Int = {
       val dp = Array.tabulate(a.length + 1)(i => i)
       for (j <- 1 to b.length) {
         var prev = dp(0); dp(0) = j
@@ -646,14 +683,46 @@ class PrivacyLinkageSpec extends SparkSpec {
       }
       dp(a.length)
     }
-    val word = SGen.choose(0, 10).flatMap(n =>
-      SGen.listOfN(n, SGen.oneOf('a', 'b', 'c')).map(_.mkString))
-    val prop = Prop.forAll(word, word, SGen.choose(1, 4)) { (a, b, d) =>
-      val want = { val l = lev(a, b); if (l <= d) l else -1 }
-      Linkage.boundedLev(a, b, d) == want
+    // ASCII, a Latin-1 letter (flat mask table), a BMP letter past it
+    // and an astral letter (both in the verifier's small lookup)
+    val cp = SGen.oneOf(
+      Seq("a", "b", "c", "\u00e9", "\u0436", "\uD83D\uDE00")
+        .map(_.codePointAt(0)))
+    // 63/64/65 code points sit on both sides of the one-word pattern
+    val word = SGen.oneOf(SGen.choose(0, 10), SGen.oneOf(63, 64, 65))
+      .flatMap(n => SGen.listOfN(n, cp))
+    // an edited copy lands near the cap, where an unrelated long word
+    // would only test the length gap and the early exit
+    def edited(w: List[Int]): SGen[List[Int]] =
+      SGen.choose(0, 5).flatMap(k => (1 to k).foldLeft(SGen.const(w)) {
+        (g, _) => for {
+          v <- g; op <- SGen.choose(0, 2); i <- SGen.choose(0, v.length)
+          c <- cp
+        } yield op match {
+          case 0 => v.patch(i, Seq(c), 0)
+          case 1 => v.patch(i, Nil, 1)
+          case _ => v.patch(i, Seq(c), 1)
+        }
+      })
+    val pair = for {
+      a <- word; b <- SGen.oneOf(word, edited(a))
+    } yield (a.toArray, b.toArray)
+    // one verifier for every case: a new pattern must clear the last one
+    val v = new Linkage.Verifier
+    def str(w: Array[Int]) = new String(w, 0, w.length)
+    val prop = Prop.forAllNoShrink(pair, SGen.choose(1, 4)) {
+      case ((a, b), d) =>
+        val want = { val l = lev(a, b); if (l <= d) l else -1 }
+        v.pattern(a)
+        val ab = v(b, d)
+        v.pattern(b)
+        val ba = v(a, d)
+        Prop(Linkage.boundedLev(str(a), str(b), d) == want && ab == want &&
+          ba == want) :| s"a=${str(a)} b=${str(b)} d=$d want=$want " +
+          s"verifier=($ab, $ba)"
     }
     val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(500), prop)
+      SCTest.Parameters.default.withMinSuccessfulTests(2000), prop)
     assert(res.passed, res.status.toString)
     // the empty/length-gap edges explicitly
     assert(Linkage.boundedLev("", "", 1) == 0)
@@ -661,6 +730,10 @@ class PrivacyLinkageSpec extends SparkSpec {
     assert(Linkage.boundedLev("", "ab", 2) == 2)
     assert(Linkage.boundedLev("ab", "", 1) == -1)
     assert(Linkage.boundedLev("aaab", "b", 3) == 3)
+    // a supplementary character is one edit, not two UTF-16 units
+    assert(Linkage.boundedLev("\uD83D\uDE00a", "xa", 1) == 1)
+    v.pattern(Array.emptyIntArray)
+    assert(v(Array(97, 98), 2) == 2 && v(Array(97, 98), 1) == -1)
   }
 
   test("property: blocking completeness — selfPairs == brute force on " +
@@ -668,7 +741,8 @@ class PrivacyLinkageSpec extends SparkSpec {
     import org.scalacheck.{Gen => SGen, Prop, Test => SCTest}
     val s = spark
     import s.implicits._
-    def lev(a: String, b: String): Int = {
+    def lev(sa: String, sb: String): Int = {
+      val (a, b) = (sa.codePoints().toArray, sb.codePoints().toArray)
       val dp = Array.tabulate(a.length + 1)(i => i)
       for (j <- 1 to b.length) {
         var prev = dp(0); dp(0) = j
@@ -682,18 +756,22 @@ class PrivacyLinkageSpec extends SparkSpec {
       dp(a.length)
     }
     // tiny alphabet + short strings => dense near-neighborhoods, the
-    // adversarial case for candidate generation
+    // adversarial case for candidate generation; the astral letter is
+    // one code point but two UTF-16 units
     val word = SGen.choose(1, 6).flatMap(n =>
-      SGen.listOfN(n, SGen.oneOf('a', 'b', 'c')).map(_.mkString))
+      SGen.listOfN(n, SGen.oneOf("a", "b", "c", "\uD83D\uDE00"))
+        .map(_.mkString))
     val corpus = SGen.choose(2, 12).flatMap(n => SGen.listOfN(n, word))
     val dist = SGen.oneOf(1, 2)
+    // name_a < name_b in Spark's (UTF-8 byte) string order
+    def utf8(x: String) = org.apache.spark.unsafe.types.UTF8String.fromString(x)
     val prop = Prop.forAll(corpus, dist) { (ws, d) =>
       val names = ws.distinct
       val got = Linkage.selfPairs(names.toDF("w"), "w", d)
         .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
         .toSet
       val want = (for {
-        a <- names; b <- names if a < b
+        a <- names; b <- names if utf8(a).compareTo(utf8(b)) < 0
         dd = lev(a, b) if dd <= d
       } yield (a, b, dd)).toSet
       got == want
