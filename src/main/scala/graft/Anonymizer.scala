@@ -391,10 +391,14 @@ final class Anonymizer(val spark: SparkSession, io: TableIO,
     * write+publish loop would corrupt cross-table dependencies — a later
     * table's lazy plan re-reads earlier tables (e.g. the FK old→new
     * mapping re-reads the source table) and must see pre-mask data.
+    * What the plans materialise is freed before the first publish.
     */
   def run(): Unit = {
-    val planned = plan()
-    planned.foreach { case (t, df) => io.stage(t, df) }
+    val planned = graft.pipeline.Materialize.scope {
+      val p = plan()
+      p.foreach { case (t, df) => io.stage(t, df) }
+      p
+    }
     planned.keys.foreach(io.commit)
   }
 

@@ -18,15 +18,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the cache sweep below unpersists localCheckpoint'd RDD blocks, and
-    // every such unpersist logs a per-RDD "lineage has been truncated"
-    // WARN (hundreds per run). The behavior is intended — each sample
-    // rebuilds its frames from scratch — so drop those loggers to ERROR
-    // rather than flood the bench log.
-    Seq("org.apache.spark.rdd.MapPartitionsRDD",
-        "org.apache.spark.rdd.ParallelCollectionRDD")
-      .foreach(l => org.apache.logging.log4j.core.config.Configurator
-        .setLevel(l, org.apache.logging.log4j.Level.ERROR))
     // JVM/codegen/parquet-footer warmup so the first timed query isn't
     // charged for session bring-up
     try spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -101,16 +92,11 @@ object Bench {
             false
           }
         val sec = (System.nanoTime() - t0) / 1e9
-        // outside the timed region: drop caches pinned by numbering/LSH
-        // operators so no sample reuses a previous sample's materialisation
-        // (and long runs don't accumulate dead cache entries). clearCache
-        // only covers the SQL cache; localCheckpoint blocks (LSH candidate
-        // frames, the CC loop) register as persistent RDDs, so sweep those
-        // too — every sample rebuilds its frames from scratch, so nothing
-        // live can reference last sample's checkpoint data.
+        // outside the timed region: free what the sample materialised
+        // (frames and broadcasts) so no sample reuses a previous one's
+        // blocks and long runs don't accumulate them
         spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        graft.pipeline.Materialize.release()
         name -> (if (ok) sec else -sec)
       }.toMap
     }

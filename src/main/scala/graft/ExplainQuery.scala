@@ -34,8 +34,7 @@ object ExplainQuery {
         plan.getBytes("UTF-8"))
       println(s"[explain] wrote $outDir/${name}_$suffix.txt")
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.pipeline.Materialize.release()
     }
     spark.stop()
   }

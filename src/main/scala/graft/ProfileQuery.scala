@@ -69,8 +69,7 @@ object ProfileQuery {
         .write.format("noop").mode("overwrite").save()
       val sec = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.pipeline.Materialize.release()
       if (rep > 0) {
         println(f"== $name rep $rep: $sec%.3f s, ${jobs.size} jobs")
         jobs.synchronized {

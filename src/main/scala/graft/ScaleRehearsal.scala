@@ -247,8 +247,7 @@ object ScaleRehearsal {
         }
       val sec = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.pipeline.Materialize.release()
       if (ok) sec else -sec
     }
 

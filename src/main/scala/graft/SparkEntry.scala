@@ -6,8 +6,8 @@ import org.apache.spark.sql.types.{DateType, DecimalType, LongType,
   StringType, TimestampNTZType, TimestampType}
 
 import graft.functions.Gen
-import graft.pipeline.{Dedup, Linkage, Multimodal, Pq, Privacy, Similarity,
-  TextOps}
+import graft.pipeline.{Dedup, Linkage, Materialize, Multimodal, Pq, Privacy,
+  Similarity, TextOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -281,14 +281,13 @@ object SparkEntry {
     */
   private def qHllMerge(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
-    // the 8 per-shard sketches, computed ONCE (localCheckpoint) and
+    // the 8 per-shard sketches, computed ONCE (Materialize) and
     // reused by both union plans — the equality under test must compare
     // two union TOPOLOGIES over the identical sketch set, not two
     // rebuilds
-    val shards = o
+    val shards = Materialize(o
       .groupBy(pmod(col("o_orderkey"), lit(8)).as("__shard"))
-      .agg(expr("hll_sketch_agg(o_custkey, 12)").as("__sk"))
-      .localCheckpoint()
+      .agg(expr("hll_sketch_agg(o_custkey, 12)").as("__sk")))
     // flat union vs the tree union a 1000-executor merge actually runs
     // (partial unions per pair of shards, then a union of partials):
     // ASSOCIATIVITY is the mergeability property distributed aggregation
@@ -868,10 +867,12 @@ object SparkEntry {
     * multi-action query calls `docs()` five to ten times — unmemoized,
     * the guard itself cost more than the exchange it was deciding
     * about (measured: q_dsir_select 1.35 s -> 2.07 s). The split count
-    * of a fixed source directory cannot change within a run.
+    * of a fixed source directory cannot change within a run. Keyed on
+    * the session's UUID, not the session, so the memo never keeps a
+    * dropped session reachable.
     */
   private val fanOutDecisions =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
+    new java.util.concurrent.ConcurrentHashMap[(String, String),
       java.lang.Boolean]()
 
   private def fanOutScanKeyed(df: DataFrame, key: String): DataFrame = {
@@ -883,7 +884,8 @@ object SparkEntry {
     // none (VERDICT r21 "What's wrong" §1). getNumPartitions plans the
     // scan RDD (driver-side only, no job) and returns the true split
     // count; at real corpus scale (splits >= cores) this is a no-op.
-    val need = fanOutDecisions.computeIfAbsent((df.sparkSession, key),
+    val need = fanOutDecisions.computeIfAbsent(
+      (org.apache.spark.sql.GraftSessionKey.of(df.sparkSession), key),
       _ => df.rdd.getNumPartitions < p).booleanValue()
     if (need) df.repartition(p) else df
   }
@@ -1426,14 +1428,13 @@ object SparkEntry {
           (col("doc_id") % 7 + 10).cast("int")), " ")).as("text"))
     // the sketch result is <= k rows but its lineage is a full corpus
     // scan, and TWO branches below join against it — materialize once
-    val hh = TextOps.heavyHitters(amplified, "text", k).localCheckpoint()
-    // exact per-token counts: computed once (localCheckpoint), read by
+    val hh = Materialize(TextOps.heavyHitters(amplified, "text", k))
+    // exact per-token counts: computed once (Materialize), read by
     // the totals, the reported-item join and the guaranteed-set scan
-    val exact = amplified
+    val exact = Materialize(amplified
       .select(explode(TextOps.tokens(col("text"))).as("token"))
       .filter(col("token") =!= "")
-      .groupBy("token").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy("token").agg(count(lit(1)).as("cnt")))
     val totals = exact.agg(sum(col("cnt")).cast("long").as("n_tokens"),
       count(lit(1)).as("n_vocab"))
     val floor = col("n_tokens").cast("double") / (k + 1)
@@ -1574,10 +1575,10 @@ object SparkEntry {
   private def qDedupAppend(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val path = scratchDir("q-dedup-append")
-    val base = Dedup.buildNearDupIndex(
-      d.filter(col("doc_id") % 4 === 0), "doc_id", "text")
-    try Dedup.writeNearDupIndex(base, path)
-    finally base.unpersistShingles()
+    Materialize.scope {
+      Dedup.writeNearDupIndex(Dedup.buildNearDupIndex(
+        d.filter(col("doc_id") % 4 === 0), "doc_id", "text"), path)
+    }
     Dedup.appendToNearDupIndex(s, path,
       d.filter(col("doc_id") % 4 === 2), "doc_id", "text")
     Dedup.nearDupPairsAgainstIndex(Dedup.loadNearDupIndex(s, path),
@@ -4083,12 +4084,12 @@ object SparkEntry {
       m._1 == "image/bmp" && m._2 == 16 && m._3 == 16
     })
     // decode once: the stats aggregate and BOTH sides of the pair join
-    // branch from this frame, so without the checkpoint each branch
+    // branch from this frame, so without materialising it each branch
     // would re-synthesize and re-decode every image (measured ~3× the
     // decode wall at 10×sf0.1) — persisting the THIN post-decode frame
     // (ids + two longs + two flags, never the pixels) is exactly the
     // decode-once posture a corpus-scale media pipeline runs
-    val hashed = graft.pipeline.Multimodal.averageHash(imgs, "img")
+    val hashed = Materialize(Multimodal.averageHash(imgs, "img")
       .withColumn("__mean",
         expr("aggregate(lum_grid, CAST(0 AS BIGINT), (a, x) -> a + x)" +
           " div 64"))
@@ -4098,8 +4099,7 @@ object SparkEntry {
           " shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"))
       .withColumn("__img_ok", metaOk(col("img")))
       .select(col("doc_id"), col("variant"), col("ahash"), col("__hsql"),
-        col("__img_ok"))
-      .localCheckpoint()
+        col("__img_ok")))
     val stats = hashed.agg(
       count(lit(1)).as("n_images"),
       sum(when(col("__img_ok"), 1L).otherwise(0L)).as("n_decoded"),
@@ -4117,7 +4117,7 @@ object SparkEntry {
         shiftright(col("id_b"), 1), 1L).otherwise(0L)), lit(0L))
         .as("n_cross_pairs"))
     // n_docs = n_images / 2 (two variants per doc) — from the
-    // checkpointed stats frame, not a separate corpus count job
+    // materialised stats frame, not a separate corpus count job
     stats.crossJoin(pairStats) // 1×1 scalar attach
       .select((col("n_images") / 2).cast("long").as("n_docs"),
         col("n_images"),
@@ -4208,10 +4208,10 @@ object SparkEntry {
       m._1 == "audio/wav" && m._2 == 8000 && m._3 == 1 && m._4 == 512
     })
     // decode once (the image row's posture): stats and both pair-join
-    // sides branch from the THIN checkpointed frame — without it each
+    // sides branch from the THIN materialised frame — without it each
     // branch re-synthesizes and re-decodes every clip, and the
     // javax.sound SPI lookup is the measured cost leader at 10×sf0.1
-    val hashed = graft.pipeline.Multimodal.audioFingerprint(clips, "clip")
+    val hashed = Materialize(Multimodal.audioFingerprint(clips, "clip")
       .withColumn("__mean",
         expr("aggregate(energy_windows, CAST(0 AS BIGINT), (a, x) -> a + x)" +
           " div 64"))
@@ -4221,8 +4221,7 @@ object SparkEntry {
           " shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"))
       .withColumn("__clip_ok", metaOk(col("clip")))
       .select(col("doc_id"), col("variant"), col("afp"), col("__hsql"),
-        col("__clip_ok"))
-      .localCheckpoint()
+        col("__clip_ok")))
     val stats = hashed.agg(
       count(lit(1)).as("n_audio"),
       sum(when(col("__clip_ok"), 1L).otherwise(0L)).as("n_decoded"),
@@ -4244,7 +4243,7 @@ object SparkEntry {
         shiftright(col("id_b"), 1), 1L).otherwise(0L)), lit(0L))
         .as("n_cross_pairs"))
     // n_docs = n_audio / 2 (two variants per doc) — from the
-    // checkpointed stats frame, not a separate corpus count job
+    // materialised stats frame, not a separate corpus count job
     stats.crossJoin(pairStats) // 1×1 scalar attach
       .select((col("n_audio") / 2).cast("long").as("n_docs"),
         col("n_audio"),
@@ -4427,8 +4426,8 @@ object SparkEntry {
       m._1 == "video/mp4" && m._2 == 320 && m._3 == 240 && m._4 == 10240
     })
     // decode once (the image/audio rows' posture): stats and both
-    // pair-join sides branch from the THIN checkpointed frame
-    val hashed = graft.pipeline.Multimodal.videoFingerprint(clips, "clip")
+    // pair-join sides branch from the THIN materialised frame
+    val hashed = Materialize(Multimodal.videoFingerprint(clips, "clip")
       .withColumn("__mean",
         expr("aggregate(size_windows, CAST(0 AS BIGINT), (a, x) -> a + x)" +
           " div 64"))
@@ -4438,8 +4437,7 @@ object SparkEntry {
           " shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"))
       .withColumn("__clip_ok", metaOk(col("clip")))
       .select(col("doc_id"), col("variant"), col("vfp"), col("__hsql"),
-        col("__clip_ok"))
-      .localCheckpoint()
+        col("__clip_ok")))
     val stats = hashed.agg(
       count(lit(1)).as("n_videos"),
       sum(when(col("__clip_ok"), 1L).otherwise(0L)).as("n_parsed"),
@@ -4457,7 +4455,7 @@ object SparkEntry {
         shiftright(col("id_b"), 1), 1L).otherwise(0L)), lit(0L))
         .as("n_cross_pairs"))
     // n_docs = n_videos / 2 (two variants per doc) — from the
-    // checkpointed stats frame, not a separate corpus count job
+    // materialised stats frame, not a separate corpus count job
     stats.crossJoin(pairStats) // 1×1 scalar attach
       .select((col("n_videos") / 2).cast("long").as("n_docs"),
         col("n_videos"),
@@ -4488,12 +4486,11 @@ object SparkEntry {
       .withColumn("clip", mp4(col("doc_id"), col("variant")))
     // thin post-walk frame: the pair join and the quality rank both
     // branch from it (decode-once posture)
-    val hashed = graft.pipeline.Multimodal.videoFingerprint(clips, "clip")
+    val hashed = Materialize(Multimodal.videoFingerprint(clips, "clip")
       .select((col("doc_id") * 2 + col("variant")).as("clip_id"),
         col("vfp"),
         expr("aggregate(size_windows, CAST(0 AS BIGINT), (a, x) -> a + x)")
-          .as("__bitrate"))
-      .localCheckpoint()
+          .as("__bitrate")))
     val pairs = graft.pipeline.Dedup.simHashNearPairs(
       hashed.select("clip_id", "vfp"), "clip_id", "vfp",
       k = 4, blocks = 6)
@@ -4505,7 +4502,7 @@ object SparkEntry {
       .agg(max(struct(col("__bitrate"), (-col("clip_id")).as("__nid")))
         .as("__best"))
       .select((-col("__best.__nid")).as("survivor_id"))
-    // n_docs = half the checkpointed clip frame — rides the same plan
+    // n_docs = half the materialised clip frame — rides the same plan
     // as the other stats branches instead of a separate corpus count
     val mediaStats = hashed.agg(
       (count(lit(1)) / 2).cast("long").as("n_docs"))
@@ -4590,7 +4587,7 @@ object SparkEntry {
     val clips = docs(s, dir).select(col("doc_id"))
       .select(col("doc_id"), explode(array(lit(0), lit(1))).as("variant"))
       .withColumn("clip", payload(col("doc_id"), col("variant")))
-    val hashed = graft.pipeline.Multimodal.mediaFingerprint(clips, "clip")
+    val hashed = Materialize(Multimodal.mediaFingerprint(clips, "clip")
       .withColumn("__mean",
         expr("aggregate(media_windows, CAST(0 AS BIGINT), (a, x) -> a + x)" +
           " div 64"))
@@ -4602,8 +4599,7 @@ object SparkEntry {
         col("modality") === when(col("doc_id") % 3 === 0, "image")
           .when(col("doc_id") % 3 === 1, "audio").otherwise("video"))
       .select(col("doc_id"), col("variant"), col("mfp"), col("__hsql"),
-        col("__mod_ok"))
-      .localCheckpoint()
+        col("__mod_ok")))
     val stats = hashed.agg(
       count(lit(1)).as("n_media"),
       sum(when(col("__mod_ok"), 1L).otherwise(0L)).as("n_modality_ok"),
@@ -4626,7 +4622,7 @@ object SparkEntry {
         coalesce(sum(when(col("__doc_a") % 3 =!= col("__doc_b") % 3, 1L)
           .otherwise(0L)), lit(0L)).as("n_cross_modality"))
     // n_docs = n_media / 2 (exactly two variants per doc) — derived
-    // from the already-checkpointed stats frame instead of a separate
+    // from the already-materialised stats frame instead of a separate
     // corpus count job
     stats.crossJoin(pairStats) // 1×1 scalar attach
       .select((col("n_media") / 2).cast("long").as("n_docs"),

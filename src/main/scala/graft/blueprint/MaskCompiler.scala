@@ -3,10 +3,10 @@ package graft.blueprint
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.types.StringType
 
 import graft.functions.Gen
+import graft.pipeline.Materialize
 
 /** Compiles a [[Blueprint]] into a DataFrame transformation.
   *
@@ -208,15 +208,17 @@ object RowNumbers {
     *
     * Range-partition by (flag, order key), sort within partitions (one wide
     * shuffle, all partitions in parallel), then fix up per-partition offsets
-    * from a cheap count aggregate. The ranged frame is persisted
-    * (memory-and-disk) so the count pass and the numbering pass execute the
-    * range shuffle exactly once AND see the identical partition layout
-    * (separate jobs over an uncached range shuffle can sample different
-    * boundaries — regression-tested).
+    * from a cheap count aggregate. The ranged frame is materialised
+    * ([[graft.pipeline.Materialize]], by the count pass) so both passes
+    * execute the range shuffle exactly once AND see the identical
+    * partition layout (separate jobs over an uncached range shuffle can
+    * sample different boundaries — regression-tested). It never enters
+    * the SQL cache, where a second `Anonymizer.run` over the same path
+    * would read this run's pre-mask rows.
     *
     * The numbering pass itself never leaves Tungsten: the per-partition
     * index is decoded from `monotonically_increasing_id()`
-    * (pid << 33 | local index over exactly the pinned cache layout) and the
+    * (pid << 33 | local index over exactly the materialised layout) and the
     * per-(partition, flag) adjustment rides in through a broadcast hash
     * join of a ≤2-rows-per-partition table — whole-stage codegen end to
     * end, vs the previous `Row.fromSeq` RDD pass that boxed every row.
@@ -234,10 +236,12 @@ object RowNumbers {
     val spark = df.sparkSession
     val withFlag = df.withColumn(FlagCol, partitionFlag.getOrElse(lit(1)))
     val sortCols = col(FlagCol) +: orderCols.map(col)
-    val ranged = withFlag.repartitionByRange(sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // pass 1 (materialises the cache): per-partition per-flag counts — the
+    // a fixed partition count: AQE would coalesce a small input into one
+    // partition and serialise the numbering and every write after it
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val ranged = Materialize(withFlag.repartitionByRange(parts, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*), eager = false)
+    // pass 1 (fills the blocks): per-partition per-flag counts — the
     // aggregate is partial map-side, the shuffle carries ≤ 2 rows/partition
     val counts = ranged
       .groupBy(spark_partition_id().as(PidCol), col(FlagCol))
@@ -257,7 +261,7 @@ object RowNumbers {
     }
     import spark.implicits._
     val adj = adjRows.toDF(PidCol, FlagCol, AdjCol)
-    // pass 2: narrow, codegen numbering over the cached partitions
+    // pass 2: narrow, codegen numbering over the materialised partitions
     ranged
       .withColumn(MidCol, monotonically_increasing_id())
       .withColumn(PidCol, shiftright(col(MidCol), 33).cast("int"))

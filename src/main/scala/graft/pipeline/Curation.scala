@@ -87,7 +87,7 @@ object Curation {
     val scrubbed = quality
       .withColumn(textCol, TextOps.redactPii(col(textCol)))
     // Deliberately NOT persisted into the dedup stage: the pair pipeline
-    // materialises in ONE job (connectedComponents checkpoints the edge
+    // materialises in ONE job (connectedComponents materialises the edge
     // frame first), where exchange reuse already deduplicates the scrub
     // subtree — caching it instead measured 1.6× slower end-to-end at
     // sf0.1 (block-store write + read beats nothing here; see the

@@ -549,9 +549,9 @@ object Dedup {
     * `id_b` batch, `cosine`), cosine ≥ `threshold`.
     *
     * Scale shape: the batch side collapses to its distinct probed
-    * cells (≤ nCentroids, collected once from the checkpointed thin
-    * batch projection — the batch frame may be non-deterministic and
-    * is materialised exactly once) and the corpus scan FILTERS on
+    * cells (≤ nCentroids, read from the materialised thin batch
+    * projection — the batch frame may be non-deterministic and is
+    * evaluated exactly once) and the corpus scan FILTERS on
     * those cells first — on a [[Similarity.loadIvfIndex]] layout that
     * is parquet partition pruning, so an ingest probe reads only the
     * cells its batch touches regardless of corpus size. The join is
@@ -567,17 +567,13 @@ object Dedup {
       batch: DataFrame, idCol: String, vecCol: String,
       threshold: Double, maxCell: Option[Int] = None,
       onHotCell: HotCellPolicy = HotCellPolicy.Fail): DataFrame = {
-    // pinned (not a bare localCheckpoint): the blocks register in the
-    // shared query-pin machinery, so a long-running consumer drains
-    // each batch's pins via Similarity.withQueryPinScope exactly as the
-    // batch-ANN probes do
     // null-embedding batch rows assign a null cell (centroidScan's
     // contract): they can be semantic duplicates of nothing, so they
     // drop out of the pair probe here — and survive semDeDupFilterBatch
     // untouched, matching the self-join form's tolerance — instead of
     // NPE-ing the cell scan (which would kill a long-running
     // semDeDupStream on one malformed row)
-    val b = Similarity.pinnedFrame(Similarity.assignCells(idx,
+    val b = Materialize(Similarity.assignCells(idx,
         batch.select(col(idCol), col(vecCol)), vecCol)
       .filter(col("__cell").isNotNull)
       .select(col("__cell").as("cell"), col(idCol).as("id_b"),
@@ -641,19 +637,18 @@ object Dedup {
     * published, mirroring the text-side incremental dedup contract).
     * Survivors are then safe to [[Similarity.appendToIvfIndex]].
     *
-    * The batch is pinned ONCE up front ([[Similarity.pinnedFrame]],
-    * full rows — the survivors carry every column) and both the pair
-    * probe and the anti-join read that snapshot: a non-deterministic
-    * batch frame (sample(), rand(), an unstable view) scores and
-    * filters the SAME rows, and the batch source is read once, not
-    * twice. The probe's internal thin pin re-reads the snapshot's
-    * blocks, not the source.
+    * The batch is materialised ONCE up front ([[Materialize]], full
+    * rows — the survivors carry every column) and both the pair probe
+    * and the anti-join read it: the batch source is read once, and a
+    * non-deterministic batch (rand(), uuid()) scores and filters the
+    * SAME rows — its snapshot is truncated, so a lost block fails
+    * loudly instead of redrawing them.
     */
   def semDeDupFilterBatch(idx: Similarity.IvfIndex, batch: DataFrame,
       idCol: String, vecCol: String, threshold: Double,
       maxCell: Option[Int] = None,
       onHotCell: HotCellPolicy = HotCellPolicy.Fail): DataFrame = {
-    val pinned = Similarity.pinnedFrame(batch)
+    val pinned = Materialize(batch)
     // under HotCellPolicy.Skip, rows probing a hot cell form no pairs
     // (their cell is excluded from the corpus side), so they survive
     // this anti-join untouched — pass-through-and-log, never a wedge
@@ -678,7 +673,7 @@ object Dedup {
     * within-cell), so the survivor rule needs no cross-cell tie story.
     * Cost over the pair scan: [[connectedComponents]] on the (thin)
     * pair set, which a pair graph within its driver-finish bound
-    * settles in one checkpoint job and one bounded collect, + two
+    * settles in one materialisation job and one bounded collect, + two
     * aggregates over component members — corpus-scale work stays the
     * one cell equi-join.
     */
@@ -760,7 +755,7 @@ object Dedup {
       .select("shingle").distinct()
     val n = math.max(shingles.count(), 1L)
     val bf = shingles.stat.bloomFilter("shingle", n, fpp)
-    trackBench(bench.sparkSession.sparkContext.broadcast(bf))
+    Materialize.track(bench.sparkSession.sparkContext.broadcast(bf))
   }
 
   /** Per-corpus-doc count of distinct shingles that HIT the benchmark
@@ -851,7 +846,7 @@ object Dedup {
     *    until the frame ends or passes [[DriverFinishRows]] rows or
     *    [[DriverFinishBytes]] id bytes. If the frame fits both, union-find
     *    runs on the driver and the result is a local relation: no further
-    *    Spark job, and nothing downstream reads the checkpoint blocks.
+    *    Spark job, and nothing downstream reads the materialised blocks.
     *    Past either budget the collected rows are dropped and the loop
     *    runs. Taken only for integral ids and UTF8_BINARY
     *    strings, whose driver-side order (`Long` compare, `UTF8String`
@@ -919,13 +914,13 @@ object Dedup {
   private[graft] def connectedComponents(pairs: DataFrame, idA: String,
       idB: String, maxIter: Int, driverRows: Int,
       driverBytes: Long): DataFrame = {
-    // eager localCheckpoint FIRST: when `pairs` is itself an expensive
-    // pipeline (MinHash LSH), the bounded collect and, past the bound,
-    // the loop's node and edge inits read the materialised blocks
-    // instead of re-running that pipeline per action.
-    val sym = pairs.select(col(idA).as("la"), col(idB).as("lb"))
-      .union(pairs.select(col(idB).as("la"), col(idA).as("lb")))
-      .localCheckpoint()
+    // materialised FIRST: when `pairs` is itself an expensive pipeline
+    // (MinHash LSH), the bounded collect and, past the bound, the loop's
+    // node and edge inits read the materialised blocks instead of
+    // re-running that pipeline per action.
+    val sym = Materialize(
+      pairs.select(col(idA).as("la"), col(idB).as("lb"))
+        .union(pairs.select(col(idB).as("la"), col(idA).as("lb"))))
     val onDriver = sym.schema("la").dataType match {
       case ByteType | ShortType | IntegerType | LongType =>
         componentsOnDriver[Long](sym, driverRows, driverBytes, LongType,
@@ -943,7 +938,7 @@ object Dedup {
     onDriver.getOrElse(componentsLoop(sym, maxIter))
   }
 
-  /** The driver finish of [[connectedComponents]] over the checkpointed
+  /** The driver finish of [[connectedComponents]] over the materialised
     * symmetric frame `sym`: ids collect as `wire` values, `decode` maps
     * them to keys whose `order` is Spark's order on the id type, and the
     * result casts back from `wire`. None when `sym` has more than
@@ -1000,28 +995,28 @@ object Dedup {
   }
 
   /** The distributed finish of [[connectedComponents]] over the
-    * checkpointed symmetric frame `sym`.
+    * materialised symmetric frame `sym`.
     */
   private def componentsLoop(sym: DataFrame, maxIter: Int): DataFrame = {
-    // eager localCheckpoint: an iterative DataFrame algorithm MUST
-    // truncate lineage, or round r's logical plan embeds rounds 0..r-1
-    // and planning itself blows up exponentially (persist alone keeps the
-    // full plan). On a real cluster with unreliable executors, swap for
-    // reliable `checkpoint` on a DFS checkpoint dir.
-    var lab = sym.select(col("la").as("id")).filter(col("id").isNotNull)
-      .distinct()
-      .select(col("id"), col("id").as("lbl"))
-      .localCheckpoint()
-    val edges = sym.filter(col("la") =!= col("lb")).distinct()
-      .select(col("la").as("u"), col("lb").as("v"))
-      .localCheckpoint()
+    // every round is materialised: an iterative DataFrame algorithm MUST
+    // cut its logical plan, or round r's plan embeds rounds 0..r-1 and
+    // planning itself blows up exponentially (persist alone keeps the
+    // full plan). Materialize cuts only the logical plan; a lost block
+    // recomputes from the RDD lineage, through the earlier rounds'
+    // blocks and the shuffle files they keep alive.
+    var lab = Materialize(
+      sym.select(col("la").as("id")).filter(col("id").isNotNull)
+        .distinct()
+        .select(col("id"), col("id").as("lbl")))
+    val edges = Materialize(sym.filter(col("la") =!= col("lb")).distinct()
+      .select(col("la").as("u"), col("lb").as("v")))
     // label-space edge view, always RE-DERIVED from the original edges
     // through the current labeling (never remapped incrementally — a
     // label id's own label can move away from its members' mapping, so
-    // incremental remapping silently drops live edges). NOT checkpointed:
-    // its plan is two joins over the checkpointed edges/lab frames, so
+    // incremental remapping silently drops live edges). NOT materialised:
+    // its plan is two joins over the materialised edges/lab frames, so
     // depth stays bounded without a per-round materialisation — the
-    // former per-round le checkpoint (with its distinct exchange) was
+    // former per-round le materialisation (with its distinct exchange) was
     // one third of the loop's jobs for frames this derivation rebuilds
     // inside the shrink aggregate anyway.
     def labelEdges(l: DataFrame): DataFrame = edges
@@ -1037,12 +1032,11 @@ object Dedup {
       // label-edge set always has some la > lb (the larger endpoint of
       // any cross-label edge shrinks), so m.isEmpty <=> le.isEmpty —
       // probing m instead of a materialised le drops a full edge-view
-      // checkpoint per round, and the probe reads the just-checkpointed
-      // one-row-per-shrinking-label blocks.
-      val m = labelEdges(lab)
+      // materialisation per round, and the probe reads the just-
+      // materialised one-row-per-shrinking-label blocks.
+      val m = Materialize(labelEdges(lab)
         .groupBy(col("la")).agg(min(col("lb")).as("mn"))
-        .filter(col("mn") < col("la"))
-        .localCheckpoint()
+        .filter(col("mn") < col("la")))
       if (m.isEmpty) converged = true
       else {
         require(iter < maxIter,
@@ -1060,7 +1054,7 @@ object Dedup {
           l.join(parent, l("lbl") === parent("pid"))
             .select(l("id"), col("plbl").as("lbl"))
         }
-        lab = jump(jump(labA)).localCheckpoint()
+        lab = Materialize(jump(jump(labA)))
         iter += 1
       }
     }
@@ -1187,14 +1181,7 @@ object Dedup {
     */
   final case class NearDupIndex(bands: DataFrame, shingles: DataFrame,
       sizes: DataFrame, idCol: String, numHashes: Int, rowsPerBand: Int,
-      shingleK: Int, production64: Boolean) {
-    /** Release the cached shingle frame a [[buildNearDupIndex]] build
-      * holds (no-op on a [[loadNearDupIndex]]-loaded index, whose frames
-      * are plain parquet reads). Call once the index is written or
-      * probing is done.
-      */
-    def unpersistShingles(): Unit = { shingles.unpersist(); () }
-  }
+      shingleK: Int, production64: Boolean)
 
   /** Build the incremental-dedup index frames for `df`. With
     * `production64` the signatures use xxhash64 (the ~10× cheaper
@@ -1202,26 +1189,23 @@ object Dedup {
     *
     * The shingle frame feeds all three index tables (signatures, the
     * shingle table itself, per-doc sizes), so by default it is
-    * persisted — the CPU-heavy explode + distinct runs once per build,
-    * not once per consumer (a [[writeNearDupIndex]] of an unshared
-    * frame would re-shingle the corpus per output ACTION).
-    * MEMORY_AND_DISK because shingle rows are corpus-scale: spill beats
-    * recompute, and the deterministic lineage keeps eviction safe.
-    * Release with [[NearDupIndex.unpersistShingles]] when done — or
-    * pass `persistShingles = false` when the index feeds exactly ONE
-    * action (e.g. an immediate [[nearDupPairsAgainstIndex]] probe),
-    * where in-plan reuse already computes the shingles once and a cache
-    * entry would outlive the call for nothing.
+    * materialised ([[Materialize]], by its first consumer) — the
+    * CPU-heavy explode + distinct runs once per build, not once per
+    * consumer (a [[writeNearDupIndex]] of an unshared frame would
+    * re-shingle the corpus per output ACTION). Shingle rows are
+    * corpus-scale, so the blocks spill to disk, and a lost one
+    * recomputes from lineage. Build inside [[Materialize.scope]] to
+    * free them when the index is written — or pass
+    * `persistShingles = false` when the index feeds exactly ONE action
+    * (e.g. an immediate [[nearDupPairsAgainstIndex]] probe), where
+    * in-plan reuse already computes the shingles once.
     */
   def buildNearDupIndex(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 8, rowsPerBand: Int = 2, shingleK: Int = 3,
       production64: Boolean = false,
       persistShingles: Boolean = true): NearDupIndex = {
     val sh0 = shingles(df, idCol, textCol, shingleK)
-    val sh =
-      if (persistShingles)
-        sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else sh0
+    val sh = if (persistShingles) Materialize(sh0, eager = false) else sh0
     val sigs =
       if (production64) minHashSignatures64(sh, idCol, numHashes)
       else minHashSignatures(sh, idCol, numHashes)
@@ -1380,18 +1364,20 @@ object Dedup {
         s"appendToNearDupIndex: batch ids overlap the index at $path — " +
           "appending would double-count their shingles/sizes")
     }
-    val batch = buildNearDupIndex(renamed, idx.idCol, textCol,
-      idx.numHashes, idx.rowsPerBand, idx.shingleK, idx.production64)
-    // same concurrent-submit shape as writeNearDupIndex: the appends
-    // are independent per-table actions (the group was never atomic —
-    // see the crash note above)
-    try awaitAll(Seq(
-      () => batch.bands.sortWithinPartitions("band", "sig")
-        .write.mode("append").partitionBy("band").parquet(s"$path/bands"),
-      () => batch.shingles.write.mode("append")
-        .parquet(s"$path/shingles"),
-      () => batch.sizes.write.mode("append").parquet(s"$path/sizes")))
-    finally batch.unpersistShingles()
+    Materialize.scope {
+      val batch = buildNearDupIndex(renamed, idx.idCol, textCol,
+        idx.numHashes, idx.rowsPerBand, idx.shingleK, idx.production64)
+      // same concurrent-submit shape as writeNearDupIndex: the appends
+      // are independent per-table actions (the group was never atomic —
+      // see the crash note above)
+      awaitAll(Seq(
+        () => batch.bands.sortWithinPartitions("band", "sig")
+          .write.mode("append").partitionBy("band")
+          .parquet(s"$path/bands"),
+        () => batch.shingles.write.mode("append")
+          .parquet(s"$path/shingles"),
+        () => batch.sizes.write.mode("append").parquet(s"$path/sizes")))
+    }
   }
 
   /** Fold the small files an append-heavy lifecycle accumulates back
@@ -1662,46 +1648,6 @@ object Dedup {
           .as("n_removed_chars"))
   }
 
-  // benchmark-side broadcasts outstanding since the last
-  // [[releaseBenchBroadcasts]] drain — one entry per
-  // [[bloomContaminationHits]]/[[bloomDecontaminate]] filter and per
-  // [[removeBenchmarkSpansNarrow]] gram set. Weak references: a caller
-  // that never drains still gets the ContextCleaner's GC-driven cleanup
-  // once the frames built on them are dropped (the registry must not be
-  // what keeps the blocks alive); the drain is the EAGER path on top,
-  // mirroring [[Similarity.releaseQueryPins]].
-  private val benchBroadcasts =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      java.lang.ref.WeakReference[org.apache.spark.broadcast.Broadcast[_]]]
-
-  private def trackBench[T](b: org.apache.spark.broadcast.Broadcast[T])
-      : org.apache.spark.broadcast.Broadcast[T] = {
-    benchBroadcasts.add(
-      new java.lang.ref.WeakReference[
-        org.apache.spark.broadcast.Broadcast[_]](b))
-    b
-  }
-
-  /** Eagerly destroy every benchmark-side broadcast (Bloom filters,
-    * narrow-path gram sets) registered since the last drain — the
-    * explicit release for long-lived drivers that decontaminate many
-    * corpora, so broadcast blocks don't accumulate until GC. Call ONLY
-    * after every frame built from them has been fully consumed: a
-    * destroyed broadcast fails any still-lazy frame reading it.
-    * Returns the number destroyed (GC-collected entries drain
-    * silently).
-    */
-  def releaseBenchBroadcasts(): Int = {
-    var n = 0
-    var ref = benchBroadcasts.poll()
-    while (ref != null) {
-      val b = ref.get()
-      if (b != null) { b.destroy(); n += 1 }
-      ref = benchBroadcasts.poll()
-    }
-    n
-  }
-
   /** [[removeBenchmarkSpans]] as ONE narrow per-row map — the serving /
     * streaming shape: the benchmark's distinct gram hashes are
     * collected once (benchmark suites are MBs; the set is
@@ -1732,7 +1678,7 @@ object Dedup {
       .map(r => java.lang.Long.parseUnsignedLong(
         r.getString(0).substring(0, 16), 16))
       .distinct.sorted
-    val bc = trackBench(
+    val bc = Materialize.track(
       corpus.sparkSession.sparkContext.broadcast(benchGrams))
     val cut = udf { (text: String) =>
       if (text == null) null

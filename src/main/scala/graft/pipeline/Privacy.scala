@@ -146,9 +146,9 @@ object Privacy {
     * Scale shape: per round ONE stats aggregation over the leaf id
     * (count / min / max / median per dimension — reducer state bounded
     * by the leaf count) + ONE counts-below-median aggregation over the
-    * split candidates + a broadcast split-table application; lineage is
-    * truncated per round (`localCheckpoint`, the iterative-DataFrame
-    * contract — see [[Dedup.connectedComponents]]). Rounds are bounded
+    * split candidates + a broadcast split-table application; each
+    * round is materialised ([[Materialize]]: plan cut, lineage kept —
+    * see [[Dedup.connectedComponents]]). Rounds are bounded
     * by `maxRounds` (tree depth; leaf ids use one bit per level).
     * `exactMedians = true` buffers each leaf's dimension values in
     * aggregation state (the [[Percentiles]] exact-path caveat — fine to
@@ -194,8 +194,8 @@ object Privacy {
     require(maxRounds >= 1 && maxRounds <= 60,
       s"maxRounds must be in [1, 60] (got $maxRounds)")
     val spark = df.sparkSession
-    var work = df.na.drop("any", dims)
-      .withColumn("__pid", lit(0L)).localCheckpoint()
+    var work = Materialize(df.na.drop("any", dims)
+      .withColumn("__pid", lit(0L)))
 
     // global widths normalize the split-dimension choice (round 0 box)
     val gAggs = dims.flatMap(d => Seq(min(col(d)).cast("double"),
@@ -277,11 +277,11 @@ object Privacy {
             case (acc, (d, i)) =>
               acc.when(col("__dim") === i, col(d) > col("__cut"))
           }
-          work = work.join(broadcast(splitDf), Seq("__pid"), "left")
-            .withColumn("__pid", when(col("__dim").isNull, col("__pid"))
-              .otherwise(col("__pid") * 2 + side.cast("long") + 1))
-            .drop("__dim", "__cut")
-            .localCheckpoint()
+          work = Materialize(
+            work.join(broadcast(splitDf), Seq("__pid"), "left")
+              .withColumn("__pid", when(col("__dim").isNull, col("__pid"))
+                .otherwise(col("__pid") * 2 + side.cast("long") + 1))
+              .drop("__dim", "__cut"))
         }
       }
       round += 1

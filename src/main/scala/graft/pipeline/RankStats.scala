@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** Distribution window statistics (ntile / percent_rank / cume_dist) without
   * a per-group single-task sort.
@@ -17,7 +16,7 @@ import org.apache.spark.storage.StorageLevel
   *
   *  1. `repartitionByRange(group ++ order)` + `sortWithinPartitions` — one
   *     wide shuffle, all partitions sorted in parallel, each group a
-  *     contiguous run of partitions. The frame is persisted so both passes
+  *     contiguous run of partitions. The frame is materialised so both passes
   *     see the identical physical layout (separate jobs over an uncached
   *     range shuffle can sample different boundaries — see
   *     [[graft.blueprint.RowNumbers.scalable]], which pioneered the trick
@@ -75,11 +74,12 @@ object RankStats {
     val spark = df.sparkSession
     val inputCols = df.columns.toSeq
     val sortCols = (groupCols ++ orderCols).map(col)
-    val ranged = df.repartitionByRange(sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // fixed partition count, as in RowNumbers.scalable
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val ranged = Materialize(df.repartitionByRange(parts, sortCols: _*)
+      .sortWithinPartitions(sortCols: _*), eager = false)
 
-    // pass 1 (materialises the cache): per-(partition, group) row count and
+    // pass 1 (fills the blocks): per-(partition, group) row count and
     // first local index. Using min(local index) instead of comparing group
     // values driver-side keeps the group key type-agnostic: the range sort
     // already encodes the group order, we just read it off.
@@ -123,7 +123,7 @@ object RankStats {
     val adj = spark.createDataFrame(
       java.util.Arrays.asList(adjRows: _*), adjSchema)
 
-    // pass 2: narrow codegen indexing over the pinned cache layout. The
+    // pass 2: narrow codegen indexing over the materialised layout. The
     // join condition is null-safe: a window treats NULL as a regular group
     // value, so `<=>` (not `=`) keeps null-keyed rows.
     val mids = ranged

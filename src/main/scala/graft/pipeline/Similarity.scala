@@ -154,15 +154,11 @@ object Similarity {
       maxBucket: Option[Int] = None): DataFrame = {
     // both sides of the self-join read the banded frame — persisting it
     // lets the self-join reuse one materialisation of the signatures. The
-    // cache must not outlive the call (a long-lived session looping over
-    // corpora would accumulate dead entries), so the thin (id_a, id_b)
-    // result is materialised eagerly via localCheckpoint and the bands
-    // cache released in finally. The checkpointed blocks are
-    // MEMORY_AND_DISK and freed by the context cleaner once the frame is
-    // unreachable.
+    // cache must not outlive the call, so the thin (id_a, id_b) result is
+    // materialised eagerly before the bands cache is released.
     val bands = bandedSignatures(df, idCol, vecCol, nBands, bitsPerBand)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try candidatePairPlan(bands, idCol, maxBucket).localCheckpoint()
+    try Materialize(candidatePairPlan(bands, idCol, maxBucket))
     finally bands.unpersist()
   }
 
@@ -178,7 +174,7 @@ object Similarity {
   /** Lazy candidate-pair plan over a banded frame — split out so tests can
     * assert the join shape (equi-join, never cartesian) on the plan that
     * actually generates candidates, which [[signBandCandidates]]'s
-    * checkpoint would otherwise hide.
+    * materialisation would otherwise hide.
     */
   private[graft] def candidatePairPlan(bands: DataFrame, idCol: String,
       maxBucket: Option[Int]): DataFrame = {
@@ -575,7 +571,7 @@ object Similarity {
     * Tie rules match [[queryIvf]] exactly: probe ties toward the lower
     * cell id, result ties toward the lower corpus id.
     *
-    * NOTE: the call itself runs a small eager job (it checkpoints the
+    * NOTE: the call itself runs a small eager job (it materialises the
     * thin query projection) — the returned frame is lazy, the corpus
     * pruning happens inside it ([[probedCellScan]]: one broadcast of
     * the distinct probed cells, partition-pruned at runtime). The query
@@ -702,100 +698,19 @@ object Similarity {
       "left_semi")
   }
 
-  /** The internal (`__qid`, `__qv`) query projection, pinned with an
-    * eager localCheckpoint so every consumer — the probed-cell
-    * semi-join's build, the candidate explode, the rerank join — reads the SAME
-    * materialised rows. The checkpoint is what makes the batch paths
-    * safe on non-deterministic query frames; it is thin (id + vector)
-    * and batch-sized by construction, so the eager job is cheap.
-    *
-    * Lifetime: the checkpointed blocks live until [[releaseQueryPins]]
-    * (or GC of the RDD). And because a localCheckpoint truncates
-    * lineage, its blocks are unrecoverable on executor loss — a lost
-    * executor mid-action fails the returned lazy frame rather than
-    * recomputing. Acceptable for batch serving (re-run the batch);
-    * long-lived drivers should call [[releaseQueryPins]] after each
-    * batch's results are consumed.
+  /** The internal (`__qid`, `__qv`) query projection, materialised
+    * eagerly ([[Materialize]]) so every consumer — the probed-cell
+    * semi-join's build, the candidate explode, the rerank join — reads
+    * the SAME rows: a non-deterministic query frame is truncated and read
+    * once, a deterministic one recomputes lost blocks from lineage. It is
+    * thin (id + vector) and batch-sized by construction, so the eager
+    * job is cheap. A serving loop frees it per batch with
+    * [[Materialize.scope]].
     */
   private def pinnedQueryFrame(queries: DataFrame, qIdCol: String,
       qVecCol: String): DataFrame =
-    pinnedFrame(queries
+    Materialize(queries
       .select(col(qIdCol).as("__qid"), col(qVecCol).as("__qv")))
-
-  /** Eagerly materialise `df` via localCheckpoint and REGISTER the
-    * blocks in the query-pin machinery (the active thread scope when
-    * inside [[withQueryPinScope]], else the global weak registry) —
-    * the registration half of the batch-probe checkpoint, shared with
-    * the other against-index probes (incremental semantic dedup), so
-    * one drain discipline covers every probe family.
-    */
-  private[pipeline] def pinnedFrame(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint()
-    cp.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        val scope = pinScope.get()
-        if (scope != null) scope.add(lr.rdd)
-        else queryPins.add(new java.lang.ref.WeakReference(lr.rdd))
-      case _ => ()
-    }
-    cp
-  }
-
-  private val pinScope =
-    new ThreadLocal[java.util.ArrayList[org.apache.spark.rdd.RDD[_]]]()
-
-  /** Run `body` under its OWN query-pin scope: batch-ANN calls issued
-    * inside `body` ON THIS THREAD pin into the scope instead of the
-    * global registry, and the scope unpersists exactly those pins when
-    * `body` returns — the per-batch drain a long-running consumer
-    * (e.g. a serving stream's foreachBatch) needs WITHOUT touching
-    * other concurrent consumers' pins, which a global
-    * [[releaseQueryPins]] would tear out from under them mid-write.
-    * `body`'s results must be fully consumed before it returns (the
-    * pinned frames are lineage-truncated — same contract as
-    * [[releaseQueryPins]]); threads spawned inside `body` pin globally
-    * as usual.
-    */
-  def withQueryPinScope[A](body: => A): A = {
-    val outer = pinScope.get()
-    val scope = new java.util.ArrayList[org.apache.spark.rdd.RDD[_]]()
-    pinScope.set(scope)
-    try body
-    finally {
-      if (outer != null) pinScope.set(outer) else pinScope.remove()
-      scope.forEach(r => r.unpersist(blocking = false))
-    }
-  }
-
-  // pins outstanding since the last releaseQueryPins drain — bounded by
-  // the number of batch-ANN calls between drains, each entry one thin
-  // (id, vector) RDD handle. Weak references: a caller that never
-  // drains still gets the ContextCleaner's GC-driven unpersist once it
-  // drops the result frame (the registry must not be what keeps the
-  // blocks alive); releaseQueryPins is the EAGER path on top.
-  private val queryPins =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]
-
-  /** Drop the materialised query-frame blocks pinned by every
-    * [[queryIvfBatch]]/[[queryIvfInt8Batch]]/[[queryIvfPqBatch]] call
-    * since the last drain (mirrors
-    * [[Dedup.NearDupIndex.unpersistShingles]]). Call ONLY after the
-    * batch results have been fully consumed: the pinned frames are
-    * lineage-truncated, so a released frame cannot be recomputed and
-    * any still-lazy result reading it will fail. Returns the number of
-    * pins released (GC-collected entries drain silently).
-    */
-  def releaseQueryPins(): Int = {
-    var n = 0
-    var ref = queryPins.poll()
-    while (ref != null) {
-      val r = ref.get()
-      if (r != null) { r.unpersist(blocking = false); n += 1 }
-      ref = queryPins.poll()
-    }
-    n
-  }
 
   private def ivfBatchPlan(idx: IvfIndex, queries: DataFrame,
       qIdCol: String, qVecCol: String, k: Int, nProbe: Int,
@@ -1337,7 +1252,7 @@ object Similarity {
     * ≥ the probed cells' row count it equals [[queryIvfBatch]].
     *
     * NOTE: like [[queryIvfBatch]], the call runs a small eager job (the
-    * query-projection checkpoint) before returning the lazy result
+    * query-projection materialisation) before returning the lazy result
     * frame; corpus pruning rides inside it via [[probedCellScan]].
     *
     * Output: query id (as `qIdCol`), all corpus columns except the

@@ -865,7 +865,7 @@ object TextOps {
     * Scale shape: two explode + hash aggregations, each collapsing its
     * corpus to a vocabulary-bounded count table before anything joins;
     * one full-outer join of those two bounded tables, materialised
-    * ONCE (localCheckpoint) so the (n_a, n_b, V) scalar pass does not
+    * ONCE ([[Materialize]]) so the (n_a, n_b, V) scalar pass does not
     * re-run the corpus scans; the scalars ride a broadcast one-row
     * frame. Nothing corpus-sized crosses a shuffle after the
     * aggregates, and each corpus is scanned exactly once.
@@ -902,18 +902,18 @@ object TextOps {
     */
   def vocabDivergenceFromCounts(countsA: DataFrame, countsB: DataFrame)
       : DataFrame = {
-    // localCheckpoint: the (n_a, n_b, V) scalars AND the output both
+    // materialised: the (n_a, n_b, V) scalars AND the output both
     // read this vocabulary-bounded table — without it the totals
     // branch re-executes the whole scan→aggregate→join chain, i.e.
     // two extra full corpus scans at 100 TB for three numbers (the
     // mondrian/connectedComponents materialisation contract)
-    val joined = countsA.select(col("token"), col("cnt").as("c_a"))
-      .join(countsB.select(col("token"), col("cnt").as("c_b")),
-        Seq("token"), "full_outer")
-      .select(col("token"),
-        coalesce(col("c_a"), lit(0L)).as("c_a"),
-        coalesce(col("c_b"), lit(0L)).as("c_b"))
-      .localCheckpoint()
+    val joined = Materialize(
+      countsA.select(col("token"), col("cnt").as("c_a"))
+        .join(countsB.select(col("token"), col("cnt").as("c_b")),
+          Seq("token"), "full_outer")
+        .select(col("token"),
+          coalesce(col("c_a"), lit(0L)).as("c_a"),
+          coalesce(col("c_b"), lit(0L)).as("c_b")))
     val totals = joined.agg(sum(col("c_a")).cast("long").as("__na"),
       sum(col("c_b")).cast("long").as("__nb"),
       count(lit(1)).as("__v"))

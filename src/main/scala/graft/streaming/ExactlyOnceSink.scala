@@ -265,7 +265,8 @@ object ExactlyOnceSink {
     val bucketOf = pmod(xxhash64(col(keyCol)), lit(nBuckets)).cast("int")
     // inside foreachBatch the batch frame may recompute per action; this
     // function acts on it three times (touched-bucket collect, broadcast
-    // anti-join, union), so pin one materialisation first
+    // anti-join, union), so pin one materialisation first — truncated,
+    // as dropDuplicates' arbitrary row per key must not be redrawn
     val incoming = batch.dropDuplicates(Seq(keyCol))
       .withColumn(BucketCol, bucketOf)
       .localCheckpoint()
@@ -291,6 +292,8 @@ object ExactlyOnceSink {
           .select(incoming.columns.toIndexedSeq.map(col): _*)
           .unionByName(incoming)
       }
+    // truncated, not graft.pipeline.Materialize: the write overwrites
+    // the files `existing` reads, so a recompute would read them half-written
     merged.localCheckpoint()
       .write
       .option("partitionOverwriteMode", "dynamic")

@@ -622,7 +622,7 @@ object StreamMask {
     * `clean_text`, `n_removed_chars`, `gopher_keep`).
     *
     * Long-lived drivers restarting many such queries should drain
-    * [[graft.pipeline.Dedup.releaseBenchBroadcasts]] between benchmark
+    * [[graft.pipeline.Materialize.release]] between benchmark
     * refreshes (a STOPPED query's gram broadcast is otherwise held
     * until GC).
     */
@@ -729,14 +729,12 @@ object StreamMask {
     * loaded ONCE at query start — centroids on the driver, the
     * cell-partitioned corpus as a lazy static frame whose partition
     * pruning fires per micro-batch, so each trigger reads only the
-    * cells its queries probe, regardless of corpus size. Query pins
-    * drain after each batch lands through a PER-BATCH pin scope
-    * ([[graft.pipeline.Similarity.withQueryPinScope]] — scoped, so a
+    * cells its queries probe, regardless of corpus size. Each batch's
+    * materialised query frame is freed once the batch lands, through a
+    * PER-BATCH [[graft.pipeline.Materialize.scope]] — scoped, so a
     * second serving stream or a concurrent batch probe in the same JVM
-    * keeps its own pins; a global
-    * [[graft.pipeline.Similarity.releaseQueryPins]] here would tear
-    * those out mid-write), so long-running serving never accumulates
-    * checkpointed query frames. All three persisted layouts serve
+    * keeps its own frames — so long-running serving never accumulates
+    * materialised query frames. All three persisted layouts serve
     * through their own batch operator, detected from the corpus schema
     * exactly like `appendToIvfIndex` does — float
     * ([[graft.pipeline.Similarity.queryIvfBatch]]), int8
@@ -797,7 +795,7 @@ object StreamMask {
             .and(size(col(qVecCol)) === dim)
             .and(!exists(col(qVecCol), e => e.isNull)))
         else batch
-        Similarity.withQueryPinScope {
+        graft.pipeline.Materialize.scope {
           ExactlyOnceSink.writeBatch(outPath)(probe(b), batchId)
         }
         ()
@@ -1204,9 +1202,8 @@ object StreamMask {
     * same maintenance window. The index loads ONCE at query start;
     * each trigger's probe partition-prunes to the cells its batch
     * touches, so per-trigger reads stay proportional to the BATCH, not
-    * the corpus. The probe's pinned batch frame drains per trigger
-    * through the scoped pin discipline
-    * ([[graft.pipeline.Similarity.withQueryPinScope]]), as
+    * the corpus. The probe's materialised batch frames are freed per
+    * trigger through [[graft.pipeline.Materialize.scope]], as
     * [[ivfServeStream]] does.
     *
     * Stateless per micro-batch — the decision is against the STATIC
@@ -1251,7 +1248,7 @@ object StreamMask {
     val idx = Similarity.loadIvfIndex(spark, indexPath, corpus)
     vectors.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Similarity.withQueryPinScope {
+        graft.pipeline.Materialize.scope {
           ExactlyOnceSink.writeBatch(outPath)(
             Dedup.semDeDupFilterBatch(idx, batch, idCol, vecCol,
               threshold, maxCell, onHotCell), batchId)

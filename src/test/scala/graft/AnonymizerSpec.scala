@@ -229,4 +229,35 @@ class AnonymizerSpec extends SparkSpec {
     assert(!logical.toLowerCase.contains("broadcast"),
       s"forced broadcast hint present:\n$logical")
   }
+
+  test("a second run() in one session keeps the first run's masking") {
+    // #row# numbering materialises its range-sorted input; a SQL-cache
+    // entry there would outlive run 1's swap and hand run 2 the
+    // pre-mask rows of the same source path
+    val s = spark
+    import s.implicits._
+    val tmp = Files.createTempDirectory("graft_rerun").toString
+    Seq((1L, "alice", "a@x"), (2L, "bob", "b@x"), (3L, "carol", "c@x"))
+      .toDF("id", "name", "email").write.parquet(s"$tmp/users.parquet")
+    val io = new ParquetIO(spark, tmp)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val run1 = new Anonymizer(spark, io)
+    run1.table("users") { b =>
+      b.primary("id")
+      b.column("name").replaceWith("cust_#row#")
+    }
+    run1.run()
+    val run2 = new Anonymizer(spark, io)
+    run2.table("users") { b =>
+      b.primary("id")
+      b.column("email").replaceWith("e_#row#")
+    }
+    run2.run()
+    val back = spark.read.parquet(s"$tmp/users.parquet").orderBy("id")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+    assert(back.toSeq == Seq((1L, "cust_0", "e_0"), (2L, "cust_1", "e_1"),
+      (3L, "cust_2", "e_2")))
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted)
+      .isEmpty, "run() must free what it materialised")
+  }
 }

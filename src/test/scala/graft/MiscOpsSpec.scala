@@ -256,4 +256,22 @@ class MiscOpsSpec extends SparkSpec {
       assert(us() == expect, "NTZ->micros must not shift with the tz")
     } finally spark.conf.set(key, prev)
   }
+
+  test("the documents scan's fan-out memo does not keep a session alive") {
+    // building q_fingerprint runs the fan-out probe (docs()), which
+    // memoises its decision per session and source
+    def touch(): java.lang.ref.WeakReference[AnyRef] = {
+      val s = spark.newSession()
+      SparkEntry.queries("q_fingerprint")(s, fixtures)
+      new java.lang.ref.WeakReference[AnyRef](s)
+    }
+    val ref = touch()
+    var tries = 0
+    while (ref.get != null && tries < 20) {
+      System.gc()
+      Thread.sleep(50)
+      tries += 1
+    }
+    assert(ref.get == null, "a dropped session must be collectable")
+  }
 }

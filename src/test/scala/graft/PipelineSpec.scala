@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{Dedup, Multimodal, Similarity, TextOps}
+import graft.pipeline.{Dedup, Materialize, Multimodal, Similarity, TextOps}
 
 /** Behavior checks on the LLM-pipeline operators beyond the SQL oracles:
   * recall on the planted near-duplicates, plan-shape guarantees (no
@@ -157,11 +157,11 @@ class PipelineSpec extends SparkSpec {
     assert(rel.exists(_._3 > 0), "astral fixture must cut something")
   }
 
-  test("releaseBenchBroadcasts destroys drained benchmark broadcasts " +
+  test("Materialize.release destroys drained benchmark broadcasts " +
       "once and only once") {
     val bench = docs.filter(col("doc_id") % 10 === 0)
     val corpus = docs.filter(col("doc_id") % 10 =!= 0).limit(10)
-    Dedup.releaseBenchBroadcasts() // drain leftovers from other tests
+    Materialize.release() // drain leftovers from other tests
     // hold the frames: a dropped frame's broadcast may be GC-collected
     // (weak registry) and then drains silently — also correct, but not
     // what this test pins
@@ -169,10 +169,14 @@ class PipelineSpec extends SparkSpec {
       "text", 25)
     val f2 = Dedup.bloomContaminationHits(corpus, bench, "doc_id", "text")
     f1.count(); f2.count()
-    val n = Dedup.releaseBenchBroadcasts()
+    val n = Materialize.release()
     assert((f1, f2) != null) // keep the frames strongly reachable
     assert(n == 2, s"expected gram-set + bloom broadcasts, got $n")
-    assert(Dedup.releaseBenchBroadcasts() == 0, "second drain is empty")
+    assert(Materialize.release() == 0, "second drain is empty")
+    // destroyed, not just dropped: a frame still reading one fails loudly
+    val e = intercept[Exception](f1.collect())
+    assert(e.toString.contains("destroyed") ||
+      Option(e.getCause).exists(_.toString.contains("destroyed")), e)
   }
 
   test("line dedup accounts a null-text doc as ('', 0), not a null " +
@@ -1689,9 +1693,10 @@ class PipelineSpec extends SparkSpec {
     assert(dup(2L) == ((0L, 2L, 0.0)))
   }
 
-  test("releaseQueryPins frees the batch paths' pinned query frames") {
+  test("Materialize.release frees the batch paths' materialised query " +
+      "frames") {
     val idx = Similarity.buildIvfIndex(embeddings, "vec_id", "embedding")
-    Similarity.releaseQueryPins() // drain pins left by earlier tests
+    Materialize.release() // drain frames left by earlier tests
     val queries = embeddings.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding"))
     val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -1699,43 +1704,44 @@ class PipelineSpec extends SparkSpec {
       "embedding", k = 5)
     assert(batch.count() > 0) // consume fully BEFORE releasing
     val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(pinned.nonEmpty, "the batch path should pin its query frame")
-    assert(Similarity.releaseQueryPins() >= 1)
+    assert(pinned.nonEmpty, "the batch path should materialise its query " +
+      "frame")
+    assert(Materialize.release() >= 1)
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert((pinned -- after) == pinned,
-      "released pins must leave the block manager's persistent-RDD map")
-    assert(Similarity.releaseQueryPins() == 0, "drain must be idempotent")
+      "released frames must leave the block manager's persistent-RDD map")
+    assert(Materialize.release() == 0, "drain must be idempotent")
   }
 
-  test("withQueryPinScope isolates and drains its own pins, leaving " +
-      "the global registry and concurrent consumers untouched") {
+  test("Materialize.scope frees only its own frames, never the global " +
+      "registry's") {
     val idx = Similarity.buildIvfIndex(embeddings, "vec_id", "embedding")
-    Similarity.releaseQueryPins() // drain pins left by earlier tests
+    Materialize.release() // drain frames left by earlier tests
     val queries = embeddings.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    // a GLOBAL consumer's pin, created before the scope opens — the
+    // a GLOBAL consumer's frame, created before the scope opens — the
     // bug class under test is a scoped drain tearing this out
     val globalBatch = Similarity.queryIvfBatch(idx, queries, "query_id",
       "embedding", k = 5)
     assert(globalBatch.count() > 0)
     val beforeScope = spark.sparkContext.getPersistentRDDs.keySet
-    Similarity.withQueryPinScope {
+    Materialize.scope {
       val scoped = Similarity.queryIvfBatch(idx, queries, "query_id",
         "embedding", k = 5)
       assert(scoped.count() > 0) // fully consumed inside the scope
     }
-    // the scope unpersisted ITS pin on close...
+    // the scope unpersisted ITS frame on close...
     val afterScope = spark.sparkContext.getPersistentRDDs.keySet
     assert((afterScope -- beforeScope).isEmpty,
-      "the scope must unpersist the pins it captured")
-    // ...and the global consumer's pinned frame is still materialised —
-    // its lineage-truncated RDD remains readable after the scope closes
-    assert(globalBatch.count() > 0,
-      "a scoped drain must not break a concurrent global consumer")
-    // the scoped pin never reached the global registry: the only drain
-    // left is the global consumer's own pin
-    assert(Similarity.releaseQueryPins() == 1,
-      "exactly the pre-scope global pin should remain registered")
+      "the scope must unpersist the frames it captured")
+    // ...and the global consumer's frame is still materialised
+    assert(beforeScope.subsetOf(afterScope),
+      "a scoped drain must not free a concurrent global consumer's frame")
+    assert(globalBatch.count() > 0)
+    // the scoped frame never reached the global registry: the only
+    // drain left is the global consumer's own frame
+    assert(Materialize.release() == 1,
+      "exactly the pre-scope global frame should remain registered")
   }
 
   test("int8 IVF layout drops the floats, prunes cells, and serves " +
