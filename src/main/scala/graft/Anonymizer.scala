@@ -364,13 +364,12 @@ final class Anonymizer(val spark: SparkSession, io: TableIO,
       // masked values, so the old→new pairing is per-row by construction —
       // correct even when the masked column IS the primary key
       val maskedWithOld = MaskCompiler(src, bp, bp.sync.keySet)
-      val masked = bp.sync.keySet.foldLeft(maskedWithOld)(
-        (acc, c) => acc.drop(MaskCompiler.oldValueCol(c)))
-      out += key -> masked
+      out += key -> maskedWithOld.drop(
+        bp.sync.keys.map(MaskCompiler.oldValueCol).toSeq: _*)
       bp.sync.foreach { case (c, targets) =>
         val mapping = maskedWithOld
           .select(col(MaskCompiler.oldValueCol(c)).as("__graft_oldv"),
-            col(c).as("__graft_newv"))
+            col(MaskCompiler.spelling(src.columns.toSeq)(c)).as("__graft_newv"))
           .groupBy("__graft_oldv").agg(min("__graft_newv").as("__graft_newv"))
         targets.foreach { t =>
           val tkey = qualify(
@@ -403,15 +402,12 @@ final class Anonymizer(val spark: SparkSession, io: TableIO,
   }
 
   private def applyMapping(target: DataFrame, mapping: DataFrame,
-      field: String): DataFrame = {
-    // Type-changing cascades (e.g. int key → uuid) fall back to the
-    // reference's stringly-typed value model, like MaskCompiler's
-    // conditional branch unification.
-    val newType = mapping.schema("__graft_newv").dataType
-    val tgtType = target.schema(field).dataType
-    val (newV, keepV) =
-      if (newType == tgtType) (col("__graft_newv"), col(field))
-      else (col("__graft_newv").cast("string"), col(field).cast("string"))
+      name: String): DataFrame = {
+    // the target table's own spelling, as MaskCompiler resolves blueprints
+    val field = MaskCompiler.spelling(target.columns.toSeq)(name)
+    val (newV, keepV) = MaskCompiler.unifyTypes(
+      col("__graft_newv"), mapping.schema("__graft_newv").dataType,
+      col(field), target.schema(field).dataType)
     // The mapping's cardinality is the whole source table — never force a
     // broadcast here. Catalyst broadcasts under the size threshold and AQE
     // upgrades shuffle→broadcast at runtime from observed sizes; at 100 TB

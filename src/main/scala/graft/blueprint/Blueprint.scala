@@ -44,9 +44,10 @@ object Rule {
   final case class Template(value: String) extends Rule
 
   /** Spark-first scalar rule: an arbitrary Column expression built from a
-    * row view (`colRef(name)` resolves a column *as currently masked* —
-    * position-sensitive like the reference's row-map mutation at
-    * src/Anonymizer.php:350–357).
+    * row view. `colRef(name)` resolves a column *as currently masked*, like
+    * the reference's row-map mutation (src/Anonymizer.php:350–357); read
+    * columns through it, as a bare `col(...)` misses rewrites made earlier
+    * in the same projection layer.
     */
   final case class Expr(build: (String => Column) => Column) extends Rule
 
@@ -66,8 +67,8 @@ object Rule {
 
   /** R5 (src/Blueprint.php:211–216): whole-row closure. The closure receives
     * the row *with all previously-declared columns already masked*
-    * (src/Anonymizer.php:350–357 position-sensitivity), enforced here by
-    * sequential `withColumn` chaining. UDF fallback — prefer [[Expr]].
+    * (src/Anonymizer.php:350–357 position-sensitivity), so it starts a new
+    * projection layer. UDF fallback — prefer [[Expr]].
     */
   final case class RowClosure(fn: Row => Any, dataType: DataType) extends Rule
 }

@@ -412,8 +412,8 @@ final class OrderedBinAssemblerProcessor(budget: Int)
   * batch — src/Anonymizer.php:152–195 — so this is north-star extension
   * territory: masking event streams on the way into a lake).
   *
-  * A masking projection is stateless and narrow, so the same compiled
-  * [[MaskCompiler]] pipeline applies verbatim to a streaming DataFrame —
+  * Masking is stateless and narrow (one projection per dependency layer),
+  * so the same [[MaskCompiler]] plan applies verbatim to a streaming DataFrame —
   * with one carve-out: `#row#` templates need a global row counter, which
   * has no meaning on an unbounded stream. [[maskStream]] rejects those up
   * front instead of failing deep inside an executor.

@@ -260,4 +260,27 @@ class AnonymizerSpec extends SparkSpec {
     assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted)
       .isEmpty, "run() must free what it materialised")
   }
+
+  test("blueprint and sync-target names keep each table's own spelling") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    val users = spark.createDataFrame(Seq(Row(1, "ann"), Row(2, "bob")).asJava,
+      StructType.fromDDL("id INT, name STRING"))
+    val cls = spark.createDataFrame(
+      Seq(Row(10, 1), Row(11, 2), Row(12, 3)).asJava,
+      StructType.fromDDL("cid INT, user_id INT"))
+    val anon = new Anonymizer(spark,
+      new MapIO(Map("users" -> users, "class" -> cls)))
+    anon.table("users") { b =>
+      b.primary("ID")
+      b.column("ID").replaceWithExpr(r => r("Id") + lit(100))
+        .synchronizeColumn("class" -> "User_Id")
+    }
+    val out = anon.plan()
+    assert(out("users").columns.toSeq == Seq("id", "name"))
+    assert(out("class").columns.toSeq == Seq("cid", "user_id"))
+    assert(out("class").orderBy("cid").collect().map(_.getInt(1)).toSeq ==
+      Seq(101, 102, 3))
+  }
 }

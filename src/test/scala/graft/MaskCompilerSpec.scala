@@ -129,4 +129,36 @@ class MaskCompilerSpec extends SparkSpec {
         s"mode $mode")
     }
   }
+
+  test("blueprint names resolve to the table's own spelling") {
+    val users = spark.createDataFrame(
+      Seq(Row(1, "x@y", "std"), Row(2, "z@y", "pro")).asJava,
+      StructType.fromDDL("id INT, email STRING, tier STRING"))
+    val bp = Blueprint("t") { t =>
+      t.primary("ID")
+      t.column("Email").where("tier = 'std'").replaceWith("masked")
+      t.column("ID").replaceWithExpr(r => r("Id") + lit(100))
+      t.column("TIER").replaceWith("T#row#")
+    }
+    val out = MaskCompiler(users, bp, stashOld = Set("Id"))
+    assert(out.columns.toSeq == Seq("id", "email", "tier", "__graft_old_Id"))
+    assert(out.orderBy("id").collect().map(_.toSeq).toSeq ==
+      Seq(Seq(101, "masked", "T0", 1), Seq(102, "z@y", "T1", 2)))
+  }
+
+  test("input columns named like internal ones pass through unchanged") {
+    val wide = df.withColumn("__graft_rownum", lit(7L))
+      .withColumn("__graft_guard_x", lit("g"))
+      .withColumn("__graft_guard_0", lit(true))
+    val bp = Blueprint("t") { t =>
+      t.primary("id"); t.globalWhere("id > 1")
+      t.column("a").where("b <> 'keep3'").replaceWith("r#row#")
+    }
+    val out = MaskCompiler(wide, bp)
+    assert(out.columns.toSeq == wide.columns.toSeq)
+    assert(out.orderBy("id").collect().map(_.toSeq).toSeq == Seq(
+      Seq(1, "orig", "keep1", 7L, "g", true),
+      Seq(2, "r0", "keep2", 7L, "g", true),
+      Seq(3, "orig", "keep3", 7L, "g", true)))
+  }
 }

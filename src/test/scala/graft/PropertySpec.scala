@@ -14,9 +14,9 @@ import graft.blueprint.{Blueprint, MaskCompiler}
 class PropertySpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
 
-  private def check(p: Prop): Unit = {
+  private def check(p: Prop, tests: Int = 10): Unit = {
     val res = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(10), p)
+      SCTest.Parameters.default.withMinSuccessfulTests(tests), p)
     assert(res.passed, res.status.toString)
   }
 
@@ -34,6 +34,109 @@ class PropertySpec extends SparkSpec {
         .collect().map(_.toSeq).toSet
       out == base.select("id", "b").collect().map(_.toSeq).toSet
     })
+  }
+
+  test("property: compiled blueprint == driver-side row-map interpreter") {
+    import java.util.Locale
+    import scala.collection.mutable
+    import org.apache.spark.sql.functions.{concat, concat_ws, lit}
+    import org.apache.spark.sql.types.StringType
+    import graft.blueprint.RowNumberMode
+    graft.functions.Gen.register("propertyEcho", s => concat(lit("g:"), s))
+    val cols = Seq("k", "id", "a", "b", "n")
+    val rows: Seq[Seq[Any]] = Seq(Seq(1, 13, "a1", "b1", 4),
+      Seq(2, 11, "a2", null, 1), Seq(3, 15, "a3", "b3", 6),
+      Seq(4, 10, "a4", "b1", 2), Seq(5, 14, "a5", "b5", 5),
+      Seq(6, 12, "a6", null, 3))
+    val table = spark.createDataFrame(rows.map(Row.fromSeq).asJava,
+      StructType.fromDDL("k INT, id INT, a STRING, b STRING, n INT"))
+    // each SQL predicate with the same test over a driver-side row
+    val preds: Seq[(String, Map[String, Any] => Boolean)] = Seq(
+      "N > 2" -> (r => r("n").asInstanceOf[Int] > 2),
+      "A <> 'a2'" -> (r => r("a") != "a2"),
+      "Id % 2 = 0" -> (r => r("id").asInstanceOf[Int] % 2 == 0),
+      "b IS NULL" -> (r => r("b") == null),
+      "B = 'b1'" -> (r => r("b") == "b1"))
+    trait Kind
+    case class Tpl(v: String) extends Kind
+    case class Cat(src: String) extends Kind
+    case class Generated(unique: Boolean) extends Kind
+    case object Closure extends Kind
+    case class R(col: String, where: Option[Int], kind: Kind)
+    def spelled(c: String) = SGen.oneOf(c, c.toUpperCase(Locale.ROOT), c.capitalize)
+    val pred = SGen.choose(0, preds.length - 1)
+    val kind = SGen.oneOf(
+      SGen.oneOf("x", "r#row#", "#row#-y").map(Tpl(_)),
+      SGen.oneOf(cols).flatMap(spelled).map(Cat(_)),
+      SGen.oneOf(true, false).map(Generated(_)),
+      SGen.const(Closure))
+    val rule = for {
+      c <- SGen.oneOf("id", "a", "b", "n").flatMap(spelled)
+      w <- SGen.option(pred); k <- kind
+    } yield R(c, w, k)
+    val blueprint = for {
+      g <- SGen.option(pred); n <- SGen.choose(1, 6)
+      rs <- SGen.listOfN(n, rule)
+    } yield (g, rs)
+
+    // the reference's loop: one row map per row, mutated rule by rule;
+    // guards and #row# over the stored (pre-mask) row; a conditional rule
+    // that changes a column's type turns both branches into strings
+    def interpret(g: Option[Int], rules: Seq[R]) = {
+      val pre = rows.map(r => cols.zip(r).toMap)
+      val hit = pre.map(r => g.forall(preds(_)._2(r)))
+      val rowNo = pre.indices.filter(hit)
+        .sortBy(pre(_)("id").asInstanceOf[Int]).zipWithIndex.toMap
+      val types = mutable.Map("k" -> "int", "id" -> "int", "a" -> "string",
+        "b" -> "string", "n" -> "int")
+      val cur = pre.map(r => mutable.Map(r.toSeq: _*))
+      def str(v: Any) = Option(v).map(_.toString).orNull
+      rules.foreach { rule =>
+        val c = rule.col.toLowerCase(Locale.ROOT)
+        def value(i: Int): Any = rule.kind match {
+          case Tpl(v) => v.replace("#row#", rowNo.getOrElse(i, -1).toString)
+          case Cat(src) => Option(str(cur(i)(src.toLowerCase(Locale.ROOT))))
+            .map(_ + "~").orNull
+          case Generated(unique) =>
+            val pk = Option(str(cur(i)("id"))).getOrElse("")
+            if (unique) s"g:$pk-$pk" else s"g:$pk"
+          case _ => cols.map(cur(i)).mkString("|")
+        }
+        val guarded = g.isDefined || rule.where.isDefined
+        val retype = guarded && types(c) != "string"
+        val next = cur.indices.map(i =>
+          if (!guarded || (hit(i) && rule.where.forall(preds(_)._2(pre(i)))))
+            value(i)
+          else if (retype) str(cur(i)(c)) else cur(i)(c))
+        cur.indices.foreach(i => cur(i)(c) = next(i))
+        types(c) = "string"
+      }
+      (cols.map(types), cur.map(r => cols.map(r)))
+    }
+
+    check(Prop.forAll(blueprint) { case (g, rules) =>
+      val bp = Blueprint("t") { t =>
+        t.primary("ID"); t.rowNumberMode(RowNumberMode.Ordered)
+        t.seedWith(pk => concat_ws("|", pk.map(_.cast("string")): _*))
+        g.foreach(i => t.globalWhere(preds(i)._1))
+        rules.foreach { r =>
+          t.column(r.col); r.where.foreach(w => t.where(preds(w)._1))
+          r.kind match {
+            case Tpl(v) => t.replaceWith(v)
+            case Cat(src) => t.replaceWithExpr(row =>
+              concat(row(src).cast("string"), lit("~")))
+            case Generated(unique) =>
+              t.replaceWithGenerator("propertyEcho", unique)
+            case _ => t.replaceByFields(StringType)(_.toSeq.mkString("|"))
+          }
+        }
+      }
+      val out = MaskCompiler(table, bp)
+      val (types, expected) = interpret(g, rules)
+      out.columns.toSeq == cols &&
+        out.schema.map(_.dataType.simpleString) == types &&
+        out.orderBy("k").collect().map(_.toSeq).toSeq == expected
+    }, tests = 40)
   }
 
   test("property: template compiler == naive per-row string replace") {
