@@ -330,6 +330,16 @@ final class Anonymizer(val spark: SparkSession, io: TableIO,
   }
   def table(bp: Blueprint): this.type = { blueprints += bp.table -> bp; this }
 
+  /** Qualify a table name with the default database — applied uniformly to
+    * blueprint tables AND sync targets, so a sync target that also has its
+    * own blueprint resolves to the SAME plan key (masking then runs on top
+    * of the propagated frame instead of forking into two entries that race
+    * at commit time).
+    */
+  private def qualify(name: String): String =
+    if (name.contains(".")) name
+    else defaultDatabase.fold(name)(db => s"$db.$name")
+
   /** Build the masked DataFrame for every declared table plus every
     * FK-propagation target, without writing. Tables are processed in
     * declaration order (reference: src/Anonymizer.php:158); a table that was
@@ -345,16 +355,6 @@ final class Anonymizer(val spark: SparkSession, io: TableIO,
     * reproduces that, deduplicating the mapping on the old value (min new)
     * so target row counts are preserved.
     */
-  /** Qualify a table name with the default database — applied uniformly to
-    * blueprint tables AND sync targets, so a sync target that also has its
-    * own blueprint resolves to the SAME plan key (masking then runs on top
-    * of the propagated frame instead of forking into two entries that race
-    * at commit time).
-    */
-  private def qualify(name: String): String =
-    if (name.contains(".")) name
-    else defaultDatabase.fold(name)(db => s"$db.$name")
-
   def plan(): Map[String, DataFrame] = {
     val out = mutable.LinkedHashMap.empty[String, DataFrame]
     blueprints.foreach { case (name, bp) =>

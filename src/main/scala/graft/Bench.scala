@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Per-round benchmark: every query is fully evaluated through a `noop`
   * sink (a bare `.count()` would let Catalyst prune the masking projections
   * away and time a metadata scan). A failing query reports its elapsed time
@@ -8,15 +7,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen/parquet-footer warmup so the first timed query isn't
     // charged for session bring-up

@@ -194,15 +194,8 @@ object ScaleRehearsal {
     val badModes = modes.filterNot(KnownModes)
     require(badModes.isEmpty, s"unknown mode(s) " +
       s"${badModes.mkString(", ")} — valid: ${KnownModes.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val corpusModes = modes.filterNot(_ == "relational")
@@ -222,15 +215,15 @@ object ScaleRehearsal {
       val dst = s"$workDir/$mode"
       new java.io.File(dst).mkdirs()
       inflate(spark, s"$sfDir/documents.parquet",
-        s"$dst/documents.parquet", "doc_id", factor, cpus.toInt,
+        s"$dst/documents.parquet", "doc_id", factor, cpus,
         distinctCopies = mode == "distinct", shiftOverride = shared)
       inflate(spark, s"$sfDir/embeddings.parquet",
-        s"$dst/embeddings.parquet", "vec_id", factor, cpus.toInt,
+        s"$dst/embeddings.parquet", "vec_id", factor, cpus,
         distinctCopies = mode == "distinct", shiftOverride = shared)
     }
     if (modes.contains("relational"))
       inflateRelational(spark, sfDir, s"$workDir/relational", factor,
-        cpus.toInt)
+        cpus)
 
     def timeOne(name: String, dir: String): Double = {
       val t0 = System.nanoTime()

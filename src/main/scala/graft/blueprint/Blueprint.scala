@@ -3,31 +3,6 @@ package graft.blueprint
 import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.types.DataType
 
-/** Strategy for materialising the reference's `#row#` counter
-  * (reference: src/Anonymizer.php:166,179,236–243 — a 0-based counter in
-  * SELECT-result order, which the reference leaves nondeterministic since its
-  * scan has no ORDER BY, src/Anonymizer.php:310).
-  *
-  * At 100 TB a single global `row_number()` window is a one-partition sort, so
-  * the engine exposes three modes and lets the caller pick the contract they
-  * actually need:
-  *
-  *  - [[RowNumberMode.Scalable]] (the default) — deterministic AND
-  *    distributed: range repartition by pk, per-partition counts, offset
-  *    fix-up. No global sort on one node; identical output to Ordered.
-  *  - [[RowNumberMode.Ordered]]   — `row_number().over(Window.orderBy(pk))`:
-  *    exact but a single-partition sort; explicit opt-in for small tables.
-  *  - [[RowNumberMode.Unique]]    — `monotonically_increasing_id()`: unique,
-  *    non-contiguous, fully parallel. Matches the reference's *actual*
-  *    guarantee (order there is nondeterministic anyway).
-  */
-sealed trait RowNumberMode
-object RowNumberMode {
-  case object Ordered extends RowNumberMode
-  case object Scalable extends RowNumberMode
-  case object Unique extends RowNumberMode
-}
-
 /** A per-column replacement rule — the reference's 4-kind rule vocabulary
   * (src/Blueprint.php:146–216) re-expressed Spark-first. All deterministic
   * variants compile to native Catalyst expressions (whole-stage codegen);
@@ -39,7 +14,11 @@ object Rule {
 
   /** R1/R2 (src/Blueprint.php:146–153; src/Anonymizer.php:236–243): a static
     * string; any `#row#` occurrence is substituted with the 0-based row
-    * counter.
+    * counter. The reference counts rows in its scan's order, which has no
+    * ORDER BY (src/Anonymizer.php:166,179,310); here the counter is
+    * deterministic: rows are numbered in [[Blueprint.rowNumberOrder]]
+    * (default: primary-key) order, the `globalWhere` matches on their own,
+    * by one distributed numbering (see [[MaskCompiler]]).
     */
   final case class Template(value: String) extends Rule
 
@@ -97,7 +76,6 @@ final case class Blueprint(
     globalWhere: Option[String] = None,
     columns: Seq[ColumnRule] = Seq.empty,
     sync: Map[String, Seq[SyncTarget]] = Map.empty,
-    rowNumberMode: RowNumberMode = RowNumberMode.Scalable,
     /** Generator seed derivation from the primary-key columns. Default:
       * `xxhash64` ([[graft.functions.Gen.seed]], fastest). Swap in e.g. an
       * md5-based seed for cross-engine reproducibility of generated values.
@@ -121,7 +99,6 @@ final class BlueprintBuilder(table: String) {
   private var global: Option[String] = None
   private var cols = Vector.empty[ColumnRule]
   private var sync = Map.empty[String, Seq[SyncTarget]]
-  private var rowMode: RowNumberMode = RowNumberMode.Scalable
   private var rowOrder: Option[Seq[String]] = None
   private var seedF: Option[Seq[Column] => Column] = None
   private var current: Option[String] = None
@@ -129,7 +106,6 @@ final class BlueprintBuilder(table: String) {
 
   def primary(columns: String*): this.type = { primaryCols = columns; this }
   def globalWhere(predicate: String): this.type = { global = Some(predicate); this }
-  def rowNumberMode(m: RowNumberMode): this.type = { rowMode = m; this }
   /** Override the `#row#` numbering order (see [[Blueprint.rowNumberOrder]]). */
   def rowNumberOrderBy(columns: String*): this.type = {
     rowOrder = Some(columns); this
@@ -182,7 +158,7 @@ final class BlueprintBuilder(table: String) {
   }
 
   def build(): Blueprint =
-    Blueprint(table, primaryCols, global, cols, sync, rowMode, seedF, rowOrder)
+    Blueprint(table, primaryCols, global, cols, sync, seedF, rowOrder)
 }
 
 object Blueprint {

@@ -3,12 +3,11 @@ package graft.blueprint
 import java.util.Locale
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType}
 
 import graft.functions.Gen
-import graft.pipeline.Materialize
+import graft.pipeline.RankStats.{fresh, groupIndex, ref}
 
 /** Compiles a [[Blueprint]] into a DataFrame transformation.
   *
@@ -35,9 +34,12 @@ import graft.pipeline.Materialize
   *    keeps the table's column names, which blueprint names match
   *    case-insensitively, and their order.
   *
-  * The plan is narrow except for `#row#` numbering, see [[RowNumbers]]: the
-  * default [[RowNumberMode.Scalable]] is a distributed range-partitioned
-  * numbering, not a single-partition global window.
+  * The plan is narrow except for `#row#` numbering: the reference's 0-based
+  * counter over the rows its scan returns, numbered in primary-key (or
+  * `rowNumberOrder`) order and, under `globalWhere`, separately for the
+  * matching rows. It is [[graft.pipeline.RankStats.groupIndex]]'s
+  * distributed range-partitioned index, not a single-partition global
+  * window.
   */
 object MaskCompiler {
 
@@ -62,9 +64,6 @@ object MaskCompiler {
       oldV: Column, oldType: DataType): (Column, Column) =
     if (newType == oldType) (newV, oldV)
     else (newV.cast(StringType), oldV.cast(StringType))
-
-  // a column by its literal name, dots and backticks included
-  private def ref(c: String): Column = col("`" + c.replace("`", "``") + "`")
 
   /** Compile; additionally stash the pre-mask value of each column in
     * `stashOld` as `__graft_old_<c>` (used by FK propagation to pair old↔new
@@ -94,18 +93,17 @@ object MaskCompiler {
       s"blueprint for table '${bp.table}' references missing column(s) " +
         s"${missing.distinct.mkString(", ")}; table has: ${df.columns.mkString(", ")}")
     // internal names step past any input column they would shadow
-    def internal(n: String) = Iterator.iterate(n)(_ + "_").filterNot(known).next()
+    val internal = fresh(originalCols)
 
     // The reference pushes globalWhere into the scan (src/Anonymizer.php:312–
     // 314), so its row counter only sees rows matching the predicate: the
     // numbering is grouped on the predicate flag (matching rows number
     // 0..n-1 contiguously). Evaluated on the raw df → pre-mask values.
-    val rnPartition = bp.globalWhere.map(g =>
-      when(coalesce(expr(g), lit(false)), lit(1)).otherwise(lit(0)))
     val rowNum = internal(RowNumCol)
-    val withRn = if (!needsRowNum) df else RowNumbers.attach(df,
-      bp.rowNumberOrder.getOrElse(bp.primary).map(name), bp.rowNumberMode,
-      rowNum, rnPartition)
+    val withRn = if (!needsRowNum) df else groupIndex(df,
+      bp.globalWhere.map(g => coalesce(expr(g), lit(false))).toSeq,
+      bp.rowNumberOrder.getOrElse(bp.primary).map(c => ref(name(c))),
+      rowNum, internal("__graft_rowcount"))
 
     // pre-mask layer: the guards (reference scan-time / stored-row values),
     // keyed "g" for globalWhere and by rule index, and the stashed old values
@@ -176,97 +174,5 @@ object MaskCompiler {
         override def call(r: Row): Any = fn(r)
       }, dt)
       f(struct(originalCols.map(c => colRef(c).as(c)): _*))
-  }
-}
-
-/** Deterministic row numbering at three scale points (see [[RowNumberMode]]). */
-object RowNumbers {
-
-  def attach(df: DataFrame, orderCols: Seq[String], mode: RowNumberMode,
-      outCol: String, partitionFlag: Option[Column] = None): DataFrame =
-    mode match {
-    case RowNumberMode.Ordered =>
-      // exact 0-based counter; global window = single-partition sort — kept
-      // only as an explicit opt-in for small tables / plan comparisons
-      val w = partitionFlag.fold(Window.partitionBy())(Window.partitionBy(_))
-        .orderBy(orderCols.map(col): _*)
-      df.withColumn(outCol, row_number().over(w) - 1)
-    case RowNumberMode.Unique =>
-      // the reference's actual guarantee (its scan order is nondeterministic,
-      // src/Anonymizer.php:310): unique, non-contiguous, fully parallel
-      df.withColumn(outCol, monotonically_increasing_id())
-    case RowNumberMode.Scalable =>
-      scalable(df, orderCols, outCol, partitionFlag)
-  }
-
-  private val FlagCol = "__graft_rnflag"
-  private val MidCol = "__graft_rnmid"
-  private val PidCol = "__graft_rnpid"
-  private val AdjCol = "__graft_rnadj"
-
-  /** Deterministic AND distributed 0-based numbering — the 100 TB default.
-    *
-    * Range-partition by (flag, order key), sort within partitions (one wide
-    * shuffle, all partitions in parallel), then fix up per-partition offsets
-    * from a cheap count aggregate. The ranged frame is materialised
-    * ([[graft.pipeline.Materialize]], by the count pass) so both passes
-    * execute the range shuffle exactly once AND see the identical
-    * partition layout (separate jobs over an uncached range shuffle can
-    * sample different boundaries — regression-tested). It never enters
-    * the SQL cache, where a second `Anonymizer.run` over the same path
-    * would read this run's pre-mask rows.
-    *
-    * The numbering pass itself never leaves Tungsten: the per-partition
-    * index is decoded from `monotonically_increasing_id()`
-    * (pid << 33 | local index over exactly the materialised layout) and the
-    * per-(partition, flag) adjustment rides in through a broadcast hash
-    * join of a ≤2-rows-per-partition table.
-    *
-    * `partitionFlag` groups the numbering (each flag value numbered 0..n-1
-    * contiguously in key order) — identical semantics to the Ordered mode's
-    * flag-partitioned window, so oracle results are mode-independent. The
-    * flag LEADS the range key, making each flag's rows contiguous in the
-    * global order, so the per-flag local index is `overall local index −
-    * (rows of smaller flags in this partition)` — plain arithmetic from the
-    * same counts, no per-flag scan state.
-    */
-  def scalable(df: DataFrame, orderCols: Seq[String], outCol: String,
-      partitionFlag: Option[Column] = None): DataFrame = {
-    val spark = df.sparkSession
-    val withFlag = df.withColumn(FlagCol, partitionFlag.getOrElse(lit(1)))
-    val sortCols = col(FlagCol) +: orderCols.map(col)
-    // a fixed partition count: AQE would coalesce a small input into one
-    // partition and serialise the numbering and every write after it
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ranged = Materialize(withFlag.repartitionByRange(parts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*), eager = false)
-    // pass 1 (fills the blocks): per-partition per-flag counts — the
-    // aggregate is partial map-side, the shuffle carries ≤ 2 rows/partition
-    val counts = ranged
-      .groupBy(spark_partition_id().as(PidCol), col(FlagCol))
-      .count()
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2))
-      .toMap
-    // adjustment(pid, flag) = same-flag rows in earlier partitions (global
-    // offset) − smaller-flag rows in this partition (local start of the
-    // flag's contiguous run)
-    val adjRows = counts.keys.toSeq.sorted.map { case (pid, f) =>
-      val globalOffset = counts.collect {
-        case ((p, pf), c) if pf == f && p < pid => c }.sum
-      val localStart = counts.collect {
-        case ((p, pf), c) if p == pid && pf < f => c }.sum
-      (pid, f, globalOffset - localStart)
-    }
-    import spark.implicits._
-    val adj = adjRows.toDF(PidCol, FlagCol, AdjCol)
-    // pass 2: narrow, codegen numbering over the materialised partitions
-    ranged
-      .withColumn(MidCol, monotonically_increasing_id())
-      .withColumn(PidCol, shiftright(col(MidCol), 33).cast("int"))
-      .join(broadcast(adj), Seq(PidCol, FlagCol))
-      .withColumn(outCol,
-        col(MidCol).bitwiseAND(lit((1L << 33) - 1)) + col(AdjCol))
-      .drop(FlagCol, MidCol, PidCol, AdjCol)
   }
 }

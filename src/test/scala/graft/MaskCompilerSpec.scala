@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
-import graft.blueprint.{Blueprint, MaskCompiler, RowNumberMode}
+import graft.blueprint.{Blueprint, MaskCompiler}
 
 /** Unit coverage of the rule-compiler semantics (reference SET-builder,
   * /root/reference/src/Anonymizer.php:345–371).
@@ -118,15 +118,24 @@ class MaskCompilerSpec extends SparkSpec {
     assert(e.getMessage.contains("nope") && e.getMessage.contains("'t'"))
   }
 
-  test("all three RowNumberModes agree on deterministic numbering") {
-    for (mode <- Seq(RowNumberMode.Ordered, RowNumberMode.Scalable)) {
+  test("#row# numbering equals the row_number window over the primary key") {
+    import org.apache.spark.sql.expressions.Window
+    val shuffled = spark.createDataFrame(
+      Seq(Row(3, "c", "x"), Row(1, "a", "y"), Row(5, "e", "x"),
+        Row(2, "b", "y"), Row(4, "d", "x")).asJava,
+      StructType.fromDDL("id INT, a STRING, b STRING"))
+    for (where <- Seq(None, Some("b = 'x'"))) {
       val bp = Blueprint("t") { t =>
-        t.primary("id"); t.rowNumberMode(mode)
+        t.primary("id"); where.foreach(t.globalWhere)
         t.column("a").replaceWith("n#row#")
       }
-      val out = MaskCompiler(df, bp).collect().sortBy(_.getInt(0))
-      assert(out.map(_.getString(1)).toSeq == Seq("n0", "n1", "n2"),
-        s"mode $mode")
+      val flag = where.fold(lit(true))(w => expr(w))
+      val want = shuffled.select(col("id"), when(flag, concat(lit("n"),
+        (row_number().over(Window.partitionBy(flag).orderBy("id")) - 1)
+          .cast("string"))).otherwise(col("a")).as("a"))
+      val got = MaskCompiler(shuffled, bp).select("id", "a")
+      assert(got.orderBy("id").collect().toSeq ==
+        want.orderBy("id").collect().toSeq, s"globalWhere $where")
     }
   }
 
@@ -160,5 +169,33 @@ class MaskCompilerSpec extends SparkSpec {
       Seq(1, "orig", "keep1", 7L, "g", true),
       Seq(2, "r0", "keep2", 7L, "g", true),
       Seq(3, "orig", "keep3", 7L, "g", true)))
+  }
+
+  test("input columns named like the numbering's internal ones pass " +
+      "through unchanged") {
+    val internals = Seq("__graft_rnflag", "__graft_rnmid", "__graft_rnpid",
+      "__graft_rnadj", "__graft_rowcount", "__rs_g0", "__rs_mid", "__rs_pid",
+      "__rs_local", "__rs_apid", "__rs_ag0", "__rs_adj")
+    val wide = internals.foldLeft(df)((d, c) => d.withColumn(c, lit(-1)))
+    val bp = Blueprint("t") { t =>
+      t.primary("id"); t.globalWhere("a = 'orig'")
+      t.column("b").replaceWith("r#row#")
+    }
+    val out = MaskCompiler(wide, bp)
+    assert(out.columns.toSeq == wide.columns.toSeq)
+    assert(out.orderBy("id").collect().map(_.toSeq).toSeq == Seq(
+      Seq(1, "orig", "r0"), Seq(2, "other", "keep2"), Seq(3, "orig", "r1"))
+      .map(_ ++ internals.map(_ => -1)))
+  }
+
+  test("#row# orders by a dotted primary-key name") {
+    val dotted = df.withColumnRenamed("id", "user.id")
+      .withColumn("user.id", lit(4) - col("`user.id`"))
+    val bp = Blueprint("t") { t =>
+      t.primary("user.id"); t.column("a").replaceWith("n#row#")
+    }
+    val out = MaskCompiler(dotted, bp).orderBy("`user.id`").collect()
+    assert(out.map(r => (r.getInt(0), r.getString(1))).toSeq ==
+      Seq((1, "n0"), (2, "n1"), (3, "n2")))
   }
 }

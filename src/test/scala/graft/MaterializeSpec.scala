@@ -4,8 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
-import graft.blueprint.RowNumbers
-import graft.pipeline.{Dedup, Materialize, Privacy, Similarity}
+import graft.pipeline.{Dedup, Materialize, Privacy, RankStats, Similarity}
 
 /** Lineage recovery: every operator that materialises an intermediate
   * frame must give the same rows after the blocks it materialised are
@@ -63,10 +62,11 @@ class MaterializeSpec extends SparkSpec {
       emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", 0.9))
   }
 
-  test("RowNumbers.scalable recomputes lost blocks to the same numbers") {
+  test("groupIndex recomputes lost blocks to the same numbers") {
     val df = spark.range(0, 2000, 1, 4)
       .select((col("id") * 7919 % 2000).as("k"), col("id").as("v"))
-    assertRecovers(RowNumbers.scalable(df, Seq("k"), "rn"))
+    assertRecovers(
+      RankStats.groupIndex(df, Seq(col("v") % 3), Seq(col("k")), "rn", "n"))
   }
 
   test("a non-deterministic frame stays truncated: lost blocks fail " +

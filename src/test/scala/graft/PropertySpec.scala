@@ -41,7 +41,6 @@ class PropertySpec extends SparkSpec {
     import scala.collection.mutable
     import org.apache.spark.sql.functions.{concat, concat_ws, lit}
     import org.apache.spark.sql.types.StringType
-    import graft.blueprint.RowNumberMode
     graft.functions.Gen.register("propertyEcho", s => concat(lit("g:"), s))
     val cols = Seq("k", "id", "a", "b", "n")
     val rows: Seq[Seq[Any]] = Seq(Seq(1, 13, "a1", "b1", 4),
@@ -116,7 +115,7 @@ class PropertySpec extends SparkSpec {
 
     check(Prop.forAll(blueprint) { case (g, rules) =>
       val bp = Blueprint("t") { t =>
-        t.primary("ID"); t.rowNumberMode(RowNumberMode.Ordered)
+        t.primary("ID")
         t.seedWith(pk => concat_ws("|", pk.map(_.cast("string")): _*))
         g.foreach(i => t.globalWhere(preds(i)._1))
         rules.foreach { r =>

@@ -109,4 +109,77 @@ class RankStatsSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"unexpected Window node in:\n$plan")
   }
+
+  test("input columns named like internal ones pass through unchanged") {
+    import SparkSpec.spark.implicits._
+    val internals = Seq("__rs_idx", "__rs_n", "__rs_tmin", "__rs_tmax",
+      "__rs_k0", "__rs_g0", "__rs_mid", "__rs_pid", "__rs_local",
+      "__rs_apid", "__rs_ag0", "__rs_adj")
+    val df = internals.foldLeft(Seq(("a", 1), ("a", 2), ("b", 3), ("a", 3))
+      .toDF("g", "v"))((d, c) => d.withColumn(c, lit(-1)))
+    for (total <- Seq(true, false)) {
+      val got = RankStats.withRankStats(df, Seq("g"), Seq("v"), 2,
+        assumeTotalOrder = total)
+      assert(got.columns.toSeq ==
+        df.columns.toSeq ++ Seq("tile", "pct_rank", "cume_dist"))
+      assertSame(got.withColumn("tile", col("tile").cast("bigint")),
+        windowRef(df, Seq("g"), Seq("v"), 2))
+    }
+  }
+
+  test("an empty group list is the window without PARTITION BY") {
+    val base = orders.select("o_orderkey", "o_totalprice")
+    val got = RankStats.withRankStats(base, Seq.empty,
+      Seq("o_totalprice", "o_orderkey"), 3)
+      .withColumn("tile", col("tile").cast("bigint"))
+    assertSame(got, windowRef(base, Seq.empty,
+      Seq("o_totalprice", "o_orderkey"), 3))
+  }
+
+  test("dotted group and order names are read literally") {
+    val base = orders.select(col("o_orderkey").as("k"),
+      col("o_orderpriority").as("g.y"), col("o_totalprice").as("v.w"))
+    val got = RankStats.withRankStats(base, Seq("g.y"), Seq("v.w", "k"), 4)
+      .withColumn("tile", col("tile").cast("bigint"))
+    assertSame(got, windowRef(base, Seq("`g.y`"), Seq("`v.w`", "k"), 4))
+  }
+
+  test("property: withRankStats == window ntile, percent_rank, cume_dist") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import scala.jdk.CollectionConverters._
+    // up to 4 group values (1 = one group over every partition) plus
+    // nulls, and up to 3 order values: long tie runs in every group
+    val frame = for {
+      n <- Gen.choose(0, 80)
+      groups <- Gen.choose(1, 4)
+      values <- Gen.choose(1, 3)
+      rows <- Gen.listOfN(n, for {
+        g <- Gen.frequency(4 -> Gen.choose(0, groups - 1).map(Integer.valueOf),
+          1 -> Gen.const(null))
+        v <- Gen.choose(0, values - 1)
+      } yield (g, v))
+      grouped <- Gen.oneOf(true, false)
+      totalOrder <- Gen.oneOf(true, false)
+      k <- Gen.choose(1, 6)
+    } yield (rows, grouped, totalOrder, k)
+    def sorted(df: DataFrame) = df.orderBy("id").collect().map(_.toSeq).toSeq
+    val prop = Prop.forAll(frame) { case (rows, grouped, totalOrder, k) =>
+      val df = spark.createDataFrame(rows.zipWithIndex.map {
+        case ((g, v), i) => Row(i, g, v) }.asJava,
+        StructType.fromDDL("id INT, g INT, v INT"))
+      val part = if (grouped) Seq("g") else Seq.empty
+      // a total order: all three statistics are determined
+      val exact = RankStats.withRankStats(df, part, Seq("v", "id"), k,
+        assumeTotalOrder = totalOrder)
+      // ties only: ntile is arbitrary inside a tie run, the others are not
+      val tied = RankStats.withRankStats(df, part, Seq("v"), k).drop("tile")
+      sorted(exact) == sorted(windowRef(df, part, Seq("v", "id"), k)) &&
+        sorted(tied) == sorted(windowRef(df, part, Seq("v"), k).drop("tile"))
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
+    assert(res.passed, res.status.toString)
+  }
 }

@@ -1,70 +1,68 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.blueprint.{RowNumberMode, RowNumbers}
+import graft.pipeline.RankStats
 
-/** The scalable (distributed) numbering must be value-identical to the
-  * single-partition Ordered window — on skewed data, composite keys, and
-  * flag-partitioned numbering.
+/** The distributed numbering behind `#row#` ([[RankStats.groupIndex]]) must
+  * be value-identical to the single-partition `row_number()` window it
+  * replaces — on skewed data, composite keys, and flag-grouped numbering.
   */
 class RowNumbersSpec extends SparkSpec {
 
   private def orders = spark.read.parquet(s"$fixtures/orders.parquet")
 
-  test("scalable == ordered on a single-column key") {
-    val o = RowNumbers.attach(orders, Seq("o_orderkey"),
-      RowNumberMode.Ordered, "rn")
-      .select("o_orderkey", "rn")
-    val s = RowNumbers.attach(orders, Seq("o_orderkey"),
-      RowNumberMode.Scalable, "rn")
-      .select("o_orderkey", "rn")
+  private def numbered(df: DataFrame, keys: Seq[String],
+      flag: Option[Column] = None): DataFrame =
+    RankStats.groupIndex(df, flag.toSeq, keys.map(col), "rn", "n")
+      .select(keys.map(col) ++ Seq(col("rn"), col("n")): _*)
+
+  // the reference: exact, but one single-partition sort per flag value
+  private def window(df: DataFrame, keys: Seq[String],
+      flag: Option[Column] = None): DataFrame = {
+    val part = flag.fold(Window.partitionBy())(Window.partitionBy(_))
+    df.select(keys.map(col) ++ Seq(
+      (row_number().over(part.orderBy(keys.map(col): _*)) - 1).as("rn"),
+      count(lit(1)).over(part).as("n")): _*)
+  }
+
+  private def assertSame(df: DataFrame, keys: Seq[String],
+      flag: Option[Column] = None): Unit = {
+    val (s, o) = (numbered(df, keys, flag), window(df, keys, flag))
+    assert(s.count() == df.count())
     assert(o.except(s).isEmpty && s.except(o).isEmpty)
+  }
+
+  test("scalable == ordered on a single-column key") {
+    assertSame(orders, Seq("o_orderkey"))
   }
 
   test("scalable == ordered on a composite key") {
     val li = spark.read.parquet(s"$fixtures/lineitem.parquet")
-    val keys = Seq("l_orderkey", "l_linenumber")
-    val o = RowNumbers.attach(li, keys, RowNumberMode.Ordered, "rn")
-      .select("l_orderkey", "l_linenumber", "rn")
-    val s = RowNumbers.attach(li, keys, RowNumberMode.Scalable, "rn")
-      .select("l_orderkey", "l_linenumber", "rn")
-    assert(o.except(s).isEmpty && s.except(o).isEmpty)
+    assertSame(li, Seq("l_orderkey", "l_linenumber"))
   }
 
   test("scalable numbering is dense and unique at sf0.01 under AQE") {
     // regression: AQE coalescing must not skew the partition-offset join
-    // (non-unique sort keys make per-row equality vs Ordered ambiguous
+    // (non-unique sort keys make per-row equality vs the window ambiguous
     // here, so assert the numbering invariants instead)
     val li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
-    val s = RowNumbers.attach(li, Seq("l_orderkey", "l_linenumber"),
-      RowNumberMode.Scalable, "rn").select("rn")
+    val s = numbered(li, Seq("l_orderkey", "l_linenumber")).select("rn")
     val n = li.count()
     assert(s.distinct().count() == n, "duplicate row numbers")
-    val mm = s.agg(org.apache.spark.sql.functions.min("rn"),
-      org.apache.spark.sql.functions.max("rn")).head
+    val mm = s.agg(min("rn"), max("rn")).head
     assert(mm.getLong(0) == 0L && mm.getLong(1) == n - 1, "not dense 0..n-1")
   }
 
   test("scalable == ordered with a partition flag") {
-    val flag = Some(when(col("o_totalprice") > 100000, lit(1)).otherwise(lit(0)))
-    val o = RowNumbers.attach(orders, Seq("o_orderkey"),
-      RowNumberMode.Ordered, "rn", flag).select("o_orderkey", "rn")
-    val s = RowNumbers.attach(orders, Seq("o_orderkey"),
-      RowNumberMode.Scalable, "rn", flag).select("o_orderkey", "rn")
-    assert(o.except(s).isEmpty && s.except(o).isEmpty)
-  }
-
-  test("unique mode yields distinct ids") {
-    val u = RowNumbers.attach(orders, Seq("o_orderkey"),
-      RowNumberMode.Unique, "rn")
-    assert(u.select("rn").distinct().count() == orders.count())
+    assertSame(orders, Seq("o_orderkey"), Some(col("o_totalprice") > 100000))
   }
 
   test("scalable plan has no single-partition global window") {
-    val s = RowNumbers.attach(orders, Seq("o_orderkey"),
-      RowNumberMode.Scalable, "rn")
-    val plan = s.queryExecution.executedPlan.toString
+    val plan = numbered(orders, Seq("o_orderkey"))
+      .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"unexpected window in plan:\n$plan")
   }
 }

@@ -9,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
