@@ -1,13 +1,27 @@
 package graft
+
+import graft.gates.Gate
+
 /** Per-round benchmark: every query is fully evaluated through a `noop`
   * sink (a bare `.count()` would let Catalyst prune the masking projections
   * away and time a metadata scan). A failing query reports its elapsed time
   * negated — visible, never silently dropped.
   */
 object Bench {
+  /** The gates a run times: all of them, or the comma-separated names of
+    * SPARK_GRAFT_BENCH_ONLY (for targeted iteration on one operator's
+    * plan), failing on an unknown or empty selection.
+    */
+  private[graft] def selection(only: Option[String]): Seq[Gate] =
+    only.fold(SparkEntry.gates)(f =>
+      SparkEntry.select(f.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // an unknown or empty SPARK_GRAFT_BENCH_ONLY fails before the
+    // session starts
+    val gates = selection(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen/parquet-footer warmup so the first timed query isn't
@@ -62,34 +76,21 @@ object Bench {
     // spreading a query's samples a full pass apart (~40 s at sf0.1) makes
     // that near-impossible while keeping the same total work.
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
-    // SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the run for targeted
-    // iteration on one operator's plan; unset = the full gate set
-    val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
-      case Some(f) =>
-        val want = f.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        SparkEntry.queries.keys.toSeq.filter(want)
-      case None => SparkEntry.queries.keys.toSeq
-    }
+    val names = gates.map(_.name)
     val wall0 = System.nanoTime()
     val samples = (1 to repeats).map { _ =>
-      names.map { name =>
+      gates.map { gate =>
         val t0 = System.nanoTime()
-        val ok =
-          try {
-            SparkEntry.queries(name)(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-            true
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] FAILED $name: ${e.getMessage}")
-            false
+        // the release of what the sample materialised (frames and
+        // broadcasts) runs outside the timed region, so no sample reuses
+        // a previous one's blocks and long runs don't accumulate them
+        val sec =
+          try gate.run(spark, sfDir)(Gate.noop)
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] FAILED ${gate.name}: ${e.getMessage}")
+            -(System.nanoTime() - t0) / 1e9
           }
-        val sec = (System.nanoTime() - t0) / 1e9
-        // outside the timed region: free what the sample materialised
-        // (frames and broadcasts) so no sample reuses a previous one's
-        // blocks and long runs don't accumulate them
-        spark.catalog.clearCache()
-        graft.pipeline.Materialize.release()
-        name -> (if (ok) sec else -sec)
+        gate.name -> sec
       }.toMap
     }
     val wallSec = (System.nanoTime() - wall0) / 1e9
@@ -98,16 +99,7 @@ object Bench {
       val median = times.map(math.abs).sorted.apply(times.length / 2)
       name -> (if (times.exists(_ < 0)) -median else median)
     }.toMap
-    // JSON string escaping for interpolated keys and paths: a query
-    // name or sf path containing a quote/backslash/control char would
-    // otherwise emit invalid JSON into the tail the driver parses
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = results.map { case (k, v) => jstr(k) + ":" + v }
+    val qs = results.map { case (k, v) => Json.str(k) + ":" + v }
       .mkString("{", ",", "}")
     // contention self-diagnosis: all N raw samples and the per-query min
     // ride along, so a reader can spot `min << median` (transient stall
@@ -115,13 +107,13 @@ object Bench {
     // (sustained host contention) from the artifact alone, without a
     // manual quiet re-run.
     val mins = names.map { name =>
-      jstr(name) + ":" + samples.map(s => math.abs(s(name))).min
+      Json.str(name) + ":" + samples.map(s => math.abs(s(name))).min
     }.mkString("{", ",", "}")
     val raw = names.map { name =>
-      jstr(name) + ":" + samples.map(_(name)).mkString("[", ",", "]")
+      Json.str(name) + ":" + samples.map(_(name)).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val total = results.values.map(math.abs).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"min":$mins,"samples":$raw,"repeats":$repeats,"wall_sec":$wallSec,"sf":${jstr(sfDir)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"min":$mins,"samples":$raw,"repeats":$repeats,"wall_sec":$wallSec,"sf":${Json.str(sfDir)}}"""
     println(line)
     // the driver captures only a truncated stdout tail (BENCH_r11/r12
     // both landed with "parsed": null), so the full line ALSO lands in
@@ -174,12 +166,12 @@ object Bench {
       names.map(n => samples.map(s => math.abs(s(n))).min).sum
     val top = results.toSeq.sortBy { case (_, v) => -math.abs(v) }
       .take(25)
-      .map { case (k, v) => jstr(k) + ":" + r3(math.abs(v)) }
+      .map { case (k, v) => Json.str(k) + ":" + r3(math.abs(v)) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
       s""""repeats":$repeats,"wall_sec":${r3(wallSec)},""" +
       s""""queries_n":${names.size},"min_total":${r3(minTotal)},""" +
-      s""""top_median":$top,"full":${jstr(out)},"sf":${jstr(sfDir)}}""")
+      s""""top_median":$top,"full":${Json.str(out)},"sf":${Json.str(sfDir)}}""")
     spark.stop()
   }
 }

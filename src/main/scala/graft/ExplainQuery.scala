@@ -11,22 +11,21 @@ object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
-    val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
+    val gates = SparkEntry.select(
+      args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
-        plan.getBytes("UTF-8"))
-      println(s"[explain] wrote $outDir/${name}_$suffix.txt")
-      spark.catalog.clearCache()
-      graft.pipeline.Materialize.release()
+    gates.foreach { gate =>
+      val file = java.nio.file.Paths.get(outDir, s"${gate.name}_$suffix.txt")
+      gate.run(spark, sfDir) { df =>
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        java.nio.file.Files.write(file, plan.getBytes("UTF-8"))
+      }
+      println(s"[explain] wrote $file")
     }
     spark.stop()
   }

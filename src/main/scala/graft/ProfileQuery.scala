@@ -2,6 +2,8 @@ package graft
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
+import graft.gates.Gate
+
 /** Measurement harness (guide §1): run ONE declared query through the
   * noop sink with a listener that prints every job's wall time, task
   * count and shuffle/input volumes — the local-mode stand-in for the
@@ -12,7 +14,8 @@ import scala.collection.mutable
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val gate = SparkEntry.select(Seq(args(0))).head
+    val name = gate.name
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -56,12 +59,7 @@ object ProfileQuery {
     // warmup pass (JIT/codegen), then timed passes
     (0 until reps + 1).foreach { rep =>
       jobs.synchronized { jobs.clear() }
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      graft.pipeline.Materialize.release()
+      val sec = gate.run(spark, sfDir)(Gate.noop)
       if (rep > 0) {
         println(f"== $name rep $rep: $sec%.3f s, ${jobs.size} jobs")
         jobs.synchronized {

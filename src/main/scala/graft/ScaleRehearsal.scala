@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.gates.Gate
+
 /** One-shot scale rehearsal (dev-run evidence for SCALING.md, not a
   * driver gate): inflate the documents/embeddings fixtures N× with
   * re-keyed ids and time the bench cost leaders at 1× vs N× in the same
@@ -49,7 +51,7 @@ object ScaleRehearsal {
     * the epoch shuffle's corpus-wide sort, and first-fit-decreasing
     * bin packing.
     */
-  private val Queries = Seq(
+  private[graft] val Queries = Seq(
     "q_substring_dedup", "q_winnow_overlap", "q_dedup_near",
     "q_dedup_clusters", "q_dedup_append", "q_decontaminate_spans",
     "q_curation", "q_wordpiece_encode_tokens", "q_ivf_pq_batch",
@@ -142,7 +144,7 @@ object ScaleRehearsal {
     * with each base name's cross-copy variants landing at distance ≤ 2
     * of each other, i.e. output pairs grow too, by construction.
     */
-  private val RelQueries = Seq("mask_blueprint_full", "mask_rownum",
+  private[graft] val RelQueries = Seq("mask_blueprint_full", "mask_rownum",
     "fk_sync", "q1_agg", "q5_multijoin",
     "q_k_anon", "q_privacy_card", "q_fuzzy_join",
     "q_k_suppress", "q_k_generalize", "q_t_closeness", "q_fuzzy_serve",
@@ -194,6 +196,17 @@ object ScaleRehearsal {
     val badModes = modes.filterNot(KnownModes)
     require(badModes.isEmpty, s"unknown mode(s) " +
       s"${badModes.mkString(", ")} — valid: ${KnownModes.mkString(", ")}")
+    val only = args.lift(4)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.foreach { o =>
+      val unknown = o -- Queries.toSet -- RelQueries.toSet
+      require(unknown.isEmpty, s"unknown rehearsal queries: " +
+        s"${unknown.mkString(", ")}")
+    }
+    // both query lists resolve against the gate registry before any
+    // inflation starts
+    val gates = SparkEntry.select(Queries ++ RelQueries)
+      .map(g => g.name -> g).toMap
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -227,21 +240,13 @@ object ScaleRehearsal {
 
     def timeOne(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
-      val ok =
-        try {
-          SparkEntry.queries(name)(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          true
-        } catch { case scala.util.control.NonFatal(e) =>
-          // NonFatal only: an OOM or linkage error must kill the
-          // rehearsal — timings taken after one are garbage
-          System.err.println(s"[scale] FAILED $name@$dir: ${e.getMessage}")
-          false
-        }
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      graft.pipeline.Materialize.release()
-      if (ok) sec else -sec
+      try gates(name).run(spark, dir)(Gate.noop)
+      catch { case scala.util.control.NonFatal(e) =>
+        // NonFatal only: an OOM or linkage error must kill the
+        // rehearsal — timings taken after one are garbage
+        System.err.println(s"[scale] FAILED $name@$dir: ${e.getMessage}")
+        -(System.nanoTime() - t0) / 1e9
+      }
     }
 
     // one full 1× pass first as JVM/codegen warmup (discarded), then the
@@ -266,23 +271,17 @@ object ScaleRehearsal {
         // a failed pass keeps its negative elapsed-seconds sentinel and
         // a null ratio — bare NaN would make the line unparseable JSON
         val r = if (ok) (sAbs / b).toString else "null"
-        println(s"""{"mode":"$mode","query":"$q","base_sec":$b,""" +
+        println(s"""{"mode":${Json.str(mode)},"query":${Json.str(q)},""" +
+          s""""base_sec":$b,""" +
           s""""scaled_sec":$sAbs,"factor":$factor,"ratio":$r}""")
       }
       // per-factor exponent proxy: geometric mean of ratio/factor — 1.0
       // is perfectly linear, >1 superlinear (the global sorts), <1 means
       // the 1× run was dominated by fixed overheads
-      println(s"""{"metric":"scale_rehearsal","mode":"$mode",""" +
+      println(s"""{"metric":"scale_rehearsal","mode":${Json.str(mode)},""" +
         s""""factor":$factor,""" +
         s""""geomean_ratio_over_factor":${math.exp(geo / math.max(n, 1))},""" +
         s""""queries_ok":$n,"queries_total":${qs.size}}""")
-    }
-    val only = args.lift(4)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { o =>
-      val unknown = o -- Queries.toSet -- RelQueries.toSet
-      require(unknown.isEmpty, s"unknown rehearsal queries: " +
-        s"${unknown.mkString(", ")}")
     }
     modes.foreach { mode =>
       val qs = if (mode == "relational") RelQueries else Queries

@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each declared gate's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Failures are
   * recorded explicitly in `errors.json` (and stderr) instead of silently
   * dropping the query from the output set.
@@ -11,40 +11,29 @@ object Verify {
     // whose name contains the substring; the driver always passes two
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[String] = args.drop(2).headOption
+    // a filter that matches no gate fails here, before the session starts
+    // or any output is written
+    val gates = SparkEntry.select(SparkEntry.gates.map(_.name)
+      .filter(name => only.forall(name.contains)))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.builder(cpus)
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     var errors = Map.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(name.contains) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          errors += name -> s"${e.getClass.getSimpleName}: ${e.getMessage}"
-          System.err.println(s"[verify] FAILED $name: ${e.getMessage}")
-        }
+    gates.foreach { gate =>
+      try gate.run(spark, sfDir)(_.coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${gate.name}"))
+      catch { case e: Throwable =>
+        errors += gate.name -> s"${e.getClass.getSimpleName}: ${e.getMessage}"
+        System.err.println(s"[verify] FAILED ${gate.name}: ${e.getMessage}")
       }
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(k.contains) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    }
+    val json = gates.map(g => s"${Json.str(g.name)}: ${Json.str(g.oracleSql)}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }
+    val errJson = errors.map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     // failures are reported via errors.json + stderr; exit 0 so the driver

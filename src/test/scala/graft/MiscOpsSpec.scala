@@ -22,7 +22,7 @@ class MiscOpsSpec extends SparkSpec {
     val narrow = Seq("q_sample", "q_quantize", "q_subword", "q_lang_id",
       "q_quality", "q_pii", "q_multimodal_meta")
     narrow.foreach { name =>
-      val plan = SparkEntry.queries(name)(spark, fixtures)
+      val plan = SparkEntry.select(Seq(name)).head.build(spark, fixtures)
         .queryExecution.executedPlan.toString
       // broadcasts don't shuffle the data; only partitioning exchanges do
       val shuffles = "Exchange".r.findAllIn(plan).length -
@@ -188,7 +188,8 @@ class MiscOpsSpec extends SparkSpec {
     try {
       // any scratch-using gate query triggers the sweep on entry —
       // and must NOT throw on the unparseable name
-      SparkEntry.queries("q_dedup_append")(spark, fixtures).count()
+      SparkEntry.select(Seq("q_dedup_append")).head.build(spark, fixtures)
+        .count()
       assert(!java.nio.file.Files.exists(legacy),
         "legacy graft-gate-<name> dir must be swept")
       assert(java.nio.file.Files.exists(unparseable),
@@ -201,7 +202,7 @@ class MiscOpsSpec extends SparkSpec {
     }
   }
 
-  test("README's documented query count matches SparkEntry.queries") {
+  test("README's documented query count matches the gate registry") {
     // the count drifted twice across rounds (r10, r12 verdicts) — pin
     // the doc to the code so a new gate row can't ship without the one
     // README line that advertises it
@@ -213,20 +214,16 @@ class MiscOpsSpec extends SparkSpec {
     val documented = "(\\d+) end-to-end queries".r
       .findFirstMatchIn(line).map(_.group(1).toInt)
       .getOrElse(fail(s"no count in README line: $line"))
-    assert(documented == SparkEntry.queries.size,
+    assert(documented == SparkEntry.gates.size,
       s"README says $documented queries; SparkEntry has " +
-        s"${SparkEntry.queries.size} — update README.md")
-    // every oracle key must name a real query (a typo'd key silently
-    // weakens the gate to rows-only)
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle SQL for unknown queries: $orphans")
+        s"${SparkEntry.gates.size} — update README.md")
   }
 
   test("tsMicros: DATE converts via a tz-independent day count (same " +
       "epoch micros whatever the session timezone)") {
     import SparkSpec.spark.implicits._
     val df = Seq(java.sql.Date.valueOf("1995-01-01")).toDF("ts")
-    def us(): Long = df.select(SparkEntry.tsMicros(df).as("us"))
+    def us(): Long = df.select(gates.Shared.tsMicros(df).as("us"))
       .collect().head.getLong(0)
     // 1970-01-01 -> 1995-01-01 is 9131 days (6 leap years)
     val expect = 9131L * 86400000000L
@@ -244,7 +241,7 @@ class MiscOpsSpec extends SparkSpec {
     import SparkSpec.spark.implicits._
     val df = Seq("1995-01-01 12:34:56.789012").toDF("raw")
       .select(col("raw").cast("timestamp_ntz").as("ts"))
-    def us(): Long = df.select(SparkEntry.tsMicros(df).as("us"))
+    def us(): Long = df.select(gates.Shared.tsMicros(df).as("us"))
       .collect().head.getLong(0)
     val expect = 9131L * 86400000000L + 12L * 3600000000L +
       34L * 60000000L + 56789012L
@@ -262,7 +259,7 @@ class MiscOpsSpec extends SparkSpec {
     // memoises its decision per session and source
     def touch(): java.lang.ref.WeakReference[AnyRef] = {
       val s = spark.newSession()
-      SparkEntry.queries("q_fingerprint")(s, fixtures)
+      SparkEntry.select(Seq("q_fingerprint")).head.build(s, fixtures)
       new java.lang.ref.WeakReference[AnyRef](s)
     }
     val ref = touch()

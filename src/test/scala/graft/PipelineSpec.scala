@@ -2468,13 +2468,13 @@ class PipelineSpec extends SparkSpec {
     import graft.pipeline.{Classify, Sampling}
     for {
       dir <- Seq(fixtures, "/root/testdata/sf0.01")
-      // 16 = SparkEntry's nbBigramBuckets (the q_nb_eval_bigram config)
+      // 16 = CurationGates' nbBigramBuckets (the q_nb_eval_bigram config)
       bg <- Seq(None, Some(16))
     } {
       val d = spark.read.parquet(s"$dir/documents.parquet")
       val cut = Sampling.splitAssign(d, col("doc_id"),
         Seq("train" -> 0.5, "eval" -> 0.5))
-      // 24 = SparkEntry's nbMaxVocab (the q_nb_model cap)
+      // 24 = CurationGates' nbMaxVocab (the q_nb_model cap)
       val model = Classify.train(cut.filter(col("split") === "train"),
         "lang", "text", alpha = 1.0, maxVocab = Some(24),
         bigramBuckets = bg)

@@ -18,10 +18,10 @@ class StreamingMaskSpec extends SparkSpec {
 
   // normalize the events `ts` column to a zoned TIMESTAMP at micros,
   // whichever parquet encoding the fixture carries (raw nanos longs or
-  // timestamp[us] — see SparkEntry.tsMicros); convert once for both paths.
+  // timestamp[us] — see gates.Shared.tsMicros); convert once for both paths.
   // Watermarks require a zoned event-time column (session tz is UTC).
   private def toTs(df: DataFrame): DataFrame =
-    df.withColumn("ts", timestamp_micros(SparkEntry.tsMicros(df)))
+    df.withColumn("ts", timestamp_micros(gates.Shared.tsMicros(df)))
 
   // the file stream source wants a directory of files, not a single file
   private lazy val eventsDir: String = {
