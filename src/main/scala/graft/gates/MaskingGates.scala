@@ -227,8 +227,9 @@ private[graft] object MaskingGates {
     * staged-swap contract" claim, value-gated): the customer table is
     * landed INTO an ORC store (stage + staged-directory swap), the
     * reference-shaped blueprint (R2 `#row#` template + P2-guarded R1
-    * static — `maskedRelease`'s rules) runs `Anonymizer.run()` against
-    * that store (read ORC → mask → stage ORC → commit swap), and the
+    * static — `mask_blueprint_full`'s column rules) runs
+    * `Anonymizer.run()` against that store (read ORC → mask → stage ORC →
+    * commit swap), and the
     * published table is read back. DuckDB replays the masking from the
     * PARQUET originals, so the gate pins the whole
     * parquet→ORC→mask→ORC→read chain value-identical — a lossy type
