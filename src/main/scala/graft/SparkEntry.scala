@@ -35,8 +35,9 @@ object SparkEntry {
     names.distinct.map(byName)
   }
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query over the sf0.001 test data; a smoke check expects
+    * rows > 0.
+    */
   def entry(spark: SparkSession): DataFrame =
-    select(Seq("mask_blueprint_full")).head.build(spark,
-      "/root/testdata/sf0.001")
+    byName("mask_blueprint_full").build(spark, "/root/testdata/sf0.001")
 }

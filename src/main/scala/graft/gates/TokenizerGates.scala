@@ -935,7 +935,8 @@ private[graft] object TokenizerGates {
          |SELECT piece, cnt FROM t
          |ORDER BY cnt DESC, piece LIMIT 40""".stripMargin
     }),
-    Gate("q_unigram_encode_parity", qUnigramEncodeParity, unigramParityOracleSql),
+    Gate("q_unigram_encode_parity", qUnigramEncodeParity,
+      unigramParityOracleSql),
     Gate("q_bpe", qBpe, {
       // the SAME tokenizers via the shared bpeChainSql rendering. The
       // gpt2-style path re-extracts the identical pre-token pieces with
