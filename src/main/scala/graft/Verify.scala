@@ -26,15 +26,17 @@ object Verify {
       try gate.run(spark, sfDir)(_.coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/${gate.name}"))
       catch { case e: Throwable =>
-        errors += gate.name -> s"${e.getClass.getSimpleName}: ${e.getMessage}"
+        errors +=
+          gate.name -> s"${e.getClass.getSimpleName}: ${e.getMessage}"
         System.err.println(s"[verify] FAILED ${gate.name}: ${e.getMessage}")
       }
     }
-    val json = gates.map(g => s"${Json.str(g.name)}: ${Json.str(g.oracleSql)}")
+    def obj(kvs: Iterable[(String, String)]): String = kvs
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }
       .mkString("{", ",", "}")
+    val json = obj(gates.map(g => g.name -> g.oracleSql))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }
-      .mkString("{", ",", "}")
+    val errJson = obj(errors)
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     // failures are reported via errors.json + stderr; exit 0 so the driver
     // still grades the queries that did produce output
