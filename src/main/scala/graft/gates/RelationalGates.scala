@@ -10,7 +10,8 @@ import graft.pipeline.Materialize
 import Shared._
 
 /** Relational operators over the TPC-H tables: aggregations,
-  * joins, windows, set operations, sketches and time-series shapes.
+  * joins, windows, set operations, sketches, time-series shapes and the
+  * Z-order layout key.
   */
 private[graft] object RelationalGates {
 
