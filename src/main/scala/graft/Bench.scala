@@ -18,11 +18,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // an unknown or empty SPARK_GRAFT_BENCH_ONLY fails before the
     // session starts
     val gates = selection(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
-    val spark = GraftSession.builder(cpus).getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen/parquet-footer warmup so the first timed query isn't
     // charged for session bring-up

@@ -14,8 +14,7 @@ object ExplainQuery {
     val gates = SparkEntry.select(
       args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(cpus).getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     gates.foreach { gate =>

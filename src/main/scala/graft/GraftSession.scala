@@ -6,6 +6,12 @@ import org.apache.spark.sql.SparkSession
   * many shuffle partitions, UTC, graft's planner extensions, no UI.
   */
 object GraftSession {
+  /** The mains' core count: `SPARK_GRAFT_CPUS`, default 4. One reader,
+    * so a plan dump or profile taken without the variable describes the
+    * same shuffle-partition count that Bench runs.
+    */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   def builder(cpus: Int): SparkSession.Builder = SparkSession.builder()
     .master(s"local[$cpus]")
     .config("spark.sql.shuffle.partitions", cpus.toString)

@@ -18,8 +18,7 @@ object ProfileQuery {
     val name = gate.name
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.builder(cpus).getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     final case class JobRec(var desc: String = "", var start: Long = 0L,

@@ -207,7 +207,7 @@ object ScaleRehearsal {
     // inflation starts
     val gates = SparkEntry.select(Queries ++ RelQueries)
       .map(g => g.name -> g).toMap
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.cpus
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -330,6 +330,21 @@ object ScaleRehearsal {
     }
   }
 
+  /** Per-copy decimal-digit blocks (all BMP, Unicode category Nd, so
+    * the GPT-2 pre-tokenizer still sees one `\p{N}+` run): copy `i`'s
+    * ASCII digits translate to block `i−1`'s digits, making numeric
+    * tokens — and every gram/shingle spanning them — distinct per copy
+    * too. Letter marking alone left digit-heavy text byte-identical
+    * across copies, i.e. partially clone mode under the distinct label.
+    */
+  private val DigitBlocks: IndexedSeq[Char] = IndexedSeq(
+    '०', '০', '੦', '૦', '୦', '௦',
+    '౦', '೦', '൦', '๐', '໐', '༠',
+    '၀', '០', '᠐')
+
+  private def copyDigits(i: Int): String =
+    (0 until 10).map(dd => (DigitBlocks(i - 1) + dd).toChar).mkString
+
   /** N copies of `src` with ids re-keyed into disjoint ranges (copy i
     * shifts by i·(max+1)). With `distinctCopies`, copy i ≥ 1's payload
     * is made genuinely distinct per column kind:
@@ -361,21 +376,6 @@ object ScaleRehearsal {
     * the N× one. Repartitioned so the scaled input has real parallelism
     * rather than N files of clones back to back.
     */
-  /** Per-copy decimal-digit blocks (all BMP, Unicode category Nd, so
-    * the GPT-2 pre-tokenizer still sees one `\p{N}+` run): copy `i`'s
-    * ASCII digits translate to block `i−1`'s digits, making numeric
-    * tokens — and every gram/shingle spanning them — distinct per copy
-    * too. Letter marking alone left digit-heavy text byte-identical
-    * across copies, i.e. partially clone mode under the distinct label.
-    */
-  private val DigitBlocks: IndexedSeq[Char] = IndexedSeq(
-    '०', '০', '੦', '૦', '୦', '௦',
-    '౦', '೦', '൦', '๐', '໐', '༠',
-    '၀', '០', '᠐')
-
-  private def copyDigits(i: Int): String =
-    (0 until 10).map(dd => (DigitBlocks(i - 1) + dd).toChar).mkString
-
   private[graft] def inflate(spark: SparkSession, src: String,
       dst: String, idCol: String, factor: Int, cpus: Int,
       distinctCopies: Boolean, shiftOverride: Option[Long] = None)

@@ -15,8 +15,7 @@ object Verify {
     // or any output is written
     val gates = SparkEntry.select(SparkEntry.gates.map(_.name)
       .filter(name => only.forall(name.contains)))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.builder(cpus)
+    val spark = GraftSession.builder(GraftSession.cpus)
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

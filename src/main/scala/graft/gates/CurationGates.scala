@@ -610,13 +610,6 @@ private[graft] object CurationGates {
       .select(col("doc_id"), col("lang"), col("n_tokens"))
       .orderBy("doc_id")
 
-  /** The composed curation pipeline ([[graft.pipeline.Curation.curate]]):
-    * quality gate → PII scrub → near-dedup (survivors only) → stratified
-    * mix, end-to-end under one oracle. The fixture corpus carries no PII,
-    * so a deterministic contact string is appended per document BEFORE
-    * the pipeline — the scrub stage genuinely fires, and the dedup stage
-    * shingles the REDACTED text exactly as a production run would.
-    */
   /** The synthesized-PII corpus + curation call shared by
     * [[qCuration]] and [[qCurationPack]].
     */
@@ -632,6 +625,13 @@ private[graft] object CurationGates {
       defaultRate = 0.1)
   }
 
+  /** The composed curation pipeline ([[graft.pipeline.Curation.curate]]):
+    * quality gate → PII scrub → near-dedup (survivors only) → stratified
+    * mix, end-to-end under one oracle. The fixture corpus carries no PII,
+    * so a deterministic contact string is appended per document BEFORE
+    * the pipeline — the scrub stage genuinely fires, and the dedup stage
+    * shingles the REDACTED text exactly as a production run would.
+    */
   private def qCuration(s: SparkSession, dir: String): DataFrame =
     curatedDocs(s, dir)
       .select("doc_id", "lang", "quality", "text")

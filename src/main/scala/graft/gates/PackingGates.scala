@@ -98,14 +98,6 @@ private[graft] object PackingGates {
       .orderBy("doc_id", "win_no", "pos")
   }
 
-  /** The END of the training-batch flow: tokenize-to-ids → BPE-budget
-    * offset packing → boundary splitting → bin assembly
-    * ([[graft.pipeline.Packing.assembleBins]]) — every bin's
-    * concatenated id sequence, value-checked per bin on piece count,
-    * token fill, first/last doc, and the id content (count + sum;
-    * q_bpe_ids already pins every id per position, so together the
-    * assembled sequences are fully determined).
-    */
   /** The shared tokenize→pack→chunk PIECES frame (demo-vocabulary ids,
     * 256-token budget per `lang` shard) behind every bin-assembly gate —
     * ONE definition, so `q_epoch_shuffle`'s bin set cannot drift from
@@ -174,6 +166,14 @@ private[graft] object PackingGates {
         TextOps.tokenCount(col("text")))
       .orderBy("cap")
 
+  /** The END of the training-batch flow: tokenize-to-ids → BPE-budget
+    * offset packing → boundary splitting → bin assembly
+    * ([[graft.pipeline.Packing.assembleBins]]) — every bin's
+    * concatenated id sequence, value-checked per bin on piece count,
+    * token fill, first/last doc, and the id content (count + sum;
+    * q_bpe_ids already pins every id per position, so together the
+    * assembled sequences are fully determined).
+    */
   private def qPackBins(s: SparkSession, dir: String): DataFrame =
     assembledBins(s, dir)
       .select(col("lang"), col("bin"), col("n_pieces"), col("bin_tokens"),

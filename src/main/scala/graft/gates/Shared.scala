@@ -58,18 +58,6 @@ private[graft] object Shared {
   def anon(spark: SparkSession, dir: String) =
     new Anonymizer(spark, new ParquetIO(spark, dir))
 
-  /** Fan out an UNDER-PARALLEL base-table scan (guide §2.5's input-skew
-    * remedy — "one huge unsplittable file … repartition immediately
-    * after the read"): when the source yields fewer splits than the
-    * cluster's parallelism (one small parquet file = one row group = one
-    * task on the fixtures), every CPU-heavy narrow chain downstream —
-    * tokenize + explode, media decode, per-row winnowing — serializes on
-    * those few tasks while the rest of the cluster idles. Round-robin
-    * repartition to the default parallelism; the guard keys on the
-    * SCAN's split count, so at real corpus scale (files ≥ cores) this is
-    * a no-op and no payload shuffle is ever added. Call it on
-    * freshly-scanned frames only — `inputFiles` is the scan's file list.
-    */
   /** Per-(session, source) memo of the fan-out decision: the probe
     * plans the scan RDD (~150 ms of driver work per call), and a
     * multi-action query calls `docs()` five to ten times — unmemoized,
@@ -83,6 +71,18 @@ private[graft] object Shared {
     new java.util.concurrent.ConcurrentHashMap[(String, String),
       java.lang.Boolean]()
 
+  /** Fan out an UNDER-PARALLEL base-table scan (guide §2.5's input-skew
+    * remedy — "one huge unsplittable file … repartition immediately
+    * after the read"): when the source yields fewer splits than the
+    * cluster's parallelism (one small parquet file = one row group = one
+    * task on the fixtures), every CPU-heavy narrow chain downstream —
+    * tokenize + explode, media decode, per-row winnowing — serializes on
+    * those few tasks while the rest of the cluster idles. Round-robin
+    * repartition to the default parallelism; the guard keys on the
+    * SCAN's split count, so at real corpus scale (files ≥ cores) this is
+    * a no-op and no payload shuffle is ever added. Call it on
+    * freshly-scanned frames only — `inputFiles` is the scan's file list.
+    */
   private def fanOutScanKeyed(df: DataFrame, key: String): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     // guard on the scan's REAL split count, not its file count: parquet
@@ -330,15 +330,6 @@ private[graft] object Shared {
        |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
        |  FROM ${p}fx GROUP BY qid, vec_id, label)""".stripMargin
 
-  /** The shared SemDeDup oracle chain (`q_semdedup_pairs` /
-    * `q_semdedup`): the q_sim_ivf assignment CTEs over the WHOLE
-    * embeddings table (no held-out query vector — dedup has none;
-    * centroids = the 16 lowest-vec_id vectors, the kmeansIters = 0
-    * reproducible path), then the within-cell pair set with exact
-    * cosines at threshold 0.3. `ad`/`pairs` are MATERIALIZED so the
-    * survivor row's recursive closure cannot re-inline the unnest
-    * chains (q_bpe_train's lesson).
-    */
   /** One argmax-cell assignment CTE chain over `src`, CTE names
     * prefixed with `p` — the corpus/batch building block both SemDeDup
     * oracle shapes share (the batch side of `q_semdedup_incr` runs the
@@ -381,6 +372,11 @@ private[graft] object Shared {
        |    dp / (sqrt(na) * sqrt(nb)) AS cosine
        |  FROM dots WHERE dp / (sqrt(na) * sqrt(nb)) >= $threshold)""".stripMargin
 
+  /** Just the recursive component closure over a `pairs` CTE —
+    * shared by [[semSurvivorCtes]] and the keep-best survivor variant
+    * (which ranks members by an external quality score instead of the
+    * own-centroid cosine).
+    */
   val semComponentCtes =
     s"""edges AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM pairs
        |          UNION SELECT id_b, id_a FROM pairs),
@@ -389,6 +385,14 @@ private[graft] object Shared {
        |          SELECT rc.id, e.dst FROM reach rc JOIN edges e ON e.src = rc.r),
        |comp AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id)""".stripMargin
 
+  /** The SemDeDup SURVIVOR derivation over a `pairs`/`ad` chain:
+    * recursive min-reachable components (q_dedup_clusters' closure),
+    * each member's own-centroid cosine (= its MAX over centroids,
+    * because assignment is argmax), per-component minimum with the
+    * lower-id tie — `dropped` is everyone else. MATERIALIZED where the
+    * recursion would otherwise re-inline the unnest chains and blow
+    * the oracle's memory. Requires `WITH RECURSIVE` at the head.
+    */
   val semSurvivorCtes =
     s"""$semComponentCtes,
        |own AS (SELECT vec_id, MAX(dp / (sqrt(nv) * sqrt(nc))) AS c

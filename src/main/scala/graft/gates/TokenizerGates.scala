@@ -49,13 +49,6 @@ private[graft] object TokenizerGates {
       .orderBy("lang")
   }
 
-  /** Real tokenizer-based token counting ([[graft.functions.Bpe]]): the
-    * greedy BPE merge loop under a rank-ordered merges vocabulary,
-    * next to the whitespace count it corrects. The vocabulary's
-    * structural invariant makes greedy encoding equal rank-order rule
-    * application, so the oracle can evaluate the SAME tokenizer as a
-    * nested replace chain — a full value oracle, not a row count.
-    */
   /** Merges learned by [[graft.functions.BpeTrainer]] on the documents
     * corpus — rank, sides, and the selection-time pair count of each of
     * the first [[bpeTrainMerges]] rules. The oracle is a full
@@ -458,6 +451,13 @@ private[graft] object TokenizerGates {
         n(col("c._3")).as("n_round_trip_all"))
   }
 
+  /** Real tokenizer-based token counting ([[graft.functions.Bpe]]): the
+    * greedy BPE merge loop under a rank-ordered merges vocabulary,
+    * next to the whitespace count it corrects. The vocabulary's
+    * structural invariant makes greedy encoding equal rank-order rule
+    * application, so the oracle can evaluate the SAME tokenizer as a
+    * nested replace chain — a full value oracle, not a row count.
+    */
   private def qBpe(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Bpe
     // production shape: the vocabulary is parsed from merges-FILE lines
@@ -500,8 +500,8 @@ private[graft] object TokenizerGates {
     *     report 0 tokens, where the trainer just stops early;
     *   - `seg{k}`: rewrite — merge starts concatenate with their next
     *     symbol, absorbed successors drop, positions renumber.
-    */
-  /** The training CTE chain WITHOUT the leading `WITH` or final SELECT
+    *
+    * The training CTE chain comes WITHOUT the leading `WITH` or final SELECT
     * — ends in `seg$k` (the corpus piece types segmented under the k
     * learned merges) and `b1..bk` (the learned rules); `q_bpe_train`
     * selects the rules, `q_bpe_train_encode` aggregates seg$k lengths.

@@ -723,17 +723,6 @@ private[graft] object VectorGates {
       .orderBy("vec_id")
   }
 
-  /** The IVF probe pipeline mirrored in SQL — shared by `q_sim_ivf`
-    * (centroids seeded from the whole corpus) and `q_sim_ivf_append`
-    * (centroids seeded from the `centPred` half the initial build saw;
-    * assignment/scoring still cover the full corpus). Mirrors
-    * `Similarity.ivfTopK` exactly: centroids = 16 lowest-id vectors
-    * passing `centPred` (cell = rank-1); assignment = argmax cell
-    * cosine with ties toward the HIGHER cell (Spark's lexicographic
-    * struct max); probes = 2 centroids nearest the query with ties
-    * toward the LOWER cell (stable driver sort); all cosines are
-    * element-order folds (`SUM ... ORDER BY i` is bit-identical).
-    */
   /** Shared CTE chain of the batch-IVF oracle (3 queries vec_id < 3,
     * corpus vec_id >= 3, centroids = 16 lowest-id corpus vectors,
     * nProbe=2 with ties to the LOWER cell, all cosines element-order
@@ -793,6 +782,15 @@ private[graft] object VectorGates {
        |${semPairCtes("assign", "corpus", "assign", "corpus",
           "b.vec_id > a.vec_id", threshold)}""".stripMargin
 
+  /** The shared SemDeDup oracle chain (`q_semdedup_pairs` /
+    * `q_semdedup`): the q_sim_ivf assignment CTEs over the WHOLE
+    * embeddings table (no held-out query vector — dedup has none;
+    * centroids = the 16 lowest-vec_id vectors, the kmeansIters = 0
+    * reproducible path), then the within-cell pair set with exact
+    * cosines at threshold 0.3. `ad`/`pairs` are MATERIALIZED so the
+    * survivor row's recursive closure cannot re-inline the unnest
+    * chains (q_bpe_train's lesson).
+    */
   private val semDedupCtes = semDedupCtesWith("16")
 
   /** The TWO-LEVEL SemDeDup chain (`q_semdedup_2l`), replaying
@@ -852,19 +850,6 @@ private[graft] object VectorGates {
        |  QUALIFY row_number() OVER (PARTITION BY vec_id
        |    ORDER BY dp / (sqrt(nv) * sqrt(nc)) DESC, cell DESC) = 1)""".stripMargin
 
-  /** The SemDeDup SURVIVOR derivation over a `pairs`/`ad` chain:
-    * recursive min-reachable components (q_dedup_clusters' closure),
-    * each member's own-centroid cosine (= its MAX over centroids,
-    * because assignment is argmax), per-component minimum with the
-    * lower-id tie — `dropped` is everyone else. MATERIALIZED where the
-    * recursion would otherwise re-inline the unnest chains and blow
-    * the oracle's memory. Requires `WITH RECURSIVE` at the head.
-    */
-  /** Just the recursive component closure over a `pairs` CTE —
-    * shared by [[semSurvivorCtes]] and the keep-best survivor variant
-    * (which ranks members by an external quality score instead of the
-    * own-centroid cosine).
-    */
   /** The d=2 PCA model CTE chain shared by `q_pca2_parity` and
     * `q_pca_semdedup`: exact integer Gram stats over the first two
     * embedding dims -> covariance (decimal-exact numerators, one
@@ -952,6 +937,17 @@ private[graft] object VectorGates {
          |    CAST(embedding[2] AS DOUBLE) AS x1
          |  FROM embeddings)""".stripMargin
 
+  /** The IVF probe pipeline mirrored in SQL — shared by `q_sim_ivf`
+    * (centroids seeded from the whole corpus) and `q_sim_ivf_append`
+    * (centroids seeded from the `centPred` half the initial build saw;
+    * assignment/scoring still cover the full corpus). Mirrors
+    * `Similarity.ivfTopK` exactly: centroids = 16 lowest-id vectors
+    * passing `centPred` (cell = rank-1); assignment = argmax cell
+    * cosine with ties toward the HIGHER cell (Spark's lexicographic
+    * struct max); probes = 2 centroids nearest the query with ties
+    * toward the LOWER cell (stable driver sort); all cosines are
+    * element-order folds (`SUM ... ORDER BY i` is bit-identical).
+    */
   private def simIvfOracleSql(centPred: String,
       centLimit: String = "16"): String =
     s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),

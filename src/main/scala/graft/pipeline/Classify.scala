@@ -174,11 +174,6 @@ object Classify {
     buildModel(dc, pairs, pairs.map(_._2).distinct.length.toLong, alpha)
   }
 
-  /** The driver-side model assembly over exact integer counts —
-    * package-visible so specs can drive it on hand-built tables. Op
-    * order pinned: every log likelihood is
-    * `math.log((cnt + α) / (tot + α·V))` over int→double conversions.
-    */
   /** Labels and vocabulary sort in CODEPOINT order (= Spark/DuckDB
     * binary collation), NOT Java's UTF-16 code-unit order — the same
     * divergence every trainer family pins (it matters only between
@@ -188,6 +183,11 @@ object Classify {
   private val cpOrdering: Ordering[String] =
     (a, b) => graft.functions.BpeTrainer.codepointCompare(a, b)
 
+  /** The driver-side model assembly over exact integer counts —
+    * package-visible so specs can drive it on hand-built tables. Op
+    * order pinned: every log likelihood is
+    * `math.log((cnt + α) / (tot + α·V))` over int→double conversions.
+    */
   private[graft] def buildModel(docCounts: Map[String, Long],
       pairCounts: Seq[(String, String, Long)], vocabSize: Long,
       alpha: Double): NbModel = {

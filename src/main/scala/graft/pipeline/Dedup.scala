@@ -146,11 +146,21 @@ object Dedup {
     */
   def minHashSignatures(sh: DataFrame, idCol: String,
       numHashes: Int): DataFrame =
+    minHashAgg(sh, idCol, numHashes, hash64 = false)
+
+  /** THE MinHash family: member `i` of a shingle's hash vector — md5 of
+    * `"<i>|" + shingle` (oracle-portable), or `xxhash64(i, shingle)`.
+    */
+  private def minHash(i: Int, hash64: Boolean): Column =
+    if (hash64) xxhash64(lit(i), col("shingle"))
+    else md5(concat(lit(s"$i|"), col("shingle")))
+
+  private def minHashAgg(sh: DataFrame, idCol: String, numHashes: Int,
+      hash64: Boolean): DataFrame =
     sh.groupBy(col(idCol))
-      .agg(
-        min(md5(concat(lit("0|"), col("shingle")))).as("h0"),
+      .agg(min(minHash(0, hash64)).as("h0"),
         (1 until numHashes).map(i =>
-          min(md5(concat(lit(s"$i|"), col("shingle")))).as(s"h$i")): _*)
+          min(minHash(i, hash64)).as(s"h$i")): _*)
 
   /** Production MinHash signatures: `xxhash64(i, shingle)` instead of the
     * md5-string derivation — same shape (one map-side-combined min
@@ -162,11 +172,7 @@ object Dedup {
     */
   def minHashSignatures64(sh: DataFrame, idCol: String,
       numHashes: Int): DataFrame =
-    sh.groupBy(col(idCol))
-      .agg(
-        min(xxhash64(lit(0), col("shingle"))).as("h0"),
-        (1 until numHashes).map(i =>
-          min(xxhash64(lit(i), col("shingle"))).as(s"h$i")): _*)
+    minHashAgg(sh, idCol, numHashes, hash64 = true)
 
   /** [[nearDuplicatePairs]] on the xxhash64 production signatures — the
     * path to run at 100 TB; the md5 variant exists to stay oracle-exact.
@@ -179,21 +185,6 @@ object Dedup {
         hash64 = true),
       idCol, threshold, numHashes, rowsPerBand, maxBucket)
 
-  /** Banded LSH candidate pairs from signatures: concatenate `rowsPerBand`
-    * consecutive hashes into a band signature, explode to (band, sig), and
-    * self-join on equality — the bucket join that replaces the n² scan.
-    * Returns distinct (id_a, id_b) with id_a < id_b.
-    *
-    * @param maxBucket optional skew guard (mirrors
-    *   [[Similarity.signBandCandidates]]): band buckets larger than this
-    *   are dropped before the self-join. A boilerplate-heavy corpus (empty
-    *   docs, licence headers) concentrates one band signature, and that
-    *   bucket's pair count is quadratic in its size — the one way this
-    *   plan degenerates at scale. Standard LSH practice is to skip such
-    *   buckets: their members are caught by their other bands or are
-    *   degenerate duplicates better handled by exact dedup. `None`
-    *   (default) keeps the historical exact-recall behavior.
-    */
   /** (id, band, sig) rows of a signature frame — the banded form behind
     * [[lshCandidates]] and the incremental-index family. The band
     * signature is a STRUCT of the band's hash columns: equality on the
@@ -213,22 +204,27 @@ object Dedup {
       .select(col(idCol), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
+  /** Banded LSH candidate pairs from signatures: concatenate `rowsPerBand`
+    * consecutive hashes into a band signature ([[bandedSigs]]), and
+    * self-join on equality — the bucket join that replaces the n² scan,
+    * shared with [[Similarity.signBandCandidates]]
+    * ([[Similarity.candidatePairPlan]]). Returns distinct (id_a, id_b)
+    * with id_a < id_b.
+    *
+    * @param maxBucket optional skew guard (mirrors
+    *   [[Similarity.signBandCandidates]]): band buckets larger than this
+    *   are dropped before the self-join. A boilerplate-heavy corpus (empty
+    *   docs, licence headers) concentrates one band signature, and that
+    *   bucket's pair count is quadratic in its size — the one way this
+    *   plan degenerates at scale. Standard LSH practice is to skip such
+    *   buckets: their members are caught by their other bands or are
+    *   degenerate duplicates better handled by exact dedup. `None`
+    *   (default) keeps the historical exact-recall behavior.
+    */
   def lshCandidates(sigs: DataFrame, idCol: String, numHashes: Int,
-      rowsPerBand: Int, maxBucket: Option[Int] = None): DataFrame = {
-    val bands = bandedSigs(sigs, idCol, numHashes, rowsPerBand)
-    val kept = maxBucket.fold(bands) { m =>
-      val small = bands.groupBy("band", "sig")
-        .agg(count(lit(1)).as("__n")).filter(col("__n") <= m)
-        .select("band", "sig")
-      bands.join(small, Seq("band", "sig"))
-    }
-    val a = kept.select(col(idCol).as("id_a"), col("band"), col("sig"))
-    val b = kept.select(col(idCol).as("id_b"), col("band"), col("sig"))
-    a.join(b, Seq("band", "sig"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-  }
+      rowsPerBand: Int, maxBucket: Option[Int] = None): DataFrame =
+    Similarity.candidatePairPlan(
+      bandedSigs(sigs, idCol, numHashes, rowsPerBand), idCol, maxBucket)
 
   /** Per-doc shingle SET + MinHash signature in ONE aggregate — the
     * shared frame behind [[nearDuplicatePairs]]/[[nearDuplicatePairs64]].
@@ -249,13 +245,10 @@ object Dedup {
   private def shingleSetsWithSigs(df: DataFrame, idCol: String,
       textCol: String, shingleK: Int, numHashes: Int,
       hash64: Boolean): DataFrame = {
-    def h(i: Int): Column =
-      if (hash64) xxhash64(lit(i), col("shingle"))
-      else md5(concat(lit(s"$i|"), col("shingle")))
     TextOps.explodedShinglesRaw(df, idCol, textCol, shingleK)
       .groupBy(col(idCol))
       .agg(collect_set(col("shingle")).as("__shs"),
-        (0 until numHashes).map(i => min(h(i)).as(s"h$i")): _*)
+        (0 until numHashes).map(i => min(minHash(i, hash64)).as(s"h$i")): _*)
   }
 
   /** The banded-LSH candidate → exact-Jaccard tail shared by the two

@@ -827,29 +827,6 @@ object Multimodal {
     else if (ImageCodec.decodeImage(bytes).isDefined) "image"
     else "opaque"
 
-  /** The MIXED-MODALITY fingerprint — what a real media lake needs: a
-    * 100 TB corpus directory interleaves images, audio and video in one
-    * binary column, and nothing upstream knows each row's modality. One
-    * narrow pass sniffs the container per row ([[modalityOf]] — the
-    * [[CompositeCodec]] dispatch rule) and routes to that modality's
-    * 64-slot integer envelope — [[energyWindows]] (audio loudness),
-    * [[sizeWindows]] (video bitrate), [[luminanceGrid]] at g = √w
-    * (image luminance; `w` must be a square) — then [[averageHashOf]],
-    * the SAME integer hash rule for all three, so ONE in-query SQL
-    * fold re-derives every row's hash from its emitted windows
-    * regardless of modality (the `q_media_dedup_mixed` parity).
-    * Opaque payloads take the shared byte-histogram fallback. Hashes
-    * are only COMPARABLE within a modality (a luminance grid and a
-    * loudness envelope share no geometry), so near-dup pairing keeps
-    * only equal-`modality` pairs out of the banding — the
-    * `q_media_dedup_mixed` gate pins that rule. Adds `modality`
-    * (string), `media_windows` (array<bigint>) and `mfp` (bigint); a
-    * null payload yields null for all three (standard column
-    * semantics). Narrow, no shuffle, closure UDFs — classification and
-    * envelope come from ONE decode per row
-    * ([[mediaModalityWindows]]; decode-once is spec-asserted against
-    * the real ImageIO decode counter).
-    */
   /** [[modalityOf]] and the modality's 64-slot envelope in ONE decode —
     * the fused per-row body behind [[mediaFingerprint]]. The split
     * modality-then-windows UDF pair decoded image payloads TWICE
@@ -896,6 +873,29 @@ object Multimodal {
     }
   }
 
+  /** The MIXED-MODALITY fingerprint — what a real media lake needs: a
+    * 100 TB corpus directory interleaves images, audio and video in one
+    * binary column, and nothing upstream knows each row's modality. One
+    * narrow pass sniffs the container per row ([[modalityOf]] — the
+    * [[CompositeCodec]] dispatch rule) and routes to that modality's
+    * 64-slot integer envelope — [[energyWindows]] (audio loudness),
+    * [[sizeWindows]] (video bitrate), [[luminanceGrid]] at g = √w
+    * (image luminance; `w` must be a square) — then [[averageHashOf]],
+    * the SAME integer hash rule for all three, so ONE in-query SQL
+    * fold re-derives every row's hash from its emitted windows
+    * regardless of modality (the `q_media_dedup_mixed` parity).
+    * Opaque payloads take the shared byte-histogram fallback. Hashes
+    * are only COMPARABLE within a modality (a luminance grid and a
+    * loudness envelope share no geometry), so near-dup pairing keeps
+    * only equal-`modality` pairs out of the banding — the
+    * `q_media_dedup_mixed` gate pins that rule. Adds `modality`
+    * (string), `media_windows` (array<bigint>) and `mfp` (bigint); a
+    * null payload yields null for all three (standard column
+    * semantics). Narrow, no shuffle, closure UDFs — classification and
+    * envelope come from ONE decode per row
+    * ([[mediaModalityWindows]]; decode-once is spec-asserted against
+    * the real ImageIO decode counter).
+    */
   def mediaFingerprint(df: DataFrame, payloadCol: String, w: Int = 64)
       : DataFrame = {
     val g = math.sqrt(w.toDouble).toInt

@@ -166,19 +166,38 @@ object Pq {
       call_function("pq_encode", vec, codebooksLit(cb))
     else encodeFold(cb)(vec)
 
-  /** ADC score of a codes column against one query: the m×k lookup
-    * table of per-subspace dots is computed driver-side and shipped as
-    * literal arrays — scoring is m `element_at`s + adds per row, no
-    * decode, no shuffle.
+  /** THE ADC lookup table of one query: `lut(j)(c)` = ⟨query_j,
+    * centroid_{j,c}⟩, each a left-to-right double fold from `0.0`. Both
+    * [[approxDot]] (driver side) and the per-query-row closure of
+    * [[Similarity.queryIvfPqBatch]] build it here, so single-query and
+    * batch ADC scores are bit-identical. A codebook/query dim mismatch
+    * fails fast — a truncated table would rank candidates by prefix
+    * dots and return plausible-looking wrong neighbors.
+    */
+  private[pipeline] def adcTable(cb: PqCodebooks,
+      query: Seq[Float]): Array[Array[Double]] = {
+    require(query.length == cb.m * cb.subDim,
+      s"query dim ${query.length} != codebook dim ${cb.m * cb.subDim} " +
+        s"(m=${cb.m} x subDim=${cb.subDim})")
+    Array.tabulate(cb.m) { j =>
+      cb.codebooks(j).map { c =>
+        var dp = 0.0
+        var i = 0
+        while (i < c.length) {
+          dp += query(j * cb.subDim + i).toDouble * c(i).toDouble
+          i += 1
+        }
+        dp
+      }
+    }
+  }
+
+  /** ADC score of a codes column against one query: the m×k
+    * [[adcTable]] is computed driver-side and shipped as literal arrays
+    * — scoring is m `element_at`s + adds per row, no decode, no shuffle.
     */
   def approxDot(cb: PqCodebooks, query: Seq[Float])(codes: Column): Column = {
-    require(query.length == cb.m * cb.subDim,
-      s"query dim ${query.length} != ${cb.m} * ${cb.subDim}")
-    val lut: Array[Array[Double]] = Array.tabulate(cb.m) { j =>
-      val qj = query.slice(j * cb.subDim, (j + 1) * cb.subDim)
-      cb.codebooks(j).map(c =>
-        qj.zip(c).map { case (a, b) => a.toDouble * b.toDouble }.sum).toArray
-    }
+    val lut = adcTable(cb, query)
     (0 until cb.m).map { j =>
       element_at(array(lut(j).toIndexedSeq.map(lit): _*),
         element_at(codes, j + 1).cast("int") + 1)

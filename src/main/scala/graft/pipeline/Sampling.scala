@@ -46,18 +46,6 @@ object Sampling {
 
   private val Two48 = 281474976710656.0 // 2^48
 
-  /** Weighted deterministic Poisson sample: keep each row with
-    * probability `min(1, c · weight)` — inclusion mass proportional to
-    * the weight column (sample-by-token-budget, quality-tilted mixes…),
-    * the Horvitz–Thompson shape. Same guarantees as [[hashSample]]:
-    * pure narrow filter, no RNG state, stable under retries and
-    * repartitioning, and monotone in `c` (raising the budget only ADDS
-    * rows — nested mixes come free). The comparison is arranged as
-    * `bucket < (weight · c) · 2^48`, multiplications only — every step
-    * is IEEE-exact and deterministic, so any engine reproduces the kept
-    * set bit-for-bit (no `pow`/`ln` in sight; contrast
-    * [[weightedReservoir]]).
-    */
   /** Deterministic, exhaustive, mutually-exclusive SPLIT assignment —
     * the train/validation/test cut of a corpus as a pure function of
     * the key: the 48-bit hash fraction falls into consecutive
@@ -121,6 +109,18 @@ object Sampling {
     splits.init.scanLeft(0.0) { case (acc, (_, f)) => acc + f }.tail
       .map(c => (c * Two48).toLong)
 
+  /** Weighted deterministic Poisson sample: keep each row with
+    * probability `min(1, c · weight)` — inclusion mass proportional to
+    * the weight column (sample-by-token-budget, quality-tilted mixes…),
+    * the Horvitz–Thompson shape. Same guarantees as [[hashSample]]:
+    * pure narrow filter, no RNG state, stable under retries and
+    * repartitioning, and monotone in `c` (raising the budget only ADDS
+    * rows — nested mixes come free). The comparison is arranged as
+    * `bucket < (weight · c) · 2^48`, multiplications only — every step
+    * is IEEE-exact and deterministic, so any engine reproduces the kept
+    * set bit-for-bit (no `pow`/`ln` in sight; contrast
+    * [[weightedReservoir]]).
+    */
   def weightedHashSample(df: DataFrame, key: Column, weight: Column,
       c: Double): DataFrame = {
     require(c >= 0.0, s"c must be >= 0, got $c")

@@ -142,8 +142,8 @@ object Similarity {
     * `right eq left`): explode each side to (band, sig) and equi-join — the
     * bucketed many-query ANN path. Returns distinct (id_a, id_b), id_a <
     * id_b on self-joins.
-    */
-  /** @param maxBucket optional skew guard: band buckets larger than this
+    *
+    * @param maxBucket optional skew guard: band buckets larger than this
     *   are dropped from candidate generation (an oversized bucket means a
     *   dense region where "near-duplicate" loses meaning and the pair count
     *   explodes quadratically; standard LSH practice is to skip or re-band
@@ -191,23 +191,6 @@ object Similarity {
       .select("id_a", "id_b").distinct()
   }
 
-  /** IVF-style ANN: a deterministic coarse quantizer (the `nCentroids`
-    * lowest-id vectors act as centroids) assigns every vector to its
-    * highest-cosine cell in one narrow pass; a query then probes only its
-    * `nProbe` nearest cells before exact scoring. The inverted-file analog
-    * of [[signBandTopK]]: recall is governed by nProbe instead of band
-    * width, and the assignment column can be precomputed/partitioned-by so
-    * repeated queries touch only matching cells' files at scale.
-    */
-  /** A built IVF index: coarse centroids + the corpus with its cell
-    * assignment materialised in a `__cell` column. Build once, query
-    * many — the serving pattern: the full-corpus assignment scan happens
-    * at build time, and each query then touches only its `nProbe` cells.
-    * At 100 TB, persist with [[writeIvfIndex]] (PARTITIONED BY `__cell`)
-    * so a query prunes cell files at the source instead of filtering a
-    * full scan — demonstrated by the PartitionFilters plan assertion in
-    * PipelineSpec.
-    */
   /** The grouping sidecar of a TWO-LEVEL index
     * ([[buildIvfIndexTwoLevel]]): the level-1 centroids and, for each
     * level-2 cell, the level-1 group it belongs to. Persisted with the
@@ -220,94 +203,145 @@ object Similarity {
   final case class TwoLevelMeta(l1: Array[Seq[Float]],
       cellGroup: Array[Int])
 
+  /** IVF-style ANN: a deterministic coarse quantizer (the `nCentroids`
+    * lowest-id vectors act as centroids) assigns every vector to its
+    * highest-cosine cell in one narrow pass; a query then probes only its
+    * `nProbe` nearest cells before exact scoring. The inverted-file analog
+    * of [[signBandTopK]]: recall is governed by nProbe instead of band
+    * width.
+    *
+    * A built index is the coarse centroids + the corpus with its cell
+    * assignment materialised in a `__cell` column. Build once, query
+    * many — the serving pattern: the full-corpus assignment scan happens
+    * at build time, and each query then touches only its `nProbe` cells.
+    * At 100 TB, persist with [[writeIvfIndex]] (PARTITIONED BY `__cell`)
+    * so a query prunes cell files at the source instead of filtering a
+    * full scan — demonstrated by the PartitionFilters plan assertion in
+    * PipelineSpec.
+    */
   final case class IvfIndex(centroids: Array[Seq[Float]],
       assigned: DataFrame, idCol: String, vecCol: String,
       twoLevel: Option[TwoLevelMeta] = None)
 
-  private def cosScalar(a: Seq[Float], b: Seq[Float]): Double = {
-    var dp = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) {
-      dp += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-      nb += b(i).toDouble * b(i); i += 1
+  /** THE row-level centroid kernels, one definition each — every cell
+    * assignment, own-centroid score and probe ranking (build, k-means,
+    * append, against-index, single and batch queries) calls these, so
+    * no two paths can drift. Serializable: the UDF closures capture it,
+    * and it holds only the centroid matrix.
+    *
+    * It runs as a closure UDF, not as inline centroid literals: those
+    * generate code linear in nCentroids·dim, which at 16 centroids × 64
+    * dims already exceeds HotSpot's JIT bytecode limit and leaves the
+    * fused stage in the bytecode interpreter (and a production
+    * quantizer's thousands of centroids do not compile at all).
+    *
+    * Every cosine is [[cosineFold]]'s arithmetic bit for bit (double
+    * products and sums in array order, then
+    * `dp / (sqrt(‖v‖²) · sqrt(‖c‖²))` — the ANN value oracles pin this).
+    * A vector whose dimension differs from the centroids' raises: a
+    * truncated dot product would land the row in a plausible wrong cell
+    * (or the query on a prefix cosine's wrong cells) silently.
+    */
+  private[graft] final class CentroidScorer(centroids: Array[Seq[Float]])
+      extends Serializable {
+    private val cents: Array[Array[Float]] = centroids.map(_.toArray)
+    private val dim = cents.headOption.fold(0)(_.length)
+    /** Every cell, in order — the candidate set of a flat scan. */
+    val all: Array[Int] = cents.indices.toArray
+
+    private def checkDim(v: Seq[Float], what: String): Unit =
+      require(cents.isEmpty || v.length == dim,
+        s"$what dim ${v.length} != index dim $dim")
+
+    private def fold(v: Seq[Float], ce: Array[Float]): Double = {
+      var dp = 0.0; var nv = 0.0; var nc = 0.0
+      var i = 0
+      while (i < ce.length) {
+        val x = v(i).toDouble; val y = ce(i).toDouble
+        dp += x * y; nv += x * x; nc += y * y
+        i += 1
+      }
+      dp / (math.sqrt(nv) * math.sqrt(nc))
     }
-    dp / (math.sqrt(na) * math.sqrt(nb))
+
+    /** Cosine of `v` to centroid `cell`. */
+    def cos(v: Seq[Float], cell: Int): Double = {
+      checkDim(v, "vector")
+      fold(v, cents(cell))
+    }
+
+    /** The highest-cosine cell of `v` among `cells` (-1 when `cells` is
+      * empty). Ties go to the LATER cell (`>=` under the scan), and a
+      * NaN cosine (a zero vector or centroid) outranks everything —
+      * exactly the struct-max ordering of the old literal form.
+      */
+    def argmax(v: Seq[Float], cells: Array[Int]): Int = {
+      checkDim(v, "vector")
+      var best = -1
+      var bestKey = Double.NegativeInfinity
+      var k = 0
+      while (k < cells.length) {
+        val cos = fold(v, cents(cells(k)))
+        val key = if (cos.isNaN) Double.PositiveInfinity else cos
+        if (best < 0 || key >= bestKey) { bestKey = key; best = cells(k) }
+        k += 1
+      }
+      best
+    }
+
+    /** The query's `n` highest-cosine cells, best first: a stable sort
+      * on −cos, so ties go to the lower cell and a NaN cosine sorts
+      * last. A null query raises rather than probing nothing: the batch
+      * paths would explode it away, and the query row would silently
+      * vanish from every result.
+      */
+    def probe(v: Seq[Float], n: Int): Seq[Int] = {
+      require(v != null, "ANN query with a null vector — every query " +
+        "must carry an embedding")
+      checkDim(v, "ANN query")
+      all.map(c => c -> fold(v, cents(c))).sortBy(-_._2).take(n)
+        .map(_._1).toSeq
+    }
   }
 
-  /** The full centroid scan as ONE jitted closure over the centroid
-    * matrix — (argmax cell, its cosine) as a struct. This was
-    * previously an `array_max` over nCentroids inline vector LITERALS;
-    * that generates code linear in nCentroids·dim, and at 16 centroids
-    * × 64 dims the fused whole-stage method already blows past
-    * HotSpot's JIT bytecode limit, silently running the whole stage in
-    * the bytecode INTERPRETER — measured 46 s vs 1.7 s on the 10×
-    * rehearsal corpus when the assignment fused with a join loop — and
-    * a production quantizer has thousands of centroids, where the
-    * literal form is not even compilable. The closure loop is small,
-    * JITs, and breaks the over-fused stage at a narrow boundary.
-    *
-    * Arithmetic is bit-identical to the literal form's
-    * `cosine_sim`/fold (same element order, same single-rounded ops —
-    * the ANN value oracles pin this); ties break toward the HIGHER
-    * cell (`>=` under ascending scan), and a NaN cosine (zero vector)
-    * outranks everything — exactly the struct-max ordering. A null
-    * vector assigns null; a dimension MISMATCH raises (a truncated dot
-    * product would land the row in a plausible wrong cell silently —
-    * the [[requireDim]] fail-fast posture).
+  /** (argmax cell, its cosine) as a struct — one closure UDF over the
+    * [[CentroidScorer]]. A null vector assigns null.
     */
   private def centroidScan(vecCol: String,
       centroids: Array[Seq[Float]]): Column = {
-    val cents: Array[Array[Float]] = centroids.map(_.toArray)
+    val s = new CentroidScorer(centroids)
     val f = udf { (v: Seq[Float]) =>
       if (v == null) None
       else {
-        // fail FAST on a dimension mismatch (the requireDim posture):
-        // a truncated dot product would assign a plausible-looking
-        // wrong cell with a real-looking score and no error anywhere
-        require(cents.isEmpty || v.length == cents(0).length,
-          s"vector dim ${v.length} != centroid dim " +
-            s"${cents(0).length} — mismatched embedding landed in the " +
-            "assignment scan")
-        var best = -1
-        var bestKey = Double.NegativeInfinity
-        var bestCos = Double.NaN
-        var c = 0
-        while (c < cents.length) {
-          val ce = cents(c)
-          var dp = 0.0; var nv = 0.0; var nc = 0.0
-          var i = 0
-          while (i < ce.length) {
-            val x = v(i).toDouble; val y = ce(i).toDouble
-            dp += x * y; nv += x * x; nc += y * y
-            i += 1
-          }
-          val cos = dp / (math.sqrt(nv) * math.sqrt(nc))
-          val key = if (cos.isNaN) Double.PositiveInfinity else cos
-          if (best < 0 || key >= bestKey) {
-            bestKey = key; bestCos = cos; best = c
-          }
-          c += 1
-        }
-        Some((best, bestCos))
+        val c = s.argmax(v, s.all)
+        Some((c, if (c < 0) Double.NaN else s.cos(v, c)))
       }
     }
     f(col(vecCol))
   }
 
-  /** Argmax-cosine cell assignment column; ties break toward the
-    * higher cell index — deterministic and pinned for both build and
-    * k-means passes. See [[centroidScan]] for why this is a closure
-    * UDF rather than inline centroid literals.
+  /** Argmax-cosine cell assignment column ([[CentroidScorer.argmax]]:
+    * ties toward the higher cell, NaN outranks, null stays null).
     */
   private def cellOf(vecCol: String, centroids: Array[Seq[Float]]): Column =
     centroidScan(vecCol, centroids)("_1")
 
   /** Each vector's cosine to its OWN (argmax-assigned) centroid — the
-    * prototypicality score SemDeDup's survivor rule ranks on, from the
-    * same single centroid scan as [[cellOf]].
+    * prototypicality score SemDeDup's survivor rule ranks on.
     */
-  private[pipeline] def maxCentroidCos(vecCol: String,
+  private[graft] def maxCentroidCos(vecCol: String,
       centroids: Array[Seq[Float]]): Column =
     centroidScan(vecCol, centroids)("_2")
+
+  /** THE cell assignment of an index's geometry: [[cellOf]] over flat
+    * centroids, [[twoLevelCellOf]] over a two-level grouping. Both
+    * builds, [[assignCells]] and [[appendToIvfIndex]] call it, so landed
+    * and probed cells can never disagree.
+    */
+  private def indexCellOf(vecCol: String, centroids: Array[Seq[Float]],
+      twoLevel: Option[TwoLevelMeta]): Column =
+    twoLevel.fold(cellOf(vecCol, centroids))(
+      twoLevelCellOf(vecCol, _, centroids))
 
   /** Build the IVF index: coarse quantizer seeded from the `nCentroids`
     * lowest-id vectors, optionally refined by `kmeansIters` rounds of
@@ -350,7 +384,8 @@ object Similarity {
         means.getOrElse(i, c)
       }
     }
-    IvfIndex(centroids, df.withColumn("__cell", cellOf(vecCol, centroids)),
+    IvfIndex(centroids,
+      df.withColumn("__cell", indexCellOf(vecCol, centroids, None)),
       idCol, vecCol)
   }
 
@@ -414,70 +449,33 @@ object Similarity {
       .collect()
     val centroids: Array[Seq[Float]] = seeds.map(_.getSeq[Float](2))
     val meta = TwoLevelMeta(l1, seeds.map(_.getInt(0)))
-    // assignment through the SAME closure every against-index probe
-    // uses (one definition of both levels' scans — build and probe
-    // cannot drift); the extra level-1 re-scan inside it is O(√nCells)
+    // the extra level-1 re-scan inside the assignment is O(√nCells)
     IvfIndex(centroids,
       withL1.drop("__l1")
-        .withColumn("__cell", twoLevelCellOf(vecCol, meta, centroids)),
+        .withColumn("__cell", indexCellOf(vecCol, centroids, Some(meta))),
       idCol, vecCol, Some(meta))
   }
 
-  /** The composed two-level assignment as ONE jitted closure — the
-    * probe/build rule of a [[buildIvfIndexTwoLevel]] index: level-1
-    * argmax group over `meta.l1` (the [[centroidScan]] contract —
-    * ties toward the higher group, NaN outranks, null stays null, dim
-    * mismatch raises), then argmax over the cells OF THAT GROUP (ties
-    * toward the higher global cell). Defensively, a vector whose
+  /** The composed two-level assignment — the probe/build rule of a
+    * [[buildIvfIndexTwoLevel]] index: the [[CentroidScorer.argmax]]
+    * group over `meta.l1`, then the argmax over the cells OF THAT GROUP
+    * (ties toward the higher global cell). Defensively, a vector whose
     * level-1 group holds no cells falls back to the global argmax —
     * under the pinned tie rules every group is anchored by its own
     * seed (a seed's self-cosine is maximal), so the branch is
     * unreachable for any corpus-built index, but a total rule beats a
-    * null cell on the append path. Shared by the build, [[assignCells]]
-    * and [[appendToIvfIndex]], so landed cells and probed cells can
-    * never disagree.
+    * null cell on the append path.
     */
   private def twoLevelCellOf(vecCol: String, meta: TwoLevelMeta,
       centroids: Array[Seq[Float]]): Column = {
-    val l1a: Array[Array[Float]] = meta.l1.map(_.toArray)
-    val cents: Array[Array[Float]] = centroids.map(_.toArray)
-    val byGroup: Map[Int, Array[Int]] = cents.indices
+    val groups = new CentroidScorer(meta.l1)
+    val cells = new CentroidScorer(centroids)
+    val byGroup: Map[Int, Array[Int]] = centroids.indices
       .groupBy(meta.cellGroup).map { case (g, xs) => g -> xs.toArray }
     val f = udf { (v: Seq[Float]) =>
       if (v == null) None
-      else {
-        require(l1a.isEmpty || v.length == l1a(0).length,
-          s"vector dim ${v.length} != centroid dim ${l1a(0).length} " +
-            "— mismatched embedding landed in the assignment scan")
-        def cosKey(ce: Array[Float]): Double = {
-          var dp = 0.0; var nv = 0.0; var nc = 0.0
-          var i = 0
-          while (i < ce.length) {
-            val x = v(i).toDouble; val y = ce(i).toDouble
-            dp += x * y; nv += x * x; nc += y * y
-            i += 1
-          }
-          val cos = dp / (math.sqrt(nv) * math.sqrt(nc))
-          if (cos.isNaN) Double.PositiveInfinity else cos
-        }
-        var g = -1
-        var gk = Double.NegativeInfinity
-        var c = 0
-        while (c < l1a.length) {
-          val k = cosKey(l1a(c))
-          if (g < 0 || k >= gk) { gk = k; g = c }
-          c += 1
-        }
-        val pool: Array[Int] =
-          byGroup.getOrElse(g, cents.indices.toArray)
-        var best = -1
-        var bk = Double.NegativeInfinity
-        pool.foreach { cell =>
-          val k = cosKey(cents(cell))
-          if (best < 0 || k >= bk) { bk = k; best = cell }
-        }
-        Some(best)
-      }
+      else Some(cells.argmax(v,
+        byGroup.getOrElse(groups.argmax(v, groups.all), cells.all)))
     }
     f(col(vecCol))
   }
@@ -486,42 +484,22 @@ object Similarity {
     * own-centroid prototypicality score for indexes whose assignment
     * is NOT a global argmax (the two-level build), where
     * [[maxCentroidCos]] would score against a cell the row doesn't
-    * live in. Same fold arithmetic as [[centroidScan]].
+    * live in.
     */
-  private[pipeline] def centroidCosAt(vecCol: String, cellCol: String,
+  private[graft] def centroidCosAt(vecCol: String, cellCol: String,
       centroids: Array[Seq[Float]]): Column = {
-    val cents: Array[Array[Float]] = centroids.map(_.toArray)
+    val s = new CentroidScorer(centroids)
     val f = udf { (v: Seq[Float], cell: java.lang.Integer) =>
       if (v == null || cell == null) None
-      else {
-        val ce = cents(cell.intValue())
-        var dp = 0.0; var nv = 0.0; var nc = 0.0
-        var i = 0
-        while (i < ce.length) {
-          val x = v(i).toDouble; val y = ce(i).toDouble
-          dp += x * y; nv += x * x; nc += y * y
-          i += 1
-        }
-        Some(dp / (math.sqrt(nv) * math.sqrt(nc)))
-      }
+      else Some(s.cos(v, cell.intValue()))
     }
     f(col(vecCol), col(cellCol))
   }
 
-  /** The query's `nProbe` highest-cosine cells over a centroid table
-    * (O(nCentroids · dim)); ties toward the lower cell id via the
-    * stable sort — THE probe rule, shared verbatim by the driver-side
-    * single-query path and the per-row batch expression so the two can
-    * never drift.
-    */
-  private def probeCellsOf(centroids: Array[Seq[Float]],
-      query: Seq[Float], nProbe: Int): Seq[Int] =
-    centroids.zipWithIndex
-      .map { case (c, i) => i -> cosScalar(query, c) }
-      .sortBy(-_._2).take(nProbe).map(_._1).toSeq
-
+  /** The driver-side single-query probe ([[CentroidScorer.probe]]). */
   private def probeCells(idx: IvfIndex, query: Seq[Float],
-      nProbe: Int): Seq[Int] = probeCellsOf(idx.centroids, query, nProbe)
+      nProbe: Int): Seq[Int] =
+    new CentroidScorer(idx.centroids).probe(query, nProbe)
 
   /** The SINGLE-query probe predicate: a literal `IN` over the
     * driver-ranked probe cells. Deliberately NOT the [[probedCellScan]]
@@ -624,35 +602,14 @@ object Similarity {
       cosine(dequantize(col(Int8CodesCol), col(Int8ScaleCol)), col("__qv")),
       dropCols = Seq("__cell", Int8ScaleCol, Int8CodesCol))
 
-  /** The shared one-plan batch shape behind [[queryIvfBatch]] and
-    * [[queryIvfInt8Batch]]: per-query probes from broadcast centroid
-    * literals, cell equi-join, `score` per candidate, per-query top-k
-    * window (ties toward the lower corpus id).
-    */
   /** The per-row probe-cell array for a `__qv` query-vector column —
-    * LITERALLY [[probeCellsOf]] as a closure UDF over the centroid
-    * matrix (only the centroids are captured; the index's frames are
-    * not serializable and not needed), so the batch paths and the
-    * driver-side single-query path share one definition that cannot
-    * drift. Previously this was a sort_array over nCentroids inline
-    * struct literals — the same JIT-cliff shape [[centroidScan]]
-    * replaced: code linear in nCentroids·dim that de-JITs the fused
-    * stage and caps the quantizer size.
+    * [[CentroidScorer.probe]] as a closure UDF, so the batch paths and
+    * the driver-side single-query path share one definition that cannot
+    * drift.
     */
   private def probeCellsExpr(idx: IvfIndex, nProbe: Int): Column = {
-    val cents = idx.centroids
-    val dim = cents.headOption.map(_.length).getOrElse(0)
-    val f = udf { (v: Seq[Float]) =>
-      // fail LOUDLY: a None here would be exploded away and the query
-      // row silently vanish from every batch/serving result — breaking
-      // the 'every query served exactly once' contract — and a
-      // mismatched dim would probe a prefix-cosine's wrong cells
-      require(v != null, "ANN query with a null vector — every query " +
-        "must carry an embedding")
-      require(v.length == dim,
-        s"ANN query dim ${v.length} != index dim $dim")
-      probeCellsOf(cents, v, nProbe)
-    }
+    val s = new CentroidScorer(idx.centroids)
+    val f = udf { (v: Seq[Float]) => s.probe(v, nProbe) }
     f(col("__qv"))
   }
 
@@ -712,6 +669,11 @@ object Similarity {
     Materialize(queries
       .select(col(qIdCol).as("__qid"), col(qVecCol).as("__qv")))
 
+  /** The shared one-plan batch shape behind [[queryIvfBatch]] and
+    * [[queryIvfInt8Batch]]: per-query probes ([[probeCellsExpr]]), cell
+    * equi-join, `score` per candidate, per-query top-k window (ties
+    * toward the lower corpus id).
+    */
   private def ivfBatchPlan(idx: IvfIndex, queries: DataFrame,
       qIdCol: String, qVecCol: String, k: Int, nProbe: Int,
       score: Column, dropCols: Seq[String]): DataFrame = {
@@ -833,6 +795,16 @@ object Similarity {
     (centroids, meta.head.getString(2), meta.head.getString(3), tl)
   }
 
+  /** Assign `df`'s `vecCol` vectors to their argmax-cosine cell under
+    * this index's (frozen) centroids, appending `__cell` — the
+    * batch-side half of every against-index operation (append, serving,
+    * incremental semantic dedup), exposed so they all share ONE
+    * assignment rule (ties toward the higher cell, as the build).
+    * Narrow: the centroids ride in the scorer's closure, no shuffle.
+    */
+  def assignCells(idx: IvfIndex, df: DataFrame, vecCol: String): DataFrame =
+    df.withColumn("__cell", indexCellOf(vecCol, idx.centroids, idx.twoLevel))
+
   /** Fold newly-ingested vectors INTO a persisted IVF-family index at
     * `path` WITHOUT re-clustering — the vector side of the incremental
     * ingest loop: each new vector takes its argmax-cosine cell under the
@@ -858,20 +830,6 @@ object Similarity {
     * ids are not checked: an ANN index tolerates them (the id would
     * surface twice in results) — pre-dedup batches upstream.
     */
-  /** Assign `df`'s `vecCol` vectors to their argmax-cosine cell under
-    * this index's (frozen) centroids, appending `__cell` — the
-    * batch-side half of every against-index operation (append, serving,
-    * incremental semantic dedup), exposed so they all share ONE
-    * assignment rule (ties toward the higher cell, as the build).
-    * Narrow: the centroids ride as plan literals, no shuffle.
-    */
-  def assignCells(idx: IvfIndex, df: DataFrame, vecCol: String): DataFrame =
-    idx.twoLevel match {
-      case None => df.withColumn("__cell", cellOf(vecCol, idx.centroids))
-      case Some(tl) =>
-        df.withColumn("__cell", twoLevelCellOf(vecCol, tl, idx.centroids))
-    }
-
   def appendToIvfIndex(spark: SparkSession, path: String,
       newVectors: DataFrame, idCol: String, vecCol: String): Unit = {
     val (centroids, metaIdCol, metaVecCol, tl) =
@@ -881,10 +839,8 @@ object Similarity {
         s"not ($idCol, $vecCol)")
     val corpusFields =
       spark.read.parquet(s"$path/corpus").schema.fieldNames
-    val assigned = newVectors.withColumn("__cell", tl match {
-      case None => cellOf(vecCol, centroids)
-      case Some(m) => twoLevelCellOf(vecCol, m, centroids)
-    })
+    val assigned =
+      newVectors.withColumn("__cell", indexCellOf(vecCol, centroids, tl))
     val shaped = detectIvfLayout(corpusFields.toSeq) match {
       case IvfLayout.Pq =>
         // sidecar-only load: the append needs the encoder, not a second
@@ -1267,43 +1223,16 @@ object Similarity {
     // probe tie rule, so the 'equals queryIvfBatch at full rerank'
     // invariant cannot silently drift
     val probes = probeCellsExpr(idx, nProbe)
-    // the query's ADC lookup table: lut[j][c] = ⟨query_j, centroid_{j,c}⟩
-    // as ONE jitted closure over the codebook matrix — bit-identical to
-    // Pq.approxDot's driver-side LUT (same ops, same left-to-right
-    // order from 0.0) so single-query results match queryIvfPq. This
-    // was m·k inline HOF folds with literal centroids — the same
-    // JIT-cliff shape centroidScan/probeCellsExpr replaced: generated
-    // code linear in m·k·subDim that de-JITs whatever stage it fuses
-    // into and caps the codebook size.
-    val lut = {
-      val m = cb.m; val subDim = cb.subDim
-      val books: Array[Array[Array[Float]]] =
-        cb.codebooks.map(_.map(_.toArray).toArray)
-      val f = udf { (v: Seq[Float]) =>
-        if (v == null) None
-        else {
-          // fail-fast on a codebook/query dim mismatch, matching
-          // Pq.approxDot's require — a silent min() truncation here
-          // would rank candidates by prefix/zero dots and return
-          // plausible-looking wrong neighbors
-          require(v.length == m * subDim,
-            s"query dim ${v.length} != codebook dim ${m * subDim} " +
-              s"(m=$m x subDim=$subDim)")
-          Some((0 until m).map { j =>
-            books(j).toIndexedSeq.map { c =>
-              var dp = 0.0
-              var i = 0
-              while (i < c.length) {
-                dp += v(j * subDim + i).toDouble * c(i).toDouble
-                i += 1
-              }
-              dp
-            }
-          })
-        }
-      }
-      f(col("__qv"))
-    }
+    // the query's ADC lookup table as ONE closure over the codebooks —
+    // Pq.adcTable, the table Pq.approxDot ships as literals, so
+    // single-query results match queryIvfPq. m·k inline HOF folds with
+    // literal centroids would be the JIT-cliff shape CentroidScorer
+    // avoids: generated code linear in m·k·subDim that de-JITs whatever
+    // stage it fuses into and caps the codebook size.
+    val lut = udf { (v: Seq[Float]) =>
+      if (v == null) None
+      else Some(Pq.adcTable(cb, v).toIndexedSeq.map(_.toIndexedSeq))
+    }.apply(col("__qv"))
     val probed = q
       .withColumn("__lut", lut)
       .withColumn("__probe", explode(probes))

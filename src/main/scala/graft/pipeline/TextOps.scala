@@ -325,20 +325,6 @@ object TextOps {
       minAlphaWordFrac: Double = 0.8,
       minStopwordHits: Int = 2)
 
-  /** Gopher-style composite rule filter: per doc, every feature, every
-    * per-rule verdict, and the conjunction `keep` — the decision table
-    * a curation run audits before applying (keep the flags; a bare
-    * boolean hides WHY a doc died). Pure Column arithmetic + two
-    * higher-order filters — narrow, codegen-friendly, zero shuffles;
-    * every ratio is an int/int double division so any engine
-    * reproduces the bits. Features:
-    * `n_words`, `mean_word_len` (derived from the normalized text's
-    * length — words are single-space joined, so total word chars =
-    * len − (n−1)), `symbol_word_ratio` (`#` + `...` occurrences per
-    * word), `alpha_word_frac`, `bullet_line_frac` (lines starting
-    * `-`/`•`/`*` + space), `ellipsis_line_frac` (lines ending `...`),
-    * `stop_hits`.
-    */
   /** The seven gopher feature expressions over a text Column, in
     * output order — ONE definition shared by [[gopherRules]] (the
     * per-doc decision table) and [[gopherKeep]] (the inline predicate),
@@ -389,6 +375,20 @@ object TextOps {
       f("stop_hits") >= cfg.minStopwordHits
   }
 
+  /** Gopher-style composite rule filter: per doc, every feature, every
+    * per-rule verdict, and the conjunction `keep` — the decision table
+    * a curation run audits before applying (keep the flags; a bare
+    * boolean hides WHY a doc died). Pure Column arithmetic + two
+    * higher-order filters — narrow, codegen-friendly, zero shuffles;
+    * every ratio is an int/int double division so any engine
+    * reproduces the bits. Features:
+    * `n_words`, `mean_word_len` (derived from the normalized text's
+    * length — words are single-space joined, so total word chars =
+    * len − (n−1)), `symbol_word_ratio` (`#` + `...` occurrences per
+    * word), `alpha_word_frac`, `bullet_line_frac` (lines starting
+    * `-`/`•`/`*` + space), `ellipsis_line_frac` (lines ending `...`),
+    * `stop_hits`.
+    */
   def gopherRules(df: DataFrame, idCol: String, textCol: String,
       cfg: GopherConfig = GopherConfig()): DataFrame = {
     val feats = gopherFeatureCols(col(textCol))

@@ -219,6 +219,23 @@ class MiscOpsSpec extends SparkSpec {
         s"${SparkEntry.gates.size} — update README.md")
   }
 
+  test("no scaladoc under src/main is directly followed by another") {
+    // a doc comment stacked on another documents nothing (or the wrong
+    // member): only the last one attaches to the declaration below
+    import scala.jdk.CollectionConverters._
+    val stacked = """\*/\s*/\*\*""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val hits = try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq
+        .flatMap { p =>
+          val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          stacked.findAllMatchIn(src).map(m =>
+            s"$p:${src.take(m.end).count(_ == '\n') + 1}")
+        }
+      finally files.close()
+    assert(hits.isEmpty, s"stacked scaladoc at:\n${hits.mkString("\n")}")
+  }
+
   test("tsMicros: DATE converts via a tz-independent day count (same " +
       "epoch micros whatever the session timezone)") {
     import SparkSpec.spark.implicits._

@@ -1168,6 +1168,36 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("single-query ANN rejects a wrong-dimension query like the batch " +
+      "path") {
+    // a shorter query used to rank the probes by a prefix cosine and
+    // return plausible wrong neighbours; a longer one threw a bare
+    // index error
+    import graft.pipeline.Pq
+    val idx = Similarity.buildIvfIndex(embeddings, "vec_id", "embedding")
+    val cb = Pq.train(embeddings, "vec_id", "embedding", m = 8, k = 16,
+      iters = 0)
+    val pqIdx = idx.copy(assigned = idx.assigned
+      .withColumn(Similarity.PqCodesCol, Pq.encode(cb)(col("embedding"))))
+    val int8 = Similarity.int8Index(idx)
+    Seq(63, 65).foreach { d =>
+      val q = Seq.fill(d)(0.1f)
+      Seq[(String, () => Any)](
+        "queryIvf" -> (() => Similarity.queryIvf(idx, q, 5).collect()),
+        "queryIvfInt8" -> (() =>
+          Similarity.queryIvfInt8(int8, q, 5).collect()),
+        "queryIvfPq" -> (() =>
+          Similarity.queryIvfPq(pqIdx, cb, q, 5).collect()),
+        "ivfTopK" -> (() => Similarity.ivfTopK(embeddings, "vec_id",
+          "embedding", q, 5).collect())
+      ).foreach { case (name, call) =>
+        val ex = intercept[IllegalArgumentException](call())
+        assert(ex.getMessage.contains(s"ANN query dim $d != index dim 64"),
+          s"$name at dim $d: ${ex.getMessage}")
+      }
+    }
+  }
+
   test("persisted IVF index prunes cell partitions at the parquet source") {
     val idx = Similarity.buildIvfIndex(embeddings, "vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
