@@ -538,7 +538,7 @@ object Similarity {
   /** Batch ANN: a whole DataFrame of queries resolved through the index
     * in ONE distributed plan — the many-query serving shape, where a
     * per-query [[queryIvf]] driver loop would serialize. Each query's
-    * `nProbe` nearest cells come from the broadcast centroid literals (a
+    * `nProbe` nearest cells come from [[CentroidScorer.probe]] (a
     * narrow projection), explode to (query, probe cell), equi-join the
     * cell column of the assigned corpus — at scale the corpus is
     * partitioned by `__cell`, so the join prunes to probed cells — and
@@ -1183,8 +1183,8 @@ object Similarity {
     * driver collect would serialize the query set.
     *
     * Stages, all in a single lazy plan:
-    *  1. each query row computes its `nProbe` probe cells from the
-    *     broadcast centroid literals AND its m×k ADC lookup table (the
+    *  1. each query row computes its `nProbe` probe cells
+    *     ([[CentroidScorer.probe]]) AND its m×k [[Pq.adcTable]] (the
     *     per-subspace query·centroid dots, O(m·k·subDim) per QUERY row,
     *     once — never per candidate), then explodes to (query, probe);
     *  2. the probe equi-joins the corpus's `__cell` column projected to
