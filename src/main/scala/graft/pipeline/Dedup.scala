@@ -6,9 +6,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, ByteType, DataType,
-  IntegerType, LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType,
+  DataType, FloatType, IntegerType, LongType, ShortType, StringType,
+  StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for training-data pipelines: exact (content-hash
@@ -375,11 +377,7 @@ object Dedup {
     maxCell.foreach { m =>
       idx.assigned.groupBy("__cell").agg(count(lit(1)).as("n"))
         .filter(col("n") > m).orderBy(col("n").desc).head(1)
-        .foreach(r => throw new IllegalArgumentException(
-          s"semDeDup cell ${r.getInt(0)} holds ${r.getLong(1)} vectors " +
-            s"(> maxCell = $m) — the within-cell pair work would " +
-            "explode quadratically there; raise nCells (or kmeansIters) " +
-            "until cells are bounded"))
+        .foreach(r => throw hotCell(r.getInt(0), r.getLong(1), m))
     }
     val a = idx.assigned.select(col("__cell").as("cell"),
       col(idx.idCol).as("id_a"), col(idx.vecCol).as("__va"))
@@ -391,6 +389,13 @@ object Dedup {
       .filter(col("cosine") >= threshold)
       .select("cell", "id_a", "id_b", "cosine")
   }
+
+  /** The `maxCell` guard's failure: `cell` holds `n` vectors. */
+  private def hotCell(cell: Int, n: Long, m: Int) =
+    new IllegalArgumentException(s"semDeDup cell $cell holds $n vectors " +
+      s"(> maxCell = $m) — the within-cell pair work would " +
+      "explode quadratically there; raise nCells (or kmeansIters) " +
+      "until cells are bounded")
 
   /** Production sizing for the SemDeDup quantizer — the helper that
     * closes the "nCells grows with the corpus" scale contract (the
@@ -455,9 +460,9 @@ object Dedup {
     * and probe budget against one brute-force exact side; ~0–0.2
     * recall@5 delta per query on the fixtures); [[semDeDupAuto]]
     * remains the exact-assignment form for hand-sized cell counts. Survivors rank on the cosine to the
-    * ASSIGNED cell's centroid ([[Similarity.centroidCosAt]]) — under
-    * group-restricted assignment the global [[Similarity
-    * .maxCentroidCos]] could score a cell the row doesn't live in.
+    * ASSIGNED cell's centroid ([[Similarity.centroidCosAt]]), as in
+    * [[semDeDup]]; under group-restricted assignment that cell need not
+    * be the row's global argmax.
     * Deterministic end to end (seed cuts and tie rules pinned), so
     * `q_semdedup_2l` replays the whole chain in DuckDB.
     */
@@ -656,31 +661,170 @@ object Dedup {
     * cell centroid (the paper's diversity-preserving survivor: the
     * LEAST prototypical copy carries the most information the cluster
     * doesn't already have; ties toward the lower id), every other
-    * member dropped. Returns the kept rows of `df` unchanged.
+    * member dropped. Returns `df` anti-joined with the dropped ids, so
+    * the kept rows come back unchanged. Components never span cells
+    * (pairs are within-cell), so the survivor rule needs no cross-cell
+    * tie story.
     *
-    * A member's cosine to its own (argmax-assigned) centroid is the
-    * MAXIMUM of its cosines over all centroids — recomputed by the
-    * same one-pass centroid scan the assignment uses
-    * ([[Similarity.maxCentroidCos]]), rather than threading a score
-    * column through the index. Components never span cells (pairs are
-    * within-cell), so the survivor rule needs no cross-cell tie story.
-    * Cost over the pair scan: [[connectedComponents]] on the (thin)
-    * pair set, which a pair graph within its driver-finish bound
-    * settles in one materialisation job and one bounded collect, + two
-    * aggregates over component members — corpus-scale work stays the
-    * one cell equi-join.
+    * Two finishes, one result bit for bit:
+    *  - Driver finish, for the flat raw-seed quantizer (`kmeansIters`
+    *    0) over integral or UTF8_BINARY string ids: one single-task
+    *    collect of (id, vector) within [[SemFinishBytes]] and the row
+    *    budget of [[connectedComponents]]. The driver takes the seed cut,
+    *    assigns, scores in-cell pairs and picks survivors with the same
+    *    [[Similarity.CentroidScorer]] kernels the distributed path's UDFs
+    *    wrap, and with Spark's NaN order on every comparison. The dropped
+    *    ids return as a local relation: two jobs in all. A tie in the
+    *    seed cut (which Spark orders arbitrarily), a null seed vector, a
+    *    vector with a null element, a tied or null hot cell, or more
+    *    than [[SemFinishWork]] of assignment plus pair work all drop the
+    *    collected rows and take the distributed path.
+    *  - Distributed: [[Similarity.buildIvfIndex]], the cell equi-join of
+    *    [[semDeDupPairs]], [[connectedComponents]] on the (thin) pair
+    *    set, and two aggregates over component members, each scored by
+    *    its cosine to its assigned cell ([[Similarity.centroidCosAt]]);
+    *    corpus-scale work stays the one cell equi-join.
     */
   def semDeDup(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nCells: Int = 16, kmeansIters: Int = 0,
-      maxCell: Option[Int] = None): DataFrame = {
-    val idx = Similarity.buildIvfIndex(
-      df.select(col(idCol), col(vecCol)), idCol, vecCol, nCells,
-      kmeansIters)
-    semSurvivors(df, idCol,
-      semPairsFromIndex(idx, threshold, maxCell),
-      idx.assigned
-        .select(col(idx.idCol).as("id"), col(idx.vecCol)),
-      Similarity.maxCentroidCos(idx.vecCol, idx.centroids))
+      maxCell: Option[Int] = None): DataFrame =
+    semDeDup(df, idCol, vecCol, threshold, nCells, kmeansIters, maxCell,
+      DriverFinishRows, SemFinishBytes, SemFinishWork)
+
+  /** Largest (id, vector) collect that [[semDeDup]] finishes on the
+    * driver, in bytes: the id as in [[DriverFinish.idBytes]] plus 4 per
+    * vector element.
+    */
+  private val SemFinishBytes = 8L << 20
+
+  /** Most driver work [[semDeDup]] takes on, in units of one
+    * vector-element multiply-add: each cosine fold costs dim + 32 (the
+    * 32 is the per-fold overhead the measurement showed), and the finish
+    * folds vectors · nCells times to assign and at most Σ|cell|² times
+    * to score pairs.
+    */
+  private val SemFinishWork = 1L << 28
+
+  /** [[semDeDup]] with explicit driver-finish budgets in rows, bytes and
+    * work; a row budget of 0 forces the distributed path.
+    */
+  private[graft] def semDeDup(df: DataFrame, idCol: String,
+      vecCol: String, threshold: Double, nCells: Int, kmeansIters: Int,
+      maxCell: Option[Int], driverRows: Int, driverBytes: Long,
+      driverWork: Long): DataFrame = {
+    val thin = df.select(col(idCol), col(vecCol))
+    val onDriver = (thin.schema(1).dataType match {
+      case ArrayType(FloatType, _) if kmeansIters <= 0 =>
+        DriverFinish.ids(thin.schema(0).dataType)
+      case _ => None
+    }).flatMap(ids => semDropOnDriver(thin, ids, threshold, nCells,
+      maxCell, driverRows, driverBytes, driverWork))
+    onDriver.fold {
+      val idx = Similarity.buildIvfIndex(thin, idCol, vecCol, nCells,
+        kmeansIters)
+      semSurvivors(df, idCol,
+        semPairsFromIndex(idx, threshold, maxCell),
+        idx.assigned.select(col(idx.idCol).as("id"),
+          col(idx.vecCol), col("__cell")),
+        Similarity.centroidCosAt(idx.vecCol, "__cell", idx.centroids))
+    }(drop => df.join(drop.select(col("id").as(idCol)), Seq(idCol),
+      "left_anti"))
+  }
+
+  /** Spark's order on doubles: NaN equals NaN and sorts above every
+    * number, and -0.0 equals 0.0.
+    */
+  private def sqlCompare(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** The driver finish of [[semDeDup]] over its thin (id, vector) frame:
+    * the ids to drop as a local relation of one `id` column, or None
+    * past a budget or wherever the distributed result is not pinned
+    * down (see [[semDeDup]]).
+    */
+  private def semDropOnDriver[K](thin: DataFrame, ids: DriverFinish.Ids[K],
+      threshold: Double, nCells: Int, maxCell: Option[Int], maxRows: Int,
+      maxBytes: Long, maxWork: Long): Option[DataFrame] = {
+    import ids.order
+    // the SQL form of the null-element test draws no name from the
+    // JVM-wide lambda counter, so no later plan's variables renumber
+    val wire = thin.toDF("id", "vec").select(col("id").cast(ids.wire),
+      col("vec"), expr("exists(vec, x -> x IS NULL)"))
+    for {
+      rows <- DriverFinish.collect(wire, maxRows, maxBytes)(r =>
+        DriverFinish.idBytes(r.get(0)) +
+          (if (r.isNullAt(1)) 0L else 4L * r.getSeq[Float](1).length))
+      // the assignment UDF reads a null element as 0, the pair cosine
+      // as a null cosine
+      if !rows.exists(r => !r.isNullAt(2) && r.getBoolean(2))
+      keys = rows.map(ids.key(_, 0))
+      vecs = rows.map(r =>
+        if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)
+      // buildIvfIndex's seed cut: the nCells lowest ids, nulls first. A
+      // tie in it has no fixed Spark order, and a null seed or seeds of
+      // two dimensions fail in the scorer as the distributed path does.
+      byId = keys.indices.sortBy(keys(_))
+      seeds = byId.take(nCells)
+      cut = (seeds ++ byId.lift(nCells)).map(keys(_))
+      if seeds.nonEmpty && cut.zip(cut.drop(1)).forall(p => p._1 != p._2) &&
+        seeds.forall(i => vecs(i) != null &&
+          vecs(i).length == vecs(seeds.head).length)
+      fold = vecs(seeds.head).length + 32L
+      assignWork = fold * seeds.length * vecs.count(_ != null)
+      if assignWork <= maxWork
+      s = new Similarity.CentroidScorer(seeds.map(vecs(_).toSeq).toArray)
+      cell = vecs.map(v => if (v == null) -1 else s.argmax(v, s.all))
+      if maxCell.forall(guardCells(cell, _))
+      members = cell.indices.filter(cell(_) >= 0).groupBy(cell(_)).values
+      if assignWork + fold * members.map(m => m.length.toLong * m.length)
+        .sum <= maxWork
+    } yield {
+      val cc = new DriverFinish.Components(keys.toSeq.flatten)
+      val rank = keys.map(_.fold(-1)(cc.rank))
+      val linked = new Array[Boolean](cc.keys.length)
+      // pairs of distinct non-null ids (id_a < id_b either way round); a
+      // pair already in one component adds nothing, so its cosine is
+      // skipped
+      for (m <- members; i <- m.indices; j <- i + 1 until m.length) {
+        val (a, b) = (rank(m(i)), rank(m(j)))
+        if (a >= 0 && b >= 0 && cc.find(a) != cc.find(b) &&
+            sqlCompare(s.pairCos(vecs(m(i)), vecs(m(j))), threshold) >= 0) {
+          cc.union(a, b)
+          linked(a) = true
+          linked(b) = true
+        }
+      }
+      val rowsOf = keys.indices.groupBy(rank)
+      val drop = cc.keys.indices.filter(linked).groupBy(cc.find).values
+        .flatMap { comp =>
+          // every row of a member id, scored at its own cell
+          val scored = for (r <- comp; i <- rowsOf(r) if vecs(i) != null)
+            yield (r, s.cos(vecs(i), cell(i)))
+          val low = scored.map(_._2)
+            .reduce((x, y) => if (sqlCompare(x, y) <= 0) x else y)
+          val keep = scored.filter(x => sqlCompare(x._2, low) == 0)
+            .map(_._1).min
+          comp.filter(_ != keep)
+        }
+      DriverFinish.relation(thin.sparkSession, ids, thin.schema(0).dataType,
+        nullable = false, Seq("id"), drop.toSeq.map(r => Seq(cc.keys(r))))
+    }
+  }
+
+  /** [[semPairsFromIndex]]'s `maxCell` guard over driver-side cells (-1
+    * for a null vector, counted as one null cell): throws as it does
+    * when one cell is the largest over `m`; false when that largest is
+    * tied or the null cell, where Spark's `head(1)` has no fixed answer
+    * or fails on the null.
+    */
+  private def guardCells(cell: Array[Int], m: Int): Boolean = {
+    val over = cell.groupMapReduce(identity)(_ => 1)(_ + _).filter(_._2 > m)
+    over.values.maxOption.forall { top =>
+      over.filter(_._2 == top).keys.toSeq match {
+        case Seq(c) if c >= 0 => throw hotCell(c, top, m)
+        case _ => false
+      }
+    }
   }
 
   /** SimHash-based near-dup candidate groups: documents sharing an exact
@@ -841,12 +985,8 @@ object Dedup {
     *    runs on the driver and the result is a local relation: no further
     *    Spark job, and nothing downstream reads the materialised blocks.
     *    Past either budget the collected rows are dropped and the loop
-    *    runs. Taken only for integral ids and UTF8_BINARY
-    *    strings, whose driver-side order (`Long` compare, `UTF8String`
-    *    byte compare) provably equals Spark's. Java's
-    *    `String.compareTo` would not: it puts a supplementary-plane
-    *    character (a surrogate pair) below U+FFFD, Spark's UTF-8 byte
-    *    order above.
+    *    runs. Taken only for the id types whose driver-side order
+    *    provably equals Spark's ([[DriverFinish.ids]]).
     *  - Distributed loop, for larger frames and every other id type:
     *    iterative min-label propagation on the label-contracted graph
     *    with per-round path compression (pointer jumping). Each round
@@ -881,24 +1021,110 @@ object Dedup {
   private val DriverFinishRows = 1 << 17
 
   /** Largest total id size, in bytes, that [[connectedComponents]]
-    * finishes on the driver (see [[wireBytes]]). Long string ids reach
-    * it before [[DriverFinishRows]] does, so the collect stays far below
-    * `spark.driver.maxResultSize` whatever the ids' length: at the
-    * budget, 256-byte ids (64,000 rows) peaked at 53 MB of live driver
-    * heap, about what the row budget allows.
+    * finishes on the driver (see [[DriverFinish.idBytes]]). Long string
+    * ids reach it before [[DriverFinishRows]] does, so the collect stays
+    * far below `spark.driver.maxResultSize` whatever the ids' length: at
+    * the budget, 256-byte ids (64,000 rows) peaked at 53 MB of live
+    * driver heap, about what the row budget allows.
     */
   private val DriverFinishBytes = 32L << 20
 
-  /** Size of one edge row of the driver finish's collect: 8 bytes per
-    * integral id, the UTF-8 length per string id, nothing for a null.
+  /** The bounded driver finish shared by [[connectedComponents]] and
+    * [[semDeDup]]: a single-task collect within a row and a byte budget,
+    * ids held in Spark's order, union-find, and a local relation back.
     */
-  private def wireBytes(r: Row): Long = {
-    def one(v: Any): Long = v match {
+  private object DriverFinish {
+
+    /** How a driver finish holds ids of one type: collected as `wire`
+      * values, decoded to keys whose `order` is Spark's order on the
+      * type, encoded back for the local result.
+      */
+    final class Ids[K](val wire: DataType, decode: Any => K,
+        val encode: K => Any)(implicit val order: Ordering[K]) {
+      def key(r: Row, i: Int): Option[K] =
+        if (r.isNullAt(i)) None else Some(decode(r.get(i)))
+    }
+
+    /** The id types a driver finish takes: integral ids (compared as
+      * `Long`) and UTF8_BINARY strings (collated strings return None),
+      * collected as their raw UTF-8 bytes and compared as
+      * `UTF8String.binaryCompare`, Spark's order. Java's
+      * `String.compareTo` would not be: it puts a supplementary-plane
+      * character (a surrogate pair) below U+FFFD, Spark's byte order
+      * above; and a Java String round trip would merge distinct invalid
+      * byte sequences into U+FFFD.
+      */
+    def ids(t: DataType): Option[Ids[_]] = t match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        Some(new Ids[Long](LongType, _.asInstanceOf[Long], identity))
+      case StringType =>
+        Some(new Ids[UTF8String](BinaryType,
+          b => UTF8String.fromBytes(b.asInstanceOf[Array[Byte]]),
+          _.getBytes)(Ordering.fromLessThan(_.binaryCompare(_) < 0)))
+      case _ => None
+    }
+
+    /** Collected size of one wire id: 8 bytes per integral id, the
+      * UTF-8 length per string id, nothing for a null.
+      */
+    def idBytes(v: Any): Long = v match {
       case b: Array[Byte] => b.length
       case null => 0
       case _ => 8
     }
-    one(r.get(0)) + one(r.get(1))
+
+    /** All rows of `df`, or None past `maxRows` rows or `maxBytes` bytes
+      * as counted by `size`. coalesce(1): one job, one task, which stops
+      * reading after the first row past either budget however large the
+      * frame is, so the collect stays far below
+      * `spark.driver.maxResultSize`.
+      */
+    def collect(df: DataFrame, maxRows: Int, maxBytes: Long)(
+        size: Row => Long): Option[Array[Row]] = {
+      def fits(n: Int, bytes: Long) = n <= maxRows && bytes <= maxBytes
+      val rows = df.coalesce(1).mapPartitions { it =>
+        var n = 0
+        var bytes = 0L
+        it.takeWhile(_ => fits(n, bytes)).map { r =>
+          n += 1
+          bytes += size(r)
+          r
+        }
+      }(Encoders.row(df.schema)).collect()
+      Some(rows).filter(rs => fits(rs.length, rs.iterator.map(size).sum))
+    }
+
+    /** Union-find over the distinct `nodes`, each by its rank in Spark's
+      * `order` (`keys(rank)`): the smaller root always wins the link, so
+      * every component is rooted at its minimum id.
+      */
+    final class Components[K](nodes: Seq[K])(implicit order: Ordering[K]) {
+      val keys: IndexedSeq[K] = nodes.distinct.sorted.toIndexedSeq
+      val rank: Map[K, Int] = keys.zipWithIndex.toMap
+      private val parent = Array.range(0, keys.length)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) {
+          parent(r) = parent(parent(r))
+          r = parent(r)
+        }
+        r
+      }
+      def union(a: Int, b: Int): Unit = {
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+    }
+
+    /** `rows` as a local relation of `cols`, cast from the wire type
+      * back to the id type `t`.
+      */
+    def relation[K](spark: SparkSession, ids: Ids[K], t: DataType,
+        nullable: Boolean, cols: Seq[String],
+        rows: Seq[Seq[K]]): DataFrame =
+      spark.createDataFrame(rows.map(r => Row(r.map(ids.encode): _*)).asJava,
+          StructType(cols.map(StructField(_, ids.wire, nullable))))
+        .select(cols.map(c => col(c).cast(t).as(c)): _*)
   }
 
   /** [[connectedComponents]] with explicit driver-finish budgets in edge
@@ -914,77 +1140,32 @@ object Dedup {
     val sym = Materialize(
       pairs.select(col(idA).as("la"), col(idB).as("lb"))
         .union(pairs.select(col(idB).as("la"), col(idA).as("lb"))))
-    val onDriver = sym.schema("la").dataType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        componentsOnDriver[Long](sym, driverRows, driverBytes, LongType,
-          _.asInstanceOf[Long], identity)
-      // UTF8_BINARY only (collated strings take the loop), collected as
-      // the raw UTF-8 bytes: a Java String round trip would merge
-      // distinct invalid byte sequences into U+FFFD
-      case StringType =>
-        componentsOnDriver[UTF8String](sym, driverRows, driverBytes,
-          BinaryType,
-          b => UTF8String.fromBytes(b.asInstanceOf[Array[Byte]]),
-          _.getBytes)(Ordering.fromLessThan(_.binaryCompare(_) < 0))
-      case _ => None
-    }
-    onDriver.getOrElse(componentsLoop(sym, maxIter))
+    DriverFinish.ids(sym.schema("la").dataType)
+      .flatMap(componentsOnDriver(sym, _, driverRows, driverBytes))
+      .getOrElse(componentsLoop(sym, maxIter))
   }
 
   /** The driver finish of [[connectedComponents]] over the materialised
-    * symmetric frame `sym`: ids collect as `wire` values, `decode` maps
-    * them to keys whose `order` is Spark's order on the id type, and the
-    * result casts back from `wire`. None when `sym` has more than
-    * `maxRows` rows or more than `maxBytes` id bytes.
+    * symmetric frame `sym`; None when `sym` has more than `maxRows` rows
+    * or more than `maxBytes` id bytes.
     */
-  private def componentsOnDriver[K](sym: DataFrame, maxRows: Int,
-      maxBytes: Long, wire: DataType, decode: Any => K, encode: K => Any)(
-      implicit order: Ordering[K]): Option[DataFrame] = {
-    val wireRows = sym.select(col("la").cast(wire), col("lb").cast(wire))
-    def fits(n: Int, bytes: Long) = n <= maxRows && bytes <= maxBytes
-    // coalesce(1): one job, one task, which stops reading after the
-    // first row past either budget however large the frame is, so the
-    // collect stays far below spark.driver.maxResultSize
-    val rows = wireRows.coalesce(1).mapPartitions { it =>
-      var n = 0
-      var bytes = 0L
-      it.takeWhile(_ => fits(n, bytes)).map { r =>
-        n += 1
-        bytes += wireBytes(r)
-        r
+  private def componentsOnDriver[K](sym: DataFrame,
+      ids: DriverFinish.Ids[K], maxRows: Int,
+      maxBytes: Long): Option[DataFrame] = {
+    import ids.order
+    DriverFinish.collect(
+        sym.select(col("la").cast(ids.wire), col("lb").cast(ids.wire)),
+        maxRows, maxBytes)(r =>
+        DriverFinish.idBytes(r.get(0)) + DriverFinish.idBytes(r.get(1)))
+      .map { rows =>
+        val ends = rows.toSeq.map(r => (ids.key(r, 0), ids.key(r, 1)))
+        val cc = new DriverFinish.Components(ends.flatMap(e => e._1 ++ e._2))
+        for ((Some(a), Some(b)) <- ends) cc.union(cc.rank(a), cc.rank(b))
+        val la = sym.schema("la")
+        DriverFinish.relation(sym.sparkSession, ids, la.dataType,
+          la.nullable, Seq("id", "cluster_id"),
+          cc.keys.indices.map(i => Seq(cc.keys(i), cc.keys(cc.find(i)))))
       }
-    }(Encoders.row(wireRows.schema)).collect()
-    if (!fits(rows.length, rows.iterator.map(wireBytes).sum)) None
-    else {
-      def id(r: Row, i: Int): Option[K] =
-        if (r.isNullAt(i)) None else Some(decode(r.get(i)))
-      val edges = rows.toSeq.map(r => (id(r, 0), id(r, 1)))
-      // union-find over ranks in Spark's order, the smaller root always
-      // winning, so every component is rooted at its minimum id
-      val keys = edges.flatMap(e => e._1 ++ e._2).distinct.sorted
-      val rank = keys.zipWithIndex.toMap
-      val parent = Array.range(0, keys.length)
-      def find(x: Int): Int = {
-        var r = x
-        while (parent(r) != r) {
-          parent(r) = parent(parent(r))
-          r = parent(r)
-        }
-        r
-      }
-      for ((Some(a), Some(b)) <- edges) {
-        val (ra, rb) = (find(rank(a)), find(rank(b)))
-        parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val out = keys.indices.map(i =>
-        Row(encode(keys(i)), encode(keys(find(i)))))
-      val la = sym.schema("la")
-      val schema = StructType(Seq("id", "cluster_id")
-        .map(StructField(_, wire, la.nullable)))
-      Some(sym.sparkSession.createDataFrame(out.asJava, schema).select(
-        col("id").cast(la.dataType).as("id"),
-        col("cluster_id").cast(la.dataType).as("cluster_id")))
-    }
   }
 
   /** The distributed finish of [[connectedComponents]] over the

@@ -249,11 +249,11 @@ object Similarity {
     /** Every cell, in order — the candidate set of a flat scan. */
     val all: Array[Int] = cents.indices.toArray
 
-    private def checkDim(v: Seq[Float], what: String): Unit =
+    private def checkDim(v: Array[Float], what: String): Unit =
       require(cents.isEmpty || v.length == dim,
         s"$what dim ${v.length} != index dim $dim")
 
-    private def fold(v: Seq[Float], ce: Array[Float]): Double = {
+    private def fold(v: Array[Float], ce: Array[Float]): Double = {
       var dp = 0.0; var nv = 0.0; var nc = 0.0
       var i = 0
       while (i < ce.length) {
@@ -264,18 +264,31 @@ object Similarity {
       dp / (math.sqrt(nv) * math.sqrt(nc))
     }
 
-    /** Cosine of `v` to centroid `cell`. */
-    def cos(v: Seq[Float], cell: Int): Double = {
+    /** Cosine of `v` to centroid `cell`. The `Seq` forms (what the UDFs
+      * receive) copy the vector to an array once per call, so no fold
+      * unboxes an element.
+      */
+    def cos(v: Seq[Float], cell: Int): Double = cos(v.toArray, cell)
+
+    def cos(v: Array[Float], cell: Int): Double = {
       checkDim(v, "vector")
       fold(v, cents(cell))
     }
+
+    /** Cosine of two vectors of the centroids' dimension (already
+      * through [[argmax]]): the pair score, as [[cosine]] gives it.
+      */
+    def pairCos(a: Array[Float], b: Array[Float]): Double = fold(a, b)
 
     /** The highest-cosine cell of `v` among `cells` (-1 when `cells` is
       * empty). Ties go to the LATER cell (`>=` under the scan), and a
       * NaN cosine (a zero vector or centroid) outranks everything —
       * exactly the struct-max ordering of the old literal form.
       */
-    def argmax(v: Seq[Float], cells: Array[Int]): Int = {
+    def argmax(v: Seq[Float], cells: Array[Int]): Int =
+      argmax(v.toArray, cells)
+
+    def argmax(v: Array[Float], cells: Array[Int]): Int = {
       checkDim(v, "vector")
       var best = -1
       var bestKey = Double.NegativeInfinity
@@ -298,8 +311,9 @@ object Similarity {
     def probe(v: Seq[Float], n: Int): Seq[Int] = {
       require(v != null, "ANN query with a null vector — every query " +
         "must carry an embedding")
-      checkDim(v, "ANN query")
-      all.map(c => c -> fold(v, cents(c))).sortBy(-_._2).take(n)
+      val a = v.toArray
+      checkDim(a, "ANN query")
+      all.map(c => c -> fold(a, cents(c))).sortBy(-_._2).take(n)
         .map(_._1).toSeq
     }
   }
@@ -325,13 +339,6 @@ object Similarity {
     */
   private def cellOf(vecCol: String, centroids: Array[Seq[Float]]): Column =
     centroidScan(vecCol, centroids)("_1")
-
-  /** Each vector's cosine to its OWN (argmax-assigned) centroid — the
-    * prototypicality score SemDeDup's survivor rule ranks on.
-    */
-  private[graft] def maxCentroidCos(vecCol: String,
-      centroids: Array[Seq[Float]]): Column =
-    centroidScan(vecCol, centroids)("_2")
 
   /** THE cell assignment of an index's geometry: [[cellOf]] over flat
     * centroids, [[twoLevelCellOf]] over a two-level grouping. Both
@@ -481,10 +488,9 @@ object Similarity {
   }
 
   /** Each row's cosine to the centroid of its ASSIGNED cell — the
-    * own-centroid prototypicality score for indexes whose assignment
-    * is NOT a global argmax (the two-level build), where
-    * [[maxCentroidCos]] would score against a cell the row doesn't
-    * live in.
+    * own-centroid prototypicality score SemDeDup's survivor rule ranks
+    * on, for flat and two-level indexes alike (a two-level row's cell
+    * need not be its global argmax). A null vector or cell scores null.
     */
   private[graft] def centroidCosAt(vecCol: String, cellCol: String,
       centroids: Array[Seq[Float]]): Column = {

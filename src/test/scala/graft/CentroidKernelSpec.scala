@@ -10,8 +10,8 @@ import graft.pipeline.Similarity
 import graft.pipeline.Similarity.{CentroidScorer, IvfIndex, TwoLevelMeta}
 
 /** Properties of the row-level centroid kernels ([[CentroidScorer]]) as
-  * every caller sees them: flat `assignCells` + `maxCentroidCos`, the
-  * two-level assignment + `centroidCosAt`, and the probe order. The
+  * every caller sees them: flat and two-level `assignCells`, each with
+  * `centroidCosAt` at the assigned cell, and the probe order. The
   * reference scores each (vector, centroid) pair with Spark's
   * [[Similarity.cosineFold]] (a zero vector or centroid scores NaN, as
   * the IEEE 0/0 does) and applies the tie rules explicitly. Inputs mix
@@ -134,13 +134,15 @@ class CentroidKernelSpec extends SparkSpec {
         else Some(r.getSeq[Double](1).toIndexedSeq))
     }.toMap
 
-  test("property: flat assignCells and maxCentroidCos == cosineFold " +
-      "argmax (ties to the later cell, NaN outranks, null stays null)") {
+  test("property: flat assignCells and centroidCosAt at the cell == " +
+      "cosineFold argmax (ties to the later cell, NaN outranks, null " +
+      "stays null)") {
     check(Prop.forAll(genCase) { kc =>
       val df = frame(kc)
       val idx = IvfIndex(kc.cents.toArray, df, "id", "v")
       val got = Similarity.assignCells(idx, df, "v")
-        .withColumn("s", Similarity.maxCentroidCos("v", idx.centroids))
+        .withColumn("s",
+          Similarity.centroidCosAt("v", "__cell", idx.centroids))
         .select("id", "__cell", "s").collect()
       val ref = reference(kc, kc.cents)
       got.length == kc.vecs.length && got.forall { r =>
