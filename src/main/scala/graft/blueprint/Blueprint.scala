@@ -130,8 +130,6 @@ final class BlueprintBuilder(table: String) {
   /** Spark-first: arbitrary Column expression over the current row view. */
   def replaceWithExpr(build: (String => Column) => Column): this.type =
     commit(Rule.Expr(build))
-  /** Convenience: a fixed Column expression (no row view needed). */
-  def replaceWithColumn(c: Column): this.type = commit(Rule.Expr(_ => c))
   /** R3/R4: named deterministic generator, optional construct-uniqueness. */
   def replaceWithGenerator(formatter: String, unique: Boolean = false): this.type =
     commit(Rule.Generator(formatter, unique))

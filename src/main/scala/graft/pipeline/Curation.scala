@@ -87,11 +87,11 @@ object Curation {
     val scrubbed = quality
       .withColumn(textCol, TextOps.redactPii(col(textCol)))
     // Deliberately NOT persisted into the dedup stage: the pair pipeline
-    // materialises in ONE job (connectedComponents materialises the edge
-    // frame first), where exchange reuse already deduplicates the scrub
-    // subtree — caching it instead measured 1.6× slower end-to-end at
-    // sf0.1 (block-store write + read beats nothing here; see the
-    // matching note on Dedup.nearDuplicatePairs).
+    // reads it in ONE job (the pair finish's collect on small inputs;
+    // past its budgets connectedComponents materialises the edge frame,
+    // where exchange reuse deduplicates the scrub subtree) — caching it
+    // instead measured 1.6× slower end-to-end at sf0.1 (block-store
+    // write + read beats nothing here).
     val deduped = Dedup.dropNearDuplicates(scrubbed, idCol, textCol,
       dedupThreshold)
     Sampling.stratifiedHashSample(deduped, col(idCol), col(stratumCol),

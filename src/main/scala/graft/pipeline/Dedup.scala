@@ -1,16 +1,19 @@
 package graft.pipeline
 
 import scala.jdk.CollectionConverters._
+import scala.util.chaining._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{XxHash64,
+  XxHash64Function}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType,
-  DataType, FloatType, IntegerType, LongType, ShortType, StringType,
-  StructField, StructType}
+  DataType, DoubleType, FloatType, IntegerType, LongType, ShortType,
+  StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for training-data pipelines: exact (content-hash
@@ -25,6 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    because equal signatures are rare for non-duplicates] → exact Jaccard
   *    verify restricted to the candidate pairs [joins against the shingle
   *    table, proportional to candidates, not to n²].
+  *  - small inputs skip all of that: near pairs, connected components and
+  *    semDeDup each finish on the driver ([[DriverFinish]]) from one
+  *    budgeted single-task collect, and take the shapes above past it.
   *
   * Hashes are md5 strings so that an ANSI-SQL oracle can re-derive every
   * intermediate value; `xxhash64` is the drop-in for ~10× cheaper
@@ -178,14 +184,14 @@ object Dedup {
 
   /** [[nearDuplicatePairs]] on the xxhash64 production signatures — the
     * path to run at 100 TB; the md5 variant exists to stay oracle-exact.
+    * Both finishes and the eager collect are as there.
     */
   def nearDuplicatePairs64(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, numHashes: Int = 8, rowsPerBand: Int = 2,
       shingleK: Int = 3, maxBucket: Option[Int] = None): DataFrame =
-    nearPairsFromSets(
-      shingleSetsWithSigs(df, idCol, textCol, shingleK, numHashes,
-        hash64 = true),
-      idCol, threshold, numHashes, rowsPerBand, maxBucket)
+    nearPairs(df, idCol, textCol, threshold, numHashes, rowsPerBand,
+      shingleK, maxBucket, hash64 = true, DriverFinishRows, NearFinishBytes,
+      NearFinishWork)
 
   /** (id, band, sig) rows of a signature frame — the banded form behind
     * [[lshCandidates]] and the incremental-index family. The band
@@ -277,17 +283,199 @@ object Dedup {
   }
 
   /** End-to-end near-duplicate pairs: shingle → MinHash → banded LSH →
-    * exact-Jaccard verify ≥ `threshold`. The returned plan contains no
-    * cartesian product at any stage, and the corpus-sized shingle data
-    * crosses exactly ONE exchange ([[shingleSetsWithSigs]]).
+    * exact-Jaccard verify ≥ `threshold`, as (`id_a`, `id_b`, `n_inter`,
+    * `jaccard`) with id_a < id_b.
+    *
+    * Two finishes, one result bit for bit:
+    *  - Driver finish, for integral or UTF8_BINARY string ids over
+    *    UTF8_BINARY text on a batch frame: one single-task collect of
+    *    (id, [[TextOps.tokens]]), run when this is CALLED, not when the
+    *    result is read. The driver builds each id's distinct shingle set,
+    *    takes the same MinHash members as [[minHash]] (MD5, or Spark's own
+    *    xxhash64 function), buckets the bands, applies `maxBucket` and
+    *    verifies the candidates as the distributed path does; the pairs
+    *    return as a local relation. Past [[DriverFinishRows]] documents,
+    *    [[NearFinishBytes]] or [[NearFinishWork]] the collected rows are
+    *    dropped and the distributed plan is returned.
+    *  - Distributed: the returned plan contains no cartesian product at
+    *    any stage, and the corpus-sized shingle data crosses exactly ONE
+    *    exchange ([[shingleSetsWithSigs]]).
     */
   def nearDuplicatePairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, numHashes: Int = 8, rowsPerBand: Int = 2,
       shingleK: Int = 3, maxBucket: Option[Int] = None): DataFrame =
-    nearPairsFromSets(
-      shingleSetsWithSigs(df, idCol, textCol, shingleK, numHashes,
-        hash64 = false),
-      idCol, threshold, numHashes, rowsPerBand, maxBucket)
+    nearPairs(df, idCol, textCol, threshold, numHashes, rowsPerBand,
+      shingleK, maxBucket, hash64 = false, DriverFinishRows,
+      NearFinishBytes, NearFinishWork)
+
+  /** Largest (id, tokens) collect that the near-duplicate pair finish
+    * takes on the driver, in bytes: the id as in [[DriverFinish.idBytes]]
+    * plus the UTF-8 length of every token.
+    */
+  private val NearFinishBytes = 8L << 20
+
+  /** Most driver work the near-duplicate pair finish takes on: one unit
+    * per MinHash member of a shingle (shingle positions × numHashes), per
+    * member pair of a kept band bucket (Σ|bucket|²), and per shingle
+    * looked up to verify a candidate pair.
+    */
+  private val NearFinishWork = 1L << 24
+
+  /** [[nearDuplicatePairs]] (`hash64` false) or [[nearDuplicatePairs64]]
+    * with explicit driver-finish budgets in documents, bytes and work; a
+    * row budget of 0 forces the distributed path.
+    */
+  private[graft] def nearPairs(df: DataFrame, idCol: String,
+      textCol: String, threshold: Double, numHashes: Int, rowsPerBand: Int,
+      shingleK: Int, maxBucket: Option[Int], hash64: Boolean,
+      driverRows: Int, driverBytes: Long, driverWork: Long): DataFrame = {
+    require(numHashes % rowsPerBand == 0, "bands must tile the signature")
+    val thin = df.select(col(idCol), col(textCol))
+    val onDriver =
+      if (df.isStreaming || thin.schema(1).dataType != StringType ||
+          shingleK < 1 || numHashes < 1 || rowsPerBand < 1) None
+      else DriverFinish.ids(thin.schema(0).dataType).flatMap(ids =>
+        nearPairsOnDriver(thin, ids, threshold, numHashes, rowsPerBand,
+          shingleK, maxBucket, hash64, driverRows, driverBytes, driverWork))
+    onDriver.getOrElse(nearPairsFromSets(
+      shingleSetsWithSigs(df, idCol, textCol, shingleK, numHashes, hash64),
+      idCol, threshold, numHashes, rowsPerBand, maxBucket))
+  }
+
+  /** The driver finish of [[nearPairs]] over its thin (id, text) frame:
+    * the verified pairs as a local relation, or None past a budget.
+    */
+  private def nearPairsOnDriver[K](thin: DataFrame, ids: DriverFinish.Ids[K],
+      threshold: Double, numHashes: Int, rowsPerBand: Int, shingleK: Int,
+      maxBucket: Option[Int], hash64: Boolean, maxRows: Int, maxBytes: Long,
+      maxWork: Long): Option[DataFrame] = {
+    import ids.order
+    val op = if (hash64) "nearDuplicatePairs64" else "nearDuplicatePairs"
+    // Spark splits the tokens; binary keeps invalid UTF-8 as its bytes
+    val wire = thin.toDF("id", "text").select(col("id").cast(ids.wire),
+      TextOps.tokens(col("text")).cast("array<binary>"))
+    def tokens(r: Row): collection.Seq[Array[Byte]] =
+      if (r.isNullAt(1)) Nil else r.getSeq[Array[Byte]](1)
+    def positions(r: Row): Long =
+      math.max(0, tokens(r).length - shingleK + 1).toLong
+    for {
+      rows <- DriverFinish.collect(op, wire, maxRows, maxBytes)(r =>
+        DriverFinish.idBytes(r.get(0)) + tokens(r).map(_.length.toLong).sum)
+        .toOption
+      hashWork = rows.map(positions).sum * numHashes
+      if DriverFinish.withinWork(op, hashWork <= maxWork)
+      // each id's distinct shingles, its rows merged as groupBy(id)
+      // merges them; an id with none is no group, and the null id is one
+      // group, last, which fills buckets but never pairs
+      sets = rows.groupBy(ids.key(_, 0)).view
+        .mapValues(shingleSet(_, shingleK)).filter(_._2.nonEmpty).toMap
+      named = sets.keys.flatten.toIndexedSeq.sorted
+      groups = named.map(k => sets(Some(k))) ++ sets.get(None)
+      // the hashing is most of the finish, and each set hashes alone
+      sigs = new Array[Array[Byte]](groups.length).tap(a =>
+        java.util.Arrays.parallelSetAll[Array[Byte]](a, (g: Int) =>
+          minHashOnDriver(groups(g), numHashes, hash64)))
+      width = if (hash64) 8 else 16
+      bandBytes = rowsPerBand * width
+      buckets = (0 until numHashes / rowsPerBand).flatMap(b =>
+          groups.indices.groupBy(g =>
+            UTF8String.fromBytes(sigs(g), b * bandBytes, bandBytes)).values)
+        .filter(m => maxBucket.forall(m.length <= _))
+      bucketWork = buckets.map(m => m.length.toLong * m.length).sum
+      if DriverFinish.withinWork(op, hashWork + bucketWork <= maxWork)
+      cands = bucketPairs(buckets, named.length)
+      pairWork = cands.map { case (a, b) =>
+        math.min(groups(a).size, groups(b).size).toLong }.sum
+      if DriverFinish.withinWork(op,
+        hashWork + bucketWork + pairWork <= maxWork)
+    } yield {
+      val pairs = cands.flatMap { case (i, j) =>
+        val (a, b) = (groups(i), groups(j))
+        val inter = (if (a.size <= b.size) a.count(b) else b.count(a)).toLong
+        val jaccard = inter.toDouble / (a.size + b.size - inter)
+        Option.when(sqlCompare(jaccard, threshold) >= 0)(
+          (Seq(named(i), named(j)), Seq[Any](inter, jaccard)))
+      }
+      val id = thin.schema(0)
+      DriverFinish.relation(thin.sparkSession, ids, id.dataType,
+        id.nullable, Seq("id_a", "id_b"), pairs.map(_._1),
+        Seq(StructField("n_inter", LongType, nullable = false),
+          StructField("jaccard", DoubleType)), pairs.map(_._2))
+    }
+  }
+
+  /** The distinct pairs (i, j), i < j < `n`, of members of one bucket,
+    * in order. Members ascend within a bucket, so i < j within it; a
+    * member at `n` or past it (the null id) never pairs.
+    */
+  private def bucketPairs(buckets: Seq[IndexedSeq[Int]],
+      n: Int): IndexedSeq[(Int, Int)] = {
+    val out = Array.newBuilder[Long]
+    for (m <- buckets; x <- m.indices; y <- x + 1 until m.length
+        if m(y) < n)
+      out += m(x).toLong * n + m(y)
+    val sorted = out.result().sorted
+    sorted.indices.collect { case i if i == 0 || sorted(i) != sorted(i - 1) =>
+      ((sorted(i) / n).toInt, (sorted(i) % n).toInt) }
+  }
+
+  /** The distinct word `k`-shingles of one id's (id, tokens) wire rows,
+    * each its tokens' bytes joined by a space as `concat_ws` joins them.
+    */
+  private def shingleSet(rows: Array[Row],
+      k: Int): collection.Set[UTF8String] = {
+    val set = scala.collection.mutable.HashSet.empty[UTF8String]
+    for (r <- rows if !r.isNullAt(1)) {
+      val toks = r.getSeq[Array[Byte]](1).toArray
+      for (i <- 0 to toks.length - k) {
+        val sh = new Array[Byte](
+          (i until i + k).map(toks(_).length).sum + k - 1)
+        var at = 0
+        for (j <- i until i + k) {
+          if (j > i) { sh(at) = ' '; at += 1 }
+          System.arraycopy(toks(j), 0, sh, at, toks(j).length)
+          at += toks(j).length
+        }
+        set += UTF8String.fromBytes(sh)
+      }
+    }
+    set
+  }
+
+  /** [[minHash]]'s signature of one shingle set on the driver: member `i`
+    * at bytes [i · w, (i + 1) · w), as bytes whose unsigned order is
+    * Spark's order on the member — the MD5 digest (w = 16; its lowercase
+    * hex sorts the same), or the xxhash64 value with its sign bit flipped,
+    * big-endian (w = 8).
+    */
+  private def minHashOnDriver(shingles: collection.Set[UTF8String],
+      numHashes: Int, hash64: Boolean): Array[Byte] = {
+    val w = if (hash64) 8 else 16
+    val sig = Array.fill[Byte](numHashes * w)(-1)
+    val h = new Array[Byte](w)
+    val md = md5Holder.get
+    for (i <- 0 until numHashes) {
+      val prefix = s"$i|".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val seed = XxHash64Function.hash(i, IntegerType, XxHashSeed)
+      for (sh <- shingles) {
+        if (hash64)
+          java.nio.ByteBuffer.wrap(h).putLong(0, Long.MinValue ^
+            XxHash64Function.hash(sh, StringType, seed))
+        else {
+          md.update(prefix)
+          md.update(sh.getBytes)
+          md.digest(h, 0, w)
+        }
+        if (java.util.Arrays.compareUnsigned(h, 0, w, sig, i * w,
+            (i + 1) * w) < 0)
+          System.arraycopy(h, 0, sig, i * w, w)
+      }
+    }
+    sig
+  }
+
+  /** The seed `functions.xxhash64` hashes with. */
+  private val XxHashSeed = new XxHash64(Nil).seed
 
   /** The near-deduplicated corpus in one call: near-dup pairs →
     * connected components → keep each cluster's min-id row, drop every
@@ -295,7 +483,9 @@ object Dedup {
     * untouched (left-anti against the drop set — the drop set is tiny
     * relative to the corpus, so the anti join's build side is the thin
     * one). The composition [[nearDuplicatePairs]] ∘
-    * [[connectedComponents]] is what a curation run actually executes.
+    * [[connectedComponents]] is what a curation run actually executes;
+    * each finishes on the driver when its input fits the driver budgets,
+    * and the pair finish collects when this is called.
     */
   def dropNearDuplicates(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, numHashes: Int = 8, rowsPerBand: Int = 2,
@@ -316,7 +506,8 @@ object Dedup {
     * joins back only the (id, score) projection, a per-cluster `max_by`
     * struct aggregate picks the survivor, and the corpus anti-joins the
     * loser set — the extra cost over min-id survivors is one thin
-    * aggregate over cluster members (tiny relative to the corpus).
+    * aggregate over cluster members (tiny relative to the corpus). The
+    * pairs and components finish as in [[dropNearDuplicates]].
     */
   def dropNearDuplicatesKeepBest(df: DataFrame, idCol: String,
       textCol: String, scoreCol: String, threshold: Double = 0.8,
@@ -751,9 +942,10 @@ object Dedup {
     val wire = thin.toDF("id", "vec").select(col("id").cast(ids.wire),
       col("vec"), expr("exists(vec, x -> x IS NULL)"))
     for {
-      rows <- DriverFinish.collect(wire, maxRows, maxBytes)(r =>
+      rows <- DriverFinish.collect("semDeDup", wire, maxRows, maxBytes)(r =>
         DriverFinish.idBytes(r.get(0)) +
           (if (r.isNullAt(1)) 0L else 4L * r.getSeq[Float](1).length))
+        .toOption
       // the assignment UDF reads a null element as 0, the pair cosine
       // as a null cosine
       if !rows.exists(r => !r.isNullAt(2) && r.getBoolean(2))
@@ -771,13 +963,13 @@ object Dedup {
           vecs(i).length == vecs(seeds.head).length)
       fold = vecs(seeds.head).length + 32L
       assignWork = fold * seeds.length * vecs.count(_ != null)
-      if assignWork <= maxWork
+      if DriverFinish.withinWork("semDeDup", assignWork <= maxWork)
       s = new Similarity.CentroidScorer(seeds.map(vecs(_).toSeq).toArray)
       cell = vecs.map(v => if (v == null) -1 else s.argmax(v, s.all))
       if maxCell.forall(guardCells(cell, _))
       members = cell.indices.filter(cell(_) >= 0).groupBy(cell(_)).values
-      if assignWork + fold * members.map(m => m.length.toLong * m.length)
-        .sum <= maxWork
+      if DriverFinish.withinWork("semDeDup", assignWork +
+        fold * members.map(m => m.length.toLong * m.length).sum <= maxWork)
     } yield {
       val cc = new DriverFinish.Components(keys.toSeq.flatten)
       val rank = keys.map(_.fold(-1)(cc.rank))
@@ -1029,9 +1221,10 @@ object Dedup {
     */
   private val DriverFinishBytes = 32L << 20
 
-  /** The bounded driver finish shared by [[connectedComponents]] and
-    * [[semDeDup]]: a single-task collect within a row and a byte budget,
-    * ids held in Spark's order, union-find, and a local relation back.
+  /** The bounded driver finish shared by [[connectedComponents]],
+    * [[semDeDup]] and [[nearDuplicatePairs]]: a single-task collect
+    * within a row and a byte budget, ids held in Spark's order,
+    * union-find, and a local relation back.
     */
   private object DriverFinish {
 
@@ -1073,14 +1266,15 @@ object Dedup {
       case _ => 8
     }
 
-    /** All rows of `df`, or None past `maxRows` rows or `maxBytes` bytes
-      * as counted by `size`. coalesce(1): one job, one task, which stops
-      * reading after the first row past either budget however large the
-      * frame is, so the collect stays far below
+    /** All rows of `df` for `op`'s driver finish, or the budget they ran
+      * past: `"rows"` past `maxRows` rows, `"bytes"` past `maxBytes` bytes
+      * as counted by `size` (logged as [[stopped]]). coalesce(1): one job,
+      * one task, which stops reading after the first row past either
+      * budget however large the frame is, so the collect stays far below
       * `spark.driver.maxResultSize`.
       */
-    def collect(df: DataFrame, maxRows: Int, maxBytes: Long)(
-        size: Row => Long): Option[Array[Row]] = {
+    def collect(op: String, df: DataFrame, maxRows: Int, maxBytes: Long)(
+        size: Row => Long): Either[String, Array[Row]] = {
       def fits(n: Int, bytes: Long) = n <= maxRows && bytes <= maxBytes
       val rows = df.coalesce(1).mapPartitions { it =>
         var n = 0
@@ -1091,7 +1285,24 @@ object Dedup {
           r
         }
       }(Encoders.row(df.schema)).collect()
-      Some(rows).filter(rs => fits(rs.length, rs.iterator.map(size).sum))
+      (if (rows.length > maxRows) Left("rows")
+        else if (rows.iterator.map(size).sum > maxBytes) Left("bytes")
+        else Right(rows)).left.map(stopped(op))
+    }
+
+    /** Logs once, at INFO, that `op` ran past its driver-finish `budget`
+      * and takes the distributed path; returns `budget`.
+      */
+    def stopped(op: String)(budget: String): String = {
+      log.info("{}: past the driver-finish {} budget, finishing distributed",
+        op, budget)
+      budget
+    }
+
+    /** `fits`, logging a stop at `op`'s work budget when it is false. */
+    def withinWork(op: String, fits: Boolean): Boolean = {
+      if (!fits) stopped(op)("work")
+      fits
     }
 
     /** Union-find over the distinct `nodes`, each by its rank in Spark's
@@ -1116,15 +1327,20 @@ object Dedup {
       }
     }
 
-    /** `rows` as a local relation of `cols`, cast from the wire type
-      * back to the id type `t`.
+    /** `rows` as a local relation of the id columns `cols`, cast from the
+      * wire type back to the id type `t`, followed by the `rest` columns
+      * whose values `restRows` holds row by row.
       */
     def relation[K](spark: SparkSession, ids: Ids[K], t: DataType,
-        nullable: Boolean, cols: Seq[String],
-        rows: Seq[Seq[K]]): DataFrame =
-      spark.createDataFrame(rows.map(r => Row(r.map(ids.encode): _*)).asJava,
-          StructType(cols.map(StructField(_, ids.wire, nullable))))
-        .select(cols.map(c => col(c).cast(t).as(c)): _*)
+        nullable: Boolean, cols: Seq[String], rows: Seq[Seq[K]],
+        rest: Seq[StructField] = Nil,
+        restRows: Seq[Seq[Any]] = Nil): DataFrame =
+      spark.createDataFrame(rows.zipAll(restRows, Nil, Nil).map {
+            case (r, more) => Row(r.map(ids.encode) ++ more: _*)
+          }.asJava,
+          StructType(cols.map(StructField(_, ids.wire, nullable)) ++ rest))
+        .select(cols.map(c => col(c).cast(t).as(c)) ++
+          rest.map(f => col(f.name)): _*)
   }
 
   /** [[connectedComponents]] with explicit driver-finish budgets in edge
@@ -1153,11 +1369,11 @@ object Dedup {
       ids: DriverFinish.Ids[K], maxRows: Int,
       maxBytes: Long): Option[DataFrame] = {
     import ids.order
-    DriverFinish.collect(
+    DriverFinish.collect("connectedComponents",
         sym.select(col("la").cast(ids.wire), col("lb").cast(ids.wire)),
         maxRows, maxBytes)(r =>
         DriverFinish.idBytes(r.get(0)) + DriverFinish.idBytes(r.get(1)))
-      .map { rows =>
+      .toOption.map { rows =>
         val ends = rows.toSeq.map(r => (ids.key(r, 0), ids.key(r, 1)))
         val cc = new DriverFinish.Components(ends.flatMap(e => e._1 ++ e._2))
         for ((Some(a), Some(b)) <- ends) cc.union(cc.rank(a), cc.rank(b))
