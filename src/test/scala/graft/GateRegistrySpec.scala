@@ -1,6 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.security.MessageDigest
+
+import scala.io.Source
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
@@ -20,6 +24,36 @@ class GateRegistrySpec extends SparkSpec {
     val missing = SparkEntry.gates.filter(g => g.build == null ||
       g.oracleSql == null || g.oracleSql.trim.isEmpty).map(_.name)
     assert(missing.isEmpty, s"gates without a builder or oracle: $missing")
+  }
+
+  /** Pins every oracle: the test resource `oracle_sql.sha256` holds one
+    * line per gate, its name and then the SHA-256 (hex) of its
+    * `oracleSql`'s UTF-8 bytes, so a refactor of the gate files that moves
+    * a single byte of an oracle fails here, naming every gate it changed.
+    * To regenerate after an intended oracle change, run this test: on a
+    * mismatch it writes the current hashes to `target/oracle_sql.sha256`;
+    * check that only the intended gates are named, then copy that file
+    * over `src/test/resources/oracle_sql.sha256`.
+    */
+  test("every gate's oracle SQL matches its pinned SHA-256") {
+    def sha256(s: String): String = MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes(UTF_8)).map(b => f"${b & 0xff}%02x").mkString
+    val current = SparkEntry.gates.map(g => g.name -> sha256(g.oracleSql))
+    val in = getClass.getResourceAsStream("/oracle_sql.sha256")
+    val pinned =
+      if (in == null) Map.empty[String, String]
+      else try Source.fromInputStream(in, "UTF-8").getLines()
+        .map(_.split(' ')).map(f => f(0) -> f(1)).toMap
+      finally in.close()
+    val changed = current.collect {
+      case (name, hash) if !pinned.get(name).contains(hash) => name
+    } ++ pinned.keySet.diff(current.map(_._1).toSet).toSeq.sorted
+    if (changed.nonEmpty) {
+      Files.write(Paths.get("target/oracle_sql.sha256"),
+        current.map { case (n, h) => s"$n $h\n" }.mkString.getBytes(UTF_8))
+      fail(s"${changed.size} gates' oracle SQL differs from " +
+        s"oracle_sql.sha256: ${changed.mkString(", ")}")
+    }
   }
 
   test("select keeps the given order, drops repeats, and fails naming " +
