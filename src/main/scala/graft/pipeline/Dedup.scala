@@ -756,7 +756,7 @@ object Dedup {
       batch: DataFrame, idCol: String, vecCol: String,
       threshold: Double, maxCell: Option[Int] = None,
       onHotCell: HotCellPolicy = HotCellPolicy.Fail): DataFrame = {
-    // null-embedding batch rows assign a null cell (centroidScan's
+    // null-embedding batch rows assign a null cell (cellOf's
     // contract): they can be semantic duplicates of nothing, so they
     // drop out of the pair probe here — and survive semDeDupFilterBatch
     // untouched, matching the self-join form's tolerance — instead of

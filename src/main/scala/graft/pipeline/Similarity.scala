@@ -318,27 +318,16 @@ object Similarity {
     }
   }
 
-  /** (argmax cell, its cosine) as a struct — one closure UDF over the
-    * [[CentroidScorer]]. A null vector assigns null.
+  /** Argmax-cosine cell assignment column, one closure UDF over the
+    * [[CentroidScorer]] ([[CentroidScorer.argmax]]: ties toward the
+    * higher cell, NaN outranks). A null vector assigns null.
     */
-  private def centroidScan(vecCol: String,
-      centroids: Array[Seq[Float]]): Column = {
+  private def cellOf(vecCol: String, centroids: Array[Seq[Float]])
+      : Column = {
     val s = new CentroidScorer(centroids)
-    val f = udf { (v: Seq[Float]) =>
-      if (v == null) None
-      else {
-        val c = s.argmax(v, s.all)
-        Some((c, if (c < 0) Double.NaN else s.cos(v, c)))
-      }
-    }
-    f(col(vecCol))
+    udf((v: Seq[Float]) => Option(v).map(s.argmax(_, s.all)))
+      .apply(col(vecCol))
   }
-
-  /** Argmax-cosine cell assignment column ([[CentroidScorer.argmax]]:
-    * ties toward the higher cell, NaN outranks, null stays null).
-    */
-  private def cellOf(vecCol: String, centroids: Array[Seq[Float]]): Column =
-    centroidScan(vecCol, centroids)("_1")
 
   /** THE cell assignment of an index's geometry: [[cellOf]] over flat
     * centroids, [[twoLevelCellOf]] over a two-level grouping. Both
