@@ -16,7 +16,14 @@ plan changes remain:
 - lambda class names (`X$$$Lambda$7718/0x00007f33a5c3e430`) lose their
   numbers and object hashes (`@4b25fd9b`) are masked;
 - the process id in the queries' scratch directories
-  (`/tmp/graft-gate-<pid>-<query>`) is masked.
+  (`/tmp/graft-gate-<pid>-<query>`) is masked;
+- the distinct-aggregate groups of an `Expand` with a `gid` column are put
+  in one order. Spark numbers them in the iteration order of a hash map
+  keyed by expression ids, so the same plan can list them in another order
+  when earlier queries in the JVM used up a different number of ids. The
+  distinct columns are sorted by name, everywhere they appear as a run
+  (output lists, keys, partitioning), the group rows are sorted, and the
+  `gid` literals (`(gid#7 = 2)`) are renumbered to match.
 
 Prints each query whose normalised dumps differ (with a unified diff under
 --diff) and each query found on one side only, then a summary line. Exits 1
@@ -33,9 +40,66 @@ LAMBDA = re.compile(r"\$\$Lambda\$?\d*/0x[0-9a-f]+")
 HASH = re.compile(r"@[0-9a-f]{4,}\b")
 GATE_DIR = re.compile(r"graft-gate-\d+-")
 IDS = re.compile(r"(#|plan_id=)(\d+)")
+EXPAND = re.compile(r"^(\(\d+\) Expand\n.*\nArguments: )(.*)$", re.M)
+GID = re.compile(r"gid#\d+$")
+
+
+def split_top(text):
+    """Splits `a, f(b, c), [d, e]` at the commas outside brackets."""
+    parts, depth, start = [], 0, 0
+    for i, c in enumerate(text):
+        depth += (c in "([") - (c in ")]")
+        if depth == 0 and text.startswith(", ", i):
+            parts.append(text[start:i])
+            start = i + 2
+    return parts + [text[start:]]
+
+
+def unbracket(text):
+    return split_top(text[1:-1])
+
+
+def no_ids(text):
+    return re.sub(r"#\d+", "", text)
+
+
+def canonical_expand(text):
+    """Puts the distinct-aggregate groups of each gid Expand in one order."""
+    for m in list(EXPAND.finditer(text)):
+        rows_text, out_text = split_top(m.group(2))
+        rows = [unbracket(r) for r in unbracket(rows_text)]
+        out = unbracket(out_text)
+        g = next((i for i, a in enumerate(out) if GID.search(a)), None)
+        if g is None:
+            continue
+        cols = [i for i in range(g) if any(r[i] == "null" for r in rows)]
+        order = list(range(len(out)))
+        for i, j in zip(cols, sorted(cols, key=lambda i: no_ids(out[i]))):
+            order[i] = j
+        rows = [[r[j] for j in order] for r in rows]
+        groups = sorted((r for r in rows if r[g] != "0"),
+                        key=lambda r: no_ids(", ".join(r[:g])))
+        gids = {r[g]: str(k) for k, r in enumerate(groups, 1)}
+        rows = [r[:g] + [gids.get(r[g], r[g])] + r[g + 1:]
+                for r in rows if r[g] == "0"] + \
+            [r[:g] + [gids[r[g]]] + r[g + 1:] for r in groups]
+        run_old = ", ".join(out[i] for i in cols)
+        run_new = ", ".join(out[order[i]] for i in cols)
+        args = "[" + ", ".join("[" + ", ".join(r) + "]" for r in rows) + \
+            "], [" + ", ".join(out[j] for j in order) + "]"
+        text = text.replace(m.group(0), m.group(1) + args)
+        if run_old:
+            text = text.replace(run_old, run_new)
+        gid = re.escape(out[g])
+        text = re.sub(r"\(%s = (\d+)\)" % gid,
+                      lambda x: "(%s = %s)" % (out[g], gids.get(x.group(1),
+                                                              x.group(1))),
+                      text)
+    return text
 
 
 def normalise(text):
+    text = canonical_expand(text)
     text = LAMBDA.sub("$$Lambda", RDD.sub(r"\1[*]", text))
     text = GATE_DIR.sub("graft-gate-*-", HASH.sub("@*", text))
     ids = {"#": {}, "plan_id=": {}}
