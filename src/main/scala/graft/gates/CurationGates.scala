@@ -1092,7 +1092,7 @@ private[graft] object CurationGates {
       s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings),
          |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
          |         embedding AS ce FROM corpus ORDER BY vec_id LIMIT 16),
-         |${semAssignCtes("corpus", "")},
+         |${assignCtes(mat = true)},
          |t AS (SELECT d.doc_id,
          |    'cell_' || CAST(a.cell AS VARCHAR) AS domain,
          |    CAST(len($toksSql) AS BIGINT) AS n
@@ -1368,7 +1368,7 @@ private[graft] object CurationGates {
          |           JOIN qkept k ON k.doc_id = e.vec_id),
          |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
          |         embedding AS ce FROM corpus ORDER BY vec_id LIMIT 16),
-         |${semAssignCtes("corpus", "")},
+         |${assignCtes(mat = true)},
          |${semPairCtes("assign", "corpus", "assign", "corpus",
           "b.vec_id > a.vec_id")},
          |$semSurvivorCtes

@@ -470,9 +470,7 @@ private[graft] object RetrievalGates {
          |    q.qe AS qe
          |  FROM embeddings e CROSS JOIN qs q),
          |vd AS (SELECT qid, vec_id,
-         |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-         |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
+         |${cosFolds("v", "qe[i]", "nv", "nq")}
          |  FROM vx GROUP BY qid, vec_id),
          |vec AS (SELECT qid, vec_id AS doc_id,
          |    CAST(row_number() OVER (PARTITION BY qid

@@ -279,71 +279,83 @@ private[graft] object Shared {
     */
   def simIvfBatchCtesFor(qsPred: String,
       corpusPred: String): String =
-    s"""qs AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE $qsPred),
-         |corpus AS (SELECT vec_id, label, embedding FROM embeddings WHERE $corpusPred),
-         |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-         |         embedding AS ce FROM corpus ORDER BY vec_id LIMIT 16),
-         |ax AS (SELECT e.vec_id, c.cell, unnest(e.embedding) AS v,
-         |         unnest(generate_series(1, len(e.embedding))) AS i, c.ce AS ce
-         |       FROM corpus e CROSS JOIN cent c),
-         |ad AS (SELECT vec_id, cell,
-         |    SUM(CAST(v AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-         |    SUM(CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS nc
-         |  FROM ax GROUP BY vec_id, cell),
-         |assign AS (SELECT vec_id, cell FROM ad
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id
-         |    ORDER BY dp / (sqrt(nv) * sqrt(nc)) DESC, cell DESC) = 1),
-         |${simIvfBatchProbeCtes("corpus")}""".stripMargin
+    s"""${simIvfBatchHeadFor(qsPred, corpusPred)},
+       |${batchScoreCtes("corpus")}""".stripMargin
 
-  /** The per-query probe + scoring chunk of the batch-IVF oracles
-    * (nProbe=2 per query, ties to the LOWER cell; candidates = the
-    * rows `assign` places in the probed cells; element-order cosine
-    * folds), ending in `fd(qid, vec_id, label, dp, nv, nq)`. Factored
-    * on `corpusSrc` so the two-level recall audit (whose `cent` /
-    * `assign` chain is the grouped one, and whose corpus CTE carries
-    * no label) can reuse the IDENTICAL probe SQL over a labelled
-    * projection.
+  /** The batch-IVF chain up to the probes: query set `qs`, `corpus`,
+    * the 16 lowest-id corpus vectors as `cent`, [[assignCtes]] and
+    * [[batchProbeCtes]]. The int8 and PQ batch oracles score the
+    * probed cells their own way on top of it.
     */
-  def simIvfBatchProbeCtes(corpusSrc: String, p: String = "",
-      centSrc: String = "cent", assignSrc: String = "assign"): String =
+  def simIvfBatchHeadFor(qsPred: String, corpusPred: String): String =
+    s"""qs AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE $qsPred),
+       |corpus AS (SELECT vec_id, label, embedding FROM embeddings WHERE $corpusPred),
+       |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
+       |         embedding AS ce FROM corpus ORDER BY vec_id LIMIT 16),
+       |${assignCtes()},
+       |${batchProbeCtes()}""".stripMargin
+
+  /** The per-query probe of the batch-IVF oracles: each query's
+    * cosine to every centroid of `centSrc` (element-order folds), and
+    * its nProbe=2 best cells, ties to the LOWER cell. CTE names are
+    * prefixed with `p`.
+    */
+  def batchProbeCtes(p: String = "", centSrc: String = "cent"): String =
     s"""${p}qx AS (SELECT q.qid, c.cell, unnest(c.ce) AS v,
        |         unnest(generate_series(1, len(c.ce))) AS i, q.qe AS qe
        |       FROM $centSrc c CROSS JOIN qs q),
        |${p}qd AS (SELECT qid, cell,
-       |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-       |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nc,
-       |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
+       |${cosFolds("v", "qe[i]", "nc", "nq")}
        |  FROM ${p}qx GROUP BY qid, cell),
        |${p}probes AS (SELECT qid, cell FROM ${p}qd
        |  QUALIFY row_number() OVER (PARTITION BY qid
-       |    ORDER BY dp / (sqrt(nc) * sqrt(nq)) DESC, cell ASC) <= 2),
-       |${p}fx AS (SELECT q.qid, e.vec_id, e.label, unnest(e.embedding) AS v,
+       |    ORDER BY dp / (sqrt(nc) * sqrt(nq)) DESC, cell ASC) <= 2)""".stripMargin
+
+  /** The scoring chunk of the batch-IVF oracles over
+    * [[batchProbeCtes]]: candidates = the rows `assignSrc` places in
+    * the probed cells, element-order cosine folds, ending in
+    * `fd(qid, vec_id, label, dp, nv, nq)`. Factored on `corpusSrc` so
+    * the two-level recall audit (whose `cent` / `assign` chain is the
+    * grouped one, and whose corpus CTE carries no label) can reuse the
+    * IDENTICAL SQL over a labelled projection.
+    */
+  def batchScoreCtes(corpusSrc: String, p: String = "",
+      assignSrc: String = "assign"): String =
+    s"""${p}fx AS (SELECT q.qid, e.vec_id, e.label, unnest(e.embedding) AS v,
        |         unnest(generate_series(1, len(e.embedding))) AS i, q.qe AS qe
        |       FROM $corpusSrc e
        |       JOIN $assignSrc a ON a.vec_id = e.vec_id
        |       JOIN ${p}probes p ON p.cell = a.cell
        |       JOIN qs q ON q.qid = p.qid),
        |${p}fd AS (SELECT qid, vec_id, label,
-       |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-       |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-       |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
+       |${cosFolds("v", "qe[i]", "nv", "nq")}
        |  FROM ${p}fx GROUP BY qid, vec_id, label)""".stripMargin
 
-  /** One argmax-cell assignment CTE chain over `src`, CTE names
-    * prefixed with `p` — the corpus/batch building block both SemDeDup
-    * oracle shapes share (the batch side of `q_semdedup_incr` runs the
-    * SAME chain under the corpus-seeded `cent`, exactly as
-    * `assignCells` freezes the index's centroids).
+  /** The three element-order folds of a cosine between list elements
+    * `x` and `y` (indexed by `i`): `dp`, then the squared norms named
+    * `nx` and `ny`, one SELECT item per line.
     */
-  def semAssignCtes(src: String, p: String): String =
+  def cosFolds(x: String, y: String, nx: String, ny: String): String =
+    s"""    SUM(CAST($x AS DOUBLE) * CAST($y AS DOUBLE) ORDER BY i) AS dp,
+       |    SUM(CAST($x AS DOUBLE) * CAST($x AS DOUBLE) ORDER BY i) AS $nx,
+       |    SUM(CAST($y AS DOUBLE) * CAST($y AS DOUBLE) ORDER BY i) AS $ny""".stripMargin
+
+  /** One argmax-cell assignment CTE chain, names prefixed with `p`:
+    * `ax` pairs vectors with centroids (`from` is its FROM clause,
+    * binding `e` and `c`), `ad` folds each pair's cosine, `assign`
+    * keeps each vector's argmax cell, ties to the HIGHER cell. `mat`
+    * makes `ad` MATERIALIZED. Every flat IVF and SemDeDup oracle
+    * assigns through it (the batch side of `q_semdedup_incr` runs it
+    * under the corpus-seeded `cent`, exactly as `assignCells` freezes
+    * the index's centroids).
+    */
+  def assignCtes(from: String = "corpus e CROSS JOIN cent c",
+      p: String = "", mat: Boolean = false): String =
     s"""${p}ax AS (SELECT e.vec_id, c.cell, unnest(e.embedding) AS v,
        |         unnest(generate_series(1, len(e.embedding))) AS i, c.ce AS ce
-       |       FROM $src e CROSS JOIN cent c),
-       |${p}ad AS MATERIALIZED (SELECT vec_id, cell,
-       |    SUM(CAST(v AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS dp,
-       |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-       |    SUM(CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS nc
+       |       FROM $from),
+       |${p}ad AS ${if (mat) "MATERIALIZED " else ""}(SELECT vec_id, cell,
+       |${cosFolds("v", "ce[i]", "nv", "nc")}
        |  FROM ${p}ax GROUP BY vec_id, cell),
        |${p}assign AS (SELECT vec_id, cell FROM ${p}ad
        |  QUALIFY row_number() OVER (PARTITION BY vec_id
@@ -364,9 +376,7 @@ private[graft] object Shared {
        |       JOIN $bAssign b ON b.cell = a.cell AND ($pred)
        |       JOIN $bSrc eb ON eb.vec_id = b.vec_id),
        |dots AS (SELECT cell, id_a, id_b,
-       |    SUM(CAST(va AS DOUBLE) * CAST(vb AS DOUBLE) ORDER BY i) AS dp,
-       |    SUM(CAST(va AS DOUBLE) * CAST(va AS DOUBLE) ORDER BY i) AS na,
-       |    SUM(CAST(vb AS DOUBLE) * CAST(vb AS DOUBLE) ORDER BY i) AS nb
+       |${cosFolds("va", "vb", "na", "nb")}
        |  FROM px GROUP BY cell, id_a, id_b),
        |pairs AS MATERIALIZED (SELECT cell, id_a, id_b,
        |    dp / (sqrt(na) * sqrt(nb)) AS cosine

@@ -744,9 +744,7 @@ private[graft] object VectorGates {
        |         unnest(generate_series(1, len(e.embedding))) AS i, q.qe AS qe
        |       FROM $corpusSrc e CROSS JOIN qs q),
        |bd AS (SELECT qid, vec_id,
-       |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-       |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-       |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
+       |${cosFolds("v", "qe[i]", "nv", "nq")}
        |  FROM bx GROUP BY qid, vec_id),
        |exact AS (SELECT qid, vec_id FROM bd
        |  QUALIFY row_number() OVER (PARTITION BY qid
@@ -778,7 +776,7 @@ private[graft] object VectorGates {
        |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
        |         embedding AS ce FROM corpus ORDER BY vec_id
        |         LIMIT $centLimit),
-       |${semAssignCtes("corpus", "")},
+       |${assignCtes(mat = true)},
        |${semPairCtes("assign", "corpus", "assign", "corpus",
           "b.vec_id > a.vec_id", threshold)}""".stripMargin
 
@@ -823,9 +821,7 @@ private[graft] object VectorGates {
        |         unnest(generate_series(1, len(e.embedding))) AS i, c.ce AS ce
        |       FROM corpus e CROSS JOIN l1cent c),
        |l1d AS MATERIALIZED (SELECT vec_id, g,
-       |    SUM(CAST(v AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS dp,
-       |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-       |    SUM(CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS nc
+       |${cosFolds("v", "ce[i]", "nv", "nc")}
        |  FROM l1x GROUP BY vec_id, g),
        |l1assign AS MATERIALIZED (SELECT vec_id, g FROM l1d
        |  QUALIFY row_number() OVER (PARTITION BY vec_id
@@ -837,18 +833,8 @@ private[graft] object VectorGates {
        |        FROM l1assign a JOIN corpus e ON e.vec_id = a.vec_id
        |        QUALIFY row_number() OVER (PARTITION BY a.g
        |          ORDER BY e.vec_id) <= (SELECT m FROM prm))),
-       |ax AS (SELECT e.vec_id, c.cell, unnest(e.embedding) AS v,
-       |         unnest(generate_series(1, len(e.embedding))) AS i, c.ce AS ce
-       |       FROM l1assign a JOIN corpus e ON e.vec_id = a.vec_id
-       |       JOIN cent c ON c.g = a.g),
-       |ad AS MATERIALIZED (SELECT vec_id, cell,
-       |    SUM(CAST(v AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS dp,
-       |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-       |    SUM(CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS nc
-       |  FROM ax GROUP BY vec_id, cell),
-       |assign AS (SELECT vec_id, cell FROM ad
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id
-       |    ORDER BY dp / (sqrt(nv) * sqrt(nc)) DESC, cell DESC) = 1)""".stripMargin
+       |${assignCtes("l1assign a JOIN corpus e ON e.vec_id = a.vec_id\n" +
+          "       JOIN cent c ON c.g = a.g", mat = true)}""".stripMargin
 
   /** The d=2 PCA model CTE chain shared by `q_pca2_parity` and
     * `q_pca_semdedup`: exact integer Gram stats over the first two
@@ -950,55 +936,89 @@ private[graft] object VectorGates {
     */
   private def simIvfOracleSql(centPred: String,
       centLimit: String = "16"): String =
+    s"""${ivfHead(centPred, centLimit)},
+       |${ivfScoreTail("corpus")}""".stripMargin
+
+  /** The single-query IVF chain up to the probes: query `q` (vec_id 0),
+    * `corpus` (the rest), the `centLimit` lowest-id corpus vectors
+    * passing `centPred` as `cent`, [[assignCtes]] and [[probeCtes]].
+    */
+  private def ivfHead(centPred: String, centLimit: String = "16"): String =
     s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
        |corpus AS (SELECT vec_id, label, embedding FROM embeddings WHERE vec_id <> 0),
        |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
        |         embedding AS ce FROM corpus WHERE $centPred
        |         ORDER BY vec_id LIMIT $centLimit),
-       |ax AS (SELECT e.vec_id, c.cell, unnest(e.embedding) AS v,
-       |         unnest(generate_series(1, len(e.embedding))) AS i, c.ce AS ce
-       |       FROM corpus e CROSS JOIN cent c),
-       |ad AS (SELECT vec_id, cell,
-       |    SUM(CAST(v AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS dp,
-       |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-       |    SUM(CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS nc
-       |  FROM ax GROUP BY vec_id, cell),
-       |assign AS (SELECT vec_id, cell FROM ad
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id
-       |    ORDER BY dp / (sqrt(nv) * sqrt(nc)) DESC, cell DESC) = 1),
-       |${simIvfProbeTail("corpus")}""".stripMargin
+       |${assignCtes()},
+       |$probeCtes""".stripMargin
 
-  /** The nProbe=2 probe + exact-scoring tail every IVF value oracle
-    * shares: rank cells by query-to-centroid cosine over `cent`, score
-    * only the rows `assign` places in the top-2 cells, top-10 by
-    * cosine. Factored out so the two-level variants (whose `cent` /
-    * `assign` chains differ) reuse the IDENTICAL probe SQL.
-    * `corpusSrc` must expose (vec_id, label, embedding).
+  /** The nProbe=2 probe every single-query IVF oracle shares: the
+    * query's cosine to each centroid of `cent`, and its 2 best cells,
+    * ties to the LOWER cell.
     */
-  private def simIvfProbeTail(corpusSrc: String): String =
+  private val probeCtes: String =
     s"""qx AS (SELECT c.cell, unnest(c.ce) AS v,
        |         unnest(generate_series(1, len(c.ce))) AS i, q.qe AS qe
        |       FROM cent c, q),
        |qd AS (SELECT cell,
-       |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-       |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nc,
-       |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
+       |${cosFolds("v", "qe[i]", "nc", "nq")}
        |  FROM qx GROUP BY cell),
        |probes AS (SELECT cell FROM qd
        |  QUALIFY row_number() OVER (
-       |    ORDER BY dp / (sqrt(nc) * sqrt(nq)) DESC, cell ASC) <= 2),
-       |fx AS (SELECT e.vec_id, e.label, unnest(e.embedding) AS v,
+       |    ORDER BY dp / (sqrt(nc) * sqrt(nq)) DESC, cell ASC) <= 2)""".stripMargin
+
+  /** The exact-scoring tail over [[probeCtes]]: score only the rows
+    * `assign` places in the probed cells, top-10 by cosine. The
+    * two-level variants (whose `cent` / `assign` chains differ) reuse
+    * it. `corpusSrc` must expose (vec_id, label, embedding).
+    */
+  private def ivfScoreTail(corpusSrc: String): String =
+    s"""fx AS (SELECT e.vec_id, e.label, unnest(e.embedding) AS v,
        |         unnest(generate_series(1, len(e.embedding))) AS i, q.qe AS qe
        |       FROM $corpusSrc e
        |       JOIN assign a ON a.vec_id = e.vec_id
        |       JOIN probes p ON p.cell = a.cell, q),
-       |fd AS (SELECT vec_id, label,
-       |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-       |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-       |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
-       |  FROM fx GROUP BY vec_id, label)
+       |${topCosineSql("fd", "fx")}""".stripMargin
+
+  /** The single-query top-10 by exact cosine: CTE `fold` folds every
+    * (vec_id, label, v, i, qe) row of `src`, ties to the lower vec_id.
+    */
+  private def topCosineSql(fold: String, src: String): String =
+    s"""$fold AS (SELECT vec_id, label,
+       |${cosFolds("v", "qe[i]", "nv", "nq")}
+       |  FROM $src GROUP BY vec_id, label)
        |SELECT vec_id, label, dp / (sqrt(nv) * sqrt(nq)) AS cosine
-       |FROM fd ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
+       |FROM $fold ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
+
+  /** Per-row int8 scale of the corpus, max|x|/127 (1.0 for the zero
+    * vector, as q_quantize).
+    */
+  private val int8ScaleCte: String =
+    s"""sc AS (SELECT vec_id,
+       |    CASE WHEN list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) = 0
+       |         THEN 1.0
+       |         ELSE list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0
+       |    END AS scale
+       |  FROM corpus)""".stripMargin
+
+  /** PQ encoding as `Pq.train(iters = 0)` + `encode`: the 16 lowest-id
+    * corpus vectors (filtered by `where`, empty or ending in a space)
+    * seed every subspace's codebook; each vector's code in 8-dim
+    * subspace `j` is the argmin squared-L2 seed, ties to the LOWER code.
+    */
+  private def pqCodeCtes(where: String = ""): String =
+    s"""seeds AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
+       |          embedding AS se FROM corpus ${where}ORDER BY vec_id LIMIT 16),
+       |ex AS (SELECT e.vec_id, s.code, unnest(e.embedding) AS v,
+       |         unnest(generate_series(1, len(e.embedding))) AS i, s.se AS se
+       |       FROM corpus e CROSS JOIN seeds s),
+       |dist AS (SELECT vec_id, code, (i - 1) // 8 AS j,
+       |    SUM((CAST(v AS DOUBLE) - CAST(se[i] AS DOUBLE))
+       |      * (CAST(v AS DOUBLE) - CAST(se[i] AS DOUBLE)) ORDER BY i) AS d
+       |  FROM ex GROUP BY vec_id, code, j),
+       |codes AS (SELECT vec_id, j, code FROM dist
+       |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
+       |    ORDER BY d ASC, code ASC) = 1)""".stripMargin
 
   /** `q_sim_ivf`'s probe pipeline with the final scoring over the int8
     * DEQUANTIZED vectors (assignment and probes on the FULL-PRECISION
@@ -1010,39 +1030,8 @@ private[graft] object VectorGates {
     * `centPred` only).
     */
   private def ivfInt8OracleSql(centPred: String): String =
-    s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-       |corpus AS (SELECT vec_id, label, embedding FROM embeddings WHERE vec_id <> 0),
-       |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-       |         embedding AS ce FROM corpus WHERE $centPred
-       |         ORDER BY vec_id LIMIT 16),
-       |ax AS (SELECT e.vec_id, c.cell, unnest(e.embedding) AS v,
-       |         unnest(generate_series(1, len(e.embedding))) AS i, c.ce AS ce
-       |       FROM corpus e CROSS JOIN cent c),
-       |ad AS (SELECT vec_id, cell,
-       |    SUM(CAST(v AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS dp,
-       |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-       |    SUM(CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS nc
-       |  FROM ax GROUP BY vec_id, cell),
-       |assign AS (SELECT vec_id, cell FROM ad
-       |  QUALIFY row_number() OVER (PARTITION BY vec_id
-       |    ORDER BY dp / (sqrt(nv) * sqrt(nc)) DESC, cell DESC) = 1),
-       |qx AS (SELECT c.cell, unnest(c.ce) AS v,
-       |         unnest(generate_series(1, len(c.ce))) AS i, q.qe AS qe
-       |       FROM cent c, q),
-       |qd AS (SELECT cell,
-       |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-       |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nc,
-       |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
-       |  FROM qx GROUP BY cell),
-       |probes AS (SELECT cell FROM qd
-       |  QUALIFY row_number() OVER (
-       |    ORDER BY dp / (sqrt(nc) * sqrt(nq)) DESC, cell ASC) <= 2),
-       |sc AS (SELECT vec_id,
-       |    CASE WHEN list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) = 0
-       |         THEN 1.0
-       |         ELSE list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0
-       |    END AS scale
-       |  FROM corpus),
+    s"""${ivfHead(centPred)},
+       |$int8ScaleCte,
        |fx AS (SELECT e.vec_id, e.label,
        |         CAST(CAST(round(CAST(unnest(e.embedding) AS DOUBLE) / s.scale) AS TINYINT) AS DOUBLE) * s.scale AS dq,
        |         unnest(generate_series(1, len(e.embedding))) AS i, q.qe AS qe
@@ -1075,40 +1064,9 @@ private[graft] object VectorGates {
          |corpus AS (SELECT vec_id, label, embedding FROM embeddings WHERE vec_id <> 0),
          |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
          |         embedding AS ce FROM corpus WHERE $buildPred ORDER BY vec_id LIMIT 16),
-         |ax AS (SELECT e.vec_id, c.cell, unnest(e.embedding) AS v,
-         |         unnest(generate_series(1, len(e.embedding))) AS i, c.ce AS ce
-         |       FROM corpus e CROSS JOIN cent c),
-         |ad AS (SELECT vec_id, cell,
-         |    SUM(CAST(v AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-         |    SUM(CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS nc
-         |  FROM ax GROUP BY vec_id, cell),
-         |assign AS (SELECT vec_id, cell FROM ad
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id
-         |    ORDER BY dp / (sqrt(nv) * sqrt(nc)) DESC, cell DESC) = 1),
-         |qx AS (SELECT c.cell, unnest(c.ce) AS v,
-         |         unnest(generate_series(1, len(c.ce))) AS i, q.qe AS qe
-         |       FROM cent c, q),
-         |qd AS (SELECT cell,
-         |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nc,
-         |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
-         |  FROM qx GROUP BY cell),
-         |probes AS (SELECT cell FROM qd
-         |  QUALIFY row_number() OVER (
-         |    ORDER BY dp / (sqrt(nc) * sqrt(nq)) DESC, cell ASC) <= 2),
-         |seeds AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
-         |          embedding AS se FROM corpus WHERE $buildPred ORDER BY vec_id LIMIT 16),
-         |ex AS (SELECT e.vec_id, s.code, unnest(e.embedding) AS v,
-         |         unnest(generate_series(1, len(e.embedding))) AS i, s.se AS se
-         |       FROM corpus e CROSS JOIN seeds s),
-         |dist AS (SELECT vec_id, code, (i - 1) // 8 AS j,
-         |    SUM((CAST(v AS DOUBLE) - CAST(se[i] AS DOUBLE))
-         |      * (CAST(v AS DOUBLE) - CAST(se[i] AS DOUBLE)) ORDER BY i) AS d
-         |  FROM ex GROUP BY vec_id, code, j),
-         |codes AS (SELECT vec_id, j, code FROM dist
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-         |    ORDER BY d ASC, code ASC) = 1),
+         |${assignCtes()},
+         |$probeCtes,
+         |${pqCodeCtes(s"WHERE $buildPred ")},
          |qpx AS (SELECT s.code, unnest(s.se) AS cv,
          |         unnest(generate_series(1, len(s.se))) AS i, q.qe AS qe
          |       FROM seeds s, q),
@@ -1127,13 +1085,32 @@ private[graft] object VectorGates {
          |fx AS (SELECT e.vec_id, e.label, unnest(e.embedding) AS v,
          |         unnest(generate_series(1, len(e.embedding))) AS i, q.qe AS qe
          |       FROM corpus e JOIN surv s ON s.vec_id = e.vec_id, q),
-         |fd AS (SELECT vec_id, label,
-         |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-         |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
-         |  FROM fx GROUP BY vec_id, label)
-         |SELECT vec_id, label, dp / (sqrt(nv) * sqrt(nq)) AS cosine
-         |FROM fd ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
+         |${topCosineSql("fd", "fx")}""".stripMargin
+
+  /** Each query's top-5 rows of `fd` by exact cosine, ties to the lower
+    * vec_id: the result of every batch-IVF oracle.
+    */
+  private def batchTop5Sql(fd: String): String =
+    s"""SELECT qid AS query_id, vec_id, label,
+       |       dp / (sqrt(nv) * sqrt(nq)) AS cosine
+       |FROM $fd
+       |QUALIFY row_number() OVER (PARTITION BY qid
+       |  ORDER BY dp / (sqrt(nv) * sqrt(nq)) DESC, vec_id ASC) <= 5
+       |ORDER BY query_id, cosine DESC, vec_id""".stripMargin
+
+  /** The embedding dimensions `dims(i)` and every element quantized
+    * as x = floor(v · 2^20) in `q(vec_id, i, x)`: the power-of-two
+    * multiply is IEEE-exact, so the integers (and every sum of them)
+    * are identical in both engines.
+    */
+  private val quantizedDimsCtes: String =
+    s"""dims AS (SELECT DISTINCT
+       |    unnest(generate_series(1, len(embedding))) AS i
+       |  FROM embeddings),
+       |q AS (SELECT e.vec_id, d.i,
+       |    CAST(FLOOR(CAST(e.embedding[d.i] AS DOUBLE) * 1048576.0)
+       |      AS BIGINT) AS x
+       |  FROM embeddings e CROSS JOIN dims d)""".stripMargin
 
   /** DuckDB sign-band signature `b` over `bitsPerBand` coordinates of a
     * list column (mirror of [[Similarity.signBands]]).
@@ -1149,13 +1126,7 @@ private[graft] object VectorGates {
          |ex AS (SELECT e.vec_id, e.label, unnest(e.embedding) AS v,
          |         unnest(generate_series(1, len(e.embedding))) AS i, q.qe AS qe
          |       FROM embeddings e, q WHERE e.vec_id <> 0),
-         |dots AS (SELECT vec_id, label,
-         |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-         |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
-         |  FROM ex GROUP BY vec_id, label)
-         |SELECT vec_id, label, dp / (sqrt(nv) * sqrt(nq)) AS cosine
-         |FROM dots ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin),
+         |${topCosineSql("dots", "ex")}""".stripMargin),
     Gate("q_sim_lsh", qSimLsh, {
       val orChain = (0 until 16)
         .map(b => s"(${bandSql("e.embedding", b, 4)}) = (${bandSql("q.qe", b, 4)})")
@@ -1165,13 +1136,7 @@ private[graft] object VectorGates {
          |         unnest(generate_series(1, len(e.embedding))) AS i, q.qe AS qe
          |       FROM embeddings e, q
          |       WHERE e.vec_id <> 0 AND ($orChain)),
-         |dots AS (SELECT vec_id, label,
-         |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-         |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
-         |  FROM ex GROUP BY vec_id, label)
-         |SELECT vec_id, label, dp / (sqrt(nv) * sqrt(nq)) AS cosine
-         |FROM dots ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
+         |${topCosineSql("dots", "ex")}""".stripMargin
     }),
     Gate("q_sim_ivf", qSimIvf, simIvfOracleSql(centPred = "TRUE")),
     // the appended-index probe: centroids seed from the EVEN half (the
@@ -1193,7 +1158,8 @@ private[graft] object VectorGates {
          |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
          |corpusl AS (SELECT vec_id, label, embedding FROM embeddings
          |            WHERE vec_id <> 0),
-         |${simIvfProbeTail("corpusl")}""".stripMargin),
+         |$probeCtes,
+         |${ivfScoreTail("corpusl")}""".stripMargin),
     Gate("q_ivf_int8", qIvfInt8, ivfInt8OracleSql(centPred = "TRUE")),
     // the int8 append row: centroids frozen at the even half, every
     // appended row's quantization re-derived — shares the pipeline SQL
@@ -1203,38 +1169,8 @@ private[graft] object VectorGates {
       // q_ivf_int8's dequantized scoring in q_sim_ivf_batch's query-set
       // shape: per-query probes on full-precision centroids, final
       // cosine over dq = CAST(round(v/scale) AS TINYINT)·scale
-      s"""WITH qs AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 3),
-         |corpus AS (SELECT vec_id, label, embedding FROM embeddings WHERE vec_id >= 3),
-         |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-         |         embedding AS ce FROM corpus ORDER BY vec_id LIMIT 16),
-         |ax AS (SELECT e.vec_id, c.cell, unnest(e.embedding) AS v,
-         |         unnest(generate_series(1, len(e.embedding))) AS i, c.ce AS ce
-         |       FROM corpus e CROSS JOIN cent c),
-         |ad AS (SELECT vec_id, cell,
-         |    SUM(CAST(v AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-         |    SUM(CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS nc
-         |  FROM ax GROUP BY vec_id, cell),
-         |assign AS (SELECT vec_id, cell FROM ad
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id
-         |    ORDER BY dp / (sqrt(nv) * sqrt(nc)) DESC, cell DESC) = 1),
-         |qx AS (SELECT q.qid, c.cell, unnest(c.ce) AS v,
-         |         unnest(generate_series(1, len(c.ce))) AS i, q.qe AS qe
-         |       FROM cent c CROSS JOIN qs q),
-         |qd AS (SELECT qid, cell,
-         |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nc,
-         |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
-         |  FROM qx GROUP BY qid, cell),
-         |probes AS (SELECT qid, cell FROM qd
-         |  QUALIFY row_number() OVER (PARTITION BY qid
-         |    ORDER BY dp / (sqrt(nc) * sqrt(nq)) DESC, cell ASC) <= 2),
-         |sc AS (SELECT vec_id,
-         |    CASE WHEN list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) = 0
-         |         THEN 1.0
-         |         ELSE list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127.0
-         |    END AS scale
-         |  FROM corpus),
+      s"""WITH ${simIvfBatchHeadFor("vec_id < 3", "vec_id >= 3")},
+         |$int8ScaleCte,
          |fx AS (SELECT q.qid, e.vec_id, e.label,
          |         CAST(CAST(round(CAST(unnest(e.embedding) AS DOUBLE) / s.scale) AS TINYINT) AS DOUBLE) * s.scale AS dq,
          |         unnest(generate_series(1, len(e.embedding))) AS i, q.qe AS qe
@@ -1248,21 +1184,11 @@ private[graft] object VectorGates {
          |    SUM(dq * dq ORDER BY i) AS nv,
          |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
          |  FROM fx GROUP BY qid, vec_id, label)
-         |SELECT qid AS query_id, vec_id, label,
-         |       dp / (sqrt(nv) * sqrt(nq)) AS cosine
-         |FROM fd
-         |QUALIFY row_number() OVER (PARTITION BY qid
-         |  ORDER BY dp / (sqrt(nv) * sqrt(nq)) DESC, vec_id ASC) <= 5
-         |ORDER BY query_id, cosine DESC, vec_id""".stripMargin),
+         |${batchTop5Sql("fd")}""".stripMargin),
     Gate("q_sim_ivf_batch", qSimIvfBatch,
       // the batch form of q_sim_ivf (see simIvfBatchCtes)
       s"""WITH $simIvfBatchCtes
-         |SELECT qid AS query_id, vec_id, label,
-         |       dp / (sqrt(nv) * sqrt(nq)) AS cosine
-         |FROM fd
-         |QUALIFY row_number() OVER (PARTITION BY qid
-         |  ORDER BY dp / (sqrt(nv) * sqrt(nq)) DESC, vec_id ASC) <= 5
-         |ORDER BY query_id, cosine DESC, vec_id""".stripMargin),
+         |${batchTop5Sql("fd")}""".stripMargin),
     Gate("q_ann_recall", qAnnRecall,
       // per-query intersection of the nProbe=2 IVF top-5 (the shared
       // batch chain) with a BRUTE-FORCE exact top-5 derived
@@ -1284,20 +1210,11 @@ private[graft] object VectorGates {
          |centf AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
          |         embedding AS ce FROM corpus ORDER BY vec_id
          |         LIMIT (SELECT COUNT(*) FROM cent)),
-         |zax AS (SELECT e.vec_id, c.cell, unnest(e.embedding) AS v,
-         |         unnest(generate_series(1, len(e.embedding))) AS i, c.ce AS ce
-         |       FROM corpus e CROSS JOIN centf c),
-         |zad AS (SELECT vec_id, cell,
-         |    SUM(CAST(v AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-         |    SUM(CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS nc
-         |  FROM zax GROUP BY vec_id, cell),
-         |zassign AS (SELECT vec_id, cell FROM zad
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id
-         |    ORDER BY dp / (sqrt(nv) * sqrt(nc)) DESC, cell DESC) = 1),
-         |${simIvfBatchProbeCtes("corpusl")},
-         |${simIvfBatchProbeCtes("corpusl", p = "z", centSrc = "centf",
-            assignSrc = "zassign")},
+         |${assignCtes("corpus e CROSS JOIN centf c", "z")},
+         |${batchProbeCtes()},
+         |${batchScoreCtes("corpusl")},
+         |${batchProbeCtes("z", "centf")},
+         |${batchScoreCtes("corpusl", "z", "zassign")},
          |approx AS (SELECT qid, vec_id FROM fd
          |  QUALIFY row_number() OVER (PARTITION BY qid
          |    ORDER BY dp / (sqrt(nv) * sqrt(nq)) DESC, vec_id ASC) <= 5),
@@ -1325,18 +1242,7 @@ private[graft] object VectorGates {
       // to Spark's array-order aggregate / left-assoc reduce.
       s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
          |corpus AS (SELECT vec_id, label, embedding FROM embeddings WHERE vec_id <> 0),
-         |seeds AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
-         |          embedding AS se FROM corpus ORDER BY vec_id LIMIT 16),
-         |ex AS (SELECT e.vec_id, s.code, unnest(e.embedding) AS v,
-         |         unnest(generate_series(1, len(e.embedding))) AS i, s.se AS se
-         |       FROM corpus e CROSS JOIN seeds s),
-         |dist AS (SELECT vec_id, code, (i - 1) // 8 AS j,
-         |    SUM((CAST(v AS DOUBLE) - CAST(se[i] AS DOUBLE))
-         |      * (CAST(v AS DOUBLE) - CAST(se[i] AS DOUBLE)) ORDER BY i) AS d
-         |  FROM ex GROUP BY vec_id, code, j),
-         |codes AS (SELECT vec_id, j, code FROM dist
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-         |    ORDER BY d ASC, code ASC) = 1),
+         |${pqCodeCtes()},
          |qx AS (SELECT s.code, unnest(s.se) AS cv,
          |         unnest(generate_series(1, len(s.se))) AS i, q.qe AS qe
          |       FROM seeds s, q),
@@ -1363,44 +1269,8 @@ private[graft] object VectorGates {
       // top-30 ADC cut (ties to the lower vec_id) inside the probed
       // cells, per-query exact-cosine rerank top-5 (ties to the lower
       // vec_id). All folds element-order SUMs.
-      s"""WITH qs AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 3),
-         |corpus AS (SELECT vec_id, label, embedding FROM embeddings WHERE vec_id >= 3),
-         |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
-         |         embedding AS ce FROM corpus ORDER BY vec_id LIMIT 16),
-         |ax AS (SELECT e.vec_id, c.cell, unnest(e.embedding) AS v,
-         |         unnest(generate_series(1, len(e.embedding))) AS i, c.ce AS ce
-         |       FROM corpus e CROSS JOIN cent c),
-         |ad AS (SELECT vec_id, cell,
-         |    SUM(CAST(v AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-         |    SUM(CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS nc
-         |  FROM ax GROUP BY vec_id, cell),
-         |assign AS (SELECT vec_id, cell FROM ad
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id
-         |    ORDER BY dp / (sqrt(nv) * sqrt(nc)) DESC, cell DESC) = 1),
-         |qx AS (SELECT q.qid, c.cell, unnest(c.ce) AS v,
-         |         unnest(generate_series(1, len(c.ce))) AS i, q.qe AS qe
-         |       FROM cent c CROSS JOIN qs q),
-         |qd AS (SELECT qid, cell,
-         |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nc,
-         |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
-         |  FROM qx GROUP BY qid, cell),
-         |probes AS (SELECT qid, cell FROM qd
-         |  QUALIFY row_number() OVER (PARTITION BY qid
-         |    ORDER BY dp / (sqrt(nc) * sqrt(nq)) DESC, cell ASC) <= 2),
-         |seeds AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code,
-         |          embedding AS se FROM corpus ORDER BY vec_id LIMIT 16),
-         |ex AS (SELECT e.vec_id, s.code, unnest(e.embedding) AS v,
-         |         unnest(generate_series(1, len(e.embedding))) AS i, s.se AS se
-         |       FROM corpus e CROSS JOIN seeds s),
-         |dist AS (SELECT vec_id, code, (i - 1) // 8 AS j,
-         |    SUM((CAST(v AS DOUBLE) - CAST(se[i] AS DOUBLE))
-         |      * (CAST(v AS DOUBLE) - CAST(se[i] AS DOUBLE)) ORDER BY i) AS d
-         |  FROM ex GROUP BY vec_id, code, j),
-         |codes AS (SELECT vec_id, j, code FROM dist
-         |  QUALIFY row_number() OVER (PARTITION BY vec_id, j
-         |    ORDER BY d ASC, code ASC) = 1),
+      s"""WITH ${simIvfBatchHeadFor("vec_id < 3", "vec_id >= 3")},
+         |${pqCodeCtes()},
          |qpx AS (SELECT q.qid, s.code, unnest(s.se) AS cv,
          |         unnest(generate_series(1, len(s.se))) AS i, q.qe AS qe
          |       FROM seeds s CROSS JOIN qs q),
@@ -1422,16 +1292,9 @@ private[graft] object VectorGates {
          |       JOIN surv s ON s.vec_id = e.vec_id
          |       JOIN qs q ON q.qid = s.qid),
          |fdb AS (SELECT qid, vec_id, label,
-         |    SUM(CAST(v AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-         |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
+         |${cosFolds("v", "qe[i]", "nv", "nq")}
          |  FROM fx GROUP BY qid, vec_id, label)
-         |SELECT qid AS query_id, vec_id, label,
-         |       dp / (sqrt(nv) * sqrt(nq)) AS cosine
-         |FROM fdb
-         |QUALIFY row_number() OVER (PARTITION BY qid
-         |  ORDER BY dp / (sqrt(nv) * sqrt(nq)) DESC, vec_id ASC) <= 5
-         |ORDER BY query_id, cosine DESC, vec_id""".stripMargin),
+         |${batchTop5Sql("fdb")}""".stripMargin),
     Gate("q_quantize", qQuantize,
       // round() is half-away-from-zero in both engines, and the TINYINT
       // cast sees an exactly-integral double, so truncation-vs-rounding
@@ -1463,8 +1326,8 @@ private[graft] object VectorGates {
          |batch AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 1),
          |cent AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell,
          |         embedding AS ce FROM corpus ORDER BY vec_id LIMIT 16),
-         |${semAssignCtes("corpus", "")},
-         |${semAssignCtes("batch", "b")},
+         |${assignCtes(mat = true)},
+         |${assignCtes("batch e CROSS JOIN cent c", "b", mat = true)},
          |${semPairCtes("assign", "corpus", "bassign", "batch", "TRUE")}
          |SELECT cell, id_a, id_b, cosine FROM pairs
          |ORDER BY cell, id_a, id_b""".stripMargin),
@@ -1535,9 +1398,7 @@ private[graft] object VectorGates {
          |         unnest(generate_series(1, len(e.embedding))) AS i, c.ce AS ce
          |       FROM batch e CROSS JOIN l1cent c),
          |bl1d AS MATERIALIZED (SELECT vec_id, g,
-         |    SUM(CAST(v AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-         |    SUM(CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS nc
+         |${cosFolds("v", "ce[i]", "nv", "nc")}
          |  FROM bl1x GROUP BY vec_id, g),
          |bl1assign AS MATERIALIZED (SELECT vec_id, g FROM bl1d
          |  QUALIFY row_number() OVER (PARTITION BY vec_id
@@ -1546,9 +1407,7 @@ private[graft] object VectorGates {
          |         unnest(generate_series(1, len(e.embedding))) AS i, c.ce AS ce
          |       FROM batch e CROSS JOIN cent c),
          |bad AS MATERIALIZED (SELECT vec_id, cell, g,
-         |    SUM(CAST(v AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(v AS DOUBLE) * CAST(v AS DOUBLE) ORDER BY i) AS nv,
-         |    SUM(CAST(ce[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE) ORDER BY i) AS nc
+         |${cosFolds("v", "ce[i]", "nv", "nc")}
          |  FROM bax GROUP BY vec_id, cell, g),
          |bassign AS (SELECT b.vec_id, b.cell
          |  FROM bad b JOIN bl1assign a ON a.vec_id = b.vec_id
@@ -1572,9 +1431,7 @@ private[graft] object VectorGates {
          |       FROM cand c JOIN embeddings ea ON ea.vec_id = c.id_a
          |       JOIN embeddings eb ON eb.vec_id = c.id_b),
          |dots AS (SELECT id_a, id_b,
-         |    SUM(CAST(va AS DOUBLE) * CAST(vb AS DOUBLE) ORDER BY i) AS dp,
-         |    SUM(CAST(va AS DOUBLE) * CAST(va AS DOUBLE) ORDER BY i) AS na,
-         |    SUM(CAST(vb AS DOUBLE) * CAST(vb AS DOUBLE) ORDER BY i) AS nb
+         |${cosFolds("va", "vb", "na", "nb")}
          |  FROM px GROUP BY id_a, id_b)
          |SELECT id_a, id_b, dp / (sqrt(na) * sqrt(nb)) AS cosine FROM dots
          |WHERE dp / (sqrt(na) * sqrt(nb)) >= 0.45 ORDER BY id_a, id_b""".stripMargin
@@ -1631,13 +1488,7 @@ private[graft] object VectorGates {
       // verdicts (Σλ == trace, Rayleigh == λ, projected variance == λ)
       // pinned TRUE — any eigensolve/basis/projection defect flips one
       // and the row hash-fails
-      s"""WITH dims AS (SELECT DISTINCT
-         |    unnest(generate_series(1, len(embedding))) AS i
-         |  FROM embeddings),
-         |q AS (SELECT e.vec_id, d.i,
-         |    CAST(FLOOR(CAST(e.embedding[d.i] AS DOUBLE) * 1048576.0)
-         |      AS BIGINT) AS x
-         |  FROM embeddings e CROSS JOIN dims d),
+      s"""WITH $quantizedDimsCtes,
          |s AS (SELECT i, COUNT(*) AS n,
          |    CAST(SUM(x) AS DECIMAL(38,0)) AS s,
          |    CAST(SUM(CAST(x AS DECIMAL(38,0)) * x)
@@ -1653,13 +1504,7 @@ private[graft] object VectorGates {
       // floor(x * 2^20): the power-of-two multiply is IEEE-exact, so
       // the quantized integers (and every sum of them) are identical
       // in both engines
-      s"""WITH dims AS (SELECT DISTINCT
-         |    unnest(generate_series(1, len(embedding))) AS i
-         |  FROM embeddings),
-         |q AS (SELECT e.vec_id, d.i,
-         |    CAST(FLOOR(CAST(e.embedding[d.i] AS DOUBLE) * 1048576.0)
-         |      AS BIGINT) AS x
-         |  FROM embeddings e CROSS JOIN dims d),
+      s"""WITH $quantizedDimsCtes,
          |s AS (SELECT i, CAST(SUM(x) AS DECIMAL(38,0)) AS s
          |  FROM q GROUP BY 1),
          |m AS (SELECT a.i AS i, b.i AS j,
