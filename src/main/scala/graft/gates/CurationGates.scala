@@ -750,20 +750,58 @@ private[graft] object CurationGates {
        |  SELECT doc_id, lang, quality, $redact AS text
        |  FROM qual WHERE quality >= 0.3),
        |${nearDupCtesFrom("scrub")},
-       |pairs AS (
-       |  SELECT i.id_a, i.id_b
-       |  FROM inter i JOIN sz za ON za.doc_id = i.id_a
-       |  JOIN sz zb ON zb.doc_id = i.id_b
-       |  WHERE CAST(i.n_inter AS DOUBLE) / (za.sz + zb.sz - i.n_inter) >= 0.8),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |          UNION SELECT id_b, id_a FROM pairs),
-       |reach AS (
-       |  SELECT DISTINCT src AS id, src AS r FROM edges
-       |  UNION
-       |  SELECT rc.id, e.dst FROM reach rc JOIN edges e ON e.src = rc.r),
+       |$nearReachCtes,
        |clusters AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
        |dropped AS (SELECT id AS doc_id FROM clusters WHERE id <> cluster_id)""".stripMargin
   }
+
+  /** The fixed language mix: target fractions `tgt(lang, frac)`. */
+  private val mixTgtCte: String =
+    s"""tgt(lang, frac) AS (VALUES
+       |  ('de', CAST(0.15 AS DOUBLE)), ('en', CAST(0.5 AS DOUBLE)),
+       |  ('es', CAST(0.1 AS DOUBLE)), ('fr', CAST(0.2 AS DOUBLE)),
+       |  ('zh', CAST(0.05 AS DOUBLE)))""".stripMargin
+
+  /** Per-doc token counts `t`, per-language available tokens `avail`
+    * and [[mixTgtCte]].
+    */
+  private val mixAvailCtes: String =
+    s"""t AS (SELECT doc_id, lang,
+       |  CAST(len($toksSql) AS BIGINT) AS n_tokens FROM documents),
+       |avail AS (SELECT lang, SUM(n_tokens) AS m FROM t GROUP BY lang),
+       |$mixTgtCte""".stripMargin
+
+  /** The realised keep set of a per-language `plan(lang, rate)`: each
+    * doc of `t` whose 48-bit bucket falls under its language's rate.
+    */
+  private lazy val planSampleSql: String =
+    s"""SELECT t.doc_id, t.lang, t.n_tokens
+       |FROM t JOIN plan p ON p.lang = t.lang
+       |WHERE CAST($bucket48Sql AS DOUBLE) <
+       |  (p.rate * 1.0) * 281474976710656.0
+       |ORDER BY t.doc_id""".stripMargin
+
+  /** The α-derived keep set over the docs of `src` at token `budget`:
+    * dyadic sqrt-chain powers, the domain-ordered Σ fold, the clamped
+    * rate and [[planSampleSql]].
+    */
+  private def tempSampleSql(src: String, budget: Long): String =
+    s"""t AS (SELECT doc_id, lang,
+       |  CAST(len($toksSql) AS BIGINT) AS n_tokens FROM $src),
+       |avail AS (SELECT lang, CAST(SUM(n_tokens) AS BIGINT) AS m
+       |  FROM t GROUP BY lang),
+       |pw AS (SELECT lang, m,
+       |  ${dyadicPowSql("CAST(m AS DOUBLE)", mixAlpha)} AS pw
+       |  FROM avail),
+       |tot AS (SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+       |    list(pw ORDER BY lang)), (a, x) -> a + x) AS total FROM pw),
+       |plan AS (SELECT w.lang,
+       |  CASE WHEN w.m = 0 THEN 0.0
+       |       ELSE least(1.0,
+       |         ((w.pw / t2.total) * CAST($budget AS DOUBLE))
+       |           / CAST(w.m AS DOUBLE)) END AS rate
+       |  FROM pw w CROSS JOIN tot t2)
+       |$planSampleSql""".stripMargin
 
   /** The 48-bit md5 hash-fraction numerator of `doc_id` — the DuckDB
     * mirror of [[graft.pipeline.Sampling.hashBucket48]], shared by
@@ -1140,10 +1178,7 @@ private[graft] object CurationGates {
       s"""WITH t AS (SELECT doc_id, lang,
          |  CAST(len($toksSql) AS BIGINT) AS n FROM documents),
          |avail AS (SELECT lang, SUM(n) AS m FROM t GROUP BY lang),
-         |tgt(lang, frac) AS (VALUES
-         |  ('de', CAST(0.15 AS DOUBLE)), ('en', CAST(0.5 AS DOUBLE)),
-         |  ('es', CAST(0.1 AS DOUBLE)), ('fr', CAST(0.2 AS DOUBLE)),
-         |  ('zh', CAST(0.05 AS DOUBLE)))
+         |$mixTgtCte
          |SELECT COALESCE(a.lang, g.lang) AS lang,
          |  CAST(COALESCE(a.m, 0) AS BIGINT) AS avail_tokens,
          |  COALESCE(g.frac, 0.0) * CAST(30000 AS DOUBLE)
@@ -1159,24 +1194,14 @@ private[graft] object CurationGates {
     // the realised keep set: per-doc 48-bit bucket vs the domain rate,
     // same association order as weightedHashSample with c = 1
     Gate("q_mix_domains", qMixDomains,
-      s"""WITH t AS (SELECT doc_id, lang,
-         |  CAST(len($toksSql) AS BIGINT) AS n_tokens FROM documents),
-         |avail AS (SELECT lang, SUM(n_tokens) AS m FROM t GROUP BY lang),
-         |tgt(lang, frac) AS (VALUES
-         |  ('de', CAST(0.15 AS DOUBLE)), ('en', CAST(0.5 AS DOUBLE)),
-         |  ('es', CAST(0.1 AS DOUBLE)), ('fr', CAST(0.2 AS DOUBLE)),
-         |  ('zh', CAST(0.05 AS DOUBLE))),
+      s"""WITH $mixAvailCtes,
          |plan AS (SELECT a.lang,
          |  CASE WHEN a.m = 0 THEN 0.0
          |       ELSE least(1.0,
          |         (COALESCE(g.frac, 0.0) * CAST(30000 AS DOUBLE))
          |           / CAST(a.m AS DOUBLE)) END AS rate
          |  FROM avail a LEFT JOIN tgt g ON a.lang = g.lang)
-         |SELECT t.doc_id, t.lang, t.n_tokens
-         |FROM t JOIN plan p ON p.lang = t.lang
-         |WHERE CAST($bucket48Sql AS DOUBLE) <
-         |  (p.rate * 1.0) * 281474976710656.0
-         |ORDER BY t.doc_id""".stripMargin),
+         |$planSampleSql""".stripMargin),
     // the α-derived plan: dyadic sqrt-chain power, domain-ordered Σ
     // fold, then the same divide/multiply/min chain as q_mix_plan —
     // every double engine-exact, no transcendental anywhere
@@ -1204,13 +1229,7 @@ private[graft] object CurationGates {
     // the UNCLAMPED rate realised as copies: floor(rate) full copies
     // per doc + one (key,copy)-salted fractional threshold decision
     Gate("q_mix_upsample", qMixUpsample,
-      s"""WITH t AS (SELECT doc_id, lang,
-         |  CAST(len($toksSql) AS BIGINT) AS n_tokens FROM documents),
-         |avail AS (SELECT lang, SUM(n_tokens) AS m FROM t GROUP BY lang),
-         |tgt(lang, frac) AS (VALUES
-         |  ('de', CAST(0.15 AS DOUBLE)), ('en', CAST(0.5 AS DOUBLE)),
-         |  ('es', CAST(0.1 AS DOUBLE)), ('fr', CAST(0.2 AS DOUBLE)),
-         |  ('zh', CAST(0.05 AS DOUBLE))),
+      s"""WITH $mixAvailCtes,
          |plan AS (SELECT a.lang,
          |  CASE WHEN a.m = 0 THEN 0.0
          |       ELSE (COALESCE(g.frac, 0.0) * CAST($mixBudget AS DOUBLE))
@@ -1242,79 +1261,18 @@ private[graft] object CurationGates {
       s"""$curationCtes,
          |kept AS (SELECT doc_id, lang, text FROM scrub
          |         WHERE $curationKeepPred),
-         |ta AS (SELECT token FROM (SELECT unnest($toksSql)
-         |    AS token FROM kept)
-         |  WHERE token <> ''),
-         |tb AS (SELECT token FROM (SELECT unnest($toksSql)
-         |    AS token FROM documents)
-         |  WHERE token <> ''),
-         |ca AS (SELECT token, COUNT(*) AS c_a FROM ta GROUP BY 1),
-         |cb AS (SELECT token, COUNT(*) AS c_b FROM tb GROUP BY 1),
-         |j AS (SELECT token, COALESCE(c_a, 0) AS c_a,
-         |    COALESCE(c_b, 0) AS c_b
-         |  FROM ca FULL OUTER JOIN cb USING (token)),
-         |tot AS (SELECT CAST(SUM(c_a) AS BIGINT) AS na,
-         |    CAST(SUM(c_b) AS BIGINT) AS nb, COUNT(*) AS v FROM j),
-         |p AS (SELECT token, c_a, c_b,
-         |    CAST(c_a + 1 AS DOUBLE)
-         |      / CAST((SELECT na FROM tot) + (SELECT v FROM tot)
-         |        AS DOUBLE) AS p_a,
-         |    CAST(c_b + 1 AS DOUBLE)
-         |      / CAST((SELECT nb FROM tot) + (SELECT v FROM tot)
-         |        AS DOUBLE) AS p_b
-         |  FROM j)
-         |SELECT token, c_a, c_b, p_a, p_b,
-         |  0.5 * abs(p_a - p_b) AS tv_term
-         |FROM p ORDER BY token""".stripMargin),
+         |${tokenDivergenceSql("kept", "documents")}""".stripMargin),
     // curation → α-derived rates over the SURVIVORS' mass → per-doc
     // 48-bit threshold, one chain
     Gate("q_curation_temp", qCurationTemp,
       s"""$curationCtes,
          |kept AS (SELECT doc_id, lang, text FROM scrub
          |         WHERE $curationKeepPred),
-         |t AS (SELECT doc_id, lang,
-         |  CAST(len($toksSql) AS BIGINT) AS n_tokens FROM kept),
-         |avail AS (SELECT lang, CAST(SUM(n_tokens) AS BIGINT) AS m
-         |  FROM t GROUP BY lang),
-         |pw AS (SELECT lang, m,
-         |  ${dyadicPowSql("CAST(m AS DOUBLE)", mixAlpha)} AS pw
-         |  FROM avail),
-         |tot AS (SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |    list(pw ORDER BY lang)), (a, x) -> a + x) AS total FROM pw),
-         |plan AS (SELECT w.lang,
-         |  CASE WHEN w.m = 0 THEN 0.0
-         |       ELSE least(1.0,
-         |         ((w.pw / t2.total) * CAST($curTempBudget AS DOUBLE))
-         |           / CAST(w.m AS DOUBLE)) END AS rate
-         |  FROM pw w CROSS JOIN tot t2)
-         |SELECT t.doc_id, t.lang, t.n_tokens
-         |FROM t JOIN plan p ON p.lang = t.lang
-         |WHERE CAST($bucket48Sql AS DOUBLE) <
-         |  (p.rate * 1.0) * 281474976710656.0
-         |ORDER BY t.doc_id""".stripMargin),
+         |${tempSampleSql("kept", curTempBudget)}""".stripMargin),
     // the realised keep set: the α-derived rate joined per doc, then
     // the 48-bit bucket threshold — q_mix_domains' decision chain
     Gate("q_mix_temp_sample", qMixTempSample,
-      s"""WITH t AS (SELECT doc_id, lang,
-         |  CAST(len($toksSql) AS BIGINT) AS n_tokens FROM documents),
-         |avail AS (SELECT lang, CAST(SUM(n_tokens) AS BIGINT) AS m
-         |  FROM t GROUP BY lang),
-         |pw AS (SELECT lang, m,
-         |  ${dyadicPowSql("CAST(m AS DOUBLE)", mixAlpha)} AS pw
-         |  FROM avail),
-         |tot AS (SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |    list(pw ORDER BY lang)), (a, x) -> a + x) AS total FROM pw),
-         |plan AS (SELECT w.lang,
-         |  CASE WHEN w.m = 0 THEN 0.0
-         |       ELSE least(1.0,
-         |         ((w.pw / t2.total) * CAST($mixBudget AS DOUBLE))
-         |           / CAST(w.m AS DOUBLE)) END AS rate
-         |  FROM pw w CROSS JOIN tot t2)
-         |SELECT t.doc_id, t.lang, t.n_tokens
-         |FROM t JOIN plan p ON p.lang = t.lang
-         |WHERE CAST($bucket48Sql AS DOUBLE) <
-         |  (p.rate * 1.0) * 281474976710656.0
-         |ORDER BY t.doc_id""".stripMargin),
+      s"""WITH ${tempSampleSql("documents", mixBudget)}""".stripMargin),
     Gate("q_curation_weighted", qCurationWeighted,
       // curate → weight-sample by token budget → pack, one chain: the
       // weighted keep decision applies q_sample_weighted's exact

@@ -429,6 +429,39 @@ private[graft] object DedupGates {
        |  CAST(SUM(CASE WHEN sb >= 0 THEN pow(2, b) ELSE 0 END) AS BIGINT) AS simhash
        |FROM ssum GROUP BY doc_id)""".stripMargin
 
+  /** The span removal both substring oracles end in: the spans
+    * `rem(doc_id, pos, e)` merge into islands, and each doc of `src` is
+    * reassembled, in order, from the gaps between its islands.
+    */
+  private def removeSpansSql(src: String): String =
+    s"""isl AS (SELECT doc_id, pos, e,
+       |    CASE WHEN pos > COALESCE(MAX(e) OVER (PARTITION BY doc_id
+       |      ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND
+       |      1 PRECEDING), 0) THEN 1 ELSE 0 END AS ni
+       |  FROM rem),
+       |iv AS (SELECT doc_id, MIN(pos) AS s, MAX(e) AS e
+       |       FROM (SELECT *, SUM(ni) OVER (PARTITION BY doc_id
+       |               ORDER BY pos) AS island FROM isl)
+       |       GROUP BY doc_id, island),
+       |seg AS (
+       |  SELECT doc_id, COALESCE(LAG(e) OVER (PARTITION BY doc_id
+       |           ORDER BY s), 1) AS ks, s AS ke
+       |  FROM iv
+       |  UNION ALL
+       |  SELECT iv.doc_id, MAX(iv.e), MIN(length(d.text)) + 1
+       |  FROM iv JOIN $src d USING (doc_id) GROUP BY iv.doc_id),
+       |cleaned AS (
+       |  SELECT seg.doc_id,
+       |         string_agg(substring(d.text, ks, ke - ks), ''
+       |           ORDER BY ks) AS ct
+       |  FROM seg JOIN $src d USING (doc_id)
+       |  GROUP BY seg.doc_id)
+       |SELECT d.doc_id, COALESCE(c.ct, d.text) AS clean_text,
+       |       CAST(length(d.text) - length(COALESCE(c.ct, d.text))
+       |         AS BIGINT) AS n_removed_chars
+       |FROM $src d LEFT JOIN cleaned c ON c.doc_id = d.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
   val gates: Seq[Gate] = Seq(
     Gate("q_dedup_exact", qDedupExact,
       s"""SELECT md5($normSql) AS content_hash, COUNT(*) AS n_copies,
@@ -495,7 +528,7 @@ private[graft] object DedupGates {
     // doc's group alive so it cleans to '' rather than COALESCE-ing
     // back to the original.
     Gate("q_substring_dedup", qSubstringDedup,
-      """WITH occ AS (
+      s"""WITH occ AS (
         |  SELECT doc_id, CAST(p AS INTEGER) AS pos,
         |         md5(substring(text, CAST(p AS INTEGER), 40)) AS g
         |  FROM documents,
@@ -507,38 +540,12 @@ private[graft] object DedupGates {
         |       FROM occ),
         |rem AS (SELECT doc_id, pos, pos + 40 AS e FROM mk
         |        WHERE c > 1 AND rn > 1),
-        |isl AS (SELECT doc_id, pos, e,
-        |    CASE WHEN pos > COALESCE(MAX(e) OVER (PARTITION BY doc_id
-        |      ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |      1 PRECEDING), 0) THEN 1 ELSE 0 END AS ni
-        |  FROM rem),
-        |iv AS (SELECT doc_id, MIN(pos) AS s, MAX(e) AS e
-        |       FROM (SELECT *, SUM(ni) OVER (PARTITION BY doc_id
-        |               ORDER BY pos) AS island FROM isl)
-        |       GROUP BY doc_id, island),
-        |seg AS (
-        |  SELECT doc_id, COALESCE(LAG(e) OVER (PARTITION BY doc_id
-        |           ORDER BY s), 1) AS ks, s AS ke
-        |  FROM iv
-        |  UNION ALL
-        |  SELECT iv.doc_id, MAX(iv.e), MIN(length(d.text)) + 1
-        |  FROM iv JOIN documents d USING (doc_id) GROUP BY iv.doc_id),
-        |cleaned AS (
-        |  SELECT seg.doc_id,
-        |         string_agg(substring(d.text, ks, ke - ks), ''
-        |           ORDER BY ks) AS ct
-        |  FROM seg JOIN documents d USING (doc_id)
-        |  GROUP BY seg.doc_id)
-        |SELECT d.doc_id, COALESCE(c.ct, d.text) AS clean_text,
-        |       CAST(length(d.text) - length(COALESCE(c.ct, d.text))
-        |         AS BIGINT) AS n_removed_chars
-        |FROM documents d LEFT JOIN cleaned c ON c.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin),
+        |${removeSpansSql("documents")}""".stripMargin),
     // span decontamination: distinct benchmark grams, semi-join marking
     // over the corpus occurrences, then the same island-merge +
     // complement + ordered reassembly as q_substring_dedup
     Gate("q_decontaminate_spans", qDecontaminateSpans,
-      """WITH bocc AS (
+      s"""WITH bocc AS (
         |  SELECT DISTINCT md5(substring(text, CAST(p AS INTEGER), 25))
         |    AS g
         |  FROM documents,
@@ -552,33 +559,7 @@ private[graft] object DedupGates {
         |  FROM corp, unnest(generate_series(1, length(text) - 24)) AS u(p)
         |  WHERE md5(substring(text, CAST(p AS INTEGER), 25))
         |        IN (SELECT g FROM bocc)),
-        |isl AS (SELECT doc_id, pos, e,
-        |    CASE WHEN pos > COALESCE(MAX(e) OVER (PARTITION BY doc_id
-        |      ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND
-        |      1 PRECEDING), 0) THEN 1 ELSE 0 END AS ni
-        |  FROM rem),
-        |iv AS (SELECT doc_id, MIN(pos) AS s, MAX(e) AS e
-        |       FROM (SELECT *, SUM(ni) OVER (PARTITION BY doc_id
-        |               ORDER BY pos) AS island FROM isl)
-        |       GROUP BY doc_id, island),
-        |seg AS (
-        |  SELECT doc_id, COALESCE(LAG(e) OVER (PARTITION BY doc_id
-        |           ORDER BY s), 1) AS ks, s AS ke
-        |  FROM iv
-        |  UNION ALL
-        |  SELECT iv.doc_id, MAX(iv.e), MIN(length(d.text)) + 1
-        |  FROM iv JOIN corp d USING (doc_id) GROUP BY iv.doc_id),
-        |cleaned AS (
-        |  SELECT seg.doc_id,
-        |         string_agg(substring(d.text, ks, ke - ks), ''
-        |           ORDER BY ks) AS ct
-        |  FROM seg JOIN corp d USING (doc_id)
-        |  GROUP BY seg.doc_id)
-        |SELECT d.doc_id, COALESCE(c.ct, d.text) AS clean_text,
-        |       CAST(length(d.text) - length(COALESCE(c.ct, d.text))
-        |         AS BIGINT) AS n_removed_chars
-        |FROM corp d LEFT JOIN cleaned c ON c.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin),
+        |${removeSpansSql("corp")}""".stripMargin),
     // line-level dedup: page synthesis (header + ORDER BY doc_id body +
     // footer, %10==3 docs guesting on the next page), per-line doc
     // frequency on the NORMALIZED line, drop every occurrence above
@@ -629,17 +610,7 @@ private[graft] object DedupGates {
       // recursive CTE is DuckDB's way to say what the distributed
       // label propagation computes
       s"""WITH RECURSIVE $nearDupCtes,
-         |pairs AS (
-         |  SELECT i.id_a, i.id_b
-         |  FROM inter i JOIN sz za ON za.doc_id = i.id_a
-         |  JOIN sz zb ON zb.doc_id = i.id_b
-         |  WHERE CAST(i.n_inter AS DOUBLE) / (za.sz + zb.sz - i.n_inter) >= 0.8),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-         |          UNION SELECT id_b, id_a FROM pairs),
-         |reach AS (
-         |  SELECT DISTINCT src AS id, src AS r FROM edges
-         |  UNION
-         |  SELECT rc.id, e.dst FROM reach rc JOIN edges e ON e.src = rc.r)
+         |$nearReachCtes
          |SELECT id AS doc_id, MIN(r) AS cluster_id
          |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin),
     Gate("q_dedup_incr", qDedupIncr, dedupIncrOracleSql),

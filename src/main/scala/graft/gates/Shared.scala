@@ -464,6 +464,53 @@ private[graft] object Shared {
        |          GROUP BY c.id_a, c.id_b)""".stripMargin
   }
 
+  /** The verified near-dup pairs over [[nearDupCtesFrom]] (Jaccard
+    * >= 0.8) and their recursive reachability closure `reach(id, r)`.
+    */
+  val nearReachCtes =
+    s"""pairs AS (
+       |  SELECT i.id_a, i.id_b
+       |  FROM inter i JOIN sz za ON za.doc_id = i.id_a
+       |  JOIN sz zb ON zb.doc_id = i.id_b
+       |  WHERE CAST(i.n_inter AS DOUBLE) / (za.sz + zb.sz - i.n_inter) >= 0.8),
+       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
+       |          UNION SELECT id_b, id_a FROM pairs),
+       |reach AS (
+       |  SELECT DISTINCT src AS id, src AS r FROM edges
+       |  UNION
+       |  SELECT rc.id, e.dst FROM reach rc JOIN edges e ON e.src = rc.r)""".stripMargin
+
+  /** The token-distribution divergence of side A's tokens (`aSrc`) vs
+    * side B's (`bSrc`): exact integer counts; p = (c+1)/(n+V) with the
+    * long add before one cast and one division; tv_term one
+    * subtraction — all bit-replayable.
+    */
+  def tokenDivergenceSql(aSrc: String, bSrc: String): String =
+    s"""ta AS (SELECT token FROM (SELECT unnest($toksSql)
+       |    AS token FROM $aSrc)
+       |  WHERE token <> ''),
+       |tb AS (SELECT token FROM (SELECT unnest($toksSql)
+       |    AS token FROM $bSrc)
+       |  WHERE token <> ''),
+       |ca AS (SELECT token, COUNT(*) AS c_a FROM ta GROUP BY 1),
+       |cb AS (SELECT token, COUNT(*) AS c_b FROM tb GROUP BY 1),
+       |j AS (SELECT token, COALESCE(c_a, 0) AS c_a,
+       |    COALESCE(c_b, 0) AS c_b
+       |  FROM ca FULL OUTER JOIN cb USING (token)),
+       |tot AS (SELECT CAST(SUM(c_a) AS BIGINT) AS na,
+       |    CAST(SUM(c_b) AS BIGINT) AS nb, COUNT(*) AS v FROM j),
+       |p AS (SELECT token, c_a, c_b,
+       |    CAST(c_a + 1 AS DOUBLE)
+       |      / CAST((SELECT na FROM tot) + (SELECT v FROM tot)
+       |        AS DOUBLE) AS p_a,
+       |    CAST(c_b + 1 AS DOUBLE)
+       |      / CAST((SELECT nb FROM tot) + (SELECT v FROM tot)
+       |        AS DOUBLE) AS p_b
+       |  FROM j)
+       |SELECT token, c_a, c_b, p_a, p_b,
+       |  0.5 * abs(p_a - p_b) AS tv_term
+       |FROM p ORDER BY token""".stripMargin
+
   def inList(words: Seq[String]): String =
     words.map(w => s"'$w'").mkString(", ")
 

@@ -407,6 +407,74 @@ private[graft] object TextGates {
        |           AS dup_bigram_frac
        |       FROM bg GROUP BY 1)""".stripMargin
 
+  /** The Gopher feature and rule columns both Gopher oracles select. */
+  private val gopherColsSql: String =
+    """alpha_word_frac, bullet_line_frac, ellipsis_line_frac,
+      |  stop_hits,
+      |  n_words BETWEEN 30 AND 90 AS ok_words,
+      |  mean_word_len BETWEEN 3.9 AND 4.9 AS ok_mean_len,
+      |  symbol_word_ratio <= 0.1 AS ok_symbols,
+      |  bullet_line_frac <= 0.9 AS ok_bullets,
+      |  ellipsis_line_frac <= 0.3 AS ok_ellipsis,
+      |  alpha_word_frac >= 0.8 AS ok_alpha,
+      |  stop_hits >= 1 AS ok_stopwords,""".stripMargin
+
+  /** The C4 oracles' synthetic lines: doc `d` is a line of page
+    * d % 25, with the rule triggers injected by doc_id residue. Its
+    * margins stay for the oracle's own stripMargin, which would
+    * otherwise take the first `|` of each `||` line.
+    */
+  private val c4LnsCte: String =
+    """lns AS (
+      |  SELECT doc_id % 25 AS page_id, doc_id,
+      |    (CASE WHEN doc_id % 19 = 0 THEN 'too short' ELSE text END)
+      |    || (CASE WHEN doc_id % 7 = 3 THEN ' see javascript console'
+      |        ELSE '' END)
+      |    || (CASE WHEN doc_id % 199 = 5 THEN ' { inline code }'
+      |        ELSE '' END)
+      |    || (CASE WHEN doc_id % 211 = 7 THEN ' lorem ipsum dolor'
+      |        ELSE '' END)
+      |    || (CASE WHEN doc_id % 223 = 11 THEN ' flaggedterm'
+      |        ELSE '' END)
+      |    || (CASE doc_id % 3 WHEN 0 THEN '.' WHEN 1 THEN '?'
+      |        ELSE '' END) AS line
+      |  FROM documents)"""
+
+  /** `name(page_id, ln, line)`: the pages of `src` split back into
+    * numbered lines.
+    */
+  private def c4LinesCte(name: String, src: String): String =
+    s"""$name AS (
+       |  SELECT page_id, CAST(i AS INTEGER) AS ln,
+       |    list_extract(string_split(text, chr(10)),
+       |      CAST(i AS INTEGER)) AS line
+       |  FROM $src,
+       |    unnest(generate_series(1,
+       |      len(string_split(text, chr(10))))) AS u(i))""".stripMargin
+
+  /** The C4 line rule over `ls`: terminal punctuation, at least three
+    * words, no "javascript".
+    */
+  private val c4JudgedCte: String =
+    """judged AS (
+      |  SELECT page_id, ln, line,
+      |    regexp_matches(line, '[.!?"]\s*$')
+      |      AND len(string_split_regex(trim(line), '\s+')) >= 3
+      |      AND NOT regexp_matches(lower(line), '\bjavascript\b')
+      |      AS keep_line
+      |  FROM ls)""".stripMargin
+
+  /** The C4 page verdict over page `p` and its cleaned text `b`: no
+    * brace, no lorem ipsum, no bad word, at least 11 sentences.
+    */
+  private val c4PageOkSql: String =
+    """NOT contains(p.text, '{')
+      |    AND NOT contains(lower(p.text), 'lorem ipsum')
+      |    AND NOT regexp_matches(lower(p.text), '\b(flaggedterm)\b')
+      |    AND (len(b.clean_text)
+      |      - len(regexp_replace(b.clean_text, '[.!?]', '', 'g')))
+      |      >= 11""".stripMargin
+
   private val gopherKeepSql: String =
     "(n_words BETWEEN 30 AND 90) AND " +
       "(mean_word_len BETWEEN 3.9 AND 4.9) AND " +
@@ -482,15 +550,7 @@ private[graft] object TextGates {
     Gate("q_gopher_rules", qGopherRules,
       s"""WITH $gopherFeatCtes
          |SELECT doc_id, n_words, mean_word_len, symbol_word_ratio,
-         |  alpha_word_frac, bullet_line_frac, ellipsis_line_frac,
-         |  stop_hits,
-         |  n_words BETWEEN 30 AND 90 AS ok_words,
-         |  mean_word_len BETWEEN 3.9 AND 4.9 AS ok_mean_len,
-         |  symbol_word_ratio <= 0.1 AS ok_symbols,
-         |  bullet_line_frac <= 0.9 AS ok_bullets,
-         |  ellipsis_line_frac <= 0.3 AS ok_ellipsis,
-         |  alpha_word_frac >= 0.8 AS ok_alpha,
-         |  stop_hits >= 1 AS ok_stopwords,
+         |  $gopherColsSql
          |  $gopherKeepSql AS keep
          |FROM feat ORDER BY doc_id""".stripMargin),
     // the per-source data card: every double derived from exact integer
@@ -539,15 +599,7 @@ private[graft] object TextGates {
          |    COALESCE(bs.dup_bigram_frac, 0.0) AS dup_bigram_frac
          |  FROM ws LEFT JOIN bs ON bs.doc_id = ws.doc_id)
          |SELECT feat.doc_id, n_words, mean_word_len, symbol_word_ratio,
-         |  alpha_word_frac, bullet_line_frac, ellipsis_line_frac,
-         |  stop_hits,
-         |  n_words BETWEEN 30 AND 90 AS ok_words,
-         |  mean_word_len BETWEEN 3.9 AND 4.9 AS ok_mean_len,
-         |  symbol_word_ratio <= 0.1 AS ok_symbols,
-         |  bullet_line_frac <= 0.9 AS ok_bullets,
-         |  ellipsis_line_frac <= 0.3 AS ok_ellipsis,
-         |  alpha_word_frac >= 0.8 AS ok_alpha,
-         |  stop_hits >= 1 AS ok_stopwords,
+         |  $gopherColsSql
          |  rep.top_word_frac, rep.dup_bigram_frac,
          |  rep.top_word_frac <= 0.11 AS ok_top_word,
          |  rep.dup_bigram_frac <= 0.05 AS ok_dup_bigram,
@@ -574,38 +626,13 @@ private[graft] object TextGates {
     // injections, then the full decision table — line keeps, cleaned
     // text (byte-compared), sentence counts, page verdicts
     Gate("q_c4_rules", qC4Rules,
-      """WITH lns AS (
-        |  SELECT doc_id % 25 AS page_id, doc_id,
-        |    (CASE WHEN doc_id % 19 = 0 THEN 'too short' ELSE text END)
-        |    || (CASE WHEN doc_id % 7 = 3 THEN ' see javascript console'
-        |        ELSE '' END)
-        |    || (CASE WHEN doc_id % 199 = 5 THEN ' { inline code }'
-        |        ELSE '' END)
-        |    || (CASE WHEN doc_id % 211 = 7 THEN ' lorem ipsum dolor'
-        |        ELSE '' END)
-        |    || (CASE WHEN doc_id % 223 = 11 THEN ' flaggedterm'
-        |        ELSE '' END)
-        |    || (CASE doc_id % 3 WHEN 0 THEN '.' WHEN 1 THEN '?'
-        |        ELSE '' END) AS line
-        |  FROM documents),
+      raw"""WITH $c4LnsCte,
         |pages AS (
         |  SELECT page_id, string_agg(line, chr(10) ORDER BY doc_id)
         |    AS text
         |  FROM lns GROUP BY page_id),
-        |ls AS (
-        |  SELECT page_id, CAST(i AS INTEGER) AS ln,
-        |    list_extract(string_split(text, chr(10)),
-        |      CAST(i AS INTEGER)) AS line
-        |  FROM pages,
-        |    unnest(generate_series(1,
-        |      len(string_split(text, chr(10))))) AS u(i)),
-        |judged AS (
-        |  SELECT page_id, ln, line,
-        |    regexp_matches(line, '[.!?"]\s*$')
-        |      AND len(string_split_regex(trim(line), '\s+')) >= 3
-        |      AND NOT regexp_matches(lower(line), '\bjavascript\b')
-        |      AS keep_line
-        |  FROM ls),
+        |${c4LinesCte("ls", "pages")},
+        |$c4JudgedCte,
         |built AS (
         |  SELECT page_id, COUNT(*) AS n_lines,
         |    SUM(CASE WHEN keep_line THEN 1 ELSE 0 END) AS n_kept,
@@ -626,12 +653,7 @@ private[graft] object TextGates {
         |  (len(b.clean_text)
         |    - len(regexp_replace(b.clean_text, '[.!?]', '', 'g')))
         |    >= 11 AS ok_sentences,
-        |  NOT contains(p.text, '{')
-        |    AND NOT contains(lower(p.text), 'lorem ipsum')
-        |    AND NOT regexp_matches(lower(p.text), '\b(flaggedterm)\b')
-        |    AND (len(b.clean_text)
-        |      - len(regexp_replace(b.clean_text, '[.!?]', '', 'g')))
-        |      >= 11 AS keep
+        |  $c4PageOkSql AS keep
         |FROM pages p JOIN built b USING (page_id)
         |ORDER BY p.page_id""".stripMargin),
     // the composed C4 -> CCNet recipe: the q_c4_rules page build (plus
@@ -639,20 +661,7 @@ private[graft] object TextGates {
     // C4 line-rewrite + page-drop, then CCNet line dedup over the
     // SURVIVORS' cleaned text — both stages re-derived end to end
     Gate("q_c4_ccnet", qC4Ccnet,
-      """WITH lns AS (
-        |  SELECT doc_id % 25 AS page_id, doc_id,
-        |    (CASE WHEN doc_id % 19 = 0 THEN 'too short' ELSE text END)
-        |    || (CASE WHEN doc_id % 7 = 3 THEN ' see javascript console'
-        |        ELSE '' END)
-        |    || (CASE WHEN doc_id % 199 = 5 THEN ' { inline code }'
-        |        ELSE '' END)
-        |    || (CASE WHEN doc_id % 211 = 7 THEN ' lorem ipsum dolor'
-        |        ELSE '' END)
-        |    || (CASE WHEN doc_id % 223 = 11 THEN ' flaggedterm'
-        |        ELSE '' END)
-        |    || (CASE doc_id % 3 WHEN 0 THEN '.' WHEN 1 THEN '?'
-        |        ELSE '' END) AS line
-        |  FROM documents),
+      raw"""WITH $c4LnsCte,
         |members AS (
         |  SELECT page_id, doc_id, line FROM lns
         |  UNION ALL
@@ -663,20 +672,8 @@ private[graft] object TextGates {
         |    'Subscribe to our newsletter today.' || chr(10) ||
         |    string_agg(line, chr(10) ORDER BY doc_id) AS text
         |  FROM members GROUP BY page_id),
-        |ls AS (
-        |  SELECT page_id, CAST(i AS INTEGER) AS ln,
-        |    list_extract(string_split(text, chr(10)),
-        |      CAST(i AS INTEGER)) AS line
-        |  FROM pages,
-        |    unnest(generate_series(1,
-        |      len(string_split(text, chr(10))))) AS u(i)),
-        |judged AS (
-        |  SELECT page_id, ln, line,
-        |    regexp_matches(line, '[.!?"]\s*$')
-        |      AND len(string_split_regex(trim(line), '\s+')) >= 3
-        |      AND NOT regexp_matches(lower(line), '\bjavascript\b')
-        |      AS keep_line
-        |  FROM ls),
+        |${c4LinesCte("ls", "pages")},
+        |$c4JudgedCte,
         |c4built AS (
         |  SELECT page_id,
         |    COALESCE(string_agg(CASE WHEN keep_line THEN line END,
@@ -685,19 +682,8 @@ private[graft] object TextGates {
         |c4kept AS (
         |  SELECT p.page_id, b.clean_text AS text
         |  FROM pages p JOIN c4built b USING (page_id)
-        |  WHERE NOT contains(p.text, '{')
-        |    AND NOT contains(lower(p.text), 'lorem ipsum')
-        |    AND NOT regexp_matches(lower(p.text), '\b(flaggedterm)\b')
-        |    AND (len(b.clean_text)
-        |      - len(regexp_replace(b.clean_text, '[.!?]', '', 'g')))
-        |      >= 11),
-        |ls2 AS (
-        |  SELECT page_id, CAST(i AS INTEGER) AS ln,
-        |    list_extract(string_split(text, chr(10)),
-        |      CAST(i AS INTEGER)) AS line
-        |  FROM c4kept,
-        |    unnest(generate_series(1,
-        |      len(string_split(text, chr(10))))) AS u(i)),
+        |  WHERE $c4PageOkSql),
+        |${c4LinesCte("ls2", "c4kept")},
         |keyed AS (
         |  SELECT page_id, ln, line,
         |    md5(lower(trim(regexp_replace(line, '\s+', ' ', 'g')))) AS k,
@@ -805,29 +791,7 @@ private[graft] object TextGates {
       // bit-replayable. js_term (ln-based) is deliberately NOT in the
       // gate row: DuckDB's ln drifts from Math.log by 1 ulp on some
       // inputs (measured), so its semantics are spec-pinned instead.
-      s"""WITH ta AS (SELECT token FROM (SELECT unnest($toksSql)
-         |    AS token FROM documents WHERE lang = 'en')
-         |  WHERE token <> ''),
-         |tb AS (SELECT token FROM (SELECT unnest($toksSql)
-         |    AS token FROM documents WHERE lang = 'fr')
-         |  WHERE token <> ''),
-         |ca AS (SELECT token, COUNT(*) AS c_a FROM ta GROUP BY 1),
-         |cb AS (SELECT token, COUNT(*) AS c_b FROM tb GROUP BY 1),
-         |j AS (SELECT token, COALESCE(c_a, 0) AS c_a,
-         |    COALESCE(c_b, 0) AS c_b
-         |  FROM ca FULL OUTER JOIN cb USING (token)),
-         |tot AS (SELECT CAST(SUM(c_a) AS BIGINT) AS na,
-         |    CAST(SUM(c_b) AS BIGINT) AS nb, COUNT(*) AS v FROM j),
-         |p AS (SELECT token, c_a, c_b,
-         |    CAST(c_a + 1 AS DOUBLE)
-         |      / CAST((SELECT na FROM tot) + (SELECT v FROM tot)
-         |        AS DOUBLE) AS p_a,
-         |    CAST(c_b + 1 AS DOUBLE)
-         |      / CAST((SELECT nb FROM tot) + (SELECT v FROM tot)
-         |        AS DOUBLE) AS p_b
-         |  FROM j)
-         |SELECT token, c_a, c_b, p_a, p_b,
-         |  0.5 * abs(p_a - p_b) AS tv_term
-         |FROM p ORDER BY token""".stripMargin),
+      s"""WITH ${tokenDivergenceSql("documents WHERE lang = 'en'",
+           "documents WHERE lang = 'fr'")}""".stripMargin),
   )
 }
