@@ -232,18 +232,32 @@ private[graft] object PackingGates {
        |    - GREATEST("offset", piece_bin * 256) AS piece_tokens
        |  FROM pieces)""".stripMargin
 
+  /** Per-doc token counts `tok` and each doc's token `"offset"` in its
+    * language shard, in doc_id order (`ofs`).
+    */
+  private val packOffsetCtes: String =
+    s"""tok AS (SELECT doc_id, lang,
+       |  CAST(len($toksSql) AS BIGINT) AS tokens FROM documents),
+       |ofs AS (SELECT doc_id, lang, tokens,
+       |  CAST(COALESCE(SUM(tokens) OVER (PARTITION BY lang ORDER BY doc_id
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset"
+       |  FROM tok)""".stripMargin
+
+  /** [[packOffsetCtes]] and every doc's 256-token bins (`pieces`). */
+  private val packPiecesCtes: String =
+    s"""$packOffsetCtes,
+       |pieces AS (SELECT doc_id, lang, tokens, "offset",
+       |  unnest(generate_series(CAST(floor("offset" / 256) AS BIGINT),
+       |    CAST(floor(("offset" + tokens - 1) / 256) AS BIGINT))) AS piece_bin
+       |  FROM ofs WHERE tokens > 0)""".stripMargin
+
   val gates: Seq[Gate] = Seq(
     Gate("q_pack", qPack,
       // offset packing: tokens laid out per language shard in doc_id
       // order; offset = tokens before the doc, bin = floor(offset /
       // budget). `/` is double division in both engines, so floor +
       // BIGINT cast agree exactly
-      s"""WITH tok AS (SELECT doc_id, lang,
-         |  CAST(len($toksSql) AS BIGINT) AS tokens FROM documents),
-         |ofs AS (SELECT doc_id, lang, tokens,
-         |  CAST(COALESCE(SUM(tokens) OVER (PARTITION BY lang ORDER BY doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset"
-         |  FROM tok)
+      s"""WITH $packOffsetCtes
          |SELECT doc_id, lang, tokens, "offset",
          |  CAST(floor("offset" / 256) AS BIGINT) AS bin
          |FROM ofs ORDER BY lang, doc_id""".stripMargin),
@@ -251,16 +265,7 @@ private[graft] object PackingGates {
       // the boundary-splitting pieces: for each doc, one row per bin in
       // [floor(offset/B), floor((offset+tokens-1)/B)]; the piece starts
       // at max(offset, bin·B) and ends at min(offset+tokens, (bin+1)·B)
-      s"""WITH tok AS (SELECT doc_id, lang,
-         |  CAST(len($toksSql) AS BIGINT) AS tokens FROM documents),
-         |ofs AS (SELECT doc_id, lang, tokens,
-         |  CAST(COALESCE(SUM(tokens) OVER (PARTITION BY lang ORDER BY doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset"
-         |  FROM tok),
-         |pieces AS (SELECT doc_id, lang, tokens, "offset",
-         |  unnest(generate_series(CAST(floor("offset" / 256) AS BIGINT),
-         |    CAST(floor(("offset" + tokens - 1) / 256) AS BIGINT))) AS piece_bin
-         |  FROM ofs WHERE tokens > 0)
+      s"""WITH $packPiecesCtes
          |SELECT doc_id, lang, piece_bin,
          |  GREATEST("offset", piece_bin * 256) - "offset" AS doc_from,
          |  LEAST("offset" + tokens, (piece_bin + 1) * 256)
@@ -270,16 +275,7 @@ private[graft] object PackingGates {
       // the chunk pieces again, plus the in-bin prefix sum: bin_from =
       // tokens of earlier pieces in the SAME (lang, bin), ordered by
       // offset + doc_from — the order the bin's ids concatenate in
-      s"""WITH tok AS (SELECT doc_id, lang,
-         |  CAST(len($toksSql) AS BIGINT) AS tokens FROM documents),
-         |ofs AS (SELECT doc_id, lang, tokens,
-         |  CAST(COALESCE(SUM(tokens) OVER (PARTITION BY lang ORDER BY doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS "offset"
-         |  FROM tok),
-         |pieces AS (SELECT doc_id, lang, tokens, "offset",
-         |  unnest(generate_series(CAST(floor("offset" / 256) AS BIGINT),
-         |    CAST(floor(("offset" + tokens - 1) / 256) AS BIGINT))) AS piece_bin
-         |  FROM ofs WHERE tokens > 0),
+      s"""WITH $packPiecesCtes,
          |cut AS (SELECT doc_id, lang, "offset", piece_bin AS bin,
          |  GREATEST("offset", piece_bin * 256) - "offset" AS doc_from,
          |  LEAST("offset" + tokens, (piece_bin + 1) * 256)

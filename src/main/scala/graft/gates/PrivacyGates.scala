@@ -274,6 +274,24 @@ private[graft] object PrivacyGates {
       .orderBy("c_mktsegment")
   }
 
+  /** The randomized-response draws over `customer`: the segment
+    * domain `dom(dval, idx)` and per row the coin `flip` and the domain
+    * index `idx`, the 48-bit md5 fractions of 'rr17#<key>' and
+    * 'rr17#v#<key>'.
+    */
+  private val rrDrawCtes: String = {
+    val flip = bucket48OfSql("md5('rr17#' || COALESCE(CAST(c_custkey AS VARCHAR), chr(1)))")
+    val draw =
+      bucket48OfSql("md5('rr17#v#' || COALESCE(CAST(c_custkey AS VARCHAR), chr(1)))")
+    s"""dom AS (SELECT c_mktsegment AS dval,
+       |    ROW_NUMBER() OVER (ORDER BY c_mktsegment) - 1 AS idx
+       |  FROM (SELECT DISTINCT c_mktsegment FROM customer)),
+       |sel AS (SELECT c_custkey, c_mktsegment,
+       |    $flip AS flip,
+       |    $draw % (SELECT COUNT(*) FROM dom) AS idx
+       |  FROM customer)""".stripMargin
+  }
+
   val gates: Seq[Gate] = Seq(
     Gate("q_k_anon", qKAnon,
       s"""SELECT c_nationkey, c_mktsegment,
@@ -428,39 +446,19 @@ private[graft] object PrivacyGates {
          |  ON levenshtein(q.c_name, r.c_name) <= 1
          |WHERE q.c_custkey % 100 = 0
          |ORDER BY q_id, ref_value""".stripMargin),
-    Gate("q_rr_release", qRrRelease, {
-      // threshold floor(3/4 * 2^48); coin and draw are the 48-bit md5
-      // fractions of 'rr17#<key>' and 'rr17#v#<key>'
-      val flip = bucket48OfSql("md5('rr17#' || COALESCE(CAST(c_custkey AS VARCHAR), chr(1)))")
-      val draw =
-        bucket48OfSql("md5('rr17#v#' || COALESCE(CAST(c_custkey AS VARCHAR), chr(1)))")
-      s"""WITH dom AS (SELECT c_mktsegment AS dval,
-         |    ROW_NUMBER() OVER (ORDER BY c_mktsegment) - 1 AS idx
-         |  FROM (SELECT DISTINCT c_mktsegment FROM customer)),
-         |sel AS (SELECT c_custkey, c_mktsegment,
-         |    $flip AS flip,
-         |    $draw % (SELECT COUNT(*) FROM dom) AS idx
-         |  FROM customer)
+    // threshold floor(3/4 * 2^48)
+    Gate("q_rr_release", qRrRelease,
+      s"""WITH $rrDrawCtes
          |SELECT s.c_custkey,
          |CASE WHEN s.flip < 211106232532992 THEN s.c_mktsegment
          |  ELSE d.dval END AS c_mktsegment
          |FROM sel s JOIN dom d ON d.idx = s.idx
-         |ORDER BY c_custkey""".stripMargin
-    }),
+         |ORDER BY c_custkey""".stripMargin),
     Gate("q_rr_estimate", qRrEstimate, {
-      val flip = bucket48OfSql("md5('rr17#' || COALESCE(CAST(c_custkey AS VARCHAR), chr(1)))")
-      val draw =
-        bucket48OfSql("md5('rr17#v#' || COALESCE(CAST(c_custkey AS VARCHAR), chr(1)))")
       // p = T/2^48 exactly (power-of-two division), q = 1 - p: the same
       // in-engine ops as the Spark side, so n_est is bit-identical
       val p = "(CAST(211106232532992 AS DOUBLE) / 281474976710656.0)"
-      s"""WITH dom AS (SELECT c_mktsegment AS dval,
-         |    ROW_NUMBER() OVER (ORDER BY c_mktsegment) - 1 AS idx
-         |  FROM (SELECT DISTINCT c_mktsegment FROM customer)),
-         |sel AS (SELECT c_custkey, c_mktsegment,
-         |    $flip AS flip,
-         |    $draw % (SELECT COUNT(*) FROM dom) AS idx
-         |  FROM customer),
+      s"""WITH $rrDrawCtes,
          |rel AS (SELECT s.c_custkey,
          |    CASE WHEN s.flip < 211106232532992 THEN s.c_mktsegment
          |      ELSE d.dval END AS c_mktsegment

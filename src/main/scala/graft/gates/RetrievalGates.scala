@@ -297,17 +297,7 @@ private[graft] object RetrievalGates {
        |    unnest(list_distinct(list_filter($toksSql,
        |      x -> length(x) > 0))) AS term
        |  FROM documents WHERE doc_id IN ($ids)),
-       |toks AS (SELECT doc_id,
-       |    unnest(list_filter($toksSql, x -> length(x) > 0)) AS term
-       |  FROM documents),
-       |st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |    CAST(SUM(len(list_filter($toksSql, x -> length(x) > 0)))
-       |      AS BIGINT) AS sum_dl FROM documents),
-       |tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-       |  FROM toks WHERE term IN (SELECT DISTINCT term FROM qt)
-       |  GROUP BY doc_id, term),
-       |dfq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf
-       |  GROUP BY term),
+       |${bm25CtesFor("SELECT DISTINCT term FROM qt")},
        |dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl
        |  FROM toks GROUP BY doc_id),
        |co AS (SELECT q.qid, t.doc_id, t.term,
@@ -350,7 +340,7 @@ private[graft] object RetrievalGates {
     * definition so the stats row and the ranking row cannot drift.
     */
   private lazy val bm25Ctes: String =
-    bm25CtesFor(graft.pipeline.Bm25.queryTerms(bm25Query))
+    bm25CtesFor(inList(graft.pipeline.Bm25.queryTerms(bm25Query)))
 
   /** The `q_bm25_topk` oracle — the full ranking chain: positive-idf
     * ln, per-candidate term-ordered contribution fold (the scorer's
@@ -400,7 +390,7 @@ private[graft] object RetrievalGates {
     val qtVals = bm25BatchQueries.flatMap { case (qid, q) =>
       graft.pipeline.Bm25.queryTerms(q).map(t => s"('$qid', '$t')")
     }.mkString(", ")
-    s"""WITH ${bm25CtesFor(allTerms)},
+    s"""WITH ${bm25CtesFor(inList(allTerms))},
        |qt(qid, term) AS (VALUES $qtVals),
        |dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl
        |  FROM toks GROUP BY doc_id),
@@ -427,7 +417,10 @@ private[graft] object RetrievalGates {
        |ORDER BY qid, rank""".stripMargin
   }
 
-  private def bm25CtesFor(terms: Seq[String]): String = {
+  /** [[bm25Ctes]] over the query terms `termSet` (an SQL IN list or
+    * subquery).
+    */
+  private def bm25CtesFor(termSet: String): String = {
     s"""toks AS (SELECT doc_id,
        |    unnest(list_filter($toksSql, x -> length(x) > 0)) AS term
        |  FROM documents),
@@ -435,7 +428,7 @@ private[graft] object RetrievalGates {
        |    CAST(SUM(len(list_filter($toksSql, x -> length(x) > 0)))
        |      AS BIGINT) AS sum_dl FROM documents),
        |tf AS (SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-       |  FROM toks WHERE term IN (${inList(terms)})
+       |  FROM toks WHERE term IN ($termSet)
        |  GROUP BY doc_id, term),
        |dfq AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf
        |  GROUP BY term)""".stripMargin

@@ -118,6 +118,21 @@ private[graft] object TokenizerGates {
       .orderBy("join_rank")
   }
 
+  /** The docs, their pre-token pieces and the WordPiece vocabulary
+    * trained over them, as every WordPiece serving gate encodes with.
+    * `toVocabLocal` takes the alphabet off the type table training
+    * already collected, so the corpus is scanned exactly twice
+    * (training aggregation + the gate's encode), not three times.
+    */
+  private def wpTrained(s: SparkSession, dir: String)
+      : (DataFrame, Column, graft.functions.WordPieceTrainer.Vocab) = {
+    import graft.functions.{Bpe, WordPieceTrainer}
+    val pieces = Bpe.preTokenize(TextOps.normalize(col("text")))
+    val d = docs(s, dir)
+    (d, pieces, WordPieceTrainer.toVocabLocal(
+      WordPieceTrainer.trainFull(d, pieces, wpTrainJoins)))
+  }
+
   /** The WordPiece train→encode COMPOSITION: learn the joins, publish
     * the vocabulary (alphabet ∪ join outputs), greedy-encode the SAME
     * corpus with it. Unlike BPE — where rank-order merge application
@@ -132,14 +147,8 @@ private[graft] object TokenizerGates {
     */
   private def qWordpieceTrainEncode(s: SparkSession, dir: String)
       : DataFrame = {
-    import graft.functions.{Bpe, WordPieceTrainer}
-    val pieces = Bpe.preTokenize(TextOps.normalize(col("text")))
-    val d = docs(s, dir)
-    // trainFull + toVocabLocal: the alphabet comes off the type table
-    // training already collected, so the corpus is scanned exactly
-    // twice (training aggregation + this encode), not three times
-    val trained = WordPieceTrainer.trainFull(d, pieces, wpTrainJoins)
-    val vocab = WordPieceTrainer.toVocabLocal(trained)
+    import graft.functions.WordPieceTrainer
+    val (d, pieces, vocab) = wpTrained(s, dir)
     val cnt = WordPieceTrainer.tokenCountUdf(s, vocab)
     d.select(col("doc_id"), cnt(pieces).cast("bigint").as("n_wp_tokens"))
       .orderBy("doc_id")
@@ -180,11 +189,8 @@ private[graft] object TokenizerGates {
     */
   private def qWordpieceEncodeTokens(s: SparkSession, dir: String)
       : DataFrame = {
-    import graft.functions.{Bpe, WordPieceTrainer}
-    val pieces = Bpe.preTokenize(TextOps.normalize(col("text")))
-    val d = docs(s, dir)
-    val trained = WordPieceTrainer.trainFull(d, pieces, wpTrainJoins)
-    val vocab = WordPieceTrainer.toVocabLocal(trained)
+    import graft.functions.WordPieceTrainer
+    val (d, pieces, vocab) = wpTrained(s, dir)
     val enc = WordPieceTrainer.encodeUdf(s, vocab)
     d.select(col("doc_id"),
         posexplode(enc(pieces)).as(Seq("__p", "token")))
@@ -204,11 +210,8 @@ private[graft] object TokenizerGates {
     * ([[qWordpieceEncodeTokens]]) — the BPE twin is `q_bpe_ids`.
     */
   private def qWordpieceIds(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.{Bpe, WordPieceTrainer}
-    val pieces = Bpe.preTokenize(TextOps.normalize(col("text")))
-    val d = docs(s, dir)
-    val trained = WordPieceTrainer.trainFull(d, pieces, wpTrainJoins)
-    val vocab = WordPieceTrainer.toVocabLocal(trained)
+    import graft.functions.WordPieceTrainer
+    val (d, pieces, vocab) = wpTrained(s, dir)
     val enc = WordPieceTrainer.encodeIdsUdf(s, vocab)
     d.select(col("doc_id"),
         posexplode(enc(pieces)).as(Seq("__p", "id")))
@@ -255,11 +258,8 @@ private[graft] object TokenizerGates {
     */
   private def qWordpieceDecode(s: SparkSession, dir: String)
       : DataFrame = {
-    import graft.functions.{Bpe, WordPieceTrainer}
-    val pieces = Bpe.preTokenize(TextOps.normalize(col("text")))
-    val d = docs(s, dir)
-    val trained = WordPieceTrainer.trainFull(d, pieces, wpTrainJoins)
-    val vocab = WordPieceTrainer.toVocabLocal(trained)
+    import graft.functions.WordPieceTrainer
+    val (d, pieces, vocab) = wpTrained(s, dir)
     val enc = WordPieceTrainer.encodeUdf(s, vocab)
     val dec = WordPieceTrainer.decodeUdf()
     d.select(col("doc_id"), TextOps.normalize(col("text")).as("__n"),
@@ -506,25 +506,41 @@ private[graft] object TokenizerGates {
     * learned merges) and `b1..bk` (the learned rules); `q_bpe_train`
     * selects the rules, `q_bpe_train_encode` aggregates seg$k lengths.
     */
-  private def bpeTrainCtes(k: Int): String = {
+  private def bpeTrainCtes(k: Int): String =
+    trainCtes(k,
+      """(SELECT piece, cnt,
+        |  unnest(generate_series(1, CAST(length(piece) AS INTEGER))) AS pos,
+        |  unnest(regexp_extract_all(piece, '.')) AS sym FROM pc)""".stripMargin,
+      _ => "",
+      step => s"b$step AS MATERIALIZED (SELECT a, b, c FROM g$step " +
+        "ORDER BY c DESC, a, b LIMIT 1)",
+      "CASE WHEN mg THEN sym || nx ELSE sym END AS sym")
+
+  /** The training CTE skeleton the BPE and WordPiece oracles share:
+    * corpus pieces `p`, piece-type counts `pc`, the initial
+    * segmentation `seg0` (`seg0Body`), then per step: the CTEs `pre`
+    * adds, the adjacent-pair counts `g`, the chosen merge `b` (`pick`),
+    * the merge starts `c`/`m` (leftmost non-overlapping), and `seg`,
+    * the segmentation rewritten with the merged symbol (`merged`).
+    */
+  private def trainCtes(k: Int, seg0Body: String, pre: Int => String,
+      pick: Int => String, merged: String): String = {
     val pat = graft.functions.Bpe.preTokenizeRegex.replace("'", "''")
     val sb = new StringBuilder
     sb ++= s"""p AS (SELECT doc_id, unnest(regexp_extract_all($normSql, '$pat')) AS piece
        |  FROM documents),
        |pc AS MATERIALIZED (SELECT piece, CAST(COUNT(*) AS BIGINT) AS cnt FROM p
        |  WHERE piece <> '' GROUP BY piece),
-       |seg0 AS MATERIALIZED (SELECT piece, cnt,
-       |  unnest(generate_series(1, CAST(length(piece) AS INTEGER))) AS pos,
-       |  unnest(regexp_extract_all(piece, '.')) AS sym FROM pc)""".stripMargin
+       |seg0 AS MATERIALIZED $seg0Body""".stripMargin
     for (step <- 1 to k) {
       val prev = s"seg${step - 1}"
       sb ++= s""",
-         |g$step AS MATERIALIZED (SELECT sym AS a, nx AS b, CAST(SUM(cnt) AS BIGINT) AS c
+         |${pre(step)}g$step AS MATERIALIZED (SELECT sym AS a, nx AS b, CAST(SUM(cnt) AS BIGINT) AS c
          |  FROM (SELECT cnt, sym,
          |          lead(sym) OVER (PARTITION BY piece ORDER BY pos) AS nx
          |        FROM $prev)
          |  WHERE nx IS NOT NULL GROUP BY sym, nx),
-         |b$step AS MATERIALIZED (SELECT a, b, c FROM g$step ORDER BY c DESC, a, b LIMIT 1),
+         |${pick(step)},
          |c$step AS MATERIALIZED (SELECT s.piece, s.cnt, s.pos, s.sym,
          |    lead(s.sym) OVER (PARTITION BY s.piece ORDER BY s.pos) AS nx,
          |    COALESCE(s.sym = b.a AND
@@ -541,7 +557,7 @@ private[graft] object TokenizerGates {
          |    FROM c$step)),
          |seg$step AS MATERIALIZED (SELECT piece, cnt,
          |    ROW_NUMBER() OVER (PARTITION BY piece ORDER BY pos) AS pos,
-         |    CASE WHEN mg THEN sym || nx ELSE sym END AS sym
+         |    $merged
          |  FROM (SELECT *,
          |      COALESCE(lag(mg) OVER (PARTITION BY piece ORDER BY pos),
          |        FALSE) AS pm
@@ -589,61 +605,25 @@ private[graft] object TokenizerGates {
     * `seg$k` plus `b1..bk`, each `b` carrying the pair count AND both
     * symbol counts.
     */
-  private def wpTrainCtes(k: Int): String = {
-    val pat = graft.functions.Bpe.preTokenizeRegex.replace("'", "''")
-    val sb = new StringBuilder
-    sb ++= s"""p AS (SELECT doc_id, unnest(regexp_extract_all($normSql, '$pat')) AS piece
-       |  FROM documents),
-       |pc AS MATERIALIZED (SELECT piece, CAST(COUNT(*) AS BIGINT) AS cnt FROM p
-       |  WHERE piece <> '' GROUP BY piece),
-       |seg0 AS MATERIALIZED (SELECT piece, cnt, pos,
-       |    CASE WHEN pos = 1 THEN sym ELSE '##' || sym END AS sym
-       |  FROM (SELECT piece, cnt,
-       |    unnest(generate_series(1, CAST(length(piece) AS INTEGER))) AS pos,
-       |    unnest(regexp_extract_all(piece, '.')) AS sym FROM pc))""".stripMargin
-    for (step <- 1 to k) {
-      val prev = s"seg${step - 1}"
-      sb ++= s""",
-         |s$step AS MATERIALIZED (SELECT sym, CAST(SUM(cnt) AS BIGINT) AS c
-         |  FROM $prev GROUP BY sym),
-         |g$step AS MATERIALIZED (SELECT sym AS a, nx AS b, CAST(SUM(cnt) AS BIGINT) AS c
-         |  FROM (SELECT cnt, sym,
-         |          lead(sym) OVER (PARTITION BY piece ORDER BY pos) AS nx
-         |        FROM $prev)
-         |  WHERE nx IS NOT NULL GROUP BY sym, nx),
-         |b$step AS MATERIALIZED (SELECT g.a, g.b, g.c, sa.c AS ca, sb.c AS cb
+  private def wpTrainCtes(k: Int): String =
+    trainCtes(k,
+      """(SELECT piece, cnt, pos,
+        |    CASE WHEN pos = 1 THEN sym ELSE '##' || sym END AS sym
+        |  FROM (SELECT piece, cnt,
+        |    unnest(generate_series(1, CAST(length(piece) AS INTEGER))) AS pos,
+        |    unnest(regexp_extract_all(piece, '.')) AS sym FROM pc))""".stripMargin,
+      step => s"""s$step AS MATERIALIZED (SELECT sym, CAST(SUM(cnt) AS BIGINT) AS c
+         |  FROM seg${step - 1} GROUP BY sym),
+         |""".stripMargin,
+      step => s"""b$step AS MATERIALIZED (SELECT g.a, g.b, g.c, sa.c AS ca, sb.c AS cb
          |  FROM g$step g JOIN s$step sa ON sa.sym = g.a
          |                JOIN s$step sb ON sb.sym = g.b
          |  ORDER BY CAST(g.c AS DOUBLE) /
          |    (CAST(sa.c AS DOUBLE) * CAST(sb.c AS DOUBLE)) DESC, g.a, g.b
-         |  LIMIT 1),
-         |c$step AS MATERIALIZED (SELECT s.piece, s.cnt, s.pos, s.sym,
-         |    lead(s.sym) OVER (PARTITION BY s.piece ORDER BY s.pos) AS nx,
-         |    COALESCE(s.sym = b.a AND
-         |      lead(s.sym) OVER (PARTITION BY s.piece ORDER BY s.pos) = b.b,
-         |      FALSE) AS cc
-         |  FROM $prev s LEFT JOIN b$step b ON TRUE),
-         |m$step AS MATERIALIZED (SELECT piece, cnt, pos, sym, nx,
-         |    CASE WHEN cc THEN
-         |      (ROW_NUMBER() OVER (PARTITION BY piece, cc, grp ORDER BY pos)
-         |        % 2 = 1)
-         |    ELSE FALSE END AS mg
-         |  FROM (SELECT *, pos -
-         |      ROW_NUMBER() OVER (PARTITION BY piece, cc ORDER BY pos) AS grp
-         |    FROM c$step)),
-         |seg$step AS MATERIALIZED (SELECT piece, cnt,
-         |    ROW_NUMBER() OVER (PARTITION BY piece ORDER BY pos) AS pos,
-         |    CASE WHEN mg THEN sym ||
-         |      (CASE WHEN nx LIKE '##%' THEN substring(nx, 3) ELSE nx END)
-         |    ELSE sym END AS sym
-         |  FROM (SELECT *,
-         |      COALESCE(lag(mg) OVER (PARTITION BY piece ORDER BY pos),
-         |        FALSE) AS pm
-         |    FROM m$step)
-         |  WHERE NOT pm)""".stripMargin
-    }
-    sb.toString
-  }
+         |  LIMIT 1)""".stripMargin,
+      """CASE WHEN mg THEN sym ||
+        |      (CASE WHEN nx LIKE '##%' THEN substring(nx, 3) ELSE nx END)
+        |    ELSE sym END AS sym""".stripMargin)
 
   private def wordpieceTrainOracleSql(k: Int): String =
     s"WITH ${wpTrainCtes(k)}\n" +
