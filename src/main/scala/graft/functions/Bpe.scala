@@ -45,20 +45,6 @@ final case class BpeMerges(rules: Seq[(String, String)])
   @transient private lazy val rank: Map[(String, String), Int] =
     rules.zipWithIndex.toMap
 
-  /** Split into single-codepoint strings (surrogate-pair safe — the
-    * DuckDB mirror's `(.)` regex is codepoint-based too).
-    */
-  private def codepoints(word: String): Array[String] = {
-    val out = Array.newBuilder[String]
-    var i = 0
-    while (i < word.length) {
-      val cp = word.codePointAt(i)
-      out += new String(Character.toChars(cp))
-      i += Character.charCount(cp)
-    }
-    out.result()
-  }
-
   private def mergeAll(toks: Array[String], a: String,
       b: String): Array[String] = {
     val out = Array.newBuilder[String]
@@ -73,7 +59,7 @@ final case class BpeMerges(rules: Seq[(String, String)])
 
   /** Greedy BPE: tokens of `word`. */
   def encode(word: String): Seq[String] = {
-    var toks = codepoints(word)
+    var toks = Bpe.codepoints(word)
     var continue = toks.length > 1
     while (continue) {
       var bestRank = Int.MaxValue
@@ -300,6 +286,20 @@ object BpeMerges {
 }
 
 object Bpe {
+
+  /** Split into single-codepoint strings (surrogate-pair safe — the
+    * DuckDB mirror's `(.)` regex is codepoint-based too).
+    */
+  private[functions] def codepoints(word: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var i = 0
+    while (i < word.length) {
+      val cp = word.codePointAt(i)
+      out += new String(Character.toChars(cp))
+      i += Character.charCount(cp)
+    }
+    out.result()
+  }
 
   /** Column function: BPE token count of a (normalized) token-array
     * column under `vocab`.

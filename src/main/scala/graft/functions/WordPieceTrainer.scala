@@ -275,16 +275,7 @@ object WordPieceTrainer {
   def encodeWord(word: String, vocab: Vocab): Array[String] = {
     if (word.isEmpty) return Array.empty
     // codepoint-indexed view so probes slice by codepoints, not chars
-    val cps = {
-      val out = Array.newBuilder[String]
-      var i = 0
-      while (i < word.length) {
-        val cp = word.codePointAt(i)
-        out += new String(Character.toChars(cp))
-        i += Character.charCount(cp)
-      }
-      out.result()
-    }
+    val cps = Bpe.codepoints(word)
     val n = cps.length
     val out = Array.newBuilder[String]
     var i = 0

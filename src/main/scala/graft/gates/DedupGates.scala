@@ -565,7 +565,7 @@ private[graft] object DedupGates {
     // frequency on the NORMALIZED line, drop every occurrence above
     // df 1, ordered string_agg reassembly
     Gate("q_line_dedup", qLineDedup,
-      """WITH members AS (
+      raw"""WITH members AS (
         |  SELECT doc_id % 25 AS page_id, doc_id, text FROM documents
         |  UNION ALL
         |  SELECT (doc_id + 1) % 25, doc_id, text FROM documents
@@ -589,12 +589,7 @@ private[graft] object DedupGates {
         |           AS k,
         |         lower(trim(regexp_replace(line, '\s+', ' ', 'g'))) AS nrm
         |  FROM ls),
-        |freq AS (
-        |  SELECT k FROM keyed WHERE nrm <> ''
-        |  GROUP BY k HAVING COUNT(DISTINCT page_id) > 1),
-        |kept AS (
-        |  SELECT page_id, ln, line FROM keyed
-        |  WHERE k NOT IN (SELECT k FROM freq)),
+        |$lineFreqKeptCtes,
         |built AS (
         |  SELECT page_id, COUNT(*) AS n_kept,
         |         string_agg(line, chr(10) ORDER BY ln) AS clean_text

@@ -97,8 +97,7 @@ private[graft] object MediaGates {
     */
   private def qImagePhash(s: SparkSession, dir: String): DataFrame = {
     val bmp = udf((id: Long, v: Int) => syntheticBmp16(id, v))
-    val imgs = docs(s, dir).select(col("doc_id"))
-      .select(col("doc_id"), explode(array(lit(0), lit(1))).as("variant"))
+    val imgs = twoVariants(s, dir)
       .withColumn("img", bmp(col("doc_id"), col("variant")))
     val metaOk = udf((b: Array[Byte]) => {
       val m = graft.pipeline.Multimodal.ImageCodec.meta(b)
@@ -110,14 +109,8 @@ private[graft] object MediaGates {
     // decode wall at 10×sf0.1) — persisting the THIN post-decode frame
     // (ids + two longs + two flags, never the pixels) is exactly the
     // decode-once posture a corpus-scale media pipeline runs
-    val hashed = Materialize(Multimodal.averageHash(imgs, "img")
-      .withColumn("__mean",
-        expr("aggregate(lum_grid, CAST(0 AS BIGINT), (a, x) -> a + x)" +
-          " div 64"))
-      .withColumn("__hsql",
-        expr("aggregate(sequence(0, 63), CAST(0 AS BIGINT), (acc, i) ->" +
-          " acc + IF(element_at(lum_grid, i + 1) > __mean," +
-          " shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"))
+    val hashed = Materialize(withHashFold(
+        Multimodal.averageHash(imgs, "img"), "lum_grid")
       .withColumn("__img_ok", metaOk(col("img")))
       .select(col("doc_id"), col("variant"), col("ahash"), col("__hsql"),
         col("__img_ok")))
@@ -130,13 +123,7 @@ private[graft] object MediaGates {
       hashed.select((col("doc_id") * 2 + col("variant")).as("img_id"),
         col("ahash")),
       "img_id", "ahash", k = 8)
-    val pairStats = pairs.agg(
-      coalesce(sum(when(shiftright(col("id_a"), 1) ===
-        shiftright(col("id_b"), 1), 1L).otherwise(0L)), lit(0L))
-        .as("n_twin_pairs"),
-      coalesce(sum(when(shiftright(col("id_a"), 1) =!=
-        shiftright(col("id_b"), 1), 1L).otherwise(0L)), lit(0L))
-        .as("n_cross_pairs"))
+    val pairStats = twinCrossCounts(pairs, "id_a", "id_b", "pairs")
     // n_docs = n_images / 2 (two variants per doc) — from the
     // materialised stats frame, not a separate corpus count job
     stats.crossJoin(pairStats) // 1×1 scalar attach
@@ -221,8 +208,7 @@ private[graft] object MediaGates {
     */
   private def qAudioFingerprint(s: SparkSession, dir: String): DataFrame = {
     val wav = udf((id: Long, v: Int) => syntheticWav(id, v))
-    val clips = docs(s, dir).select(col("doc_id"))
-      .select(col("doc_id"), explode(array(lit(0), lit(1))).as("variant"))
+    val clips = twoVariants(s, dir)
       .withColumn("clip", wav(col("doc_id"), col("variant")))
     val metaOk = udf((b: Array[Byte]) => {
       val m = graft.pipeline.Multimodal.AudioCodec.meta(b)
@@ -232,14 +218,8 @@ private[graft] object MediaGates {
     // sides branch from the THIN materialised frame — without it each
     // branch re-synthesizes and re-decodes every clip, and the
     // javax.sound SPI lookup is the measured cost leader at 10×sf0.1
-    val hashed = Materialize(Multimodal.audioFingerprint(clips, "clip")
-      .withColumn("__mean",
-        expr("aggregate(energy_windows, CAST(0 AS BIGINT), (a, x) -> a + x)" +
-          " div 64"))
-      .withColumn("__hsql",
-        expr("aggregate(sequence(0, 63), CAST(0 AS BIGINT), (acc, i) ->" +
-          " acc + IF(element_at(energy_windows, i + 1) > __mean," +
-          " shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"))
+    val hashed = Materialize(withHashFold(
+        Multimodal.audioFingerprint(clips, "clip"), "energy_windows")
       .withColumn("__clip_ok", metaOk(col("clip")))
       .select(col("doc_id"), col("variant"), col("afp"), col("__hsql"),
         col("__clip_ok")))
@@ -256,13 +236,7 @@ private[graft] object MediaGates {
       hashed.select((col("doc_id") * 2 + col("variant")).as("clip_id"),
         col("afp")),
       "clip_id", "afp", k = 4, blocks = 6)
-    val pairStats = pairs.agg(
-      coalesce(sum(when(shiftright(col("id_a"), 1) ===
-        shiftright(col("id_b"), 1), 1L).otherwise(0L)), lit(0L))
-        .as("n_twin_pairs"),
-      coalesce(sum(when(shiftright(col("id_a"), 1) =!=
-        shiftright(col("id_b"), 1), 1L).otherwise(0L)), lit(0L))
-        .as("n_cross_pairs"))
+    val pairStats = twinCrossCounts(pairs, "id_a", "id_b", "pairs")
     // n_docs = n_audio / 2 (two variants per doc) — from the
     // materialised stats frame, not a separate corpus count job
     stats.crossJoin(pairStats) // 1×1 scalar attach
@@ -270,83 +244,6 @@ private[graft] object MediaGates {
         col("n_audio"),
         col("n_decoded"), col("n_fp_parity"),
         col("n_twin_pairs"), col("n_cross_pairs"))
-  }
-
-  /** The image serving form — [[qAudioFingerprintIncr]]'s posture on
-    * the image modality (family symmetry: batch + incremental for both
-    * media types): base BMPs' aHashes landed as the persisted thin
-    * (id, ahash) index, every document's one-luminance-unit twin
-    * probed against it via [[graft.pipeline.Dedup
-    * .hammingPairsAgainstIndex]] at the batch row's k = 8. Same gate
-    * contract: every probe matches exactly its base, zero cross
-    * matches, landed index count — DuckDB-re-derived populations.
-    */
-  private def qImagePhashIncr(s: SparkSession, dir: String): DataFrame = {
-    val bmp = udf((id: Long, v: Int) => syntheticBmp16(id, v))
-    def hashFrame(variant: Int) = graft.pipeline.Multimodal
-      .averageHash(
-        docs(s, dir).select(col("doc_id"))
-          .withColumn("img", bmp(col("doc_id"), lit(variant))), "img")
-      .select((col("doc_id") * 2 + variant).as("img_id"), col("ahash"))
-    val path = scratchDir("q-image-phash-incr")
-    hashFrame(0).write.mode("overwrite").parquet(s"$path/idx")
-    val idx = s.read.parquet(s"$path/idx")
-    val matches = graft.pipeline.Dedup.hammingPairsAgainstIndex(
-      idx, hashFrame(1), "img_id", "ahash", k = 8)
-    matches.agg(
-        coalesce(sum(when(shiftright(col("id_index"), 1) ===
-          shiftright(col("id_probe"), 1), 1L).otherwise(0L)), lit(0L))
-          .as("n_twin_matches"),
-        coalesce(sum(when(shiftright(col("id_index"), 1) =!=
-          shiftright(col("id_probe"), 1), 1L).otherwise(0L)), lit(0L))
-          .as("n_cross_matches"))
-      .crossJoin(idx.agg(count(lit(1)).as("n_indexed"))) // 1×1 attach
-      // n_docs == n_indexed (exactly one base row lands per doc) —
-      // derived in-plan, not a separate corpus count job
-      .select(col("n_indexed").as("n_docs"), col("n_indexed"),
-        col("n_twin_matches"), col("n_cross_matches"))
-  }
-
-  /** INCREMENTAL media near-dup — the serving form
-    * ([[graft.pipeline.Dedup.hammingPairsAgainstIndex]], the
-    * fingerprint analog of `q_dedup_incr`'s MinHash index probe): the
-    * base clips' fingerprints are landed as a PERSISTED thin (id, afp)
-    * parquet index — 8 bytes of hash per item, decoded exactly once,
-    * never rescanned — and the ingest batch (every document's one-LSB
-    * twin clip) probes it through the same Manku blocks = 6 banding.
-    * The gate pins, against DuckDB-re-derived populations: every probe
-    * finds EXACTLY its base twin (n_twin_matches == n_docs), no probe
-    * matches a foreign document (n_cross_matches == 0), and the landed
-    * index row count. Per-batch work scales with the batch and the
-    * matched buckets — the landed corpus contributes only the
-    * band-join shuffle of its thin hash rows, the q_dedup_incr /
-    * q_ivf_*_append posture applied to the media modality.
-    */
-  private def qAudioFingerprintIncr(s: SparkSession, dir: String)
-      : DataFrame = {
-    val wav = udf((id: Long, v: Int) => syntheticWav(id, v))
-    def clipFrame(variant: Int) = graft.pipeline.Multimodal
-      .audioFingerprint(
-        docs(s, dir).select(col("doc_id"))
-          .withColumn("clip", wav(col("doc_id"), lit(variant))), "clip")
-      .select((col("doc_id") * 2 + variant).as("clip_id"), col("afp"))
-    val path = scratchDir("q-audio-fp-incr")
-    clipFrame(0).write.mode("overwrite").parquet(s"$path/idx")
-    val idx = s.read.parquet(s"$path/idx")
-    val matches = graft.pipeline.Dedup.hammingPairsAgainstIndex(
-      idx, clipFrame(1), "clip_id", "afp", k = 4, blocks = 6)
-    matches.agg(
-        coalesce(sum(when(shiftright(col("id_index"), 1) ===
-          shiftright(col("id_probe"), 1), 1L).otherwise(0L)), lit(0L))
-          .as("n_twin_matches"),
-        coalesce(sum(when(shiftright(col("id_index"), 1) =!=
-          shiftright(col("id_probe"), 1), 1L).otherwise(0L)), lit(0L))
-          .as("n_cross_matches"))
-      .crossJoin(idx.agg(count(lit(1)).as("n_indexed"))) // 1×1 attach
-      // n_docs == n_indexed (exactly one base row lands per doc) —
-      // derived in-plan, not a separate corpus count job
-      .select(col("n_indexed").as("n_docs"), col("n_indexed"),
-        col("n_twin_matches"), col("n_cross_matches"))
   }
 
   /** A REAL ISO-BMFF (MP4) container — `ftyp(isom)` + `moov(mvhd v0,
@@ -439,8 +336,7 @@ private[graft] object MediaGates {
     */
   private def qVideoFingerprint(s: SparkSession, dir: String): DataFrame = {
     val mp4 = udf((id: Long, v: Int) => syntheticMp4(id, v))
-    val clips = docs(s, dir).select(col("doc_id"))
-      .select(col("doc_id"), explode(array(lit(0), lit(1))).as("variant"))
+    val clips = twoVariants(s, dir)
       .withColumn("clip", mp4(col("doc_id"), col("variant")))
     val metaOk = udf((b: Array[Byte]) => {
       val m = graft.pipeline.Multimodal.VideoCodec.meta(b)
@@ -448,14 +344,8 @@ private[graft] object MediaGates {
     })
     // decode once (the image/audio rows' posture): stats and both
     // pair-join sides branch from the THIN materialised frame
-    val hashed = Materialize(Multimodal.videoFingerprint(clips, "clip")
-      .withColumn("__mean",
-        expr("aggregate(size_windows, CAST(0 AS BIGINT), (a, x) -> a + x)" +
-          " div 64"))
-      .withColumn("__hsql",
-        expr("aggregate(sequence(0, 63), CAST(0 AS BIGINT), (acc, i) ->" +
-          " acc + IF(element_at(size_windows, i + 1) > __mean," +
-          " shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"))
+    val hashed = Materialize(withHashFold(
+        Multimodal.videoFingerprint(clips, "clip"), "size_windows")
       .withColumn("__clip_ok", metaOk(col("clip")))
       .select(col("doc_id"), col("variant"), col("vfp"), col("__hsql"),
         col("__clip_ok")))
@@ -468,13 +358,7 @@ private[graft] object MediaGates {
       hashed.select((col("doc_id") * 2 + col("variant")).as("clip_id"),
         col("vfp")),
       "clip_id", "vfp", k = 4, blocks = 6)
-    val pairStats = pairs.agg(
-      coalesce(sum(when(shiftright(col("id_a"), 1) ===
-        shiftright(col("id_b"), 1), 1L).otherwise(0L)), lit(0L))
-        .as("n_twin_pairs"),
-      coalesce(sum(when(shiftright(col("id_a"), 1) =!=
-        shiftright(col("id_b"), 1), 1L).otherwise(0L)), lit(0L))
-        .as("n_cross_pairs"))
+    val pairStats = twinCrossCounts(pairs, "id_a", "id_b", "pairs")
     // n_docs = n_videos / 2 (two variants per doc) — from the
     // materialised stats frame, not a separate corpus count job
     stats.crossJoin(pairStats) // 1×1 scalar attach
@@ -502,8 +386,7 @@ private[graft] object MediaGates {
     */
   private def qMediaDedupBest(s: SparkSession, dir: String): DataFrame = {
     val mp4 = udf((id: Long, v: Int) => syntheticMp4(id, v))
-    val clips = docs(s, dir).select(col("doc_id"))
-      .select(col("doc_id"), explode(array(lit(0), lit(1))).as("variant"))
+    val clips = twoVariants(s, dir)
       .withColumn("clip", mp4(col("doc_id"), col("variant")))
     // thin post-walk frame: the pair join and the quality rank both
     // branch from it (decode-once posture)
@@ -540,43 +423,6 @@ private[graft] object MediaGates {
         col("n_survivors_twin"))
   }
 
-  /** The video serving form — [[qAudioFingerprintIncr]]'s posture on
-    * the video modality (family symmetry: batch + incremental for ALL
-    * media types): base containers' bitrate-envelope hashes landed as
-    * the persisted thin (id, vfp) parquet index, every document's
-    * one-byte-larger twin probed against it via
-    * [[graft.pipeline.Dedup.hammingPairsAgainstIndex]] at the batch
-    * row's k = 4 / blocks = 6. Same gate contract: every probe matches
-    * exactly its base, zero cross matches, landed index count —
-    * DuckDB-re-derived populations.
-    */
-  private def qVideoFingerprintIncr(s: SparkSession, dir: String)
-      : DataFrame = {
-    val mp4 = udf((id: Long, v: Int) => syntheticMp4(id, v))
-    def clipFrame(variant: Int) = graft.pipeline.Multimodal
-      .videoFingerprint(
-        docs(s, dir).select(col("doc_id"))
-          .withColumn("clip", mp4(col("doc_id"), lit(variant))), "clip")
-      .select((col("doc_id") * 2 + variant).as("clip_id"), col("vfp"))
-    val path = scratchDir("q-video-fp-incr")
-    clipFrame(0).write.mode("overwrite").parquet(s"$path/idx")
-    val idx = s.read.parquet(s"$path/idx")
-    val matches = graft.pipeline.Dedup.hammingPairsAgainstIndex(
-      idx, clipFrame(1), "clip_id", "vfp", k = 4, blocks = 6)
-    matches.agg(
-        coalesce(sum(when(shiftright(col("id_index"), 1) ===
-          shiftright(col("id_probe"), 1), 1L).otherwise(0L)), lit(0L))
-          .as("n_twin_matches"),
-        coalesce(sum(when(shiftright(col("id_index"), 1) =!=
-          shiftright(col("id_probe"), 1), 1L).otherwise(0L)), lit(0L))
-          .as("n_cross_matches"))
-      .crossJoin(idx.agg(count(lit(1)).as("n_indexed"))) // 1×1 attach
-      // n_docs == n_indexed (exactly one base row lands per doc) —
-      // derived in-plan, not a separate corpus count job
-      .select(col("n_indexed").as("n_docs"), col("n_indexed"),
-        col("n_twin_matches"), col("n_cross_matches"))
-  }
-
   /** MIXED-MODALITY media dedup — the capstone the four single-modality
     * rows build to, because it is the shape a real lake has: ONE binary
     * column interleaving images, audio and video, with nothing upstream
@@ -605,17 +451,10 @@ private[graft] object MediaGates {
       case 1 => syntheticWav(id, v)
       case _ => syntheticMp4(id, v)
     })
-    val clips = docs(s, dir).select(col("doc_id"))
-      .select(col("doc_id"), explode(array(lit(0), lit(1))).as("variant"))
+    val clips = twoVariants(s, dir)
       .withColumn("clip", payload(col("doc_id"), col("variant")))
-    val hashed = Materialize(Multimodal.mediaFingerprint(clips, "clip")
-      .withColumn("__mean",
-        expr("aggregate(media_windows, CAST(0 AS BIGINT), (a, x) -> a + x)" +
-          " div 64"))
-      .withColumn("__hsql",
-        expr("aggregate(sequence(0, 63), CAST(0 AS BIGINT), (acc, i) ->" +
-          " acc + IF(element_at(media_windows, i + 1) > __mean," +
-          " shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"))
+    val hashed = Materialize(withHashFold(
+        Multimodal.mediaFingerprint(clips, "clip"), "media_windows")
       .withColumn("__mod_ok",
         col("modality") === when(col("doc_id") % 3 === 0, "image")
           .when(col("doc_id") % 3 === 1, "audio").otherwise("video"))
@@ -652,6 +491,86 @@ private[graft] object MediaGates {
         col("n_twin_pairs"), col("n_cross_pairs"),
         col("n_cross_modality"))
   }
+
+  /** Each doc's two synthesized clips (`variant` 0 and 1). */
+  private def twoVariants(s: SparkSession, dir: String): DataFrame =
+    docs(s, dir).select(col("doc_id"))
+      .select(col("doc_id"), explode(array(lit(0), lit(1))).as("variant"))
+
+  /** `df` plus the in-query integer aHash fold over its `windows`
+    * array: the `Σ div 64` mean (`__mean`) and the strict-greater bit
+    * rule (`__hsql`) every media fingerprint is checked against.
+    */
+  private def withHashFold(df: DataFrame, windows: String): DataFrame =
+    df.withColumn("__mean",
+        expr(s"aggregate($windows, CAST(0 AS BIGINT), (a, x) -> a + x)" +
+          " div 64"))
+      .withColumn("__hsql",
+        expr("aggregate(sequence(0, 63), CAST(0 AS BIGINT), (acc, i) ->" +
+          s" acc + IF(element_at($windows, i + 1) > __mean," +
+          " shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"))
+
+  /** One row: how many `pairs` join two clips of one doc
+    * (`n_twin_<what>`) and how many join two docs
+    * (`n_cross_<what>`). Clip ids `a`/`b` are doc_id · 2 + variant.
+    */
+  private def twinCrossCounts(pairs: DataFrame, a: String, b: String,
+      what: String): DataFrame =
+    pairs.agg(
+      coalesce(sum(when(shiftright(col(a), 1) ===
+        shiftright(col(b), 1), 1L).otherwise(0L)), lit(0L))
+        .as(s"n_twin_$what"),
+      coalesce(sum(when(shiftright(col(a), 1) =!=
+        shiftright(col(b), 1), 1L).otherwise(0L)), lit(0L))
+        .as(s"n_cross_$what"))
+
+  /** INCREMENTAL media near-dup — the serving form
+    * ([[graft.pipeline.Dedup.hammingPairsAgainstIndex]], the
+    * fingerprint analog of `q_dedup_incr`'s MinHash index probe), one
+    * shape for every modality: the base clips (`synth` variant 0,
+    * hashed by `fingerprint` into `hash`) are landed as a PERSISTED
+    * thin (`<item>_id`, hash) parquet index under `scratch` — decoded
+    * exactly once, never rescanned — and the ingest batch (every
+    * document's minimal twin) probes it through the batch row's `k` /
+    * `blocks` banding. The gate pins, against DuckDB-re-derived
+    * populations: every probe finds EXACTLY its base twin
+    * (n_twin_matches == n_docs), no probe matches a foreign document
+    * (n_cross_matches == 0), and the landed index row count. Per-batch
+    * work scales with the batch and the matched buckets — the landed
+    * corpus contributes only the band-join shuffle of its thin hash
+    * rows, the q_dedup_incr / q_ivf_*_append posture.
+    */
+  private def qMediaIncr(item: String, scratch: String,
+      synth: (Long, Int) => Array[Byte],
+      fingerprint: (DataFrame, String) => DataFrame, hash: String, k: Int,
+      blocks: Int)(s: SparkSession, dir: String): DataFrame = {
+    val payload = udf(synth)
+    def frame(variant: Int) = fingerprint(
+        docs(s, dir).select(col("doc_id"))
+          .withColumn(item, payload(col("doc_id"), lit(variant))), item)
+      .select((col("doc_id") * 2 + variant).as(s"${item}_id"), col(hash))
+    val path = scratchDir(scratch)
+    frame(0).write.mode("overwrite").parquet(s"$path/idx")
+    val idx = s.read.parquet(s"$path/idx")
+    val matches = graft.pipeline.Dedup.hammingPairsAgainstIndex(
+      idx, frame(1), s"${item}_id", hash, k = k, blocks = blocks)
+    twinCrossCounts(matches, "id_index", "id_probe", "matches")
+      .crossJoin(idx.agg(count(lit(1)).as("n_indexed"))) // 1×1 attach
+      // n_docs == n_indexed (exactly one base row lands per doc) —
+      // derived in-plan, not a separate corpus count job
+      .select(col("n_indexed").as("n_docs"), col("n_indexed"),
+        col("n_twin_matches"), col("n_cross_matches"))
+  }
+
+  /** The incremental gates' contract: every probe twin matches exactly
+    * its landed base, nothing else.
+    */
+  private val mediaIncrOracleSql =
+    s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
+       |  CAST(COUNT(*) AS BIGINT) AS n_indexed,
+       |  CAST(COUNT(*) AS BIGINT) AS n_twin_matches,
+       |  CAST(0 AS BIGINT) AS n_cross_matches
+       |FROM documents""".stripMargin
 
   val gates: Seq[Gate] = Seq(
     Gate("q_multimodal_meta", qMultimodalMeta, {
@@ -692,21 +611,13 @@ private[graft] object MediaGates {
          |  CAST(COUNT(*) AS BIGINT) AS n_twin_pairs,
          |  CAST(0 AS BIGINT) AS n_cross_pairs
          |FROM documents""".stripMargin),
-    Gate("q_audio_fingerprint_incr", qAudioFingerprintIncr,
-      // the serving form's contract: every probe twin matches exactly
-      // its landed base, nothing else
-      s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |  CAST(COUNT(*) AS BIGINT) AS n_indexed,
-         |  CAST(COUNT(*) AS BIGINT) AS n_twin_matches,
-         |  CAST(0 AS BIGINT) AS n_cross_matches
-         |FROM documents""".stripMargin),
-    Gate("q_image_phash_incr", qImagePhashIncr,
-      // the image serving form: identical contract on the aHash index
-      s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |  CAST(COUNT(*) AS BIGINT) AS n_indexed,
-         |  CAST(COUNT(*) AS BIGINT) AS n_twin_matches,
-         |  CAST(0 AS BIGINT) AS n_cross_matches
-         |FROM documents""".stripMargin),
+    // blocks = 6 (Manku multi-block banding), as the batch audio row
+    Gate("q_audio_fingerprint_incr", qMediaIncr("clip", "q-audio-fp-incr",
+      syntheticWav, Multimodal.audioFingerprint(_, _), "afp", 4, 6),
+      mediaIncrOracleSql),
+    Gate("q_image_phash_incr", qMediaIncr("img", "q-image-phash-incr",
+      syntheticBmp16, Multimodal.averageHash(_, _), "ahash", 8, 0),
+      mediaIncrOracleSql),
     Gate("q_video_fingerprint", qVideoFingerprint,
       // composed-parity contract, video modality: every synthesized
       // MP4 container must really parse (mvhd/tkhd box walk), every
@@ -721,13 +632,9 @@ private[graft] object MediaGates {
          |  CAST(COUNT(*) AS BIGINT) AS n_twin_pairs,
          |  CAST(0 AS BIGINT) AS n_cross_pairs
          |FROM documents""".stripMargin),
-    Gate("q_video_fingerprint_incr", qVideoFingerprintIncr,
-      // the video serving form: identical contract on the vfp index
-      s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |  CAST(COUNT(*) AS BIGINT) AS n_indexed,
-         |  CAST(COUNT(*) AS BIGINT) AS n_twin_matches,
-         |  CAST(0 AS BIGINT) AS n_cross_matches
-         |FROM documents""".stripMargin),
+    Gate("q_video_fingerprint_incr", qMediaIncr("clip", "q-video-fp-incr",
+      syntheticMp4, Multimodal.videoFingerprint(_, _), "vfp", 4, 6),
+      mediaIncrOracleSql),
     Gate("q_media_dedup_mixed", qMediaDedupMixed,
       // the mixed-lake contract: every interleaved payload dispatched
       // to its expected modality, every hash re-derived by the ONE

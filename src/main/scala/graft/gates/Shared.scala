@@ -480,6 +480,18 @@ private[graft] object Shared {
        |  UNION
        |  SELECT rc.id, e.dst FROM reach rc JOIN edges e ON e.src = rc.r)""".stripMargin
 
+  /** The CCNet line rule over `keyed(page_id, ln, line, k, nrm)`: a
+    * non-empty normalized line key `k` on more than one page is
+    * boilerplate (`freq`); `kept` is every other line.
+    */
+  val lineFreqKeptCtes =
+    """freq AS (
+      |  SELECT k FROM keyed WHERE nrm <> ''
+      |  GROUP BY k HAVING COUNT(DISTINCT page_id) > 1),
+      |kept AS (
+      |  SELECT page_id, ln, line FROM keyed
+      |  WHERE k NOT IN (SELECT k FROM freq))""".stripMargin
+
   /** The token-distribution divergence of side A's tokens (`aSrc`) vs
     * side B's (`bSrc`): exact integer counts; p = (c+1)/(n+V) with the
     * long add before one cast and one division; tv_term one

@@ -689,12 +689,7 @@ private[graft] object TextGates {
         |    md5(lower(trim(regexp_replace(line, '\s+', ' ', 'g')))) AS k,
         |    lower(trim(regexp_replace(line, '\s+', ' ', 'g'))) AS nrm
         |  FROM ls2),
-        |freq AS (
-        |  SELECT k FROM keyed WHERE nrm <> ''
-        |  GROUP BY k HAVING COUNT(DISTINCT page_id) > 1),
-        |kept AS (
-        |  SELECT page_id, ln, line FROM keyed
-        |  WHERE k NOT IN (SELECT k FROM freq)),
+        |$lineFreqKeptCtes,
         |built AS (
         |  SELECT page_id, COUNT(*) AS n_kept,
         |    string_agg(line, chr(10) ORDER BY ln) AS clean_text

@@ -370,6 +370,23 @@ object Bm25 {
       .limit(k)
   }
 
+  /** A query batch's (`qid`, `term`) pairs and the sorted union of its
+    * terms. Queries are a batch-sized frame, so the collect is bounded
+    * by the batch — the published serving contract of the ANN batch
+    * forms. Normalization = queryTerms', via the shared column
+    * tokenizer on the query text.
+    */
+  private def batchQueryTerms(queries: DataFrame, qidCol: String,
+      queryCol: String): (DataFrame, Seq[String]) = {
+    val qt = queries.select(col(qidCol).as("qid"),
+        explode(array_distinct(filter(TextOps.tokens(col(queryCol)),
+          t => length(t) > 0))).as("term"))
+    val allTerms = qt.select("term").distinct()
+      .collect().map(_.getString(0)).toSeq.sorted
+    require(allTerms.nonEmpty, "BM25 batch: no query has any term")
+    (qt, allTerms)
+  }
+
   /** BATCH retrieval against a PERSISTED index — [[queryTopKBatch]]'s
     * serving twin over [[writeBm25Index]]'s layout (`queryIvfBatch`
     * against `loadIvfIndex`, for the lexical tier): the UNION of all
@@ -390,12 +407,7 @@ object Bm25 {
       b: Double = 0.75): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
-    val qt = queries.select(col(qidCol).as("qid"),
-        explode(array_distinct(filter(TextOps.tokens(col(queryCol)),
-          t => length(t) > 0))).as("term"))
-    val allTerms = qt.select("term").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    require(allTerms.nonEmpty, "BM25 batch: no query has any term")
+    val (qt, allTerms) = batchQueryTerms(queries, qidCol, queryCol)
     val tbs = allTerms.map(termBucketLocal(_, idx.buckets)).distinct
     val pruned = idx.postings
       .filter(col("__tb").isin(tbs: _*))
@@ -431,16 +443,7 @@ object Bm25 {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
-    // (qid, term) pairs — queries are a batch-sized frame; collect is
-    // bounded by the batch, the published serving contract of the ANN
-    // batch forms. Normalization = queryTerms', via the shared column
-    // tokenizer on the query text.
-    val qt = queries.select(col(qidCol).as("qid"),
-        explode(array_distinct(filter(TextOps.tokens(col(queryCol)),
-          t => length(t) > 0))).as("term"))
-    val allTerms = qt.select("term").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    require(allTerms.nonEmpty, "BM25 batch: no query has any term")
+    val (qt, allTerms) = batchQueryTerms(queries, qidCol, queryCol)
     val tf = termFrequencies(df, idCol, textCol, allTerms)
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = corpusStats(df, textCol)

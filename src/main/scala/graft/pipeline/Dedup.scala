@@ -1868,18 +1868,7 @@ object Dedup {
       textCol: String, gramLen: Int,
       gramHash: Column => Column): DataFrame = {
     require(gramLen >= 2, s"gramLen must be >= 2, got $gramLen")
-    import org.apache.spark.sql.expressions.Window
-    // grams slide LINEARLY per doc (TextOps.charNgrams) and positions
-    // come from the posexplode — the old explode-positions-then-substr
-    // shape walked the string from the start per position (O(len²) per
-    // doc), and dragged the full text through the explode besides
-    val occ = df
-      .select(col(idCol).as("__doc"), col(textCol).as("__t"))
-      .select(col("__doc"),
-        posexplode(TextOps.charNgrams(col("__t"), gramLen))
-          .as(Seq("__p0", "__gram")))
-      .select(col("__doc"), (col("__p0") + 1).as("pos"),
-        gramHash(col("__gram")).as("__g"))
+    val occ = gramOccurrences(df, idCol, textCol, gramLen, gramHash)
     // duplicate marking WITHOUT a window on the gram hash: per-gram
     // aggregate (map-side partials absorb hot boilerplate grams) +
     // join-back (AQE-skew-splittable), keeping only non-canonical
@@ -1896,6 +1885,32 @@ object Dedup {
         col("__canon.pos") =!= col("pos"))
       .select(col("__doc"), col("pos"),
         (col("pos") + gramLen).as("__e"))
+    mergeIslands(rem, idCol)
+  }
+
+  /** Every `gramLen`-char gram of each doc as (`__doc`, 1-based `pos`,
+    * `__g` = `gramHash` of the gram). Grams slide LINEARLY per doc
+    * ([[TextOps.charNgrams]]) and positions come from the posexplode —
+    * the old explode-positions-then-substr shape walked the string from
+    * the start per position (O(len²) per doc), and dragged the full
+    * text through the explode besides.
+    */
+  private def gramOccurrences(df: DataFrame, idCol: String,
+      textCol: String, gramLen: Int, gramHash: Column => Column)
+      : DataFrame =
+    df.select(col(idCol).as("__doc"), col(textCol).as("__t"))
+      .select(col("__doc"),
+        posexplode(TextOps.charNgrams(col("__t"), gramLen))
+          .as(Seq("__p0", "__gram")))
+      .select(col("__doc"), (col("__p0") + 1).as("pos"),
+        gramHash(col("__gram")).as("__g"))
+
+  /** Merges each doc's removal spans (`__doc`, `pos`, end `__e`) into
+    * disjoint islands (`idCol`, `s`, `e`): a span opens a new island
+    * when it starts past every earlier span's end.
+    */
+  private def mergeIslands(rem: DataFrame, idCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val byDoc = Window.partitionBy("__doc").orderBy("pos")
     val runMaxEnd = max(col("__e"))
       .over(byDoc.rowsBetween(Window.unboundedPreceding, -1))
@@ -2142,29 +2157,12 @@ object Dedup {
   def removeBenchmarkSpans(corpus: DataFrame, bench: DataFrame,
       idCol: String, textCol: String, gramLen: Int): DataFrame = {
     require(gramLen >= 2, s"gramLen must be >= 2, got $gramLen")
-    import org.apache.spark.sql.expressions.Window
-    // linear gram slide + posexplode — see substringRemovalIntervalsBy
-    def occ(df: DataFrame) = df
-      .select(col(idCol).as("__doc"), col(textCol).as("__t"))
-      .select(col("__doc"),
-        posexplode(TextOps.charNgrams(col("__t"), gramLen))
-          .as(Seq("__p0", "__gram")))
-      .select(col("__doc"), (col("__p0") + 1).as("pos"),
-        md5(col("__gram")).as("__g"))
+    def occ(df: DataFrame) =
+      gramOccurrences(df, idCol, textCol, gramLen, md5)
     val benchGrams = occ(bench).select("__g").distinct()
     val rem = occ(corpus)
       .join(benchGrams, Seq("__g"), "left_semi")
       .select(col("__doc"), col("pos"), (col("pos") + gramLen).as("__e"))
-    val byDoc = Window.partitionBy("__doc").orderBy("pos")
-    val runMaxEnd = max(col("__e"))
-      .over(byDoc.rowsBetween(Window.unboundedPreceding, -1))
-    val iv = rem
-      .withColumn("__ni",
-        when(col("pos") > coalesce(runMaxEnd, lit(0)), 1).otherwise(0))
-      .withColumn("__isl", sum("__ni").over(byDoc))
-      .groupBy(col("__doc"), col("__isl"))
-      .agg(min("pos").as("s"), max("__e").as("e"))
-      .select(col("__doc").as(idCol), col("s"), col("e"))
-    cutIntervals(corpus, idCol, textCol, iv)
+    cutIntervals(corpus, idCol, textCol, mergeIslands(rem, idCol))
   }
 }

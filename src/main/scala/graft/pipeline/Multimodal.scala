@@ -219,48 +219,29 @@ object Multimodal {
         b(3) == 'd') Some("audio/basic")
       else None
 
-    /** PCM samples normalised to [-1, 1], averaged across channels. The
-      * stream is converted to 16-bit signed PCM first so every container
-      * variant (8-bit, big-endian AIFF, µ-law AU) lands in one code path.
+    /** PCM samples normalised to [-1, 1], averaged across channels:
+      * the [[pcm16]] channel sums over 32768 and the channel count.
+      * Each sample's s / 32768.0 is exact, so this equals averaging the
+      * normalised samples, bit for bit.
       */
     private def samples(b: Array[Byte]): Option[Array[Double]] =
-      try {
-        val in = openStream(b)
-        val f = in.getFormat
-        val target = new javax.sound.sampled.AudioFormat(
-          javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-          f.getSampleRate, 16, f.getChannels, 2 * f.getChannels,
-          f.getSampleRate, false)
-        val pcm = convertStream(target, in)
-        val bytes = pcm.readAllBytes()
-        val ch = f.getChannels
-        val n = bytes.length / (2 * ch)
-        val out = new Array[Double](n)
-        var i = 0
-        while (i < n) {
-          var sum = 0.0
-          var c = 0
-          while (c < ch) {
-            val off = 2 * (i * ch + c)
-            val s = ((bytes(off + 1) << 8) | (bytes(off) & 0xff)).toShort
-            sum += s / 32768.0
-            c += 1
-          }
-          out(i) = sum / ch
-          i += 1
-        }
-        Some(out)
-      } catch { case _: Exception => None }
+      pcm16Frames(b).map { case (pcm, ch) => pcm.map(_ / 32768.0 / ch) }
 
     /** Raw 16-bit PCM frames as INTEGERS (per frame, the SUM of channel
       * samples — integer-exact for any channel count, unlike a /ch
-      * average): the exact-arithmetic twin of [[samples]] for paths that
-      * must be re-derivable bit-for-bit by a second engine
-      * ([[Multimodal.energyWindows]] / `q_audio_fingerprint`). Same
-      * decode mechanics: container → 16-bit signed little-endian PCM via
-      * `javax.sound.sampled`, so WAV/AIFF/AU all land here.
+      * average): the exact-arithmetic form for paths that must be
+      * re-derivable bit-for-bit by a second engine
+      * ([[Multimodal.energyWindows]] / `q_audio_fingerprint`).
       */
     private[pipeline] def pcm16(b: Array[Byte]): Option[Array[Int]] =
+      pcm16Frames(b).map(_._1)
+
+    /** [[pcm16]]'s frames and the channel count. The stream is
+      * converted to 16-bit signed little-endian PCM via
+      * `javax.sound.sampled` first, so every container variant (WAV,
+      * 8-bit, big-endian AIFF, µ-law AU) lands in one code path.
+      */
+    private def pcm16Frames(b: Array[Byte]): Option[(Array[Int], Int)] =
       try {
         val in = openStream(b)
         val f = in.getFormat
@@ -285,7 +266,7 @@ object Multimodal {
           out(i) = sum
           i += 1
         }
-        Some(out)
+        Some((out, ch))
       } catch { case _: Exception => None }
 
     private[pipeline] def isAudioContainer(b: Array[Byte]): Boolean =
@@ -353,33 +334,22 @@ object Multimodal {
       } else None
 
     /** First box named `name` in `[from, to)`: its (payload start,
-      * box end). Size 0 = "to end of enclosing box", size 1 = 64-bit
-      * largesize; any inconsistent size aborts the walk (None).
+      * box end), or None when an inconsistent size comes first.
       */
     private def findBox(b: Array[Byte], from: Int, to: Int,
-        name: String): Option[(Int, Int)] = {
-      var o = from
-      while (o + 8 <= to) {
-        val size0 = u32(b, o)
-        val (hdr, size) =
-          if (size0 == 1 && o + 16 <= to) (16L, u64(b, o + 8))
-          else (8L, if (size0 == 0) (to - o).toLong else size0)
-        if (size < hdr || o + size > to) return None
-        if (boxType(b, o) == name)
-          return Some(((o + hdr).toInt, (o + size).toInt))
-        o += size.toInt
-      }
-      None
-    }
+        name: String): Option[(Int, Int)] =
+      findBoxes(b, from, to, name, 1).headOption
 
-    /** ALL boxes named `name` in `[from, to)`, in file order; an
-      * inconsistent size stops the walk at what was found so far.
+    /** The first `limit` boxes named `name` in `[from, to)` (all by
+      * default), in file order: each one's (payload start, box end).
+      * Size 0 = "to end of enclosing box", size 1 = 64-bit largesize;
+      * an inconsistent size stops the walk at what was found so far.
       */
     private def findBoxes(b: Array[Byte], from: Int, to: Int,
-        name: String): Seq[(Int, Int)] = {
+        name: String, limit: Int = Int.MaxValue): Seq[(Int, Int)] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
       var o = from
-      while (o + 8 <= to) {
+      while (o + 8 <= to && out.size < limit) {
         val size0 = u32(b, o)
         val (hdr, size) =
           if (size0 == 1 && o + 16 <= to) (16L, u64(b, o + 8))
@@ -699,17 +669,21 @@ object Multimodal {
     * per-call `AudioSystem` SPI lookup is the measured cost leader of
     * every audio row).
     */
-  private def energiesOf(s: Array[Int], w: Int): Array[Long] = {
+  private def energiesOf(s: Array[Int], w: Int): Array[Long] =
+    spanSums(s.length, w)(i => s(i).toLong * s(i))
+
+  /** `term(i)` summed over each of `w` near-equal spans of `n` items
+    * (span j = [n·j/w, n·(j+1)/w), at least one item wide).
+    */
+  private def spanSums(n: Int, w: Int)(term: Int => Long): Array[Long] = {
     val out = new Array[Long](w)
     var j = 0
     while (j < w) {
-      val lo = (s.length.toLong * j / w).toInt
-      val hi = math.max((s.length.toLong * (j + 1) / w).toInt, lo + 1)
+      val lo = (n.toLong * j / w).toInt
+      val hi = math.max((n.toLong * (j + 1) / w).toInt, lo + 1)
       var acc = 0L
       var i = lo
-      while (i < math.min(hi, s.length)) {
-        acc += s(i).toLong * s(i); i += 1
-      }
+      while (i < math.min(hi, n)) { acc += term(i); i += 1 }
       out(j) = acc
       j += 1
     }
@@ -770,20 +744,8 @@ object Multimodal {
     * that already walked the `stsz` table ([[mediaFingerprint]]'s
     * decode-once dispatch) never pay a second box walk.
     */
-  private def windowSums(s: Array[Long], w: Int): Array[Long] = {
-    val out = new Array[Long](w)
-    var j = 0
-    while (j < w) {
-      val lo = (s.length.toLong * j / w).toInt
-      val hi = math.max((s.length.toLong * (j + 1) / w).toInt, lo + 1)
-      var acc = 0L
-      var i = lo
-      while (i < math.min(hi, s.length)) { acc += s(i); i += 1 }
-      out(j) = acc
-      j += 1
-    }
-    out
-  }
+  private def windowSums(s: Array[Long], w: Int): Array[Long] =
+    spanSums(s.length, w)(s(_))
 
   /** Column form of the video fingerprint: adds `size_windows`
     * (array<bigint>, the `w` integer bitrate-envelope sums) and `vfp`

@@ -245,19 +245,25 @@ object Sampling {
     val tgt = targets.toSeq.toDF(domainCol, "__frac")
     val avail = df.groupBy(col(domainCol))
       .agg(sum(tokens.cast("bigint")).as("avail_tokens"))
-    avail.join(tgt, Seq(domainCol), "full_outer")
+    withRateShortfall(avail.join(tgt, Seq(domainCol), "full_outer")
       .select(col(domainCol),
         coalesce(col("avail_tokens"), lit(0L)).as("avail_tokens"),
         (coalesce(col("__frac"), lit(0.0)) * lit(budgetTokens.toDouble))
-          .as("target_tokens"))
-      .withColumn("rate",
+          .as("target_tokens")))
+  }
+
+  /** Per-domain `rate` = min(1, target/avail), 0 for an empty domain,
+    * and `shortfall_tokens` = max(0, target - avail): the tail of every
+    * mix plan.
+    */
+  private def withRateShortfall(plan: DataFrame): DataFrame =
+    plan.withColumn("rate",
         when(col("avail_tokens") === 0L, lit(0.0)).otherwise(
           least(lit(1.0),
             col("target_tokens") / col("avail_tokens").cast("double"))))
       .withColumn("shortfall_tokens",
         greatest(lit(0.0),
           col("target_tokens") - col("avail_tokens").cast("double")))
-  }
 
   /** The deterministic keep set realising a [[domainMixPlan]]: each
     * row keeps iff its 48-bit key bucket clears its domain's rate —
@@ -383,18 +389,11 @@ object Sampling {
           col("__pow").as("__p")))).as("__t"))
       .select(aggregate(col("__t"), lit(0.0),
         (a, x) => a + x.getField("__p")).as("__total"))
-    avail.crossJoin(broadcast(total))
+    withRateShortfall(avail.crossJoin(broadcast(total))
       .select(col(domainCol), col("avail_tokens"),
         (col("__pow") / col("__total")).as("p"))
       .withColumn("target_tokens",
-        col("p") * lit(budgetTokens.toDouble))
-      .withColumn("rate",
-        when(col("avail_tokens") === 0L, lit(0.0)).otherwise(
-          least(lit(1.0),
-            col("target_tokens") / col("avail_tokens").cast("double"))))
-      .withColumn("shortfall_tokens",
-        greatest(lit(0.0),
-          col("target_tokens") - col("avail_tokens").cast("double")))
+        col("p") * lit(budgetTokens.toDouble)))
   }
 
   /** The deterministic keep set realising a [[temperatureMixPlan]] —

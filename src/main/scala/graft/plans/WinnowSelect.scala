@@ -9,6 +9,29 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+/** The arguments both winnow expressions take, checked at analysis:
+  * a string text and foldable int `k` and `w`, both at least 1.
+  */
+private[plans] sealed trait WinnowArgs extends TernaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (first.dataType != StringType)
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects a string text argument, got " +
+          first.dataType.simpleString)
+    else if (!Seq(second, third).forall(e =>
+        e.dataType == IntegerType && e.foldable))
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName expects foldable int k and w arguments")
+    else if (Seq(second, third).exists(e =>
+        e.eval() == null || e.eval().asInstanceOf[Int] < 1))
+      // w <= 0 would push the window count past the gram count and read
+      // out of bounds; fail at analysis, not mid-task
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires k >= 1 and w >= 1")
+    else TypeCheckResult.TypeCheckSuccess
+}
+
 /** Native winnowing selection: md5 every character `k`-gram of a
   * (pre-normalized) text, keep each `w`-window's minimum, return the
   * sorted distinct selections as `array<string>` of hex digests.
@@ -27,24 +50,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `k`/`w` children must be foldable int literals.
   */
 case class WinnowSelect(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (first.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects a string text argument, got " +
-          first.dataType.simpleString)
-    else if (!Seq(second, third).forall(e =>
-        e.dataType == IntegerType && e.foldable))
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects foldable int k and w arguments")
-    else if (Seq(second, third).exists(e =>
-        e.eval() == null || e.eval().asInstanceOf[Int] < 1))
-      // w <= 0 would push the window count past the gram count and read
-      // out of bounds; fail at analysis, not mid-task
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires k >= 1 and w >= 1")
-    else TypeCheckResult.TypeCheckSuccess
+    third: Expression) extends WinnowArgs {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "winnow_select"
@@ -75,22 +81,7 @@ case class WinnowSelect(first: Expression, second: Expression,
   * bit-identical to the fold's.
   */
 case class WinnowSelect64(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (first.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects a string text argument, got " +
-          first.dataType.simpleString)
-    else if (!Seq(second, third).forall(e =>
-        e.dataType == IntegerType && e.foldable))
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects foldable int k and w arguments")
-    else if (Seq(second, third).exists(e =>
-        e.eval() == null || e.eval().asInstanceOf[Int] < 1))
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires k >= 1 and w >= 1")
-    else TypeCheckResult.TypeCheckSuccess
+    third: Expression) extends WinnowArgs {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnow_select64"
