@@ -781,11 +781,9 @@ private[graft] object TextGates {
          |FROM documents ORDER BY doc_id""".stripMargin
     }),
     Gate("q_vocab_drift", qVocabDrift,
-      // exact integer counts; p = (c+1)/(n+V) with the long add before
-      // one cast and one division; tv_term one subtraction — all
-      // bit-replayable. js_term (ln-based) is deliberately NOT in the
-      // gate row: DuckDB's ln drifts from Math.log by 1 ulp on some
-      // inputs (measured), so its semantics are spec-pinned instead.
+      // js_term (ln-based) is deliberately NOT in the gate row: DuckDB's
+      // ln drifts from Math.log by 1 ulp on some inputs (measured), so
+      // its semantics are spec-pinned instead.
       s"""WITH ${tokenDivergenceSql("documents WHERE lang = 'en'",
            "documents WHERE lang = 'fr'")}""".stripMargin),
   )
